@@ -52,9 +52,13 @@ from sunat_rree_demo_spark.operators.clustering import (
     kmeans_fit,
     quantize_micros,
 )
-
-
-BATCH_COL = "batch_id"
+from sunat_rree_demo_spark.sources.batch_store import (
+    BATCH_COL,
+    _hadoop_fs,
+    clear_commit_marker,
+    committed_batch_dirs,
+    marker_committed,
+)
 
 
 def write_ivf_index(emb: DataFrame, path: str, k: int = 8,
@@ -76,31 +80,11 @@ def write_ivf_index(emb: DataFrame, path: str, k: int = 8,
      .parquet(f"{path}/vectors/{BATCH_COL}=-1"))
 
 
-def ivf_batch_committed(spark: SparkSession, path: str,
-                        batch_id: int) -> bool:
-    from sunat_rree_demo_spark.operators.dedup_index import _hadoop_fs
-
-    fs, marker = _hadoop_fs(
-        spark, f"{path}/vectors/{BATCH_COL}={batch_id}/_SUCCESS")
-    return fs.exists(marker)
-
-
 def committed_vector_dirs(spark: SparkSession, path: str) -> list[str]:
     """Batch directories whose commit marker exists (torn writes are
     invisible, the dedup_index/novelty reader rule)."""
-    from sunat_rree_demo_spark.operators.dedup_index import _hadoop_fs
-
-    fs, jroot = _hadoop_fs(spark, f"{path}/vectors")
-    out = []
-    if fs.exists(jroot):
-        for st in fs.listStatus(jroot):
-            name = st.getPath().getName()
-            if not (st.isDirectory() and name.startswith(f"{BATCH_COL}=")):
-                continue
-            if ivf_batch_committed(spark, path,
-                                   int(name.split("=", 1)[1])):
-                out.append(f"{path}/vectors/{name}")
-    return out
+    vectors = f"{path}/vectors"
+    return list(committed_batch_dirs(spark, vectors, vectors).values())
 
 
 def absorb_ivf_batch(spark: SparkSession, new_emb: DataFrame, path: str,
@@ -111,11 +95,8 @@ def absorb_ivf_batch(spark: SparkSession, new_emb: DataFrame, path: str,
     overwrite the batch's own cell-partitioned directory; ``_SUCCESS``
     lands last as the commit marker."""
     from sunat_rree_demo_spark.operators.clustering import assign_under
-    from sunat_rree_demo_spark.operators.dedup_index import (
-        clear_commit_marker,
-    )
 
-    if ivf_batch_committed(spark, path, batch_id):
+    if marker_committed(spark, f"{path}/vectors", batch_id):
         return
     cent = load_centroids(spark, path)
     assign = assign_under(new_emb, cent, id_col=id_col, vec_col=vec_col)
@@ -208,8 +189,6 @@ def ivf_index_search(spark: SparkSession, path: str,
 def _touch_marker(spark: SparkSession, dir_path: str) -> None:
     """(Re)create ``dir_path/_SUCCESS`` — restores a batch's commit
     marker after an in-place maintenance rewrite of its cell dirs."""
-    from sunat_rree_demo_spark.operators.dedup_index import _hadoop_fs
-
     fs, marker = _hadoop_fs(spark, f"{dir_path}/_SUCCESS")
     fs.create(marker, True).close()
 
@@ -228,10 +207,6 @@ def forget_vectors(spark: SparkSession, path: str, ids: list,
     (not transactional against a concurrent absorb); centroids are
     unchanged — deletion never moves surviving vectors between cells,
     so searches stay consistent throughout."""
-    from sunat_rree_demo_spark.operators.dedup_index import (
-        clear_commit_marker,
-    )
-
     dirs = committed_vector_dirs(spark, path)
     if not dirs:
         return []
@@ -278,8 +253,6 @@ def compact_ivf_index(spark: SparkSession, path: str,
     original's newest row — identical values. A crash mid-delete
     leaves survivors whose rows equal the compacted copies; re-running
     this pass merges them away."""
-    from sunat_rree_demo_spark.operators.dedup_index import _hadoop_fs
-
     dirs = committed_vector_dirs(spark, path)
     if not dirs:
         return

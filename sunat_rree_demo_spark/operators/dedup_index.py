@@ -51,19 +51,12 @@ from sunat_rree_demo_spark.operators.dedup import (
     estimate_pairs,
     minhash_signatures,
 )
-
-#: partition column added to both index tables by the batch layout
-BATCH_COL = "batch_id"
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) for ``path`` via the JVM Hadoop API — works
-    for any supported filesystem (local, HDFS, object stores), unlike
-    ``os.path`` probes."""
-    jvm = spark.sparkContext._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return fs, jpath
+from sunat_rree_demo_spark.sources.batch_store import (
+    BATCH_COL,
+    all_batch_dirs,
+    clear_commit_marker,
+    marker_committed,
+)
 
 
 def _with_batch_schema(schema: T.StructType) -> T.StructType:
@@ -97,21 +90,7 @@ def batch_committed(spark: SparkSession, path: str, batch_id: int) -> bool:
     partition: bands are written last, so its successful commit implies
     the sigs partition (and, in the streaming flow, the pairs
     partition written before either) are complete."""
-    fs, marker = _hadoop_fs(
-        spark, f"{path}/bands/{BATCH_COL}={batch_id}/_SUCCESS")
-    return fs.exists(marker)
-
-
-def _existing_batch_ids(spark: SparkSession, path: str) -> list[int]:
-    fs, table = _hadoop_fs(spark, f"{path}/sigs")
-    if not fs.exists(table):
-        return []
-    out = []
-    for st in fs.listStatus(table):
-        name = st.getPath().getName()
-        if name.startswith(f"{BATCH_COL}="):
-            out.append(int(name.split("=", 1)[1]))
-    return out
+    return marker_committed(spark, f"{path}/bands", batch_id)
 
 
 #: error signatures of this box's intermittent storage blips (r7):
@@ -167,53 +146,6 @@ def retry_transient_write(write_fn, cleanup=None) -> None:
         if cleanup is not None:
             cleanup()
         write_fn()
-
-
-def clear_commit_marker(spark: SparkSession, dir_path: str) -> None:
-    """Delete ``dir_path/_SUCCESS`` before an overwrite-rewrite of a
-    committed-only-read partition: ``mode("overwrite")`` deletes the
-    old files in unspecified order, so a concurrent reader gating on
-    the marker could observe it still present while part-files are
-    already gone — a torn read. Removing the marker FIRST makes the
-    partition read as uncommitted for the whole rewrite; the write
-    recreates it atomically last."""
-    fs, marker = _hadoop_fs(spark, f"{dir_path}/_SUCCESS")
-    if fs.exists(marker):
-        fs.delete(marker, False)
-
-
-def batch_marker_committed(spark: SparkSession, store_path: str,
-                           batch_id: int,
-                           marker_table: str = "kept") -> bool:
-    """True iff the batch's ``marker_table`` partition carries its
-    ``_SUCCESS`` — the commit marker the streaming stores write LAST
-    (ONE copy of the walk; bloom_stream and media_stream both gate on
-    it, review finding r8)."""
-    fs, marker = _hadoop_fs(
-        spark,
-        f"{store_path}/{marker_table}/{BATCH_COL}={batch_id}/_SUCCESS")
-    return fs.exists(marker)
-
-
-def committed_partition_dirs(spark: SparkSession, store_path: str,
-                             table: str,
-                             marker_table: str = "kept") -> list[str]:
-    """Per-batch partition dirs of ``table`` whose batch is committed
-    per ``batch_marker_committed`` — uncommitted (torn) batches are
-    invisible to every reader."""
-    fs, jroot = _hadoop_fs(spark, f"{store_path}/{table}")
-    out = []
-    if fs.exists(jroot):
-        for st in fs.listStatus(jroot):
-            name = st.getPath().getName()
-            if not (st.isDirectory()
-                    and name.startswith(f"{BATCH_COL}=")):
-                continue
-            if batch_marker_committed(spark, store_path,
-                                      int(name.split("=", 1)[1]),
-                                      marker_table):
-                out.append(f"{store_path}/{table}/{name}")
-    return out
 
 
 def write_minhash_index(docs: DataFrame, path: str, id_col: str = "doc_id",
@@ -302,7 +234,7 @@ def append_minhash_index(docs: DataFrame, path: str, **kw) -> None:
     deterministic when nothing ever crashes between numbering and
     writing."""
     spark = docs.sparkSession
-    existing = _existing_batch_ids(spark, path)
+    existing = all_batch_dirs(spark, f"{path}/sigs")
     absorb_batch(docs, path, max(existing, default=-1) + 1, **kw)
 
 
@@ -327,7 +259,7 @@ def compact_minhash_index(spark: SparkSession, path: str,
 
     OFFLINE maintenance: the two full-table overwrites are not
     transactional against a CONCURRENT absorb_batch."""
-    existing = _existing_batch_ids(spark, path)
+    existing = all_batch_dirs(spark, f"{path}/sigs")
     if not existing:
         return  # empty index: nothing to compact
     bid = min(min(existing), 0) - 1

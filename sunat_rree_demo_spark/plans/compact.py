@@ -31,7 +31,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
-from sunat_rree_demo_spark.operators.dedup_index import _hadoop_fs
+from sunat_rree_demo_spark.sources.batch_store import _hadoop_fs
 
 
 @dataclass(frozen=True)

@@ -24,6 +24,8 @@ the corpus, so the plan never materializes a second copy of the data.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window, functions as F
 
 from sunat_rree_demo_spark.operators.components import connected_components
@@ -100,7 +102,7 @@ def curate(docs: DataFrame, probe: DataFrame | None = None,
             raise ValueError(
                 "edges requires edges_threshold: declare the threshold "
                 "the pre-materialized pair graph was built at")
-        if edges_threshold != near_dup_threshold:
+        if not math.isclose(edges_threshold, near_dup_threshold):
             raise ValueError(
                 f"edges was built at threshold {edges_threshold} but "
                 f"near_dup_threshold is {near_dup_threshold}: the "

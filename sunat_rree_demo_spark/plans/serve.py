@@ -205,13 +205,15 @@ class DashboardApp:
         return _page(f"country {lo}-{hi}", body)
 
     def _cats_widget(self, q: dict, n_default: int) -> list[str]:
-        """The category multiselect (``app.py:434-473``): an explicit
-        ``cats=a,b,c`` is the manual mode; absent, the pre-selection is
-        the top-N by exports (``app.py:447-459``). Unknown names are a
-        400 — the reference widget can only submit known options."""
-        raw = q.get("cats", [""])[0]
-        if raw:
-            cats = [c for c in raw.split(",") if c]
+        """The category multiselect (``app.py:434-473``): explicit
+        ``cats=`` parameters are the manual mode, one exact category
+        name each, repeated to select several (``cats=a&cats=b``, what
+        an HTML ``<select multiple>`` submits — names may contain
+        commas); absent, the pre-selection is the top-N by exports
+        (``app.py:447-459``). Unknown names are a 400 — the reference
+        widget can only submit known options."""
+        cats = q.get("cats")
+        if cats:
             bad = sorted(set(cats) - set(self.categories))
             if bad:
                 raise BadRequest(f"unknown categories: {', '.join(bad)}")

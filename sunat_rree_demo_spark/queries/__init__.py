@@ -43,98 +43,17 @@ from sunat_rree_demo_spark.queries import extraction  # noqa: E402,F401
 # the FIRST 50 registry entries in iteration order (see BASELINE.md "Driver
 # correctness snapshot cap").  The union of CORRECTNESS_r01-r10 covers every
 # query registered through q246 (every one green at its newest appearance;
-# q46 rows-only by design).  The round-11 window: new r11 queries first
-# (first driver check — highest priority), then the full 46-query cohort
-# whose newest driver row is still r06, padded to 50 with the oldest r07
-# rows.  Displaced fillers stay driver-green via their historical rows and
+# q46 rows-only by design).  Each round's window lists that round's new
+# queries first (first driver check — highest priority), then the
+# longest-unchecked driver-green queries, up to 50.  Only the current
+# round's ``_R<N>_*`` tuples live here.
+# Displaced fillers stay driver-green via their historical rows and
 # the identical local exact-hash gate (scripts/check_parity.py), which
 # runs all 250 queries every round.
 # Registration itself is unchanged; this only re-orders the dict.
 # tests/test_driver_window.py asserts every registered query has either a
 # historical CORRECTNESS row or a slot in the current window.
 # ---------------------------------------------------------------------------
-# round-10 additions (first driver check) — append here when registering
-_R10_NEW = (
-    "q240_curation_served",
-    "q241_png16_stats",
-    "q242_mp4_frame_stats",
-    "q243_video_dedup_cross_container",
-    "q244_mixed_depth_census",
-    "q245_m4a_frame_energy",
-    "q246_audio_dedup_cross_container",
-)
-# longest-unchecked driver-green queries: the FULL r05 cohort (39 — the
-# r9 verdict's rotation ask: after this window no registered query's
-# newest driver row is older than r06), then the oldest r06 rows as far
-# as the 50-slot cap allows
-_R10_FILLERS = (
-    "q80_importance_weights", "q81_scd2_intervals",
-    "q82_near_dup_triangles", "q83_winsorized_stats",
-    "q84_priority_sample", "q85_transition_matrix",
-    "q86_retention_cohorts", "q87_gap_fill",
-    "q88_rank_distribution", "q89_salted_skew_agg",
-    "q90_grouping_sets", "q91_kmv_distinct",
-    "q92_fuzzy_name_pairs", "q93_dormant_high_value",
-    "q103_snapshot_diff", "q104_trade_pagerank",
-    "q105_incremental_agg", "q107_zorder_stats",
-    "q113_click_attribution_outer", "q114_token_entropy",
-    "q115_copurchase_pairs", "q116_dq_report",
-    "q117_chi2_independence", "q118_shipping_priority",
-    "q119_returned_item_losses", "q120_large_volume_customers",
-    "q121_cheapest_supplier", "q122_bottleneck_suppliers",
-    "q123_supplier_diversity", "q124_source_mixture",
-    "q125_cohort_ltv", "q143_rolling_chunk_dups",
-    "q144_containment_pairs", "q145_zipf_slope",
-    "q146_cross_source_dup_matrix", "q147_seq_length_histogram",
-    "q148_pq_adc_topk", "q149_simhash_pairs",
-    "q150_novelty_contribution",
-    # oldest r06-era rows (driver row last seen r06)
-    "q45_ann_lsh_topk", "q54_ann_ivf_topk",
-    "q151_minhash_containment", "q152_slow_ship_priority",
-    "q153_promo_revenue_share", "q154_local_supplier_volume",
-    "q155_nation_market_share",
-)
-# round-11 additions (first driver check) — append here when registering
-_R11_NEW = (
-    "q247_mp4_meta_census",
-    "q248_setsim_score_matrix",
-    "q249_adpcm_decode_census",
-    "q250_m4a_meta_census",
-)
-# the full 46-query cohort whose newest driver row is still r06 (the
-# r10 verdict's rotation ask: after this window no registered query's
-# newest driver row is older than r07); q46 is the rows-only HLL check
-_R11_FILLERS = (
-    "q153_promo_revenue_share", "q154_local_supplier_volume",
-    "q155_nation_market_share", "q156_surprisal_yield_curve",
-    "q157_pricing_summary", "q158_forecast_revenue",
-    "q159_volume_shipping", "q160_product_type_profit",
-    "q161_late_line_priority", "q162_customer_order_distribution",
-    "q163_top_supplier", "q164_disjunctive_revenue",
-    "q165_dominant_part_suppliers", "q166_brand_value_share",
-    "q167_kmeans_census", "q168_cluster_balanced_sample",
-    "q169_concurrent_sessions", "q170_cluster_safe_split",
-    "q171_vocab_kl_divergence", "q172_ivf_kmeans_topk",
-    "q173_cluster_label_purity", "q174_maxmatch_pieces",
-    "q175_session_error_overlap", "q176_trigram_lang_id",
-    "q177_copurchase_communities", "q178_sq8_quantization_error",
-    "q179_hybrid_rrf_fusion", "q180_mmr_rerank",
-    "q181_winnowing_fingerprints", "q182_sorted_neighborhood_pairs",
-    "q183_local_clustering_coeff", "q184_multipass_blocking_pairs",
-    "q185_index_join_candidates", "q186_png_pixel_stats",
-    "q187_bucketed_minhash_join", "q188_tokens_per_dollar",
-    "q189_quantile_sketch_merge", "q190_suffix_array_lcp_dups",
-    "q191_skyline_suppliers", "q192_segmented_regression",
-    "q193_recursive_bom", "q194_window_dedup_rank",
-    "q195_bitmap_index_intersect", "q196_bloom_filter_join",
-    "q197_personalized_pagerank", "q46_approx_distinct",
-    # oldest r07-era rows pad the window to 50; each new r11 query
-    # registered above displaces the lowest of these to the next round
-    "q01_annual_balance", "q18_quarterly_rollup", "q198_html_to_text",
-)
-_R11_WINDOW = tuple(
-    n for n in (_R11_NEW + _R11_FILLERS) if n in REGISTRY
-)[:50]
 # round-12 additions: NONE — r12 is an optimization round (no new
 # queries); the window is pure rotation
 _R12_NEW = ()

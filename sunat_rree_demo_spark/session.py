@@ -63,6 +63,15 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _default_driver_memory() -> str:
+    """Half the machine's physical memory, at most 16g. The JVM's
+    resident set runs well past its heap (metaspace, Arrow and netty
+    buffers), so a heap sized to the whole box gets the process
+    OOM-killed before the collector ever runs short."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16 << 10, phys // 2 >> 20)}m"
+
+
 def get_spark(app_name: str = "sunat_rree_demo_spark",
               cpus: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
@@ -81,7 +90,8 @@ def get_spark(app_name: str = "sunat_rree_demo_spark",
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM", _default_driver_memory()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
     )

@@ -179,7 +179,7 @@ def drop_stale_app_tables(spark: SparkSession, prefix: str,
     import re
     import time
 
-    from sunat_rree_demo_spark.operators.dedup_index import _hadoop_fs
+    from sunat_rree_demo_spark.sources.batch_store import _hadoop_fs
 
     try:
         own = re.sub(r"\W", "_", spark.sparkContext.applicationId)

@@ -52,30 +52,19 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from sunat_rree_demo_spark.localrel import local_df
 
 from sunat_rree_demo_spark.operators.dedup import base_hash_col
-from sunat_rree_demo_spark.operators.dedup_index import (
+from sunat_rree_demo_spark.sources.batch_store import (
+    BATCH_COL,
     _hadoop_fs,
-    batch_marker_committed,
+    all_batch_dirs,
     clear_commit_marker,
-    committed_partition_dirs,
+    committed_batch_dirs,
+    drain,
+    marker_committed,
 )
 
-BATCH_COL = "batch_id"
 BLOOM_WORDS = 256                   #: m = 256·63 = 16128 bits
 BLOOM_K = 3                         #: hash functions
 BLOOM_M = BLOOM_WORDS * 63
-
-
-def bloom_batch_committed(spark: SparkSession, store_path: str,
-                          batch_id: int) -> bool:
-    """The batch marker lives on the KEPT table (written last; never
-    compacted away — see module docstring). One shared walk:
-    operators.dedup_index.batch_marker_committed."""
-    return batch_marker_committed(spark, store_path, batch_id)
-
-
-def _committed_dirs(spark: SparkSession, store_path: str,
-                    table: str) -> list[str]:
-    return committed_partition_dirs(spark, store_path, table)
 
 
 def _positions(dg_col):
@@ -87,18 +76,20 @@ def _positions(dg_col):
 
 def current_bloom(spark: SparkSession, store_path: str) -> DataFrame:
     """(word, m): bit_or merge of every committed batch's masks."""
-    dirs = _committed_dirs(spark, store_path, "bloom")
+    dirs = committed_batch_dirs(spark, f"{store_path}/bloom",
+                                f"{store_path}/kept")
     if not dirs:
         return local_df(spark, [], "word bigint, m bigint")
-    return (spark.read.parquet(*dirs)
+    return (spark.read.parquet(*dirs.values())
             .groupBy("word").agg(F.bit_or("m").alias("m")))
 
 
 def committed_digests(spark: SparkSession, store_path: str) -> DataFrame:
-    dirs = _committed_dirs(spark, store_path, "digests")
+    dirs = committed_batch_dirs(spark, f"{store_path}/digests",
+                                f"{store_path}/kept")
     if not dirs:
         return local_df(spark, [], "dg string")
-    return spark.read.parquet(*dirs).select("dg")
+    return spark.read.parquet(*dirs.values()).select("dg")
 
 
 def process_bloom_batch(spark: SparkSession, batch_df: DataFrame,
@@ -106,7 +97,7 @@ def process_bloom_batch(spark: SparkSession, batch_df: DataFrame,
                         id_col: str = "doc_id",
                         text_col: str = "text") -> None:
     """One idempotent micro-batch of the bloom-gated dedup."""
-    if bloom_batch_committed(spark, store_path, batch_id):
+    if marker_committed(spark, f"{store_path}/kept", batch_id):
         return
     uniq = (
         batch_df.select(F.col(id_col),
@@ -176,38 +167,28 @@ def run_bloom_dedup_stream(spark: SparkSession, docs_stream: DataFrame,
         process_bloom_batch(spark, batch_df, batch_id, store_path,
                             id_col=id_col, text_col=text_col)
 
-    q = (
-        docs_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", f"{store_path}/_stream_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-    done = q.awaitTermination(timeout)
-    if not done:
-        q.stop()
-        raise TimeoutError(
-            f"bloom dedup stream did not drain within {timeout}s — the "
-            f"store holds only completed micro-batches (restart resumes "
-            f"from the stream checkpoint)")
+    drain(docs_stream, handle, store_path, timeout, "bloom dedup")
 
 
 def load_kept(spark: SparkSession, store_path: str,
               id_col: str = "doc_id") -> DataFrame:
     """(id, dg) of every kept row across committed batches."""
-    dirs = _committed_dirs(spark, store_path, "kept")
+    kept = f"{store_path}/kept"
+    dirs = committed_batch_dirs(spark, kept, kept)
     if not dirs:
         return local_df(spark, [], f"dg string, {id_col} long")
-    return spark.read.parquet(*dirs)
+    return spark.read.parquet(*dirs.values())
 
 
 def load_gate_stats(spark: SparkSession, store_path: str) -> DataFrame:
-    dirs = _committed_dirs(spark, store_path, "stats")
+    dirs = committed_batch_dirs(spark, f"{store_path}/stats",
+                                f"{store_path}/kept")
     if not dirs:
         return local_df(spark, 
             [], "batch_id long, n_docs long, n_unique long, "
                 "n_definite_new long, n_maybe long, n_false_pos long, "
                 "n_kept long")
-    return spark.read.parquet(*dirs)
+    return spark.read.parquet(*dirs.values())
 
 
 def compact_bloom_store(spark: SparkSession, store_path: str) -> None:
@@ -219,19 +200,18 @@ def compact_bloom_store(spark: SparkSession, store_path: str) -> None:
     generation and not-yet-deleted old batches behind changes nothing
     a probe computes — the new generation is written and committed
     FIRST, old directories deleted after."""
-    from sunat_rree_demo_spark.operators.dedup_index import _hadoop_fs
-
-    dirs_b = _committed_dirs(spark, store_path, "bloom")
+    kept = f"{store_path}/kept"
+    dirs_b = committed_batch_dirs(spark, f"{store_path}/bloom", kept)
     if not dirs_b:
         return
-    bids = [int(d.rsplit("=", 1)[1]) for d in dirs_b]
+    bids = list(dirs_b)
     if len(dirs_b) == 1 and bids[0] < 0:
         return  # already a single compacted generation: no-op
     target = min(min(bids), 0) - 1
-    dirs_d = _committed_dirs(spark, store_path, "digests")
-    merged_dg = spark.read.parquet(*dirs_d).select("dg").distinct() \
-        .localCheckpoint()
-    merged_bloom = (spark.read.parquet(*dirs_b)
+    dirs_d = committed_batch_dirs(spark, f"{store_path}/digests", kept)
+    merged_dg = spark.read.parquet(*dirs_d.values()).select("dg") \
+        .distinct().localCheckpoint()
+    merged_bloom = (spark.read.parquet(*dirs_b.values())
                     .groupBy("word").agg(F.bit_or("m").alias("m"))
                     .localCheckpoint())
     (merged_dg.write.mode("overwrite")
@@ -239,36 +219,17 @@ def compact_bloom_store(spark: SparkSession, store_path: str) -> None:
     (merged_bloom.write.mode("overwrite")
      .parquet(f"{store_path}/bloom/{BATCH_COL}={target}"))
     # commit: an empty kept partition carries the target's marker
-    kept_schema = spark.read.parquet(
-        _committed_dirs(spark, store_path, "kept")[0]).schema
+    kept_schema = spark.read.parquet(f"{kept}/{BATCH_COL}={bids[0]}").schema
     (local_df(spark, [], kept_schema).write.mode("overwrite")
-     .parquet(f"{store_path}/kept/{BATCH_COL}={target}"))
+     .parquet(f"{kept}/{BATCH_COL}={target}"))
     fs, _ = _hadoop_fs(spark, store_path)
-    for d in dirs_d + dirs_b:
+    for d in [*dirs_d.values(), *dirs_b.values()]:
         fs.delete(_hadoop_fs(spark, d)[1], True)
     # superseded negative generations' EMPTY kept markers go too (the
     # positive kept dirs are real history and stay); without this,
     # periodic compaction leaks one marker partition per run
     for bid in {b for b in bids if b < 0}:
-        fs.delete(_hadoop_fs(
-            spark, f"{store_path}/kept/{BATCH_COL}={bid}")[1], True)
-
-
-def _all_batch_dirs(spark: SparkSession, store_path: str,
-                    table: str) -> dict[int, str]:
-    """{batch_id: dir} for EVERY batch partition of ``table``,
-    including torn/uncommitted ones — maintenance passes must see
-    crash leftovers to heal them (the committed-only rule is for
-    PROBES, not for repair)."""
-    fs, jroot = _hadoop_fs(spark, f"{store_path}/{table}")
-    out = {}
-    if fs.exists(jroot):
-        for st in fs.listStatus(jroot):
-            name = st.getPath().getName()
-            if st.isDirectory() and name.startswith(f"{BATCH_COL}="):
-                out[int(name.split("=", 1)[1])] = \
-                    f"{store_path}/{table}/{name}"
-    return out
+        fs.delete(_hadoop_fs(spark, f"{kept}/{BATCH_COL}={bid}")[1], True)
 
 
 def forget_docs(spark: SparkSession, store_path: str, ids: list,
@@ -297,7 +258,7 @@ def forget_docs(spark: SparkSession, store_path: str, ids: list,
     same pass re-run to finish healing (markers stay cleared until the
     kept rewrite completes)."""
     id_df = local_df(spark, [(i,) for i in ids], f"{id_col} long")
-    kept_dirs = _all_batch_dirs(spark, store_path, "kept")
+    kept_dirs = all_batch_dirs(spark, f"{store_path}/kept")
     if not kept_dirs:
         return []
     kept = spark.read.option("basePath", f"{store_path}/kept") \
@@ -310,7 +271,7 @@ def forget_docs(spark: SparkSession, store_path: str, ids: list,
         return []
     drop_dgs = (kept.join(F.broadcast(id_df), id_col, "left_semi")
                 .select("dg").distinct().localCheckpoint())
-    dg_dirs = _all_batch_dirs(spark, store_path, "digests")
+    dg_dirs = all_batch_dirs(spark, f"{store_path}/digests")
     dgs = spark.read.option("basePath", f"{store_path}/digests") \
         .parquet(*dg_dirs.values())
     touched_dgs = sorted(

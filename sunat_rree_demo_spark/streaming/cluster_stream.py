@@ -28,9 +28,12 @@ from pyspark.sql import DataFrame, SparkSession
 from sunat_rree_demo_spark.localrel import local_df
 
 from sunat_rree_demo_spark.operators.clustering import assign_under
-from sunat_rree_demo_spark.operators.dedup_index import _hadoop_fs
-
-BATCH_COL = "batch_id"
+from sunat_rree_demo_spark.sources.batch_store import (
+    BATCH_COL,
+    committed_batch_dirs,
+    drain,
+    marker_committed,
+)
 
 EMB_FILE_SCHEMA = "vec_id long, embedding array<float>, label int"
 
@@ -45,20 +48,13 @@ def embeddings_file_stream(spark: SparkSession, directory: str,
     )
 
 
-def assign_batch_committed(spark: SparkSession, store_path: str,
-                           batch_id: int) -> bool:
-    fs, marker = _hadoop_fs(
-        spark, f"{store_path}/assign/{BATCH_COL}={batch_id}/_SUCCESS")
-    return fs.exists(marker)
-
-
 def process_assign_batch(spark: SparkSession, batch_df: DataFrame,
                          batch_id: int, store_path: str,
                          centroids: np.ndarray, id_col: str = "vec_id",
                          vec_col: str = "embedding") -> None:
     """One idempotent micro-batch: nearest-centroid assignment, one
     overwrite, the parquet ``_SUCCESS`` as the commit marker."""
-    if assign_batch_committed(spark, store_path, batch_id):
+    if marker_committed(spark, f"{store_path}/assign", batch_id):
         return
     out = assign_under(batch_df, centroids, id_col=id_col, vec_col=vec_col)
     (out.write.mode("overwrite")
@@ -76,36 +72,16 @@ def run_cluster_stream(spark: SparkSession, emb_stream: DataFrame,
         process_assign_batch(spark, batch_df, batch_id, store_path,
                              centroids, id_col=id_col, vec_col=vec_col)
 
-    q = (
-        emb_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", f"{store_path}/_stream_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-    done = q.awaitTermination(timeout)
-    if not done:
-        q.stop()
-        raise TimeoutError(
-            f"cluster stream did not drain within {timeout}s — the store "
-            f"holds only completed micro-batches (restart resumes from "
-            f"the stream checkpoint)")
+    drain(emb_stream, handle, store_path, timeout, "cluster")
 
 
 def load_assignments(spark: SparkSession, store_path: str,
                      id_col: str = "vec_id") -> DataFrame:
     """All COMMITTED batches' assignments (torn partials invisible).
     ``id_col`` names the empty-store schema's id column."""
-    fs, jroot = _hadoop_fs(spark, f"{store_path}/assign")
-    dirs = []
-    if fs.exists(jroot):
-        for st in fs.listStatus(jroot):
-            name = st.getPath().getName()
-            if not (st.isDirectory() and name.startswith(f"{BATCH_COL}=")):
-                continue
-            if assign_batch_committed(
-                    spark, store_path, int(name.split("=", 1)[1])):
-                dirs.append(f"{store_path}/assign/{name}")
+    assign = f"{store_path}/assign"
+    dirs = committed_batch_dirs(spark, assign, assign)
     if not dirs:
         return local_df(spark, 
             [], f"{id_col} long, cluster int, d2 bigint")
-    return spark.read.parquet(*dirs)
+    return spark.read.parquet(*dirs.values())

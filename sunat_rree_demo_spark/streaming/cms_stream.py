@@ -26,24 +26,17 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from sunat_rree_demo_spark.localrel import local_df
 
-from sunat_rree_demo_spark.operators.dedup_index import (
-    _hadoop_fs,
-    clear_commit_marker,
-)
 from sunat_rree_demo_spark.operators.sketches import (
     cms_estimates,
     cms_partial_counts,
 )
 from sunat_rree_demo_spark.operators.text import tokens
-
-BATCH_COL = "batch_id"
-
-
-def cms_batch_committed(spark: SparkSession, cms_path: str,
-                        batch_id: int) -> bool:
-    fs, marker = _hadoop_fs(
-        spark, f"{cms_path}/{BATCH_COL}={batch_id}/_SUCCESS")
-    return fs.exists(marker)
+from sunat_rree_demo_spark.sources.batch_store import (
+    BATCH_COL,
+    clear_commit_marker,
+    committed_batch_dirs,
+    marker_committed,
+)
 
 
 def absorb_tokens_batch(spark: SparkSession, batch_df: DataFrame,
@@ -52,7 +45,7 @@ def absorb_tokens_batch(spark: SparkSession, batch_df: DataFrame,
     """Tokenize a document micro-batch and write its partial counters
     under ``cms_path/batch_id=N`` (idempotent: a committed batch id is
     skipped, an interrupted one is overwritten whole)."""
-    if cms_batch_committed(spark, cms_path, batch_id):
+    if marker_committed(spark, cms_path, batch_id):
         return
     # drop the commit marker BEFORE the overwrite: the delete phase
     # removes files in unspecified order, so load_cms could otherwise
@@ -90,19 +83,10 @@ def load_cms(spark: SparkSession, cms_path: str) -> DataFrame:
     path skips it — otherwise a torn partial could be summed in and a
     mid-stream probe would undercount, breaking the one-sided
     est ≥ exact guarantee."""
-    fs, jroot = _hadoop_fs(spark, cms_path)
-    committed = []
-    if fs.exists(jroot):
-        for st in fs.listStatus(jroot):
-            name = st.getPath().getName()
-            if not (st.isDirectory() and name.startswith(f"{BATCH_COL}=")):
-                continue
-            batch_id = int(name.split("=", 1)[1])
-            if cms_batch_committed(spark, cms_path, batch_id):
-                committed.append(f"{cms_path}/{name}")
+    committed = committed_batch_dirs(spark, cms_path, cms_path)
     if not committed:
         return local_df(spark, [], _CMS_SCHEMA)
-    return (spark.read.parquet(*committed)
+    return (spark.read.parquet(*committed.values())
             .groupBy("j", "bucket")
             .agg(F.sum("c").cast("bigint").alias("c")))
 

@@ -50,12 +50,16 @@ from sunat_rree_demo_spark.operators.dedup import (
     minhash_signatures,
 )
 from sunat_rree_demo_spark.operators.dedup_index import (
-    BATCH_COL,
     absorb_batch,
     batch_committed,
     incremental_near_dup_pairs,
 )
 from sunat_rree_demo_spark.operators.text import quality_score, tokens
+from sunat_rree_demo_spark.sources.batch_store import (
+    BATCH_COL,
+    committed_batch_dirs,
+    drain,
+)
 
 
 def gate_docs(docs: DataFrame, probe: DataFrame | None = None,
@@ -125,19 +129,7 @@ def run_curate_stream(spark: SparkSession, docs_stream: DataFrame,
             min_quality=min_quality,
             near_dup_threshold=near_dup_threshold, **gate_kwargs)
 
-    q = (
-        docs_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", f"{store_path}/_stream_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-    done = q.awaitTermination(timeout)
-    if not done:
-        q.stop()
-        raise TimeoutError(
-            f"curate stream did not drain within {timeout}s — the store "
-            f"holds only completed micro-batches (restart resumes from "
-            f"the stream checkpoint)")
+    drain(docs_stream, handle, store_path, timeout, "curate")
 
 
 def finalize_curated(spark: SparkSession, store_path: str,
@@ -148,7 +140,6 @@ def finalize_curated(spark: SparkSession, store_path: str,
     ``elect_and_pack`` tail as the batch plan. Cost is
     gated-store + pairs scale — one corpus read, no re-shingling (the
     signatures live in the index)."""
-    from sunat_rree_demo_spark.operators.dedup_index import _hadoop_fs
     from sunat_rree_demo_spark.plans.curate import elect_and_pack
 
     # only COMMITTED batches are visible (same crash class load_cms
@@ -158,28 +149,20 @@ def finalize_curated(spark: SparkSession, store_path: str,
     # documents with zero edges into the election and let duplicates
     # the batch plan evicts survive. Uncommitted batches re-drain on
     # stream restart and become visible then.
-    fs, jdocs = _hadoop_fs(spark, f"{store_path}/docs")
-    committed = []
-    if fs.exists(jdocs):
-        for st in fs.listStatus(jdocs):
-            name = st.getPath().getName()
-            if not (st.isDirectory() and name.startswith(f"{BATCH_COL}=")):
-                continue
-            bid = int(name.split("=", 1)[1])
-            if batch_committed(spark, f"{store_path}/index", bid):
-                committed.append(name)
+    committed = committed_batch_dirs(spark, f"{store_path}/docs",
+                                     f"{store_path}/index/bands")
     if not committed:
         raise FileNotFoundError(
             f"finalize_curated: no committed batches under {store_path} "
             f"(stream not drained, or every batch torn mid-commit)")
-    gated = spark.read.parquet(
-        *[f"{store_path}/docs/{n}" for n in committed])
+    gated = spark.read.parquet(*committed.values())
     kept = exact_dedup(gated, text_col, id_col)
     # semi-joins on the pair side: pairs are pair-scale, ids are
     # corpus-scale — no broadcast hint, let AQE size the build side
     ids = kept.select(id_col)
     pairs = (spark.read.parquet(
-                *[f"{store_path}/pairs/{n}" for n in committed])
+                *[f"{store_path}/pairs/{BATCH_COL}={bid}"
+                  for bid in committed])
              .select("id1", "id2")
              .join(ids.withColumnRenamed(id_col, "id1"), "id1", "left_semi")
              .join(ids.withColumnRenamed(id_col, "id2"), "id2", "left_semi"))

@@ -31,11 +31,11 @@ from pyspark.sql import types as T
 
 from sunat_rree_demo_spark.operators.dedup import minhash_signatures
 from sunat_rree_demo_spark.operators.dedup_index import (
-    BATCH_COL,
     absorb_batch,
     batch_committed,
     incremental_near_dup_pairs,
 )
+from sunat_rree_demo_spark.sources.batch_store import BATCH_COL, drain
 
 #: documents.parquet logical schema (file-source streams need one).
 DOCS_FILE_SCHEMA = T.StructType([
@@ -111,16 +111,4 @@ def run_dedup_stream(spark: SparkSession, docs_stream: DataFrame,
         process_batch(spark, batch_df, batch_id, index_path, pairs_path,
                       threshold, timings=timings)
 
-    q = (
-        docs_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", f"{index_path}/_stream_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-    done = q.awaitTermination(timeout)
-    if not done:
-        q.stop()
-        raise TimeoutError(
-            f"dedup stream did not drain within {timeout}s — pairs/index "
-            f"hold only the completed micro-batches (restart resumes from "
-            f"the stream checkpoint)")
+    drain(docs_stream, handle, index_path, timeout, "dedup")

@@ -26,22 +26,18 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from sunat_rree_demo_spark.operators.dedup_index import _hadoop_fs
 from sunat_rree_demo_spark.operators.range_join import point_in_interval_join
-
-BATCH_COL = "batch_id"
+from sunat_rree_demo_spark.sources.batch_store import (
+    BATCH_COL,
+    committed_batch_dirs,
+    drain,
+    marker_committed,
+)
 
 
 def write_interval_store(intervals: DataFrame, store_path: str) -> None:
     """Materialize (refresh) the interval dimension the stream probes."""
     intervals.write.mode("overwrite").parquet(f"{store_path}/intervals")
-
-
-def enrich_batch_committed(spark: SparkSession, store_path: str,
-                           batch_id: int) -> bool:
-    fs, marker = _hadoop_fs(
-        spark, f"{store_path}/out/{BATCH_COL}={batch_id}/_SUCCESS")
-    return fs.exists(marker)
 
 
 def process_enrich_batch(spark: SparkSession, batch_df: DataFrame,
@@ -51,7 +47,7 @@ def process_enrich_batch(spark: SparkSession, batch_df: DataFrame,
     """One idempotent micro-batch: bucketed range join against the
     current interval store, one overwrite, parquet ``_SUCCESS`` as the
     commit marker."""
-    if enrich_batch_committed(spark, store_path, batch_id):
+    if marker_committed(spark, f"{store_path}/out", batch_id):
         return
     intervals = spark.read.parquet(f"{store_path}/intervals")
     out = point_in_interval_join(batch_df, intervals, point_col,
@@ -70,36 +66,16 @@ def run_enrich_stream(spark: SparkSession, points_stream: DataFrame,
         process_enrich_batch(spark, batch_df, batch_id, store_path,
                              point_col, lo_col, hi_col, bucket_width)
 
-    q = (
-        points_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", f"{store_path}/_stream_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-    done = q.awaitTermination(timeout)
-    if not done:
-        q.stop()
-        raise TimeoutError(
-            f"enrich stream did not drain within {timeout}s — the store "
-            f"holds only completed micro-batches (restart resumes from "
-            f"the stream checkpoint)")
+    drain(points_stream, handle, store_path, timeout, "enrich")
 
 
 def load_enriched(spark: SparkSession, store_path: str) -> DataFrame:
     """All COMMITTED batches' enriched rows (torn partials invisible).
     Raises if no batch has committed yet (the output schema is
     join-derived, so there is no meaningful empty-store schema)."""
-    fs, jroot = _hadoop_fs(spark, f"{store_path}/out")
-    dirs = []
-    if fs.exists(jroot):
-        for st in fs.listStatus(jroot):
-            name = st.getPath().getName()
-            if not (st.isDirectory() and name.startswith(f"{BATCH_COL}=")):
-                continue
-            if enrich_batch_committed(
-                    spark, store_path, int(name.split("=", 1)[1])):
-                dirs.append(f"{store_path}/out/{name}")
+    out = f"{store_path}/out"
+    dirs = committed_batch_dirs(spark, out, out)
     if not dirs:
         raise FileNotFoundError(
-            f"no committed enrichment batches under {store_path}/out")
-    return spark.read.parquet(*dirs)
+            f"no committed enrichment batches under {out}")
+    return spark.read.parquet(*dirs.values())

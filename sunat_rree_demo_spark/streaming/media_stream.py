@@ -60,11 +60,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from sunat_rree_demo_spark.localrel import local_df
 
-from sunat_rree_demo_spark.operators.dedup_index import (
-    batch_marker_committed,
-    clear_commit_marker,
-    committed_partition_dirs,
-)
 from sunat_rree_demo_spark.operators.multimodal import (
     delta_sign_fingerprint,
     image_dhash,
@@ -73,8 +68,13 @@ from sunat_rree_demo_spark.operators.multimodal import (
     video_frame_stats,
 )
 from sunat_rree_demo_spark.plans.curate_media import route_media
-
-BATCH_COL = "batch_id"
+from sunat_rree_demo_spark.sources.batch_store import (
+    BATCH_COL,
+    clear_commit_marker,
+    committed_batch_dirs,
+    drain,
+    marker_committed,
+)
 
 
 def perceptual_keys(batch_df: DataFrame,
@@ -125,23 +125,12 @@ def perceptual_keys(batch_df: DataFrame,
     )
 
 
-def media_batch_committed(spark: SparkSession, store_path: str,
-                          batch_id: int) -> bool:
-    """The batch marker lives on the KEPT table (written last). One
-    shared walk: operators.dedup_index.batch_marker_committed."""
-    return batch_marker_committed(spark, store_path, batch_id)
-
-
-def _committed_dirs(spark: SparkSession, store_path: str,
-                    table: str) -> list[str]:
-    return committed_partition_dirs(spark, store_path, table)
-
-
 def committed_hashes(spark: SparkSession, store_path: str) -> DataFrame:
-    dirs = _committed_dirs(spark, store_path, "hashes")
+    dirs = committed_batch_dirs(spark, f"{store_path}/hashes",
+                                f"{store_path}/kept")
     if not dirs:
         return local_df(spark, [], "dhash string")
-    return spark.read.parquet(*dirs).select("dhash")
+    return spark.read.parquet(*dirs.values()).select("dhash")
 
 
 def process_media_batch(spark: SparkSession, batch_df: DataFrame,
@@ -157,7 +146,7 @@ def process_media_batch(spark: SparkSession, batch_df: DataFrame,
     audio, and quarantined corrupt media) are KEPT ungated — a
     perceptual gate must never eat what it cannot see, downstream
     exact-digest gates own those."""
-    if media_batch_committed(spark, store_path, batch_id):
+    if marker_committed(spark, f"{store_path}/kept", batch_id):
         return
     hashed = (
         perceptual_keys(batch_df, id_col)
@@ -199,35 +188,25 @@ def run_media_dedup_stream(spark: SparkSession, media_stream: DataFrame,
         process_media_batch(spark, batch_df, batch_id, store_path,
                             id_col=id_col)
 
-    q = (
-        media_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", f"{store_path}/_stream_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-    done = q.awaitTermination(timeout)
-    if not done:
-        q.stop()
-        raise TimeoutError(
-            f"media dedup stream did not drain within {timeout}s — the "
-            f"store holds only completed micro-batches (restart resumes "
-            f"from the stream checkpoint)")
+    drain(media_stream, handle, store_path, timeout, "media dedup")
 
 
 def load_kept(spark: SparkSession, store_path: str,
               id_col: str = "media_id") -> DataFrame:
     """``id_col`` must match the one the batches were processed with —
     the empty-store fallback schema carries it (review finding r8)."""
-    dirs = _committed_dirs(spark, store_path, "kept")
+    kept = f"{store_path}/kept"
+    dirs = committed_batch_dirs(spark, kept, kept)
     if not dirs:
         return local_df(spark, [], f"{id_col} long, dhash string")
-    return spark.read.parquet(*dirs)
+    return spark.read.parquet(*dirs.values())
 
 
 def load_gate_stats(spark: SparkSession, store_path: str) -> DataFrame:
-    dirs = _committed_dirs(spark, store_path, "stats")
+    dirs = committed_batch_dirs(spark, f"{store_path}/stats",
+                                f"{store_path}/kept")
     if not dirs:
         return local_df(spark, 
             [], f"{BATCH_COL} long, n_media long, n_hashed long, "
                 "n_ungated long, n_kept long")
-    return spark.read.parquet(*dirs)
+    return spark.read.parquet(*dirs.values())

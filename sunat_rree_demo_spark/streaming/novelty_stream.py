@@ -41,41 +41,22 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from sunat_rree_demo_spark.localrel import local_df
 
 from sunat_rree_demo_spark.operators.dedup import rolling_window_keys
-from sunat_rree_demo_spark.operators.dedup_index import (
-    _hadoop_fs,
+from sunat_rree_demo_spark.sources.batch_store import (
+    BATCH_COL,
     clear_commit_marker,
+    committed_batch_dirs,
+    drain,
+    marker_committed,
 )
-
-BATCH_COL = "batch_id"
-
-
-def novelty_batch_committed(spark: SparkSession, store_path: str,
-                            batch_id: int) -> bool:
-    fs, marker = _hadoop_fs(
-        spark, f"{store_path}/keys/{BATCH_COL}={batch_id}/_SUCCESS")
-    return fs.exists(marker)
-
-
-def _committed_key_dirs(spark: SparkSession, store_path: str) -> list[str]:
-    fs, jroot = _hadoop_fs(spark, f"{store_path}/keys")
-    out = []
-    if fs.exists(jroot):
-        for st in fs.listStatus(jroot):
-            name = st.getPath().getName()
-            if not (st.isDirectory() and name.startswith(f"{BATCH_COL}=")):
-                continue
-            bid = int(name.split("=", 1)[1])
-            if novelty_batch_committed(spark, store_path, bid):
-                out.append(f"{store_path}/keys/{name}")
-    return out
 
 
 def seen_keys(spark: SparkSession, store_path: str) -> DataFrame:
     """Every key in a COMMITTED batch (torn partials invisible)."""
-    dirs = _committed_key_dirs(spark, store_path)
+    keys = f"{store_path}/keys"
+    dirs = committed_batch_dirs(spark, keys, keys)
     if not dirs:
         return local_df(spark, [], "key bigint")
-    return spark.read.parquet(*dirs).select("key")
+    return spark.read.parquet(*dirs.values()).select("key")
 
 
 def process_novelty_batch(spark: SparkSession, batch_df: DataFrame,
@@ -85,7 +66,7 @@ def process_novelty_batch(spark: SparkSession, batch_df: DataFrame,
     """One idempotent micro-batch: score docs against the committed
     key store + their own batch, write ``stats/batch_id=N``, then the
     batch's first-seen keys as the commit marker."""
-    if novelty_batch_committed(spark, store_path, batch_id):
+    if marker_committed(spark, f"{store_path}/keys", batch_id):
         return
     ks = (rolling_window_keys(batch_df, id_col, text_col, n)
           .localCheckpoint())  # one Python key pass per batch
@@ -117,7 +98,7 @@ def process_novelty_batch(spark: SparkSession, batch_df: DataFrame,
     (stats.write.mode("overwrite")
      .parquet(f"{store_path}/stats/{BATCH_COL}={batch_id}"))
     # drop the commit marker before the keys rewrite (see
-    # dedup_index.clear_commit_marker: closes the mid-delete window
+    # batch_store.clear_commit_marker: closes the mid-delete window
     # where a committed-only reader could take a torn partition)
     clear_commit_marker(spark, f"{store_path}/keys/{BATCH_COL}={batch_id}")
     (fresh.select("key").distinct()
@@ -135,19 +116,7 @@ def run_novelty_stream(spark: SparkSession, docs_stream: DataFrame,
         process_novelty_batch(spark, batch_df, batch_id, store_path,
                               id_col=id_col, text_col=text_col, n=n)
 
-    q = (
-        docs_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", f"{store_path}/_stream_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-    done = q.awaitTermination(timeout)
-    if not done:
-        q.stop()
-        raise TimeoutError(
-            f"novelty stream did not drain within {timeout}s — the store "
-            f"holds only completed micro-batches (restart resumes from "
-            f"the stream checkpoint)")
+    drain(docs_stream, handle, store_path, timeout, "novelty")
 
 
 def load_novelty_stats(spark: SparkSession, store_path: str,
@@ -155,18 +124,10 @@ def load_novelty_stats(spark: SparkSession, store_path: str,
     """All committed batches' per-doc stats (q150 output shape).
     ``id_col`` must match the drain's — it names the empty-store
     schema's id column so the empty and non-empty paths agree."""
-    fs, jroot = _hadoop_fs(spark, f"{store_path}/stats")
-    dirs = []
-    if fs.exists(jroot):
-        for st in fs.listStatus(jroot):
-            name = st.getPath().getName()
-            if not (st.isDirectory() and name.startswith(f"{BATCH_COL}=")):
-                continue
-            if novelty_batch_committed(
-                    spark, store_path, int(name.split("=", 1)[1])):
-                dirs.append(f"{store_path}/stats/{name}")
+    dirs = committed_batch_dirs(spark, f"{store_path}/stats",
+                                f"{store_path}/keys")
     if not dirs:
         return local_df(spark, 
             [], f"{id_col} long, n_windows bigint, n_novel bigint, "
                 "novelty_frac double")
-    return spark.read.parquet(*dirs)
+    return spark.read.parquet(*dirs.values())

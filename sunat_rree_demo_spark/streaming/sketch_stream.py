@@ -28,10 +28,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from sunat_rree_demo_spark.localrel import local_df
 
-from sunat_rree_demo_spark.operators.dedup_index import (
-    _hadoop_fs,
-    clear_commit_marker,
-)
 from sunat_rree_demo_spark.operators.sketches import (
     HIST_BIN_CENTS,
     QUANTILE_PROBES,
@@ -39,29 +35,15 @@ from sunat_rree_demo_spark.operators.sketches import (
     histogram_quantiles,
     merge_histograms,
 )
-
-BATCH_COL = "batch_id"
-
-
-def sketch_batch_committed(spark: SparkSession, store_path: str,
-                           batch_id: int) -> bool:
-    fs, marker = _hadoop_fs(
-        spark, f"{store_path}/hist/{BATCH_COL}={batch_id}/_SUCCESS")
-    return fs.exists(marker)
-
-
-def _all_hist_dirs(spark: SparkSession, store_path: str) -> dict[int, str]:
-    """{batch_id: dir} for EVERY hist partition, committed or torn —
-    compaction must see crash leftovers to heal them."""
-    fs, jroot = _hadoop_fs(spark, f"{store_path}/hist")
-    out = {}
-    if fs.exists(jroot):
-        for st in fs.listStatus(jroot):
-            name = st.getPath().getName()
-            if st.isDirectory() and name.startswith(f"{BATCH_COL}="):
-                out[int(name.split("=", 1)[1])] = \
-                    f"{store_path}/hist/{name}"
-    return out
+from sunat_rree_demo_spark.sources.batch_store import (
+    BATCH_COL,
+    _hadoop_fs,
+    all_batch_dirs,
+    clear_commit_marker,
+    committed_batch_dirs,
+    drain,
+    marker_committed,
+)
 
 
 def _covers_of(spark: SparkSession, hist_dir: str) -> int | None:
@@ -88,8 +70,8 @@ def _visible_hist_dirs(spark: SparkSession, store_path: str) -> list[str]:
     been deleted yet. Epoch monotonicity makes the single high-water
     mark n sufficient: batches absorbed after a compaction always get
     larger ids."""
-    dirs = {bid: d for bid, d in _all_hist_dirs(spark, store_path).items()
-            if sketch_batch_committed(spark, store_path, bid)}
+    hist = f"{store_path}/hist"
+    dirs = committed_batch_dirs(spark, hist, hist)
     gens = sorted((bid, _covers_of(spark, d))
                   for bid, d in dirs.items() if bid < 0)
     live = [(bid, cov) for bid, cov in gens if cov is not None]
@@ -106,7 +88,7 @@ def process_sketch_batch(spark: SparkSession, batch_df: DataFrame,
                          width: int = HIST_BIN_CENTS) -> None:
     """One idempotent micro-batch: write the batch's partial histogram
     into its own partition (the write's ``_SUCCESS`` is the marker)."""
-    if sketch_batch_committed(spark, store_path, batch_id):
+    if marker_committed(spark, f"{store_path}/hist", batch_id):
         return
     part = equi_width_histogram(batch_df, F.col(cents_col), width)
     clear_commit_marker(spark, f"{store_path}/hist/{BATCH_COL}={batch_id}")
@@ -146,8 +128,9 @@ def compact_sketch(spark: SparkSession, store_path: str) -> None:
     the torn target under a fresh id and reaps it; crash mid-delete →
     readers already resolve through the marker, a re-run finishes the
     cleanup."""
-    fs, _ = _hadoop_fs(spark, f"{store_path}/hist")
-    every = _all_hist_dirs(spark, store_path)
+    hist = f"{store_path}/hist"
+    fs, _ = _hadoop_fs(spark, hist)
+    every = all_batch_dirs(spark, hist)
     dirs = _visible_hist_dirs(spark, store_path)
     if not dirs:
         return
@@ -167,7 +150,7 @@ def compact_sketch(spark: SparkSession, store_path: str) -> None:
         # crashed compaction left behind, so the rebuild never
         # overwrites one mid-heal under a reused id
         target = min(min(every), 0) - 1
-        tdir = f"{store_path}/hist/{BATCH_COL}={target}"
+        tdir = f"{hist}/{BATCH_COL}={target}"
         merged = merge_histograms(spark.read.parquet(*dirs))
         merged.write.mode("overwrite").parquet(tdir)
         covers = max([b for b in bids if b >= 0], default=-1)
@@ -185,8 +168,7 @@ def compact_sketch(spark: SparkSession, store_path: str) -> None:
         if bid == target:
             continue
         if bid < 0 or bid in set(bids) or (
-                bid <= covers
-                and sketch_batch_committed(spark, store_path, bid)):
+                bid <= covers and marker_committed(spark, hist, bid)):
             fs.delete(_hadoop_fs(spark, d)[1], True)
 
 
@@ -200,16 +182,4 @@ def run_sketch_stream(spark: SparkSession, stream: DataFrame,
         process_sketch_batch(spark, batch_df, batch_id, store_path,
                              cents_col=cents_col, width=width)
 
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", f"{store_path}/_stream_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-    done = q.awaitTermination(timeout)
-    if not done:
-        q.stop()
-        raise TimeoutError(
-            f"sketch stream did not drain within {timeout}s — the store "
-            f"holds only completed micro-batches (restart resumes from "
-            f"the stream checkpoint)")
+    drain(stream, handle, store_path, timeout, "sketch")

@@ -49,8 +49,8 @@ def test_streamed_assignment_equals_batch(spark, tmp_path, emb_three_files):
 def test_replay_noop_and_torn_batch_invisible(spark, tmp_path):
     import numpy as np
 
+    from sunat_rree_demo_spark.sources.batch_store import marker_committed
     from sunat_rree_demo_spark.streaming.cluster_stream import (
-        assign_batch_committed,
         load_assignments,
         process_assign_batch,
     )
@@ -73,7 +73,7 @@ def test_replay_noop_and_torn_batch_invisible(spark, tmp_path):
     process_assign_batch(spark, b1, 1, store, cent)
     import os
     os.remove(f"{store}/assign/batch_id=1/_SUCCESS")
-    assert not assign_batch_committed(spark, store, 1)
+    assert not marker_committed(spark, f"{store}/assign", 1)
     assert {r.vec_id for r in load_assignments(spark, store).collect()} == {1, 2}
     process_assign_batch(spark, b1, 1, store, cent)  # heal
     assert {r.vec_id for r in load_assignments(spark, store).collect()} == {1, 2, 3}

@@ -136,6 +136,8 @@ def test_curate_edges_requires_matching_threshold(spark):
         curate(docs, edges=edges)
     with pytest.raises(ValueError, match="SAME threshold"):
         curate(docs, edges=edges, edges_threshold=0.5)
+    # the same threshold spelled by float arithmetic is accepted
+    curate(docs, edges=edges, edges_threshold=0.1 * 3)
 
 
 def test_curate_dsir_selection_stage(spark):

@@ -66,8 +66,8 @@ def test_streamed_enrichment_equals_batch(spark, tmp_path):
 def test_enrich_replay_noop_and_torn_batch(spark, tmp_path):
     import os
 
+    from sunat_rree_demo_spark.sources.batch_store import marker_committed
     from sunat_rree_demo_spark.streaming.enrich_stream import (
-        enrich_batch_committed,
         load_enriched,
         process_enrich_batch,
         write_interval_store,
@@ -86,7 +86,7 @@ def test_enrich_replay_noop_and_torn_batch(spark, tmp_path):
     b1 = spark.createDataFrame([(3, 99)], "pid long, p long")
     process_enrich_batch(spark, b1, 1, store, "p", "lo", "hi", 64)
     os.remove(f"{store}/out/batch_id=1/_SUCCESS")
-    assert not enrich_batch_committed(spark, store, 1)
+    assert not marker_committed(spark, f"{store}/out", 1)
     assert [r.pid for r in load_enriched(spark, store).collect()] == [1]
     process_enrich_batch(spark, b1, 1, store, "p", "lo", "hi", 64)  # heal
     assert sorted(r.pid for r in load_enriched(spark, store).collect()) \

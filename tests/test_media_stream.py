@@ -118,9 +118,12 @@ def test_streamed_media_dedup_equals_batch_global(spark, tmp_path,
 
 def test_media_batch_replay_is_idempotent(spark, tmp_path,
                                           media_three_files):
+    from sunat_rree_demo_spark.sources.batch_store import (
+        clear_commit_marker,
+        marker_committed,
+    )
     from sunat_rree_demo_spark.streaming.media_stream import (
         load_kept,
-        media_batch_committed,
         process_media_batch,
     )
 
@@ -133,17 +136,13 @@ def test_media_batch_replay_is_idempotent(spark, tmp_path,
     before = sorted((r.media_id, r.dhash)
                     for r in load_kept(spark, store).collect())
     # committed short-circuit
-    assert media_batch_committed(spark, store, 1)
+    assert marker_committed(spark, f"{store}/kept", 1)
     process_media_batch(spark, b2, 1, store)
     assert sorted((r.media_id, r.dhash)
                   for r in load_kept(spark, store).collect()) == before
     # torn-state replay: clear the marker and re-run — byte-identical
-    from sunat_rree_demo_spark.operators.dedup_index import (
-        clear_commit_marker,
-    )
-
     clear_commit_marker(spark, f"{store}/kept/batch_id=1")
-    assert not media_batch_committed(spark, store, 1)
+    assert not marker_committed(spark, f"{store}/kept", 1)
     process_media_batch(spark, b2, 1, store)
     assert sorted((r.media_id, r.dhash)
                   for r in load_kept(spark, store).collect()) == before
@@ -251,12 +250,12 @@ def test_streamed_video_dedup_equals_batch_global(spark, tmp_path,
 
 def test_video_batch_replay_is_idempotent(spark, tmp_path,
                                           video_three_files):
-    from sunat_rree_demo_spark.operators.dedup_index import (
+    from sunat_rree_demo_spark.sources.batch_store import (
         clear_commit_marker,
+        marker_committed,
     )
     from sunat_rree_demo_spark.streaming.media_stream import (
         load_kept,
-        media_batch_committed,
         process_media_batch,
     )
 
@@ -267,7 +266,7 @@ def test_video_batch_replay_is_idempotent(spark, tmp_path,
     process_media_batch(spark, b2, 1, store)
     before = sorted((r.media_id, r.dhash)
                     for r in load_kept(spark, store).collect())
-    assert media_batch_committed(spark, store, 1)
+    assert marker_committed(spark, f"{store}/kept", 1)
     process_media_batch(spark, b2, 1, store)  # short-circuit
     clear_commit_marker(spark, f"{store}/kept/batch_id=1")
     process_media_batch(spark, b2, 1, store)  # torn-state replay
@@ -346,9 +345,9 @@ def test_corrupt_media_quarantines_instead_of_wedging(spark, tmp_path):
         pcm_frame_energy,
         video_frame_stats,
     )
+    from sunat_rree_demo_spark.sources.batch_store import marker_committed
     from sunat_rree_demo_spark.streaming.media_stream import (
         load_kept,
-        media_batch_committed,
         process_media_batch,
     )
 
@@ -377,7 +376,7 @@ def test_corrupt_media_quarantines_instead_of_wedging(spark, tmp_path):
     # the stream quarantines and commits
     store = str(tmp_path / "quarantine_store")
     process_media_batch(spark, df, 0, store)
-    assert media_batch_committed(spark, store, 0)
+    assert marker_committed(spark, f"{store}/kept", 0)
     kept = {r.media_id: r.dhash for r in
             load_kept(spark, store).collect()}
     assert set(kept) == {1, 2, 3, 4}

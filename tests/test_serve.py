@@ -9,6 +9,7 @@ import json
 import re
 import threading
 import urllib.request
+from urllib.parse import quote
 
 import pytest
 
@@ -88,6 +89,15 @@ def test_category_tab_widgets_rerun_and_validate(app):
         f"/category?lo=2010&hi=2012&cats={cat}")
     assert manual.count("<tr>") < body.count("<tr>")
     assert cat in manual
+    # one cats= value is one exact name, commas included; repeating the
+    # parameter selects several (how <select multiple> submits)
+    comma = "Maderas y Papeles, y sus Manufacturas"
+    status, one = app.render(f"/category?lo=2010&hi=2012&cats={quote(comma)}")
+    assert status == 200 and "1 categories" in one and comma in one
+    status, two = app.render(
+        f"/category?lo=2010&hi=2012&cats={quote(comma)}&cats={cat}")
+    assert status == 200 and "2 categories" in two
+    assert comma in two and cat in two
     # metric selectbox switches the figure without changing the grain
     status, cov = app.render("/category?lo=2010&hi=2012&metric=cov_ratio")
     assert status == 200 and "cov_ratio by year" in cov
