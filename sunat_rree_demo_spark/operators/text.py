@@ -648,8 +648,9 @@ def maxmatch_apply(docs, id_col: str, text_col: str, top_k: int = 64,
     mapInPandas with the ≤ alphabet+top_k piece set in the task
     closure — exactly how production tokenizers cache word→pieces),
     then each document joins its token rows against that word table
-    and aggregates. The corpus is scanned once for the apply join and
-    once — materialized via localCheckpoint — for the shared (w, c)
+    and aggregates. Under the broadcast cap described below, the
+    corpus is scanned once for the apply join and once — materialized
+    via localCheckpoint — for the shared (w, c)
     word table that BOTH the vocabulary branches and the segmentation
     pass read (guide §2.4: the explode+reduce used to be re-evaluated
     under the chars, subs, and apply subtrees — three corpus reduces
@@ -668,8 +669,14 @@ def maxmatch_apply(docs, id_col: str, text_col: str, top_k: int = 64,
     of token occurrences in the head) and the long-tail token rows —
     pre-filtered by a broadcast anti-join so only cache misses move —
     shuffle-join the residual piece table (guide §2.5's hot-key
-    split / §3.1 bounded-broadcast discipline). The word count is one
-    cheap job over the already-checkpointed word table."""
+    split / §3.1 bounded-broadcast discipline). That split path scans
+    and tokenizes the corpus TWICE for the apply join, once under the
+    head join and once under the anti-join that feeds the tail join:
+    a single pass would have to either shuffle every token row (hits
+    included) into the tail join or materialize the exploded
+    corpus-by-token frame, and both cost more than a second
+    scan+tokenize at the corpus size where the split engages. The word
+    count is one cheap job over the already-checkpointed word table."""
     import os
 
     import pandas as pd
