@@ -24,6 +24,7 @@ from __future__ import annotations
 import math
 import sys
 from decimal import Decimal
+from pathlib import Path
 
 import duckdb
 
@@ -129,7 +130,7 @@ def compare(name: str, spark_df, duck_rel) -> list[str]:
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     from sunat_rree_demo_spark.queries import REGISTRY
     from sunat_rree_demo_spark.session import get_spark
 

@@ -25,8 +25,10 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from sunat_rree_demo_spark.sources.catalog import (
+    app_id as _app_id,  # perfbench/worker.py keys plan-memo hits by it
     load_table,
-    register_session_cache,
+    memo_table,
+    session_memo,
 )
 
 
@@ -43,30 +45,26 @@ class Query:
 
 REGISTRY: dict[str, Query] = {}
 
-#: Built-plan memo, keyed (application id, sf_dir, query name) — the
-#: prepared-statement analog. Constructing a query's DataFrame costs
-#: py4j round-trips per Column plus Catalyst analysis of the whole tree;
-#: for the wide KPI/dedup plans that is 0.5-1.3s, an order of magnitude
-#: MORE than executing them at test scale (q49: 1.3s build vs 0.04s
-#: exec, measured). On a 100 TB cluster a plan is built once and runs
-#: for minutes-to-hours, so the honest steady-state cost of a repeated
-#: query is execution only — memoizing the immutable DataFrame per
-#: (session, sf_dir) reproduces that steady state locally. Execution
-#: (scan → shuffle → collect) still happens in full on every call.
-_PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-register_session_cache(_PLAN_CACHE)
-
-
-def _app_id(spark: SparkSession) -> str:
-    try:
-        return spark.sparkContext.applicationId
-    except Exception:  # Spark Connect has no sparkContext
-        return str(id(spark))
+#: The plan memo's entries, ``{(app id, sf_dir, query name): DataFrame}``
+#: (see ``register``).
+_PLAN_CACHE = memo_table("plan")
 
 
 def register(name: str, oracle: str | None = None, doc: str = "",
              tags: tuple[str, ...] = (), memoize: bool = True):
-    """``memoize=False`` opts a query out of the plan memo: builders
+    """Register a query; its built DataFrame is memoized per (session,
+    sf_dir, name) — the prepared-statement analog. Constructing a
+    query's DataFrame costs py4j round-trips per Column plus Catalyst
+    analysis of the whole tree; for the wide KPI/dedup plans that is
+    0.5-1.3s, an order of magnitude MORE than executing them at test
+    scale (q49: 1.3s build vs 0.04s exec, measured). On a 100 TB
+    cluster a plan is built once and runs for minutes-to-hours, so the
+    honest steady-state cost of a repeated query is execution only —
+    memoizing the immutable DataFrame per (session, sf_dir) reproduces
+    that steady state locally. Execution (scan → shuffle → collect)
+    still happens in full on every call.
+
+    ``memoize=False`` opts a query out of the plan memo: builders
     that EAGERLY materialize an intermediate (localCheckpoint) would
     otherwise turn the memo into a cross-run result cache — their
     repeated runs must rebuild so re-execution repeats the real work."""
@@ -74,12 +72,8 @@ def register(name: str, oracle: str | None = None, doc: str = "",
         def cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             if not memoize:
                 return fn(spark, sf_dir)
-            key = (_app_id(spark), sf_dir, name)
-            df = _PLAN_CACHE.get(key)
-            if df is None:
-                df = fn(spark, sf_dir)
-                _PLAN_CACHE[key] = df
-            return df
+            return session_memo(spark, "plan", (sf_dir, name),
+                                lambda: fn(spark, sf_dir), tier="built")
 
         cached.__name__ = fn.__name__
         cached.__doc__ = fn.__doc__
@@ -111,15 +105,6 @@ MONTHLY_SQL = """
 """
 
 
-#: Session-scoped materialization of the monthly base relation, keyed by
-#: (spark application, sf_dir). ~15 queries derive from this tiny
-#: (year, month) grain; persisting it is the Spark analog of the
-#: reference's materialized ``base_monthly`` view — the 100 TB fact scan
-#: plus hash-aggregate runs once per session, not once per query.
-_MONTHLY_CACHE: dict[tuple[str, str], DataFrame] = {}
-register_session_cache(_MONTHLY_CACHE)
-
-
 def monthly_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Spark side of ``MONTHLY_SQL`` (operator A2 over the facts).
 
@@ -127,28 +112,25 @@ def monthly_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny regardless of fact volume, so everything derived from it is
     cheap. The early ``round(…, 2)`` pins float equality with the oracle.
     The result is ``persist()``-ed per (session, sf_dir) — a few hundred
-    rows at any scale factor — so repeated callers share one scan.
+    rows at any scale factor — so repeated callers share one scan: ~15
+    queries derive from this grain, and persisting it is the Spark
+    analog of the reference's materialized ``base_monthly`` view (the
+    100 TB fact scan plus hash-aggregate runs once per session, not
+    once per query).
     """
-    try:
-        app = spark.sparkContext.applicationId
-    except Exception:  # Spark Connect has no sparkContext
-        app = str(id(spark))
-    key = (app, sf_dir)
-    cached = _MONTHLY_CACHE.get(key)
-    if cached is not None:
-        return cached
-    li = t(spark, sf_dir, "lineitem")
-    df = (
-        li.groupBy(
-            F.year("l_shipdate").cast("bigint").alias("year"),
-            F.month("l_shipdate").cast("bigint").alias("month_num"),
+    def build() -> DataFrame:
+        li = t(spark, sf_dir, "lineitem")
+        return (
+            li.groupBy(
+                F.year("l_shipdate").cast("bigint").alias("year"),
+                F.month("l_shipdate").cast("bigint").alias("month_num"),
+            )
+            .agg(
+                F.round(F.sum(F.when(F.col("l_returnflag") == "N",
+                                     F.col("l_extendedprice"))), 2).alias("export_usd"),
+                F.round(F.sum(F.when(F.col("l_returnflag") == "R",
+                                     F.col("l_extendedprice"))), 2).alias("import_usd"),
+            )
         )
-        .agg(
-            F.round(F.sum(F.when(F.col("l_returnflag") == "N",
-                                 F.col("l_extendedprice"))), 2).alias("export_usd"),
-            F.round(F.sum(F.when(F.col("l_returnflag") == "R",
-                                 F.col("l_extendedprice"))), 2).alias("import_usd"),
-        )
-    ).persist()
-    _MONTHLY_CACHE[key] = df
-    return df
+
+    return session_memo(spark, "monthly", (sf_dir,), build)

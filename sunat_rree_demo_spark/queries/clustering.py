@@ -24,43 +24,23 @@ from pyspark.sql import Window, functions as F
 from sunat_rree_demo_spark.localrel import local_df
 from sunat_rree_demo_spark.operators.clustering import kmeans_fit
 from sunat_rree_demo_spark.queries.base import register, t
-from sunat_rree_demo_spark.sources.catalog import (
-    register_session_cache,
-    session_memo,
-)
+from sunat_rree_demo_spark.sources.catalog import session_memo
 
 _K = 8
 _ITERS = 2
 _SAMPLE_PER_CLUSTER = 10
 
-_KMEANS_CACHE: dict = {}
-register_session_cache(_KMEANS_CACHE)
-
-# centroid ndarrays live OUTSIDE the registered cache: the eviction
-# sweep treats any value without a live .sparkSession as stopped, so an
-# ndarray in _KMEANS_CACHE would be dropped on the first hot-cache miss
-# while its assignment memo survived. Keyed (app_id, sf_dir); a handful
-# of (k, d) int64 arrays per process — rebuilt by build() on any miss.
-_CENTROIDS: dict = {}
-
 
 def _fitted(spark, sf_dir):
     """(centroids ndarray, persisted assignment DataFrame), once per
-    (session, sf_dir). The key MUST use the same app-id fallback as
-    session_memo's, or the centroid and assignment caches desync."""
-    from sunat_rree_demo_spark.queries.base import _app_id
-
-    cent_key = (_app_id(spark), sf_dir)
-
+    (session, sf_dir). Both halves are one memo entry, so they are
+    built, kept and dropped together."""
     def build():
         cent, assign = kmeans_fit(
             t(spark, sf_dir, "embeddings"), k=_K, iters=_ITERS)
-        _CENTROIDS[cent_key] = cent
-        return assign  # session_memo persists
+        return cent, assign.persist()
 
-    assign = session_memo(spark, _KMEANS_CACHE, ("kmeans_assign", sf_dir),
-                          build)
-    return _CENTROIDS[cent_key], assign
+    return session_memo(spark, "kmeans", (sf_dir,), build, tier="built")
 
 
 def _kmeans_oracle_cte(k: int, iters: int) -> str:

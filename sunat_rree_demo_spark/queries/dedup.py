@@ -24,89 +24,73 @@ from sunat_rree_demo_spark.operators.dedup import (
     simhash,
 )
 from sunat_rree_demo_spark.queries.base import register, t
-from sunat_rree_demo_spark.sources.catalog import (
-    register_session_cache,
-    session_memo,
-)
-
-#: Session-scoped materialization of the doc-grain 5-gram shingle
-#: arrays — the shared intermediate of every exact-set-similarity plan
-#: (q40 grouped combinations, q71 LSH-verified tier, q97 prefix
-#: filter). The Python shingler (mapInPandas) is the single most
-#: expensive scan over documents; its output is written ONCE per
-#: (session, sf_dir, n) to a warehouse parquet table and every
-#: downstream pass reads that scan (``parquet_name="shmemo"``) — at
-#: 100 TB this is literally the materialized shingle table a real
-#: dedup pipeline writes once. Parquet (not ``persist()``) since r10:
-#: persisted blocks competing with 200+ queries' execution memory get
-#: LRU-evicted and silently recomputed — the r9 bench-gate failure
-#: (q40 1.1→8.3 s, q41 1.1→14.0 s in the driver run) was exactly this
-#: family; a deterministic columnar re-scan costs ~0.1 s.
-_SHINGLE_ARR_CACHE: dict[tuple[str, str, int], "DataFrame"] = {}
-register_session_cache(_SHINGLE_ARR_CACHE)
+from sunat_rree_demo_spark.sources.catalog import app_id, session_memo
 
 
 def corpus_shingle_arrays(spark, sf_dir: str, n: int = 5):
     """(doc_id, shingles) arrays for the documents table, persisted per
     (session, sf_dir, n) so the Python shingling pass runs once per
-    session, not once per query."""
+    session, not once per query — the shared intermediate of every
+    exact-set-similarity plan (q40 grouped combinations, q71
+    LSH-verified tier, q97 prefix filter). The Python shingler
+    (mapInPandas) is the single most expensive scan over documents;
+    its output is written ONCE to a warehouse parquet table and every
+    downstream pass reads that scan (the ``shmemo`` tier) — at 100 TB
+    this is literally the materialized shingle table a real dedup
+    pipeline writes once. Parquet (not ``persist()``) since r10:
+    persisted blocks competing with 200+ queries' execution memory get
+    LRU-evicted and silently recomputed — the r9 bench-gate failure
+    (q40 1.1→8.3 s, q41 1.1→14.0 s in the driver run) was exactly this
+    family; a deterministic columnar re-scan costs ~0.1 s."""
     from sunat_rree_demo_spark.operators.dedup import doc_shingle_arrays
 
     return session_memo(
-        spark, _SHINGLE_ARR_CACHE, (sf_dir, n),
+        spark, "shmemo", (sf_dir, n),
         lambda: doc_shingle_arrays(
             t(spark, sf_dir, "documents"), "doc_id", "text", n),
-        parquet_name="shmemo")
-
-
-#: Session-scoped pair-intersection table (id1, id2, inter, n1, n2) —
-#: one tier above the shingle memo: the grouped pair emit (the single
-#: shuffle every exact set-similarity query pays) runs ONCE per
-#: session and lands in warehouse parquet; Jaccard (q146, the pgmemo
-#: edge build) and containment (q144) are per-row projections of the
-#: scan. q40 deliberately does NOT read it: it is the sanctioned
-#: documented-eager ground-truth twin that re-runs the full pipeline
-#: per call (bench honesty — see bench.SANCTIONED_TWINS).
-_PAIR_INTER_CACHE: dict[tuple[str, str, int], "DataFrame"] = {}
-register_session_cache(_PAIR_INTER_CACHE)
+        tier="parquet")
 
 
 def corpus_pair_intersections(spark, sf_dir: str, n: int = 5):
-    """Materialized co-shingle pair intersections for the documents
-    table, persisted per (session, sf_dir, n). At 100 TB this is the
-    pair-graph table a dedup pipeline writes at ingest and every
-    similarity score reads — write once, project many."""
+    """Materialized co-shingle pair intersections (id1, id2, inter, n1,
+    n2) for the documents table, persisted per (session, sf_dir, n). At
+    100 TB this is the pair-graph table a dedup pipeline writes at
+    ingest and every similarity score reads — write once, project many.
+    One tier above the shingle memo: the grouped pair emit (the single
+    shuffle every exact set-similarity query pays) runs ONCE per
+    session and lands in warehouse parquet (``immemo``); Jaccard
+    (q146, the pgmemo edge build) and containment (q144) are per-row
+    projections of the scan. q40 deliberately does NOT read it: it is
+    the sanctioned documented-eager ground-truth twin that re-runs the
+    full pipeline per call (bench honesty — see
+    bench.SANCTIONED_TWINS)."""
     from sunat_rree_demo_spark.operators.dedup import (
         pair_intersection_table,
     )
 
     return session_memo(
-        spark, _PAIR_INTER_CACHE, (sf_dir, n),
+        spark, "immemo", (sf_dir, n),
         lambda: pair_intersection_table(
             t(spark, sf_dir, "documents"), "doc_id", "text", n,
             arr=corpus_shingle_arrays(spark, sf_dir, n)),
-        parquet_name="immemo")
-
-
-#: Session-scoped banded-LSH candidate-pair table (id1, id2) — the
-#: band-collision DISTINCT pairs the two-tier verify re-scores. A
-#: production pipeline persists its candidate table per corpus
-#: snapshot next to the signature/index tables; the per-query cost of
-#: the two-tier shape is the VERIFY join, which q71 still pays per
-#: call. Signatures and band buckets are per-doc properties, so the
-#: memoized set is identical to what the in-line generation emits.
-_LSH_CAND_CACHE: dict[tuple[str, str, int, int, int], "DataFrame"] = {}
-register_session_cache(_LSH_CAND_CACHE)
+        tier="parquet")
 
 
 def lsh_candidate_pairs(spark, sf_dir: str, n: int = 5,
                         k: int | None = None, bands: int | None = None):
-    """Distinct (band, bucket)-collision candidate pairs over the
-    documents corpus, persisted per (session, sf_dir, n, k, bands) via
-    the warehouse parquet tier (``cdmemo``). The candidate set is a
-    pure function of (arr, k, bands) — r11 advisory: k/bands must be
-    part of the memo key or a caller with non-default LSH geometry
-    would be served a memo built under a different one."""
+    """Distinct (band, bucket)-collision candidate pairs (id1, id2)
+    over the documents corpus — the band-collision DISTINCT pairs the
+    two-tier verify re-scores — persisted per (session, sf_dir, n, k,
+    bands) via the warehouse parquet tier (``cdmemo``). A production
+    pipeline persists its candidate table per corpus snapshot next to
+    the signature/index tables; the per-query cost of the two-tier
+    shape is the VERIFY join, which q71 still pays per call.
+    Signatures and band buckets are per-doc properties, so the
+    memoized set is identical to what the in-line generation emits.
+    The candidate set is a pure function of (arr, k, bands) — r11
+    advisory: k/bands must be part of the memo key or a caller with
+    non-default LSH geometry would be served a memo built under a
+    different one."""
     from sunat_rree_demo_spark.operators.dedup import (
         LSH_BANDS,
         MINHASH_K,
@@ -116,11 +100,11 @@ def lsh_candidate_pairs(spark, sf_dir: str, n: int = 5,
     k = MINHASH_K if k is None else k
     bands = LSH_BANDS if bands is None else bands
     return session_memo(
-        spark, _LSH_CAND_CACHE, (sf_dir, n, k, bands),
+        spark, "cdmemo", (sf_dir, n, k, bands),
         lambda: lsh_candidate_pairs_from_arrays(
             corpus_shingle_arrays(spark, sf_dir, n), "doc_id",
             k=k, bands=bands),
-        parquet_name="cdmemo")
+        tier="parquet")
 
 
 #: shared shingle/token CTEs (the tokenizer contract of operators.text)
@@ -815,12 +799,6 @@ def q181_winnowing_fingerprints(spark, sf_dir):
 
 
 # --------------------------------------------------------------------- q185
-#: session-scoped cross-shard candidate estimates (the two on-disk index
-#: generations + bucketed band tables are built once per (session, sf))
-_XSHARD_CACHE: dict = {}
-register_session_cache(_XSHARD_CACHE)
-
-
 @register(
     "q185_index_join_candidates",
     memoize=False,  # builder materializes two index generations (eager)
@@ -839,7 +817,9 @@ def q185_index_join_candidates(spark, sf_dir):
     signatures at candidate scale. Because a signature is a pure
     function of the text, the result is exactly q41's batch-global
     pairs restricted to cross-shard (even, odd) pairs — which is what
-    the oracle computes from the union corpus.
+    the oracle computes from the union corpus. The candidate estimates
+    are session-memoized: the two on-disk index generations + bucketed
+    band tables are built once per (session, sf_dir).
 
     Scale shape: each shard's index build touches only its own docs;
     the candidate join reads both band tables pre-hashed into aligned
@@ -877,12 +857,8 @@ def q185_index_join_candidates(spark, sf_dir):
                             sig=sig.filter("doc_id % 2 = 0"))
         write_minhash_index(d, f"{root}/odd",
                             sig=sig.filter("doc_id % 2 = 1"))
-        try:
-            app = spark.sparkContext.applicationId
-        except Exception:  # Spark Connect has no sparkContext
-            app = str(id(spark))
         sfx = re.sub(r"\W", "_", f"{sf_dir.rstrip('/').rsplit('/', 1)[-1]}"
-                                 f"_{app}")
+                                 f"_{app_id(spark)}")
         cand = cross_index_candidates(
             spark, f"{root}/even", f"{root}/odd",
             f"xband_even_{sfx}", f"xband_odd_{sfx}")
@@ -895,7 +871,7 @@ def q185_index_join_candidates(spark, sf_dir):
                         F.greatest("id1", "id2").alias("id2")),
             sigs, "doc_id", threshold=0.3)
 
-    return session_memo(spark, _XSHARD_CACHE, (sf_dir, "xshard"),
+    return session_memo(spark, "xshard", (sf_dir,),
                         build).orderBy("id1", "id2")
 
 
@@ -954,12 +930,9 @@ def full_index_pairs(spark, sf_dir: str):
         drop_stale_app_tables(spark, "xband_")
         root = tempfile.mkdtemp(prefix="full_idx_")
         write_minhash_index(t(spark, sf_dir, "documents"), root)
-        try:
-            app = spark.sparkContext.applicationId
-        except Exception:  # Spark Connect has no sparkContext
-            app = str(id(spark))
         tn = "xband_all_" + re.sub(
-            r"\W", "_", f"{sf_dir.rstrip('/').rsplit('/', 1)[-1]}_{app}")
+            r"\W", "_",
+            f"{sf_dir.rstrip('/').rsplit('/', 1)[-1]}_{app_id(spark)}")
         write_bucketed_bands(spark, root, tn)
         bands = spark.table(tn)
         a = bands.select("band", "bucket", F.col("doc_id").alias("id1"))
@@ -970,7 +943,7 @@ def full_index_pairs(spark, sf_dir: str):
         sigs = spark.read.parquet(f"{root}/sigs").select("doc_id", "sig")
         return estimate_pairs(cand, sigs, "doc_id", threshold=0.3)
 
-    return session_memo(spark, _XSHARD_CACHE, (sf_dir, "fullidx"), build)
+    return session_memo(spark, "fullidx", (sf_dir,), build)
 
 
 # --------------------------------------------------------------------- q190

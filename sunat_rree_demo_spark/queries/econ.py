@@ -15,16 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Window, functions as F
 
 from sunat_rree_demo_spark.queries.base import MONTHLY_SQL, monthly_flows, register, t
-from sunat_rree_demo_spark.sources.catalog import (
-    register_session_cache,
-    session_memo,
-)
-
-#: session-scoped materialization of the exploded BOM levels (q193):
-#: the level frames persist once per (session, sf) - repeated calls
-#: reuse the cached union instead of stacking new persisted lineages
-_BOM_CACHE: dict = {}
-register_session_cache(_BOM_CACHE)
+from sunat_rree_demo_spark.sources.catalog import session_memo
 
 #: revenue in integer cents per lineitem row — shared by q99/q100.
 _CENTS_CTE = """
@@ -581,9 +572,11 @@ def q193_recursive_bom(spark, sf_dir):
     next-join consumers swamps the saved jobs), and the exploded
     union is SESSION-MEMOIZED: the BOM is the materialized artifact a
     manufacturing warehouse maintains, repeated queries aggregate the
-    cached explosion. Depth is LOG-bounded in the part count (100×
-    data adds ~7 rounds). Path quantities are ≤ 3^depth < int64 at
-    any realistic key range."""
+    cached explosion (persisted once per (session, sf_dir), so repeated
+    calls reuse one union instead of stacking new persisted lineages).
+    Depth is LOG-bounded in the part count (100× data adds ~7 rounds).
+    Path quantities are ≤ 3^depth < int64 at any realistic key
+    range."""
     def build():
         part = t(spark, sf_dir, "part")
         e = (part.filter(F.col("p_partkey") >= 2)
@@ -619,7 +612,7 @@ def q193_recursive_bom(spark, sf_dir):
         e.unpersist()
         return bom
 
-    bom = session_memo(spark, _BOM_CACHE, (sf_dir, "bom"), build)
+    bom = session_memo(spark, "bom", (sf_dir,), build)
     return (
         bom.groupBy("depth")
         .agg(F.count("*").cast("bigint").alias("n_parts"),

@@ -27,10 +27,7 @@ from sunat_rree_demo_spark.operators.text import (
     tokens,
 )
 from sunat_rree_demo_spark.queries.base import register, t
-from sunat_rree_demo_spark.sources.catalog import (
-    register_session_cache,
-    session_memo,
-)
+from sunat_rree_demo_spark.sources.catalog import session_memo
 from sunat_rree_demo_spark.queries.dedup import (
     JACCARD_PAIRS_SELECT,
     _minhash_oracle_sql,
@@ -79,21 +76,16 @@ def _closure_ctes(pairs_sql: str) -> str:
 """
 
 
-#: Session-scoped materialization of the exact-Jaccard ≥ 0.3 near-dup
-#: PAIR GRAPH — the shared input of both clustering algorithms (q61
-#: min-label, q68 large-star/small-star). Same design as
-#: ``corpus_shingle_arrays``/``monthly_flows``: a production dedup
-#: pipeline materializes the pair table once and every clustering /
-#: representative-selection pass reads it; recomputing the full pair
-#: pipeline per consumer is the thing a 100 TB deployment cannot
-#: afford.
-_DUP_EDGE_CACHE: dict[tuple[str, str], "object"] = {}
-register_session_cache(_DUP_EDGE_CACHE)
-
-
 def dup_pair_edges(spark, sf_dir: str):
     """(id1, id2) exact 5-gram Jaccard ≥ 0.3 pairs over documents,
-    persisted per (session, sf_dir). r11: the build projects the
+    persisted per (session, sf_dir) via the warehouse parquet tier
+    (``pgmemo``). This near-dup PAIR GRAPH is the shared input of both
+    clustering algorithms (q61 min-label, q68 large-star/small-star).
+    Same design as ``corpus_shingle_arrays``/``monthly_flows``: a
+    production dedup pipeline materializes the pair table once and
+    every clustering / representative-selection pass reads it;
+    recomputing the full pair pipeline per consumer is the thing a
+    100 TB deployment cannot afford. r11: the build projects the
     session pair-intersection memo instead of re-running the grouped
     pair emit — one cold pass feeds this, q144 and q146."""
     from sunat_rree_demo_spark.operators.dedup import jaccard_scores
@@ -106,26 +98,20 @@ def dup_pair_edges(spark, sf_dir: str):
             corpus_pair_intersections(spark, sf_dir), threshold=0.3)
             .select("id1", "id2"))
 
-    return session_memo(spark, _DUP_EDGE_CACHE, (sf_dir,), build,
-                        parquet_name="pgmemo")
-
-
-#: Session-scoped materialization of the MinHash+LSH ≥ 0.3 near-dup
-#: pair graph — the SCALE-path twin of ``dup_pair_edges`` above and the
-#: shared input of representative selection (q65) and the detector eval
-#: (q205's predicted side). Same r10 parquet-tier design (and the same
-#: rationale): a production pipeline writes its banded-LSH pair table
-#: once per corpus snapshot and every consumer reads it; q41 remains
-#: the per-call documented-eager measurement of the pair GENERATION
-#: itself (sanctioned-twins ledger).
-_MINHASH_EDGE_CACHE: dict[tuple[str, str], "object"] = {}
-register_session_cache(_MINHASH_EDGE_CACHE)
+    return session_memo(spark, "pgmemo", (sf_dir,), build, tier="parquet")
 
 
 def minhash_pair_edges(spark, sf_dir: str):
     """(id1, id2) MinHash+LSH ≥ 0.3 banded near-dup pairs over
     documents, persisted per (session, sf_dir) via the warehouse
-    parquet tier (``mhmemo``)."""
+    parquet tier (``mhmemo``). The SCALE-path twin of
+    ``dup_pair_edges`` and the shared input of representative
+    selection (q65) and the detector eval (q205's predicted side).
+    Same r10 parquet-tier design (and the same rationale): a
+    production pipeline writes its banded-LSH pair table once per
+    corpus snapshot and every consumer reads it; q41 remains the
+    per-call documented-eager measurement of the pair GENERATION
+    itself (sanctioned-twins ledger)."""
     from sunat_rree_demo_spark.queries.dedup import corpus_shingle_arrays
 
     def build():
@@ -135,8 +121,7 @@ def minhash_pair_edges(spark, sf_dir: str):
             arr=corpus_shingle_arrays(spark, sf_dir))
             .select("id1", "id2"))
 
-    return session_memo(spark, _MINHASH_EDGE_CACHE, (sf_dir,), build,
-                        parquet_name="mhmemo")
+    return session_memo(spark, "mhmemo", (sf_dir,), build, tier="parquet")
 
 
 # ---------------------------------------------------------------------- q61

@@ -28,10 +28,7 @@ from sunat_rree_demo_spark.operators.similarity import (
 )
 from sunat_rree_demo_spark.localrel import local_df
 from sunat_rree_demo_spark.queries.base import register, t
-from sunat_rree_demo_spark.sources.catalog import (
-    register_session_cache,
-    session_memo,
-)
+from sunat_rree_demo_spark.sources.catalog import session_memo
 
 
 # ---------------------------------------------------------------------- q43
@@ -290,24 +287,19 @@ def q75_semantic_dedup(spark, sf_dir):
     return semantic_dedup(e, threshold=0.3, iters=0).orderBy("vec_id")
 
 
-#: Session-scoped materialization of the embedding near-dup PAIR
-#: graph (cos ≥ 0.3, q44's exact blocked computation) — shared by the
-#: q82 census and any other consumer of the graph; same
-#: materialized-intermediate design as queries.dedup.corpus_shingle_
-#: arrays / llm_pipeline.dup_pair_edges.
-_EMB_EDGE_CACHE: dict[tuple[str, str], "object"] = {}
-register_session_cache(_EMB_EDGE_CACHE)
-
-
 def embedding_pair_edges(spark, sf_dir: str):
     """(id1, id2) exact cosine ≥ 0.3 pairs over embeddings, persisted
-    per (session, sf_dir)."""
+    per (session, sf_dir) via the warehouse parquet tier (``egmemo``).
+    This embedding near-dup PAIR graph (q44's exact blocked
+    computation) is shared by the q82 census and any other consumer of
+    the graph; same materialized-intermediate design as
+    queries.dedup.corpus_shingle_arrays / llm_pipeline.dup_pair_edges."""
     return session_memo(
-        spark, _EMB_EDGE_CACHE, (sf_dir,),
+        spark, "egmemo", (sf_dir,),
         lambda: near_dup_pairs_blocked(
             t(spark, sf_dir, "embeddings"), threshold=0.3)
         .select("id1", "id2"),
-        parquet_name="egmemo")
+        tier="parquet")
 
 
 # ---------------------------------------------------------------------- q82

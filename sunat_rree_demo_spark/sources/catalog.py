@@ -13,6 +13,7 @@ is automatic. Nothing here collects to the driver.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -23,82 +24,92 @@ TABLES = (
     "orders", "lineitem", "events", "documents", "embeddings",
 )
 
-#: Size-gated hot-table cache (S12 generalized): tables whose on-disk
-#: parquet is under this many bytes are ``persist()``-ed per
-#: (session, sf_dir, table), so a workload that touches the same small
-#: table from many queries scans it once. The gate is deliberately
-#: dimension-sized: for a large fact table a columnar parquet scan with
-#: pushdown beats a deserialized row cache (measured: caching the
-#: 10 MB lineitem regressed sort-heavy queries 2-5× via storage-memory
-#: eviction churn), and at warehouse scale a multi-TB fact must stream
-#: anyway — the gate is what makes the cache scale-honest.
-#: Override via SPARK_GRAFT_HOT_CACHE_BYTES (0 disables).
-HOT_CACHE_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_HOT_CACHE_BYTES", str(4 * 1024 * 1024)))
+#: Size gate of the hot-table tier of ``load_table``: a table whose
+#: on-disk parquet is under this many bytes is ``persist()``-ed once per
+#: (session, sf_dir, table). 0 disables it (the plan-shape tests and
+#: the plan-report scripts patch it to see parquet scans).
+HOT_CACHE_MAX_BYTES = 4 * 1024 * 1024
 
-_HOT_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+log = logging.getLogger(__name__)
 
-#: Every session-keyed DataFrame memo in the package registers here so
-#: eviction/clearing covers them all (queries.base adds its plan and
-#: monthly-flows memos on import).
-_SESSION_CACHES: list[dict] = [_HOT_CACHE]
+#: The one session memo store: memo name -> {(app id, *key): value}.
+#: Every entry belongs to the live application: classic pyspark allows
+#: one live SparkContext per process, so the first lookup under a new
+#: app id drops every entry (their persisted blocks died with the old
+#: context). The per-name dicts are cleared in place and never
+#: replaced, so a ``memo_table`` reference stays live.
+_STORE: dict[str, dict[tuple, object]] = {}
+_live_app: str | None = None
+
+#: Live view of the store's per-name dicts: their summed ``len`` is the
+#: number of live memo entries (perfbench/worker.py reads it).
+_SESSION_CACHES = _STORE.values()
+
+def app_id(spark) -> str:
+    """The Spark application id (``local-<start millis>`` on a local
+    master) that keys every session memo and per-session table name.
+    Spark Connect has no ``sparkContext``; there the session object's
+    ``id`` stands in. The only place the package reads the id."""
+    try:
+        return spark.sparkContext.applicationId
+    except Exception:  # Spark Connect has no sparkContext
+        return str(id(spark))
 
 
-def register_session_cache(cache: dict) -> None:
-    """Opt a {key-starting-with-app-id: DataFrame} memo into the shared
-    eviction sweep below.
-
-    Membership is by IDENTITY: ``in`` would compare dicts by VALUE, and
-    two empty memos compare equal — registering a fresh dict while any
-    registered memo is empty would silently no-op, exempting it from
-    eviction/unpersist forever."""
-    if not any(c is cache for c in _SESSION_CACHES):
-        _SESSION_CACHES.append(cache)
+def memo_table(name: str) -> dict:
+    """The store's ``{(app id, *key): value}`` dict for memo ``name``."""
+    return _STORE.setdefault(name, {})
 
 
-def session_memo(spark, cache: dict, key_suffix: tuple, build,
-                 parquet_name: str | None = None):
-    """One implementation of the app-id-keyed lazy memo every
-    session-scoped materialized intermediate uses (monthly flows,
-    shingle arrays, pair graphs): look up (app_id, *key_suffix) in
-    ``cache``, else ``build()``, materialize, store, return. The
-    cache must be ``register_session_cache``-ed by its owner.
+def session_memo(spark, name: str, key: tuple, build,
+                 tier: str = "persist"):
+    """The one session-scoped memo: look up (app id, *key) under memo
+    ``name``, else build, materialize per ``tier``, store and return.
 
-    Two materialization tiers:
-
-    - default (``parquet_name=None``): ``persist()`` — right for tiny
-      frames (monthly flows, k-means assignments) whose recompute is
-      one cheap aggregate.
-    - ``parquet_name="..."``: write the built frame ONCE to a
-      session-scoped parquet directory under the warehouse and memoize
-      the READ-BACK scan. For intermediates whose recompute is an
-      expensive Python pass (the mapInPandas shingler, the pair-graph
-      joins) this removes the BlockManager from the availability story
-      entirely: persisted blocks compete with 200+ other queries'
-      execution memory and whatever LRU evicts is silently recomputed
-      — the r9 bench flagged exactly the shingle/pair-graph consumer
-      family (q40 1.1→8.3 s, q41 1.1→14.0 s) under the media family's
+    - ``"built"``: store ``build()``'s value as is — the plan memo's
+      unexecuted DataFrames, k-means' (centroids, assignment) pair.
+    - ``"persist"``: ``persist()`` — right for tiny frames (monthly
+      flows, hot dimension tables) whose recompute is one cheap scan
+      or aggregate.
+    - ``"parquet"``: write the built frame ONCE to a session-scoped
+      parquet directory under the warehouse, named
+      ``<name>_<key>_<hash>_<app id>``, and memoize the READ-BACK
+      scan. For intermediates whose recompute is an expensive Python
+      pass (the mapInPandas shingler, the pair-graph joins) this
+      removes the BlockManager from the availability story entirely:
+      persisted blocks compete with 200+ other queries' execution
+      memory and whatever LRU evicts is silently recomputed — the r9
+      bench flagged exactly the shingle/pair-graph consumer family
+      (q40 1.1→8.3 s, q41 1.1→14.0 s) under the media family's
       fixture pressure. A columnar re-scan of the materialized table
       is O(100 ms) and, unlike block survival, deterministic. This is
-      also the honest 100 TB shape: a real pipeline WRITES its shingle
-      table once and every later pass reads it (same contract as the
-      persisted MinHash/IVF indexes in operators/*_index.py).
+      also the honest 100 TB shape: a real pipeline WRITES its
+      shingle table once and every later pass reads it (same contract
+      as the persisted MinHash/IVF indexes in operators/*_index.py).
+
+    Under Spark Connect (app id = ``id(spark)``) two sessions used in
+    turn would rebuild each other's memos: correct, only slower.
     """
-    try:
-        app = spark.sparkContext.applicationId
-    except Exception:  # Spark Connect has no sparkContext
-        app = str(id(spark))
-    key = (app, *key_suffix)
-    cached = cache.get(key)
+    if tier not in ("built", "persist", "parquet"):
+        raise ValueError(f"unknown memo tier {tier!r}")
+    global _live_app
+    app = app_id(spark)
+    if app != _live_app:
+        for memo in _STORE.values():
+            memo.clear()
+        _live_app = app
+    memo, full_key = memo_table(name), (app, *key)
+    cached = memo.get(full_key)
     if cached is not None:
         return cached
-    if parquet_name is None:
-        df = build().persist()
+    if tier == "built":
+        value = build()
+    elif tier == "persist":
+        value = build().persist()
     else:
-        df = _materialize_via_warehouse(spark, app, parquet_name,
-                                        key_suffix, build)
-    cache[key] = df
-    return df
+        value = _materialize_via_warehouse(spark, app, name, key, build)
+    memo[full_key] = value
+    return value
 
 
 def _memo_dir_name(name: str, key_suffix: tuple, app: str) -> str:
@@ -124,7 +135,8 @@ def _materialize_via_warehouse(spark, app: str, name: str,
     application id (``local_<13-digit start millis>``), the exact shape
     ``sources.sinks.drop_stale_app_tables`` reaps, so abandoned
     generations from dead sessions are bounded by the same janitor the
-    bucketed index tables already use (called here at build time)."""
+    bucketed index tables already use (called here at build time). A
+    janitor failure is logged and never fails the build."""
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
     path = f"{warehouse}/{_memo_dir_name(name, key_suffix, app)}"
     build().write.mode("overwrite").parquet(path)
@@ -134,49 +146,25 @@ def _materialize_via_warehouse(spark, app: str, name: str,
         )
 
         drop_stale_app_tables(spark, f"{name}_")
-    except Exception:  # janitor failure must never fail the build
-        pass
+    except Exception:
+        log.warning("warehouse janitor failed for %s_ memos", name,
+                    exc_info=True)
     return spark.read.parquet(path)
 
 
-def _session_stopped(df: DataFrame) -> bool:
-    try:
-        return df.sparkSession.sparkContext._jsc.sc().isStopped()
-    except Exception:  # Spark Connect / session already torn down
-        return True
-
-
-def evict_stopped_sessions() -> None:
-    """Drop memo entries owned by stopped sessions: their persisted
-    blocks died with the executors, so the dict entry is the only leak —
-    long-lived processes cycling get_spark()/stop() would otherwise
-    accumulate one stale generation per cycle. Runs on every hot-cache
-    miss (a handful of py4j liveness probes, driver-side only)."""
-    for cache in _SESSION_CACHES:
-        for key, df in list(cache.items()):
-            if _session_stopped(df):
-                cache.pop(key, None)
-
-
-def clear_caches(unpersist: bool = True) -> None:
-    """Explicitly empty every registered memo, unpersisting live
-    DataFrames (no-op on never-persisted plan-memo entries) — the
-    programmatic reset tests and notebooks need."""
-    for cache in _SESSION_CACHES:
-        for key, df in list(cache.items()):
-            if unpersist:
-                try:
-                    df.unpersist()
-                except Exception:  # session gone → blocks already freed
-                    pass
-            cache.pop(key, None)
-
-
-def _session_key(spark: SparkSession) -> str:
-    try:
-        return spark.sparkContext.applicationId
-    except Exception:  # Spark Connect has no sparkContext
-        return str(id(spark))
+def clear_caches() -> None:
+    """Empty the session memo store, unpersisting what it persisted —
+    the programmatic reset tests and notebooks need. Parquet-tier files
+    stay on disk for the janitor."""
+    for memo in _STORE.values():
+        for value in memo.values():
+            for df in value if isinstance(value, tuple) else (value,):
+                if getattr(df, "is_cached", False):
+                    try:
+                        df.unpersist()
+                    except Exception:  # session gone → blocks freed
+                        pass
+        memo.clear()
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -189,14 +177,22 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Both variants are normalized here to TIMESTAMP_LTZ under the UTC
     session zone — bit-identical instants to DuckDB's naive TIMESTAMP
     view of the same file, so the oracle agrees either way.
+
+    Size-gated hot tables (S12 generalized): a table under
+    ``HOT_CACHE_MAX_BYTES`` on disk is ``persist()``-ed per (session,
+    sf_dir, table), so a workload that touches the same small table
+    from many queries scans it once. The gate is deliberately
+    dimension-sized: for a large fact table a columnar parquet scan
+    with pushdown beats a deserialized row cache (measured: caching the
+    10 MB lineitem regressed sort-heavy queries 2-5× via storage-memory
+    eviction churn), and at warehouse scale a multi-TB fact must stream
+    anyway — the gate is what makes the cache scale-honest.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = (_session_key(spark), sf_dir, name)
-    cached = _HOT_CACHE.get(key)
-    if cached is not None:
-        return cached
-    evict_stopped_sessions()
-    if name == "events":
+
+    def scan() -> DataFrame:
+        if name != "events":
+            return spark.read.parquet(path)
         try:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         except Exception:
@@ -211,12 +207,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # NTZ micros → LTZ: session TZ is pinned to UTC (session.tune),
             # so the wall-clock reinterpretation is the identity instant
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    else:
-        df = spark.read.parquet(path)
+        return df
+
     if HOT_CACHE_MAX_BYTES > 0 and _path_bytes(path, HOT_CACHE_MAX_BYTES) > 0:
-        df = df.persist()
-        _HOT_CACHE[key] = df
-    return df
+        return session_memo(spark, "hot_table", (sf_dir, name), scan)
+    return scan()
 
 
 def _path_bytes(path: str, cap: int) -> int:

@@ -180,11 +180,9 @@ def drop_stale_app_tables(spark: SparkSession, prefix: str,
     import time
 
     from sunat_rree_demo_spark.sources.batch_store import _hadoop_fs
+    from sunat_rree_demo_spark.sources.catalog import app_id
 
-    try:
-        own = re.sub(r"\W", "_", spark.sparkContext.applicationId)
-    except Exception:  # Spark Connect has no sparkContext
-        own = None
+    own = re.sub(r"\W", "_", app_id(spark))
     cutoff = time.time() * 1000 - ttl_hours * 3600 * 1000
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
     fs, jroot = _hadoop_fs(spark, warehouse)
@@ -194,7 +192,7 @@ def drop_stale_app_tables(spark: SparkSession, prefix: str,
         name = st.getPath().getName()
         if not (st.isDirectory() and name.startswith(prefix)):
             continue
-        if own and name.endswith(own):
+        if name.endswith(own):
             continue  # never reap the live session's own tables
         m = re.search(r"local[_-](\d{13})$", name)
         if not m:

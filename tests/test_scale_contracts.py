@@ -36,15 +36,12 @@ def big_table_path(spark):
     Spark's CacheManager substitutes ANY logically-equal plan with an
     already-persisted relation (and a *materialized* one prints without
     its nested scan detail), so the session cache must be cleared too;
-    the memo dicts are left empty and repopulate lazily afterwards."""
-    from sunat_rree_demo_spark.queries import base as qbase
+    the memo store is left empty and repopulates lazily afterwards."""
     from sunat_rree_demo_spark.sources import catalog
 
     prev_gate = catalog.HOT_CACHE_MAX_BYTES
     catalog.HOT_CACHE_MAX_BYTES = 0
-    catalog._HOT_CACHE.clear()
-    qbase._MONTHLY_CACHE.clear()
-    qbase._PLAN_CACHE.clear()
+    catalog.clear_caches()
     spark.catalog.clearCache()
     try:
         yield
