@@ -206,16 +206,19 @@ def _task_time_ms(sc, descs) -> int | None:
             sd = stages.apply(i)
             stage_rt[sd.stageId()] = sd.executorRunTime()
         jobs = store.jobsList(None)
-        total = 0
+        # a stage listed by several matched jobs (computed once, then
+        # skipped by a later rep reusing its output) ran once: count it
+        # once
+        matched = set()
         for i in range(jobs.size()):
             jd = jobs.apply(i)
             desc = jd.description()
             d = desc.get() if desc.isDefined() else None
             if d and d in descs:
                 sids = jd.stageIds()
-                for s in range(sids.size()):
-                    total += stage_rt.get(int(str(sids.apply(s))), 0)
-        return total
+                matched.update(int(str(sids.apply(s)))
+                               for s in range(sids.size()))
+        return sum(stage_rt.get(sid, 0) for sid in matched)
     except Exception:  # pragma: no cover - store internals may drift
         return None
 

@@ -1,13 +1,15 @@
-"""Dump ``explain("formatted")`` snapshots for the r12 optimization
-round: one ``plans/r12/<query>_<tag>.txt`` file per named query, at the
-bench scale factor (sf0.1 by default), with the hot-table cache off so
+"""Dump ``explain("formatted")`` snapshots: one
+``<out_dir>/<query>_<tag>.txt`` file per named query, at the bench
+scale factor (sf0.1 by default), with the hot-table cache off so
 scans/pushed-filters/exchanges are visible.
 
-    python scripts/r12_plans.py <tag> qNN_name [qNN_name ...]
-    python scripts/r12_plans.py before q204_curation_summary
+    python scripts/plan_dump.py <out_dir> <tag> qNN_name [qNN_name ...]
+    python scripts/plan_dump.py plans/r12 before q204_curation_summary
 
-Unlike plan_report.py (the review dump), these files ARE committed:
-the optimization judge checks before/after plan claims against them.
+Unlike plan_report.py (the review dump), the round directories under
+``plans/`` ARE committed: before/after plan claims are checked against
+them. Expression ids and parquet paths are scrubbed, so two dumps of
+the same plan diff clean.
 """
 
 from __future__ import annotations
@@ -20,19 +22,18 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    if len(sys.argv) < 4:
+        sys.exit(__doc__)
+    dest_dir, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from sunat_rree_demo_spark.queries import REGISTRY
     from sunat_rree_demo_spark.session import get_spark
     from sunat_rree_demo_spark.sources import catalog
 
-    spark = get_spark("r12_plans")
+    spark = get_spark("plan_dump")
     catalog.HOT_CACHE_MAX_BYTES = 0
 
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    dest_dir = os.path.join(here, "plans", "r12")
     os.makedirs(dest_dir, exist_ok=True)
     for name in names:
         q = REGISTRY[name]

@@ -48,31 +48,6 @@ def fmt_currency(value: Column) -> Column:
     )
 
 
-def fmt_currency_pandas_udf():
-    """X11 as a vectorized pandas UDF (Arrow-batched) — the shape the
-    reference's row-wise ``apply(format_currency)`` (``app.py:367-369``)
-    takes when it must stay Python. Kept off the hot path."""
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.types import StringType
-
-    @F.pandas_udf(StringType())
-    def _fmt(s):
-        def one(v):
-            if v is None:
-                return None
-            a = abs(v)
-            if a >= 1e9:
-                return f"${v / 1e9:.1f}B"
-            if a >= 1e6:
-                return f"${v / 1e6:.1f}M"
-            if a >= 1e3:
-                return f"${v / 1e3:.1f}K"
-            return f"${v:.1f}"
-        return s.map(one)
-
-    return _fmt
-
-
 def in_year(col, year: int) -> Column:
     """Scan-pushable year membership: a half-open range compare on the
     RAW date/timestamp column instead of ``F.year(col) == year`` — the

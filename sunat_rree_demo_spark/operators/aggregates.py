@@ -11,29 +11,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from sunat_rree_demo_spark.operators.relational import flow_amount
-
-
-def grouped_sum(df: DataFrame, keys: list[str], amount: str = "usd",
-                alias: str = "total") -> DataFrame:
-    """A1 — grouped SUM (``etl_products.py:104-116``, ``app.py:449-459``)."""
-    return df.groupBy(*keys).agg(F.sum(amount).alias(alias))
-
-
-def conditional_flow_agg(df: DataFrame, keys: list[str],
-                         flow_col: str = "flow", amount_col: str = "usd",
-                         flows: tuple[str, str] = ("export", "import"),
-                         aliases: tuple[str, str] = ("export", "import")) -> DataFrame:
-    """A2 — the pivoted conditional aggregation
-    ``SUM(CASE WHEN flow='export' THEN usd END) AS export, …`` grouped by
-    (year, month[, category]) (``models/metrics.sql:24-28``,
-    ``app.py:38-49``). One shuffle, two conditional sums — cheaper than a
-    generic pivot because the output schema is static."""
-    return df.groupBy(*keys).agg(
-        F.sum(flow_amount(flows[0], flow_col, amount_col)).alias(aliases[0]),
-        F.sum(flow_amount(flows[1], flow_col, amount_col)).alias(aliases[1]),
-    )
-
 
 def pivot_table(df: DataFrame, index: list[str], pivot_col: str,
                 pivot_values: list[str], agg: Column) -> DataFrame:
@@ -42,21 +19,6 @@ def pivot_table(df: DataFrame, index: list[str], pivot_col: str,
     keep the schema deterministic AND skip Spark's extra distinct-values
     job — at scale the values scan alone would be a full pass."""
     return df.groupBy(*index).pivot(pivot_col, pivot_values).agg(agg)
-
-
-def scalar_stats(df: DataFrame, col: str) -> DataFrame:
-    """A8 — global stats bundle (mean/std/min/max/count/sum) used for
-    reports and outlier thresholds (``eda.py:162-164``, ``app.py:336``).
-    ``stddev_samp`` matches pandas ``.std()`` (sample, ddof=1)."""
-    c = F.col(col)
-    return df.agg(
-        F.count(c).alias("n"),
-        F.avg(c).alias("mean"),
-        F.stddev_samp(c).alias("std"),
-        F.min(c).alias("min"),
-        F.max(c).alias("max"),
-        F.sum(c).alias("sum"),
-    )
 
 
 def count_if(cond: Column, alias: str) -> Column:

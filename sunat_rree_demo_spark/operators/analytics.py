@@ -55,13 +55,6 @@ def monthly_profile(df: DataFrame, month_col: str = "month_num",
               .orderBy(month_col))
 
 
-def coverage_ratio(exp, imp, ndigits: int = 2):
-    """Y5 — export/import coverage % with inf-guarded division
-    (``metrics_products.py:72``, ``app.py:517``)."""
-    return F.when(imp.isNotNull() & (imp != 0),
-                  F.round(exp / imp * 100, ndigits))
-
-
 def ytd_vs_prior(df: DataFrame, year_col: str = "year",
                  month_num_col: str = "month_num",
                  value_cols: tuple[str, ...] = ("export", "import")) -> DataFrame:

@@ -1287,12 +1287,6 @@ def simhash(docs: DataFrame, id_col: str, text_col: str,
         F.col(id_col), F.expr(f"CAST({fp} AS BIGINT) AS simhash"))
 
 
-def hamming64(a, b):
-    """Hamming distance between two bigint fingerprints (bit_count of
-    xor)."""
-    return F.bit_count(a.bitwiseXOR(b))
-
-
 def contamination_overlap_bloom(corpus: DataFrame, probe: DataFrame,
                                 id_col: str, text_col: str, n: int = 8,
                                 expected_items: int = 1 << 20,

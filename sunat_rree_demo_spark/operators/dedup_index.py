@@ -54,6 +54,7 @@ from sunat_rree_demo_spark.operators.dedup import (
 from sunat_rree_demo_spark.sources.batch_store import (
     BATCH_COL,
     all_batch_dirs,
+    analysis_error_is,
     clear_commit_marker,
     marker_committed,
 )
@@ -74,12 +75,7 @@ def _read_or_empty(spark: SparkSession, path: str, schema) -> DataFrame:
     try:
         return spark.read.schema(schema).parquet(path)
     except AnalysisException as exc:
-        # error-class check first (getCondition on Spark 4, the
-        # deprecated getErrorClass elsewhere); substring as a fallback
-        # for versions that wrap the class into the message only
-        get_cls = getattr(exc, "getCondition", None) or exc.getErrorClass
-        if (get_cls() or "") == "PATH_NOT_FOUND" \
-                or "PATH_NOT_FOUND" in str(exc):
+        if analysis_error_is(exc, "PATH_NOT_FOUND"):
             return spark.createDataFrame([], schema)
         raise
 

@@ -13,24 +13,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def left_equi(fact: DataFrame, dim: DataFrame, on: list[str],
-              broadcast_dim: bool = True) -> DataFrame:
-    """J1 — left equi-join on a (possibly compound) key
-    (``etl_products.py:123``: monthly sums ⟕ annual totals on
-    (year, flow, category))."""
-    d = F.broadcast(dim) if broadcast_dim else dim
-    return fact.join(d, on=on, how="left")
-
-
 def anti_join(a: DataFrame, b: DataFrame, on: list[str]) -> DataFrame:
     """J3 — keys in A absent from B (``tests/test_products_qa.py:151-160``
     does this with python sets; left_anti is the distributed form)."""
     return a.join(b, on=on, how="left_anti")
-
-
-def semi_join(a: DataFrame, b: DataFrame, on: list[str]) -> DataFrame:
-    """EXISTS-shaped counterpart of J3."""
-    return a.join(b, on=on, how="left_semi")
 
 
 def asof_join(left: DataFrame, right: DataFrame, on: list[str],
@@ -87,9 +73,3 @@ def union_frames(*dfs: DataFrame) -> DataFrame:
     for d in dfs[1:]:
         out = out.unionByName(d)
     return out
-
-
-def domain_difference(a: DataFrame, b: DataFrame, col: str) -> DataFrame:
-    """U2 — set difference of key domains
-    (``tests/test_products_qa.py:151-155``)."""
-    return a.select(col).distinct().exceptAll(b.select(col).distinct())

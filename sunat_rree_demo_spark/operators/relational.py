@@ -18,22 +18,6 @@ def filter_not_total(df: DataFrame, month_col: str = "month") -> DataFrame:
     return df.filter(F.col(month_col) != "Total")
 
 
-def in_year_range(df: DataFrame, lo: int, hi: int, year_col: str = "year") -> DataFrame:
-    """F2 — inclusive range predicate (``app.py:187,483,723``)."""
-    return df.filter(F.col(year_col).between(lo, hi))
-
-
-def in_categories(df: DataFrame, cats: list[str], cat_col: str = "category") -> DataFrame:
-    """F3 — membership predicate (``app.py:483,723``)."""
-    return df.filter(F.col(cat_col).isin(cats))
-
-
-def valid_positive(df: DataFrame, col: str) -> DataFrame:
-    """F5 — validity filter ``notna() & (col > 0)``
-    (``insights_engine.py:63-65``)."""
-    return df.filter(F.col(col).isNotNull() & (F.col(col) > 0))
-
-
 def flow_amount(flow_value: str, flow_col: str = "flow", amount_col: str = "usd") -> Column:
     """F6 — conditional projection ``CASE WHEN flow=x THEN usd END``; the
     deliberate NULL else-branch makes SUM skip the other flow

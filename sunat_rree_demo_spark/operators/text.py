@@ -590,8 +590,7 @@ def oov_stats(df, id_col: str, text_col: str, vocab_size: int = 100):
     )
 
 
-def maxmatch_vocab(docs, text_col: str, top_k: int = 64,
-                   max_len: int = 6):
+def _maxmatch_vocab_from_words(words, top_k: int, max_len: int):
     """Deterministic subword vocabulary for :func:`maxmatch_apply`:
     every single character of the corpus (the WordPiece fallback
     alphabet — no <unk> needed) plus the ``top_k`` most
@@ -599,13 +598,9 @@ def maxmatch_vocab(docs, text_col: str, top_k: int = 64,
     positions, overlaps counted, occurrences weighted by word
     frequency; ties break lexicographic). Returned as a DataFrame of
     pieces so the selection itself is engine-checkable — the q174
-    oracle re-derives it verbatim in SQL."""
-    return _maxmatch_vocab_from_words(_corpus_vocab(docs, text_col),
-                                      top_k, max_len)
+    oracle re-derives it verbatim in SQL.
 
-
-def _maxmatch_vocab_from_words(words, top_k: int, max_len: int):
-    """Vocab selection over an already-built (w, c) word table — split
+    Works over an already-built (w, c) word table — split
     out so :func:`maxmatch_apply` can derive vocab AND segmentation
     from ONE materialized word frame instead of re-running the
     corpus-grain explode+reduce under each branch (the ``words``

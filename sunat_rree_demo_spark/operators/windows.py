@@ -30,11 +30,6 @@ def series_window(partition: list[str] | None = None,
     return w.orderBy(*order)
 
 
-def lag_col(col: str, n: int, w: WindowSpec) -> Column:
-    """W1/W2/W8 — LAG n (row-offset ``shift(n)``, ``metrics.py:66-69``)."""
-    return F.lag(col, n).over(w)
-
-
 def pct_change(col: str, n: int, w: WindowSpec, ndigits: int = 2) -> Column:
     """W3 — ``(x/lag(x,n) - 1)*100`` rounded (``metrics.py:72-75``,
     ``models/metrics.sql:38-43``). NULL lag or zero base → NULL, matching
@@ -93,11 +88,6 @@ def base_index(col: str, w: WindowSpec, ndigits: int = 2) -> Column:
         w.rowsBetween(Window.unboundedPreceding, 0))
     guarded = F.when(first.isNotNull() & (first > 0), first).otherwise(F.lit(1.0))
     return F.round(F.col(col) / guarded * 100, ndigits)
-
-
-def running_sum(col: str, w: WindowSpec) -> Column:
-    """Y4 building block — cumulative (YTD) sum within the partition."""
-    return F.sum(col).over(w.rowsBetween(Window.unboundedPreceding, 0))
 
 
 def yoy_over_annual(df: DataFrame, year_col: str = "year",

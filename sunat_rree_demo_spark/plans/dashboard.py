@@ -17,7 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from sunat_rree_demo_spark.operators.analytics import (
-    monthly_profile,
     seasonality_matrix,
     ytd_vs_prior,
 )
@@ -49,11 +48,6 @@ def country_heatmap(kpi_monthly: DataFrame,
     scoped = kpi_monthly.filter(F.col("year").between(lo, hi))
     return seasonality_matrix(scoped, value_col="export",
                               years=list(range(lo, hi + 1)))
-
-
-def country_profile(kpi_monthly: DataFrame) -> DataFrame:
-    """Monthly mean±std profile with error bars (``app.py:336-357``)."""
-    return monthly_profile(kpi_monthly, value_col="export")
 
 
 def country_detail_tail(kpi_monthly: DataFrame, k: int = 24) -> DataFrame:

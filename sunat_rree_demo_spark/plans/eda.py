@@ -43,16 +43,6 @@ def monthly_base(kpi_monthly: DataFrame) -> DataFrame:
     )
 
 
-def trend_series(base: DataFrame) -> DataFrame:
-    """12/24-month rolling trend (eda.py:126-127)."""
-    w = series_window()
-    return base.select(
-        "year", "month_num", "export_bn",
-        rolling_mean("export_bn", 12, w, ndigits=4).alias("ma12"),
-        rolling_mean("export_bn", 24, w, ndigits=4).alias("ma24"),
-    )
-
-
 def summary(base: DataFrame) -> dict[str, Any]:
     """The eda_summary.md stat bundle (eda.py:243-298 /
     reports/eda/eda_summary.md): mean/std/max exports, surplus share,

@@ -14,10 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from sunat_rree_demo_spark.functions.months import (
-    month_name_es_sql,
-    month_num_from_name_sql,
-)
+from sunat_rree_demo_spark.functions.months import month_num_from_name_sql
 
 
 def view_sql(q: str = "`") -> dict[str, str]:
@@ -95,8 +92,3 @@ def register_sql_views(spark: SparkSession) -> list[str]:
         spark.sql(f"CREATE OR REPLACE TEMP VIEW {name} AS {body}")
         created.append(name)
     return created
-
-
-def month_name_case_sql(col: str) -> str:
-    """Convenience re-export for consumers building presentation SQL."""
-    return month_name_es_sql(col)

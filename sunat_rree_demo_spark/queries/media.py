@@ -10,6 +10,13 @@ straight from the characters. A decoder bug (wrong unfilter, palette
 mix-up, off-by-one stride) breaks the hash match, so the oracle gate
 genuinely verifies the decode, not just the plumbing.
 
+Every query here is built from one round-trip harness: ``_ascii_docs``
+(the printable-ASCII device rows) → ``_encode`` (the one encode pass,
+or a query's own closure when its media rows carry extra columns) →
+the codec's decoder → ``_pixel_stats`` / ``_frame_energy`` (the shared
+exact-integer tails); ``_ascii_sql`` is the oracle's twin of the
+device rows. A query writes only its codec-specific lines.
+
 Reference parity note: the reference dashboard has no media handling
 at all; this family is the driver-mandated multimodal extension
 (SURVEY.md §7.4).
@@ -22,6 +29,118 @@ from pyspark.sql import types as T
 
 from sunat_rree_demo_spark.queries.base import register, t
 
+#: the payload schema of every single-file-per-row encode pass
+_MEDIA_SCHEMA = T.StructType([
+    T.StructField("media_id", T.LongType()),
+    T.StructField("content", T.BinaryType()),
+])
+
+
+def _ascii_docs(spark, sf_dir, width=1, min_len=None, cap=None):
+    """The device rows every media query encodes: ``(media_id, s)``
+    with ``s`` a document's printable-ASCII characters. Documents with
+    fewer than ``min_len`` (default ``width``) such characters drop;
+    the rest are cut to their first ``cap`` characters (when given) and
+    down to whole ``width``-character rows. The length filter runs
+    before the cut, as in ``_ascii_sql``, so the two agree for any
+    arguments."""
+    docs = (
+        t(spark, sf_dir, "documents")
+        .select(F.col("doc_id").alias("media_id"),
+                F.regexp_replace("text", "[^ -~]", "").alias("s"))
+        .filter(F.length("s") >= (width if min_len is None else min_len))
+    )
+    # width 1 needs no whole-row cut: a plain prefix reads s once, so
+    # Catalyst folds it into the prelude's projection
+    if width == 1:
+        if cap is None:
+            return docs
+        return docs.withColumn("s", F.expr(f"substring(s, 1, {cap})"))
+    n = "length(s)" if cap is None else f"least(length(s), {cap})"
+    return docs.withColumn(
+        "s", F.expr(f"substring(s, 1, ({n} div {width}) * {width})"))
+
+
+def _ascii_sql(width=1, min_len=None, cap=None):
+    """The oracle twin of ``_ascii_docs`` as WITH-list text (callers
+    write ``WITH {_ascii_sql(...)}, ...``, or ``WITH RECURSIVE``):
+    ``a`` (doc_id, s) holds the printable-ASCII characters, ``c``
+    (doc_id, s) the kept and cut device rows, and ``v`` one row per
+    character of ``c``: (doc_id, n = the row's length, pos = 0-based
+    offset, val = the character code)."""
+    if width == 1:
+        cut = "s" if cap is None else f"substr(s, 1, {cap})"
+    else:
+        n = "length(s)" if cap is None else f"least(length(s), {cap})"
+        cut = f"substr(s, 1, ({n} // {width}) * {width})"
+    return f"""a AS (
+      SELECT doc_id,
+             regexp_replace(text, '[^ -~]', '', 'g') AS s
+      FROM documents
+    ),
+    c AS (
+      SELECT doc_id, {cut} AS s
+      FROM a WHERE length(s) >= {width if min_len is None else min_len}
+    ),
+    v AS (
+      SELECT doc_id, length(s) AS n,
+             unnest(range(0, length(s))) AS pos,
+             unnest(list_transform(range(1, length(s) + 1),
+                                   i -> ascii(substr(s, i, 1)))) AS val
+      FROM c
+    )"""
+
+
+def _encode(src, mk):
+    """The one encode pass: ``mk(media_id, s) -> bytes`` builds each
+    device row's file, in one Arrow-batched mapInPandas from
+    ``(media_id, s)`` to ``(media_id, content)``; payloads never leave
+    the task that built them."""
+    def encode(it):
+        import pandas as pd
+
+        for pdf in it:
+            yield pd.DataFrame({
+                "media_id": pdf["media_id"],
+                "content": [mk(int(m), s) for m, s in
+                            zip(pdf["media_id"], pdf["s"])],
+            })
+
+    return src.mapInPandas(encode, schema=_MEDIA_SCHEMA)
+
+
+def _pixel_stats(stats, n_col, *cols, mean_col="mean_val"):
+    """The stats projection every pixel round trip ends in:
+    ``doc_id``, the pass-through ``cols``, the sample count as BIGINT
+    ``n_col``, the 4dp mean as ``mean_col`` and ``min_val``/``max_val``.
+    The mean uses the half-up integer device, ``(2·sum·10⁴ + n) div
+    2n``: no float mean ever materializes, so both engines agree bit
+    for bit."""
+    return stats.select(
+        F.col("media_id").alias("doc_id"), *cols,
+        F.col("n_samples").cast("bigint").alias(n_col),
+        (F.expr("(2 * sum_val * 10000 + n_samples) "
+                "div (2 * n_samples)").cast("double") / 10000.0)
+        .alias(mean_col),
+        "min_val", "max_val",
+    )
+
+
+def _frame_energy(media, frame_ms, decimate=1):
+    """The audio tail: per-frame RMS energy of the decoded PCM
+    (``pcm_frame_energy``, box-decimated by ``decimate``) at 4dp, in
+    (doc_id, frame_no) order. ``_FRAME_ENERGY_SQL`` is its oracle."""
+    from sunat_rree_demo_spark.operators.multimodal import pcm_frame_energy
+
+    return (
+        pcm_frame_energy(media, frame_ms=frame_ms, decimate=decimate)
+        .select(F.col("media_id").alias("doc_id"),
+                "frame_no", "n_samples",
+                F.round("rms", 4).alias("rms_4dp"))
+        .orderBy("doc_id", "frame_no")
+    )
+
+
 #: pixels per PNG row for the manufactured images
 _PNG_W = 16
 
@@ -29,22 +148,7 @@ _PNG_W = 16
 @register(
     "q186_png_pixel_stats",
     oracle=f"""
-    WITH a AS (
-      SELECT doc_id,
-             regexp_replace(text, '[^ -~]', '', 'g') AS s
-      FROM documents
-    ),
-    c AS (
-      SELECT doc_id,
-             substr(s, 1, (length(s) // {_PNG_W}) * {_PNG_W}) AS s
-      FROM a WHERE length(s) >= {_PNG_W}
-    ),
-    v AS (
-      SELECT doc_id, length(s) AS n,
-             unnest(list_transform(range(1, length(s) + 1),
-                                   i -> ascii(substr(s, i, 1)))) AS val
-      FROM c
-    )
+    WITH {_ascii_sql(_PNG_W)}
     SELECT doc_id,
            CAST({_PNG_W} AS INT) AS width,
            CAST(n // {_PNG_W} AS INT) AS height,
@@ -76,43 +180,11 @@ def q186_png_pixel_stats(spark, sf_dir):
         image_pixel_stats,
     )
 
-    d = t(spark, sf_dir, "documents")
-    src = (
-        d.select(F.col("doc_id").alias("media_id"),
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .withColumn("s", F.expr(
-            f"substring(s, 1, (length(s) div {_PNG_W}) * {_PNG_W})"))
-        .filter(F.length("s") >= _PNG_W)
-    )
-
-    def encode(it):
-        import pandas as pd
-
-        for pdf in it:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "content": pdf["s"].map(
-                    lambda s: encode_png_gray(s.encode("ascii"), _PNG_W)),
-            })
-
-    media_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ])
-    media = src.mapInPandas(encode, schema=media_schema)
-    stats = image_pixel_stats(media)
-    return (
-        stats.select(
-            F.col("media_id").alias("doc_id"),
-            "width", "height",
-            F.col("n_samples").cast("bigint").alias("n_pixels"),
-            (F.expr("(2 * sum_val * 10000 + n_samples) "
-                    "div (2 * n_samples)").cast("double") / 10000.0)
-            .alias("mean_val"),
-            "min_val", "max_val",
-        )
-        .orderBy("doc_id")
-    )
+    media = _encode(_ascii_docs(spark, sf_dir, _PNG_W),
+                    lambda mid, s: encode_png_gray(s.encode("ascii"),
+                                                   _PNG_W))
+    return _pixel_stats(image_pixel_stats(media), "n_pixels",
+                        "width", "height").orderBy("doc_id")
 
 
 #: q210 interlaced-PNG width — deliberately NOT a multiple of 8 so
@@ -124,22 +196,7 @@ _PNG7_W = 21
 @register(
     "q210_adam7_png_stats",
     oracle=f"""
-    WITH a AS (
-      SELECT doc_id,
-             regexp_replace(text, '[^ -~]', '', 'g') AS s
-      FROM documents
-    ),
-    c AS (
-      SELECT doc_id,
-             substr(s, 1, (length(s) // {_PNG7_W}) * {_PNG7_W}) AS s
-      FROM a WHERE length(s) >= {_PNG7_W}
-    ),
-    v AS (
-      SELECT doc_id, length(s) AS n,
-             unnest(list_transform(range(1, length(s) + 1),
-                                   i -> ascii(substr(s, i, 1)))) AS val
-      FROM c
-    )
+    WITH {_ascii_sql(_PNG7_W)}
     SELECT doc_id,
            CAST({_PNG7_W} AS INT) AS width,
            CAST(n // {_PNG7_W} AS INT) AS height,
@@ -174,44 +231,12 @@ def q210_adam7_png_stats(spark, sf_dir):
     )
     from sunat_rree_demo_spark.operators.skew import fan_out
 
-    d = t(spark, sf_dir, "documents")
-    src = fan_out(
-        d.select(F.col("doc_id").alias("media_id"),
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .withColumn("s", F.expr(
-            f"substring(s, 1, (length(s) div {_PNG7_W}) * {_PNG7_W})"))
-        .filter(F.length("s") >= _PNG7_W)
-    )
-
-    def encode(it):
-        import pandas as pd
-
-        for pdf in it:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "content": pdf["s"].map(
-                    lambda s: encode_png_gray(s.encode("ascii"),
-                                              _PNG7_W, interlace=True)),
-            })
-
-    media_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ])
-    media = src.mapInPandas(encode, schema=media_schema)
-    stats = image_pixel_stats(media)
-    return (
-        stats.select(
-            F.col("media_id").alias("doc_id"),
-            "width", "height",
-            F.col("n_samples").cast("bigint").alias("n_pixels"),
-            (F.expr("(2 * sum_val * 10000 + n_samples) "
-                    "div (2 * n_samples)").cast("double") / 10000.0)
-            .alias("mean_val"),
-            "min_val", "max_val",
-        )
-        .orderBy("doc_id")
-    )
+    media = _encode(fan_out(_ascii_docs(spark, sf_dir, _PNG7_W)),
+                    lambda mid, s: encode_png_gray(s.encode("ascii"),
+                                                   _PNG7_W,
+                                                   interlace=True))
+    return _pixel_stats(image_pixel_stats(media), "n_pixels",
+                        "width", "height").orderBy("doc_id")
 
 
 #: 8×8 blocks per JPEG block-row (one block per character) → width 128
@@ -221,22 +246,7 @@ _JPEG_BPR = 16
 @register(
     "q201_jpeg_pixel_stats",
     oracle=f"""
-    WITH a AS (
-      SELECT doc_id,
-             regexp_replace(text, '[^ -~]', '', 'g') AS s
-      FROM documents
-    ),
-    c AS (
-      SELECT doc_id,
-             substr(s, 1, (length(s) // {_JPEG_BPR}) * {_JPEG_BPR}) AS s
-      FROM a WHERE length(s) >= {_JPEG_BPR}
-    ),
-    v AS (
-      SELECT doc_id, length(s) AS n,
-             unnest(list_transform(range(1, length(s) + 1),
-                                   i -> ascii(substr(s, i, 1)))) AS val
-      FROM c
-    )
+    WITH {_ascii_sql(_JPEG_BPR)}
     SELECT doc_id,
            CAST({_JPEG_BPR} * 8 AS INT) AS width,
            CAST((n // {_JPEG_BPR}) * 8 AS INT) AS height,
@@ -271,47 +281,14 @@ def q201_jpeg_pixel_stats(spark, sf_dir):
     )
     from sunat_rree_demo_spark.operators.skew import fan_out
 
-    d = t(spark, sf_dir, "documents")
     # the codec passes are CPU-bound Python over a SMALL parquet input
     # (one split) — without the fan_out every encode+decode serializes
     # on one core (r7: 54s -> ~3s cold at sf0.1 on local[32])
-    src = fan_out(
-        d.select(F.col("doc_id").alias("media_id"),
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .withColumn("s", F.expr(
-            f"substring(s, 1, (length(s) div {_JPEG_BPR}) * {_JPEG_BPR})"))
-        .filter(F.length("s") >= _JPEG_BPR)
-    )
-
-    def encode(it):
-        import pandas as pd
-
-        for pdf in it:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "content": pdf["s"].map(
-                    lambda s: encode_jpeg_gray_blocks(
-                        s.encode("ascii"), _JPEG_BPR)),
-            })
-
-    media_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ])
-    media = src.mapInPandas(encode, schema=media_schema)
-    stats = image_pixel_stats(media)
-    return (
-        stats.select(
-            F.col("media_id").alias("doc_id"),
-            "width", "height",
-            F.col("n_samples").cast("bigint").alias("n_pixels"),
-            (F.expr("(2 * sum_val * 10000 + n_samples) "
-                    "div (2 * n_samples)").cast("double") / 10000.0)
-            .alias("mean_val"),
-            "min_val", "max_val",
-        )
-        .orderBy("doc_id")
-    )
+    media = _encode(fan_out(_ascii_docs(spark, sf_dir, _JPEG_BPR)),
+                    lambda mid, s: encode_jpeg_gray_blocks(
+                        s.encode("ascii"), _JPEG_BPR))
+    return _pixel_stats(image_pixel_stats(media), "n_pixels",
+                        "width", "height").orderBy("doc_id")
 
 
 #: q209 color construction: 16×16 MCUs (4:2:0) per character → 8 MCUs
@@ -323,29 +300,10 @@ def q201_jpeg_pixel_stats(spark, sf_dir):
 _MCU_PR = 8
 _MCU_CAP = 32
 
-
-@register(
-    "q209_jpeg_color_stats",
-    oracle=f"""
-    WITH a AS (
-      SELECT doc_id,
-             regexp_replace(text, '[^ -~]', '', 'g') AS s
-      FROM documents
-    ),
-    c AS (
-      SELECT doc_id,
-             substr(substr(s, 1, {_MCU_CAP}), 1,
-                    (least(length(s), {_MCU_CAP}) // {_MCU_PR})
-                    * {_MCU_PR}) AS s
-      FROM a WHERE length(s) >= {_MCU_PR}
-    ),
-    v AS (
-      SELECT doc_id, length(s) AS n,
-             unnest(list_transform(range(1, length(s) + 1),
-                                   i -> ascii(substr(s, i, 1)))) AS val
-      FROM c
-    ),
-    rgb AS (
+#: the q209/q211 color device's per-character r/g/b, from ``v``: the
+#: decoder's floor(x+0.5) YCbCr→RGB of (Y, Cb, Cr) = (val, 255−val,
+#: val+64)
+_RGB_SQL = """rgb AS (
       SELECT doc_id, n,
              CAST(least(greatest(floor(
                val + 1.402 * (val + 64 - 128) + 0.5), 0), 255)
@@ -358,7 +316,14 @@ _MCU_CAP = 32
                val + 1.772 * (255 - val - 128) + 0.5), 0), 255)
                AS BIGINT) AS b
       FROM v
-    )
+    )"""
+
+
+@register(
+    "q209_jpeg_color_stats",
+    oracle=f"""
+    WITH {_ascii_sql(_MCU_PR, cap=_MCU_CAP)},
+    {_RGB_SQL}
     SELECT doc_id,
            CAST({_MCU_PR} * 16 AS INT) AS width,
            CAST((n // {_MCU_PR}) * 16 AS INT) AS height,
@@ -392,60 +357,26 @@ def q209_jpeg_color_stats(spark, sf_dir):
     Scale shape: fan_out → one Arrow-batched encode pass → one decode
     + stats pass at document grain; pixels never leave the task that
     decoded them (no shuffle before the doc-grain output sort)."""
-    import numpy as np
-
     from sunat_rree_demo_spark.operators.multimodal import (
         encode_jpeg_color_dc_mcus,
         image_pixel_stats,
     )
     from sunat_rree_demo_spark.operators.skew import fan_out
 
-    d = t(spark, sf_dir, "documents")
-    src = fan_out(
-        d.select(F.col("doc_id").alias("media_id"),
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .filter(F.length("s") >= _MCU_PR)
-        .withColumn("s", F.expr(
-            f"substring(substring(s, 1, {_MCU_CAP}), 1, "
-            f"(least(length(s), {_MCU_CAP}) div {_MCU_PR})"
-            f" * {_MCU_PR})"))
-    )
+    import numpy as np
 
-    def encode(it):
-        import pandas as pd
+    def mk(mid: int, s: str) -> bytes:
+        y = s.encode("ascii")
+        arr = np.frombuffer(y, np.uint8).astype(np.int64)
+        cb = (255 - arr).astype(np.uint8).tobytes()
+        cr = (arr + 64).astype(np.uint8).tobytes()
+        return encode_jpeg_color_dc_mcus(y, cb, cr, _MCU_PR,
+                                         samp=(2, 2))
 
-        def mk(s: str) -> bytes:
-            y = s.encode("ascii")
-            arr = np.frombuffer(y, np.uint8).astype(np.int64)
-            cb = (255 - arr).astype(np.uint8).tobytes()
-            cr = (arr + 64).astype(np.uint8).tobytes()
-            return encode_jpeg_color_dc_mcus(y, cb, cr, _MCU_PR,
-                                             samp=(2, 2))
-
-        for pdf in it:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "content": pdf["s"].map(mk),
-            })
-
-    media_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ])
-    media = src.mapInPandas(encode, schema=media_schema)
-    stats = image_pixel_stats(media)
-    return (
-        stats.select(
-            F.col("media_id").alias("doc_id"),
-            "width", "height",
-            F.col("n_samples").cast("bigint").alias("n_samples"),
-            (F.expr("(2 * sum_val * 10000 + n_samples) "
-                    "div (2 * n_samples)").cast("double") / 10000.0)
-            .alias("mean_val"),
-            "min_val", "max_val",
-        )
-        .orderBy("doc_id")
-    )
+    media = _encode(
+        fan_out(_ascii_docs(spark, sf_dir, _MCU_PR, cap=_MCU_CAP)), mk)
+    return _pixel_stats(image_pixel_stats(media), "n_samples",
+                        "width", "height").orderBy("doc_id")
 
 
 #: q212 GIF width — a prime, so interlace pass boundaries never align
@@ -456,22 +387,7 @@ _GIF_W = 13
 @register(
     "q212_gif_pixel_stats",
     oracle=f"""
-    WITH a AS (
-      SELECT doc_id,
-             regexp_replace(text, '[^ -~]', '', 'g') AS s
-      FROM documents
-    ),
-    c AS (
-      SELECT doc_id,
-             substr(s, 1, (length(s) // {_GIF_W}) * {_GIF_W}) AS s
-      FROM a WHERE length(s) >= {_GIF_W}
-    ),
-    v AS (
-      SELECT doc_id, length(s) AS n,
-             unnest(list_transform(range(1, length(s) + 1),
-                                   i -> ascii(substr(s, i, 1)))) AS val
-      FROM c
-    )
+    WITH {_ascii_sql(_GIF_W)}
     SELECT doc_id,
            CAST({_GIF_W} AS INT) AS width,
            CAST(n // {_GIF_W} AS INT) AS height,
@@ -506,44 +422,12 @@ def q212_gif_pixel_stats(spark, sf_dir):
     )
     from sunat_rree_demo_spark.operators.skew import fan_out
 
-    d = t(spark, sf_dir, "documents")
-    src = fan_out(
-        d.select(F.col("doc_id").alias("media_id"),
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .withColumn("s", F.expr(
-            f"substring(s, 1, (length(s) div {_GIF_W}) * {_GIF_W})"))
-        .filter(F.length("s") >= _GIF_W)
-    )
-
-    def encode(it):
-        import pandas as pd
-
-        for pdf in it:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "content": pdf["s"].map(
-                    lambda s: encode_gif_gray(s.encode("ascii"),
-                                              _GIF_W, interlace=True)),
-            })
-
-    media_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ])
-    media = src.mapInPandas(encode, schema=media_schema)
-    stats = image_pixel_stats(media)
-    return (
-        stats.select(
-            F.col("media_id").alias("doc_id"),
-            "width", "height",
-            F.col("n_samples").cast("bigint").alias("n_samples"),
-            (F.expr("(2 * sum_val * 10000 + n_samples) "
-                    "div (2 * n_samples)").cast("double") / 10000.0)
-            .alias("mean_val"),
-            "min_val", "max_val",
-        )
-        .orderBy("doc_id")
-    )
+    media = _encode(fan_out(_ascii_docs(spark, sf_dir, _GIF_W)),
+                    lambda mid, s: encode_gif_gray(s.encode("ascii"),
+                                                   _GIF_W,
+                                                   interlace=True))
+    return _pixel_stats(image_pixel_stats(media), "n_samples",
+                        "width", "height").orderBy("doc_id")
 
 
 #: q213 BMP width — a prime distinct from q186 (16), q210 (21) and
@@ -554,22 +438,7 @@ _BMP_W = 11
 @register(
     "q213_bmp_rle_stats",
     oracle=f"""
-    WITH a AS (
-      SELECT doc_id,
-             regexp_replace(text, '[^ -~]', '', 'g') AS s
-      FROM documents
-    ),
-    c AS (
-      SELECT doc_id,
-             substr(s, 1, (length(s) // {_BMP_W}) * {_BMP_W}) AS s
-      FROM a WHERE length(s) >= {_BMP_W}
-    ),
-    v AS (
-      SELECT doc_id, length(s) AS n,
-             unnest(list_transform(range(1, length(s) + 1),
-                                   i -> ascii(substr(s, i, 1)))) AS val
-      FROM c
-    )
+    WITH {_ascii_sql(_BMP_W)}
     SELECT doc_id,
            CAST({_BMP_W} AS INT) AS width,
            CAST(n // {_BMP_W} AS INT) AS height,
@@ -605,44 +474,11 @@ def q213_bmp_rle_stats(spark, sf_dir):
     )
     from sunat_rree_demo_spark.operators.skew import fan_out
 
-    d = t(spark, sf_dir, "documents")
-    src = fan_out(
-        d.select(F.col("doc_id").alias("media_id"),
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .withColumn("s", F.expr(
-            f"substring(s, 1, (length(s) div {_BMP_W}) * {_BMP_W})"))
-        .filter(F.length("s") >= _BMP_W)
-    )
-
-    def encode(it):
-        import pandas as pd
-
-        for pdf in it:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "content": pdf["s"].map(
-                    lambda s: encode_bmp_rle8_gray(
-                        s.encode("ascii"), _BMP_W)),
-            })
-
-    media_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ])
-    media = src.mapInPandas(encode, schema=media_schema)
-    stats = image_pixel_stats(media)
-    return (
-        stats.select(
-            F.col("media_id").alias("doc_id"),
-            "width", "height",
-            F.col("n_samples").cast("bigint").alias("n_samples"),
-            (F.expr("(2 * sum_val * 10000 + n_samples) "
-                    "div (2 * n_samples)").cast("double") / 10000.0)
-            .alias("mean_val"),
-            "min_val", "max_val",
-        )
-        .orderBy("doc_id")
-    )
+    media = _encode(fan_out(_ascii_docs(spark, sf_dir, _BMP_W)),
+                    lambda mid, s: encode_bmp_rle8_gray(
+                        s.encode("ascii"), _BMP_W))
+    return _pixel_stats(image_pixel_stats(media), "n_samples",
+                        "width", "height").orderBy("doc_id")
 
 
 #: q211 progressive construction: 7 MCUs/row (width 112 — distinct
@@ -657,38 +493,8 @@ _PROG_CAP = 28
 @register(
     "q211_progressive_jpeg_stats",
     oracle=f"""
-    WITH a AS (
-      SELECT doc_id,
-             regexp_replace(text, '[^ -~]', '', 'g') AS s
-      FROM documents
-    ),
-    c AS (
-      SELECT doc_id,
-             substr(substr(s, 1, {_PROG_CAP}), 1,
-                    (least(length(s), {_PROG_CAP}) // {_PROG_PR})
-                    * {_PROG_PR}) AS s
-      FROM a WHERE length(s) >= {_PROG_PR} AND doc_id % 5 = 0
-    ),
-    v AS (
-      SELECT doc_id, length(s) AS n,
-             unnest(list_transform(range(1, length(s) + 1),
-                                   i -> ascii(substr(s, i, 1)))) AS val
-      FROM c
-    ),
-    rgb AS (
-      SELECT doc_id, n,
-             CAST(least(greatest(floor(
-               val + 1.402 * (val + 64 - 128) + 0.5), 0), 255)
-               AS BIGINT) AS r,
-             CAST(least(greatest(floor(
-               val - 0.344136 * (255 - val - 128)
-                   - 0.714136 * (val + 64 - 128) + 0.5), 0), 255)
-               AS BIGINT) AS g,
-             CAST(least(greatest(floor(
-               val + 1.772 * (255 - val - 128) + 0.5), 0), 255)
-               AS BIGINT) AS b
-      FROM v
-    )
+    WITH {_ascii_sql(_PROG_PR, cap=_PROG_CAP)},
+    {_RGB_SQL}
     SELECT doc_id,
            CAST({_PROG_PR} * 16 AS INT) AS width,
            CAST((n // {_PROG_PR}) * 16 AS INT) AS height,
@@ -697,7 +503,8 @@ _PROG_CAP = 28
                 // (2 * 768 * n) AS DOUBLE) / 10000.0 AS mean_val,
            CAST(min(least(r, g, b)) AS INT) AS min_val,
            CAST(max(greatest(r, g, b)) AS INT) AS max_val
-    FROM rgb GROUP BY doc_id, n ORDER BY doc_id
+    FROM rgb WHERE doc_id % 5 = 0
+    GROUP BY doc_id, n ORDER BY doc_id
     """,
     tags=("media", "multimodal", "codec"),
 )
@@ -715,60 +522,25 @@ def q211_progressive_jpeg_stats(spark, sf_dir):
 
     Scale shape: identical to q209 — fan_out → Arrow-batched encode →
     one decode+stats pass, no shuffle before the doc-grain sort."""
-    import numpy as np
-
     from sunat_rree_demo_spark.operators.multimodal import (
         encode_jpeg_color_dc_progressive,
         image_pixel_stats,
     )
     from sunat_rree_demo_spark.operators.skew import fan_out
 
-    d = t(spark, sf_dir, "documents")
-    src = fan_out(
-        d.filter(F.col("doc_id") % 5 == 0)
-        .select(F.col("doc_id").alias("media_id"),
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .filter(F.length("s") >= _PROG_PR)
-        .withColumn("s", F.expr(
-            f"substring(substring(s, 1, {_PROG_CAP}), 1, "
-            f"(least(length(s), {_PROG_CAP}) div {_PROG_PR})"
-            f" * {_PROG_PR})"))
-    )
+    import numpy as np
 
-    def encode(it):
-        import pandas as pd
+    def mk(mid: int, s: str) -> bytes:
+        y = s.encode("ascii")
+        arr = np.frombuffer(y, np.uint8).astype(np.int64)
+        cb = (255 - arr).astype(np.uint8).tobytes()
+        cr = (arr + 64).astype(np.uint8).tobytes()
+        return encode_jpeg_color_dc_progressive(y, cb, cr, _PROG_PR)
 
-        def mk(s: str) -> bytes:
-            y = s.encode("ascii")
-            arr = np.frombuffer(y, np.uint8).astype(np.int64)
-            cb = (255 - arr).astype(np.uint8).tobytes()
-            cr = (arr + 64).astype(np.uint8).tobytes()
-            return encode_jpeg_color_dc_progressive(y, cb, cr, _PROG_PR)
-
-        for pdf in it:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "content": pdf["s"].map(mk),
-            })
-
-    media_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ])
-    media = src.mapInPandas(encode, schema=media_schema)
-    stats = image_pixel_stats(media)
-    return (
-        stats.select(
-            F.col("media_id").alias("doc_id"),
-            "width", "height",
-            F.col("n_samples").cast("bigint").alias("n_samples"),
-            (F.expr("(2 * sum_val * 10000 + n_samples) "
-                    "div (2 * n_samples)").cast("double") / 10000.0)
-            .alias("mean_val"),
-            "min_val", "max_val",
-        )
-        .orderBy("doc_id")
-    )
+    docs = _ascii_docs(spark, sf_dir, _PROG_PR, cap=_PROG_CAP)
+    media = _encode(fan_out(docs.filter(F.col("media_id") % 5 == 0)), mk)
+    return _pixel_stats(image_pixel_stats(media), "n_samples",
+                        "width", "height").orderBy("doc_id")
 
 
 #: q207 audio construction: sample rate / frame window give 160
@@ -778,32 +550,26 @@ _WAV_RATE = 8000
 _WAV_FRAME_MS = 20
 _WAV_SPF = _WAV_RATE * _WAV_FRAME_MS // 1000
 
-
-@register(
-    "q207_wav_frame_energy",
-    oracle=f"""
-    WITH a AS (
-      SELECT doc_id,
-             regexp_replace(text, '[^ -~]', '', 'g') AS s
-      FROM documents
-    ),
-    v AS (
-      SELECT doc_id,
-             unnest(list_transform(range(1, length(s) + 1),
-               i -> (ascii(substr(s, i, 1)) - 79) * 256)) AS smp,
-             unnest(range(0, length(s))) AS pos
-      FROM a WHERE length(s) >= 1
-    ),
-    f AS (
+#: the oracle twin of ``_frame_energy``: the WITH-list tail and query
+#: over a caller's ``p`` (doc_id, pos, smp) per-sample CTE
+_FRAME_ENERGY_SQL = f"""f AS (
       SELECT doc_id,
              CAST(pos // {_WAV_SPF} AS BIGINT) AS frame_no,
              CAST(count(*) AS BIGINT) AS n_samples,
              sum(CAST(smp AS BIGINT) * smp) AS ssq
-      FROM v GROUP BY 1, 2
+      FROM p GROUP BY 1, 2
     )
     SELECT doc_id, frame_no, n_samples,
            round(sqrt(CAST(ssq AS DOUBLE) / n_samples), 4) AS rms_4dp
-    FROM f ORDER BY doc_id, frame_no
+    FROM f ORDER BY doc_id, frame_no"""
+
+
+@register(
+    "q207_wav_frame_energy",
+    oracle=f"""
+    WITH {_ascii_sql()},
+    p AS (SELECT doc_id, pos, (val - 79) * 256 AS smp FROM v),
+    {_FRAME_ENERGY_SQL}
     """,
     tags=("media", "multimodal", "codec", "audio"),
 )
@@ -824,45 +590,17 @@ def q207_wav_frame_energy(spark, sf_dir):
     Scale shape: fan_out → one Arrow-batched encode pass → one decode
     + frame-energy pass; output is frame grain with no shuffle before
     the output sort (silence-trim/VAD pipelines consume it there)."""
-    from sunat_rree_demo_spark.operators.multimodal import (
-        encode_wav_pcm16,
-        pcm_frame_energy,
-    )
+    from sunat_rree_demo_spark.operators.multimodal import encode_wav_pcm16
     from sunat_rree_demo_spark.operators.skew import fan_out
 
     import numpy as np
 
-    d = t(spark, sf_dir, "documents")
-    src = fan_out(
-        d.select(F.col("doc_id").alias("media_id"),
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .filter(F.length("s") >= 1)
-    )
-
-    def encode(it):
-        import pandas as pd
-
-        for pdf in it:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "content": pdf["s"].map(lambda s: encode_wav_pcm16(
-                    (np.frombuffer(s.encode("ascii"), np.uint8)
-                     .astype(np.int64) - 79) * 256,
-                    rate=_WAV_RATE)),
-            })
-
-    media_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ])
-    media = src.mapInPandas(encode, schema=media_schema)
-    return (
-        pcm_frame_energy(media, frame_ms=_WAV_FRAME_MS)
-        .select(F.col("media_id").alias("doc_id"),
-                "frame_no", "n_samples",
-                F.round("rms", 4).alias("rms_4dp"))
-        .orderBy("doc_id", "frame_no")
-    )
+    media = _encode(fan_out(_ascii_docs(spark, sf_dir)),
+                    lambda mid, s: encode_wav_pcm16(
+                        (np.frombuffer(s.encode("ascii"), np.uint8)
+                         .astype(np.int64) - 79) * 256,
+                        rate=_WAV_RATE))
+    return _frame_energy(media, _WAV_FRAME_MS)
 
 
 # --------------------------------------------------------------- q214 G.711
@@ -889,38 +627,18 @@ _ULAW_SQL, _ALAW_SQL = _g711_luts()
 @register(
     "q214_g711_frame_energy",
     oracle=f"""
-    WITH lut AS (
+    WITH {_ascii_sql()},
+    lut AS (
       SELECT unnest(range(32, 127)) AS code,
              unnest([{_ULAW_SQL}]) AS u,
              unnest([{_ALAW_SQL}]) AS a
     ),
-    d AS (
-      SELECT doc_id,
-             regexp_replace(text, '[^ -~]', '', 'g') AS s
-      FROM documents
-    ),
-    v AS (
-      SELECT doc_id,
-             unnest(list_transform(range(1, length(s) + 1),
-                    i -> ascii(substr(s, i, 1)))) AS code,
-             unnest(range(0, length(s))) AS pos
-      FROM d WHERE length(s) >= 1
-    ),
-    w AS (
+    p AS (
       SELECT doc_id, pos,
-             CASE WHEN doc_id % 2 = 0 THEN u ELSE a END AS smp
-      FROM v JOIN lut USING (code)
+             CASE WHEN doc_id % 2 = 0 THEN u ELSE lut.a END AS smp
+      FROM v JOIN lut ON lut.code = v.val
     ),
-    f AS (
-      SELECT doc_id,
-             CAST(pos // {_WAV_SPF} AS BIGINT) AS frame_no,
-             CAST(count(*) AS BIGINT) AS n_samples,
-             sum(CAST(smp AS BIGINT) * smp) AS ssq
-      FROM w GROUP BY 1, 2
-    )
-    SELECT doc_id, frame_no, n_samples,
-           round(sqrt(CAST(ssq AS DOUBLE) / n_samples), 4) AS rms_4dp
-    FROM f ORDER BY doc_id, frame_no
+    {_FRAME_ENERGY_SQL}
     """,
     tags=("media", "multimodal", "codec", "audio"),
 )
@@ -942,45 +660,15 @@ def q214_g711_frame_energy(spark, sf_dir):
     Scale shape: identical to q207 — fan_out → Arrow-batched encode →
     one decode+energy pass, frame-grain output, no shuffle before the
     output sort."""
-    from sunat_rree_demo_spark.operators.multimodal import (
-        encode_wav_g711,
-        pcm_frame_energy,
-    )
+    from sunat_rree_demo_spark.operators.multimodal import encode_wav_g711
     from sunat_rree_demo_spark.operators.skew import fan_out
 
-    d = t(spark, sf_dir, "documents")
-    src = fan_out(
-        d.select(F.col("doc_id").alias("media_id"),
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .filter(F.length("s") >= 1)
-    )
-
-    def encode(it):
-        import pandas as pd
-
-        for pdf in it:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "content": [
-                    encode_wav_g711(
+    media = _encode(fan_out(_ascii_docs(spark, sf_dir)),
+                    lambda mid, s: encode_wav_g711(
                         s.encode("ascii"),
                         law="ulaw" if mid % 2 == 0 else "alaw",
-                        rate=_WAV_RATE)
-                    for mid, s in zip(pdf["media_id"], pdf["s"])],
-            })
-
-    media_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ])
-    media = src.mapInPandas(encode, schema=media_schema)
-    return (
-        pcm_frame_energy(media, frame_ms=_WAV_FRAME_MS)
-        .select(F.col("media_id").alias("doc_id"),
-                "frame_no", "n_samples",
-                F.round("rms", 4).alias("rms_4dp"))
-        .orderBy("doc_id", "frame_no")
-    )
+                        rate=_WAV_RATE))
+    return _frame_energy(media, _WAV_FRAME_MS)
 
 
 #: q216 sample mapping: a different scale than q207's <<8 so a
@@ -991,29 +679,9 @@ _FLAC_SCALE = 181
 @register(
     "q216_flac_frame_energy",
     oracle=f"""
-    WITH a AS (
-      SELECT doc_id,
-             regexp_replace(text, '[^ -~]', '', 'g') AS s
-      FROM documents
-    ),
-    v AS (
-      SELECT doc_id,
-             unnest(list_transform(range(1, length(s) + 1),
-               i -> (ascii(substr(s, i, 1)) - 79) * {_FLAC_SCALE}))
-               AS smp,
-             unnest(range(0, length(s))) AS pos
-      FROM a WHERE length(s) >= 1
-    ),
-    f AS (
-      SELECT doc_id,
-             CAST(pos // {_WAV_SPF} AS BIGINT) AS frame_no,
-             CAST(count(*) AS BIGINT) AS n_samples,
-             sum(CAST(smp AS BIGINT) * smp) AS ssq
-      FROM v GROUP BY 1, 2
-    )
-    SELECT doc_id, frame_no, n_samples,
-           round(sqrt(CAST(ssq AS DOUBLE) / n_samples), 4) AS rms_4dp
-    FROM f ORDER BY doc_id, frame_no
+    WITH {_ascii_sql()},
+    p AS (SELECT doc_id, pos, (val - 79) * {_FLAC_SCALE} AS smp FROM v),
+    {_FRAME_ENERGY_SQL}
     """,
     tags=("media", "multimodal", "codec", "audio"),
 )
@@ -1035,51 +703,21 @@ def q216_flac_frame_energy(spark, sf_dir):
     Scale shape: identical to q207 — fan_out → Arrow-batched encode →
     one decode+energy pass, frame-grain output, no shuffle before the
     output sort."""
-    from sunat_rree_demo_spark.operators.multimodal import (
-        encode_flac_pcm16,
-        pcm_frame_energy,
-    )
+    from sunat_rree_demo_spark.operators.multimodal import encode_flac_pcm16
     from sunat_rree_demo_spark.operators.skew import fan_out
 
     import numpy as np
 
-    d = t(spark, sf_dir, "documents")
-    src = fan_out(
-        d.select(F.col("doc_id").alias("media_id"),
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .filter(F.length("s") >= 1)
-    )
+    def mk(mid: int, s: str) -> bytes:
+        smp = (np.frombuffer(s.encode("ascii"), np.uint8)
+               .astype(np.int64) - 79) * _FLAC_SCALE
+        return encode_flac_pcm16(
+            smp, rate=_WAV_RATE, blocksize=256,
+            lpc=bool(mid % 2),
+            p_order=2 if mid % 3 == 0 else 0)
 
-    def encode(it):
-        import pandas as pd
-
-        def mk(mid: int, s: str) -> bytes:
-            smp = (np.frombuffer(s.encode("ascii"), np.uint8)
-                   .astype(np.int64) - 79) * _FLAC_SCALE
-            return encode_flac_pcm16(
-                smp, rate=_WAV_RATE, blocksize=256,
-                lpc=bool(mid % 2),
-                p_order=2 if mid % 3 == 0 else 0)
-
-        for pdf in it:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "content": [mk(int(m), s) for m, s in
-                            zip(pdf["media_id"], pdf["s"])],
-            })
-
-    media_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ])
-    media = src.mapInPandas(encode, schema=media_schema)
-    return (
-        pcm_frame_energy(media, frame_ms=_WAV_FRAME_MS)
-        .select(F.col("media_id").alias("doc_id"),
-                "frame_no", "n_samples",
-                F.round("rms", 4).alias("rms_4dp"))
-        .orderBy("doc_id", "frame_no")
-    )
+    media = _encode(fan_out(_ascii_docs(spark, sf_dir)), mk)
+    return _frame_energy(media, _WAV_FRAME_MS)
 
 
 #: q217 TIFF width — a prime distinct from every other raster device
@@ -1090,22 +728,7 @@ _TIFF_W = 23
 @register(
     "q217_tiff_pixel_stats",
     oracle=f"""
-    WITH a AS (
-      SELECT doc_id,
-             regexp_replace(text, '[^ -~]', '', 'g') AS s
-      FROM documents
-    ),
-    c AS (
-      SELECT doc_id,
-             substr(s, 1, (length(s) // {_TIFF_W}) * {_TIFF_W}) AS s
-      FROM a WHERE length(s) >= {_TIFF_W}
-    ),
-    v AS (
-      SELECT doc_id, length(s) AS n,
-             unnest(list_transform(range(1, length(s) + 1),
-                                   i -> ascii(substr(s, i, 1)))) AS val
-      FROM c
-    )
+    WITH {_ascii_sql(_TIFF_W)}
     SELECT doc_id,
            CAST({_TIFF_W} AS INT) AS width,
            CAST(n // {_TIFF_W} AS INT) AS height,
@@ -1140,50 +763,14 @@ def q217_tiff_pixel_stats(spark, sf_dir):
     )
     from sunat_rree_demo_spark.operators.skew import fan_out
 
-    d = t(spark, sf_dir, "documents")
-    src = fan_out(
-        d.select(F.col("doc_id").alias("media_id"),
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .withColumn("s", F.expr(
-            f"substring(s, 1, (length(s) div {_TIFF_W}) * {_TIFF_W})"))
-        .filter(F.length("s") >= _TIFF_W)
-    )
-
-    def encode(it):
-        import pandas as pd
-
-        def mk(mid: int, s: str) -> bytes:
-            return encode_tiff_gray(
-                s.encode("ascii"), _TIFF_W,
-                packbits=(mid % 2 == 0),
-                big_endian=(mid % 3 == 0),
-                white_is_zero=(mid % 5 == 0))
-
-        for pdf in it:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "content": [mk(int(m), s) for m, s in
-                            zip(pdf["media_id"], pdf["s"])],
-            })
-
-    media_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ])
-    media = src.mapInPandas(encode, schema=media_schema)
-    stats = image_pixel_stats(media)
-    return (
-        stats.select(
-            F.col("media_id").alias("doc_id"),
-            "width", "height",
-            F.col("n_samples").cast("bigint").alias("n_samples"),
-            (F.expr("(2 * sum_val * 10000 + n_samples) "
-                    "div (2 * n_samples)").cast("double") / 10000.0)
-            .alias("mean_val"),
-            "min_val", "max_val",
-        )
-        .orderBy("doc_id")
-    )
+    media = _encode(fan_out(_ascii_docs(spark, sf_dir, _TIFF_W)),
+                    lambda mid, s: encode_tiff_gray(
+                        s.encode("ascii"), _TIFF_W,
+                        packbits=(mid % 2 == 0),
+                        big_endian=(mid % 3 == 0),
+                        white_is_zero=(mid % 5 == 0)))
+    return _pixel_stats(image_pixel_stats(media), "n_samples",
+                        "width", "height").orderBy("doc_id")
 
 
 #: q219 VAD threshold: chars map to (ascii−79)·256, so a 20 ms frame
@@ -1195,24 +782,14 @@ _VAD_T = 5000.0
 @register(
     "q219_vad_segments",
     oracle=f"""
-    WITH a AS (
-      SELECT doc_id,
-             regexp_replace(text, '[^ -~]', '', 'g') AS s
-      FROM documents
-    ),
-    v AS (
-      SELECT doc_id,
-             unnest(list_transform(range(1, length(s) + 1),
-               i -> (ascii(substr(s, i, 1)) - 79) * 256)) AS smp,
-             unnest(range(0, length(s))) AS pos
-      FROM a WHERE length(s) >= 1
-    ),
+    WITH {_ascii_sql()},
+    p AS (SELECT doc_id, pos, (val - 79) * 256 AS smp FROM v),
     f AS (
       SELECT doc_id,
              CAST(pos // {_WAV_SPF} AS BIGINT) AS frame_no,
              CAST(count(*) AS BIGINT) AS n_samples,
              sum(CAST(smp AS BIGINT) * smp) AS ssq
-      FROM v GROUP BY 1, 2
+      FROM p GROUP BY 1, 2
     ),
     act AS (
       SELECT doc_id, frame_no, n_samples,
@@ -1258,30 +835,11 @@ def q219_vad_segments(spark, sf_dir):
 
     import numpy as np
 
-    d = t(spark, sf_dir, "documents")
-    src = fan_out(
-        d.select(F.col("doc_id").alias("media_id"),
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .filter(F.length("s") >= 1)
-    )
-
-    def encode(it):
-        import pandas as pd
-
-        for pdf in it:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "content": pdf["s"].map(lambda s: encode_wav_pcm16(
-                    (np.frombuffer(s.encode("ascii"), np.uint8)
-                     .astype(np.int64) - 79) * 256,
-                    rate=_WAV_RATE)),
-            })
-
-    media_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ])
-    media = src.mapInPandas(encode, schema=media_schema)
+    media = _encode(fan_out(_ascii_docs(spark, sf_dir)),
+                    lambda mid, s: encode_wav_pcm16(
+                        (np.frombuffer(s.encode("ascii"), np.uint8)
+                         .astype(np.int64) - 79) * 256,
+                        rate=_WAV_RATE))
     return (
         vad_segments(media, frame_ms=_WAV_FRAME_MS, threshold=_VAD_T)
         .select(F.col("media_id").alias("doc_id"),
@@ -1298,32 +856,16 @@ _DH_W = 29
 @register(
     "q220_image_dhash_census",
     oracle=f"""
-    WITH a AS (
-      SELECT doc_id,
-             regexp_replace(text, '[^ -~]', '', 'g') AS s
-      FROM documents
-    ),
-    c AS (
-      SELECT doc_id,
-             substr(s, 1, (length(s) // {_DH_W}) * {_DH_W}) AS s
-      FROM a WHERE length(s) >= {_DH_W} * 8
-    ),
-    v AS (
-      SELECT doc_id, length(s) // {_DH_W} AS h,
-             unnest(range(0, length(s))) // {_DH_W} AS r,
-             unnest(range(0, length(s))) % {_DH_W} AS cc,
-             unnest(list_transform(range(1, length(s) + 1),
-                                   i -> ascii(substr(s, i, 1)))) AS val
-      FROM c
-    ),
+    WITH {_ascii_sql(_DH_W, min_len=_DH_W * 8)},
     cells AS (
-      SELECT doc_id, (r * 8) // h AS cr, (cc * 9) // {_DH_W} AS cl,
-             sum(CAST(val AS BIGINT)) AS s, count(*) AS n
+      SELECT doc_id, ((pos // {_DH_W}) * 8) // (n // {_DH_W}) AS cr,
+             ((pos % {_DH_W}) * 9) // {_DH_W} AS cl,
+             sum(CAST(val AS BIGINT)) AS s, count(*) AS k
       FROM v GROUP BY 1, 2, 3
     ),
     bits AS (
       SELECT l.doc_id, l.cr, l.cl,
-             CASE WHEN l.s * r2.n < r2.s * l.n THEN 1 ELSE 0 END AS b
+             CASE WHEN l.s * r2.k < r2.s * l.k THEN 1 ELSE 0 END AS b
       FROM cells l JOIN cells r2
         ON l.doc_id = r2.doc_id AND l.cr = r2.cr
        AND r2.cl = l.cl + 1
@@ -1367,31 +909,9 @@ def q220_image_dhash_census(spark, sf_dir):
     from sunat_rree_demo_spark.operators.skew import fan_out
     from pyspark.sql import Window as W
 
-    d = t(spark, sf_dir, "documents")
-    src = fan_out(
-        d.select(F.col("doc_id").alias("media_id"),
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .withColumn("s", F.expr(
-            f"substring(s, 1, (length(s) div {_DH_W}) * {_DH_W})"))
-        .filter(F.length("s") >= _DH_W * 8)
-    )
-
-    def encode(it):
-        import pandas as pd
-
-        for pdf in it:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "content": pdf["s"].map(
-                    lambda s: encode_png_gray(s.encode("ascii"),
-                                              _DH_W)),
-            })
-
-    media_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ])
-    media = src.mapInPandas(encode, schema=media_schema)
+    media = _encode(
+        fan_out(_ascii_docs(spark, sf_dir, _DH_W, min_len=_DH_W * 8)),
+        lambda mid, s: encode_png_gray(s.encode("ascii"), _DH_W))
     return (
         image_dhash(media)
         .filter(F.col("dhash").isNotNull())
@@ -1405,39 +925,23 @@ def q220_image_dhash_census(spark, sf_dir):
 @register(
     "q221_dhash_hamming_pairs",
     oracle=f"""
-    WITH a AS (
-      SELECT doc_id,
-             regexp_replace(text, '[^ -~]', '', 'g') AS s
-      FROM documents
-    ),
-    c AS (
-      SELECT doc_id,
-             substr(s, 1, (length(s) // {_DH_W}) * {_DH_W}) AS s
-      FROM a WHERE length(s) >= {_DH_W} * 8
-    ),
+    WITH {_ascii_sql(_DH_W, min_len=_DH_W * 8)},
     m AS (
-      SELECT doc_id AS mid, s FROM c
+      SELECT doc_id AS mid, n, pos, val FROM v
       UNION ALL
-      SELECT doc_id + 10000000,
-             repeat('z', {_DH_W}) || substr(s, {_DH_W} + 1)
-      FROM c
-    ),
-    v AS (
-      SELECT mid, length(s) // {_DH_W} AS h,
-             unnest(range(0, length(s))) // {_DH_W} AS r,
-             unnest(range(0, length(s))) % {_DH_W} AS cc,
-             unnest(list_transform(range(1, length(s) + 1),
-                                   i -> ascii(substr(s, i, 1)))) AS val
-      FROM m
+      SELECT doc_id + 10000000, n, pos,
+             CASE WHEN pos < {_DH_W} THEN ascii('z') ELSE val END
+      FROM v
     ),
     cells AS (
-      SELECT mid, (r * 8) // h AS cr, (cc * 9) // {_DH_W} AS cl,
-             sum(CAST(val AS BIGINT)) AS s, count(*) AS n
-      FROM v GROUP BY 1, 2, 3
+      SELECT mid, ((pos // {_DH_W}) * 8) // (n // {_DH_W}) AS cr,
+             ((pos % {_DH_W}) * 9) // {_DH_W} AS cl,
+             sum(CAST(val AS BIGINT)) AS s, count(*) AS k
+      FROM m GROUP BY 1, 2, 3
     ),
     bits AS (
       SELECT l.mid, l.cr, l.cl,
-             CASE WHEN l.s * r2.n < r2.s * l.n THEN 1 ELSE 0 END AS b
+             CASE WHEN l.s * r2.k < r2.s * l.k THEN 1 ELSE 0 END AS b
       FROM cells l JOIN cells r2
         ON l.mid = r2.mid AND l.cr = r2.cr AND r2.cl = l.cl + 1
     ),
@@ -1507,35 +1011,13 @@ def q221_dhash_hamming_pairs(spark, sf_dir):
     )
     from sunat_rree_demo_spark.operators.skew import fan_out
 
-    d = t(spark, sf_dir, "documents")
-    src = (
-        d.select(F.col("doc_id").alias("media_id"),
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .withColumn("s", F.expr(
-            f"substring(s, 1, (length(s) div {_DH_W}) * {_DH_W})"))
-        .filter(F.length("s") >= _DH_W * 8)
-    )
+    src = _ascii_docs(spark, sf_dir, _DH_W, min_len=_DH_W * 8)
     both = fan_out(src.unionByName(src.select(
         (F.col("media_id") + 10_000_000).alias("media_id"),
         F.concat(F.lit("z" * _DH_W),
                  F.expr(f"substring(s, {_DH_W} + 1)")).alias("s"))))
-
-    def encode(it):
-        import pandas as pd
-
-        for pdf in it:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "content": pdf["s"].map(
-                    lambda s: encode_png_gray(s.encode("ascii"),
-                                              _DH_W)),
-            })
-
-    media_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ])
-    media = both.mapInPandas(encode, schema=media_schema)
+    media = _encode(both, lambda mid, s: encode_png_gray(
+        s.encode("ascii"), _DH_W))
     return (
         dhash_hamming_pairs(image_dhash(media), max_hamming=10)
         .select(F.col("id_a"), F.col("id_b"),
@@ -1554,22 +1036,12 @@ _DEC_SPF = (_WAV_RATE // _DEC_M) * _WAV_FRAME_MS // 1000
 @register(
     "q222_decimated_frame_energy",
     oracle=f"""
-    WITH a AS (
-      SELECT doc_id,
-             regexp_replace(text, '[^ -~]', '', 'g') AS s
-      FROM documents
-    ),
-    v AS (
-      SELECT doc_id,
-             unnest(list_transform(range(1, length(s) + 1),
-               i -> (ascii(substr(s, i, 1)) - 79) * 256)) AS smp,
-             unnest(range(0, length(s))) AS pos
-      FROM a WHERE length(s) >= 1
-    ),
+    WITH {_ascii_sql()},
+    p AS (SELECT doc_id, pos, (val - 79) * 256 AS smp FROM v),
     dec AS (
       SELECT doc_id, pos // {_DEC_M} AS q,
              sum(CAST(smp AS BIGINT)) // {_DEC_M} AS d
-      FROM v GROUP BY 1, 2 HAVING count(*) = {_DEC_M}
+      FROM p GROUP BY 1, 2 HAVING count(*) = {_DEC_M}
     ),
     f AS (
       SELECT doc_id,
@@ -1599,69 +1071,30 @@ def q222_decimated_frame_energy(spark, sf_dir):
 
     Scale shape: identical to q207 — the decimation is a reshape+sum
     inside the same Arrow batch, no extra pass, no shuffle."""
-    from sunat_rree_demo_spark.operators.multimodal import (
-        encode_wav_pcm16,
-        pcm_frame_energy,
-    )
+    from sunat_rree_demo_spark.operators.multimodal import encode_wav_pcm16
     from sunat_rree_demo_spark.operators.skew import fan_out
 
     import numpy as np
 
-    d = t(spark, sf_dir, "documents")
-    src = fan_out(
-        d.select(F.col("doc_id").alias("media_id"),
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .filter(F.length("s") >= 1)
-    )
-
-    def encode(it):
-        import pandas as pd
-
-        for pdf in it:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "content": pdf["s"].map(lambda s: encode_wav_pcm16(
-                    (np.frombuffer(s.encode("ascii"), np.uint8)
-                     .astype(np.int64) - 79) * 256,
-                    rate=_WAV_RATE)),
-            })
-
-    media_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ])
-    media = src.mapInPandas(encode, schema=media_schema)
-    return (
-        pcm_frame_energy(media, frame_ms=_WAV_FRAME_MS,
-                         decimate=_DEC_M)
-        .select(F.col("media_id").alias("doc_id"),
-                "frame_no", "n_samples",
-                F.round("rms", 4).alias("rms_4dp"))
-        .orderBy("doc_id", "frame_no")
-    )
+    media = _encode(fan_out(_ascii_docs(spark, sf_dir)),
+                    lambda mid, s: encode_wav_pcm16(
+                        (np.frombuffer(s.encode("ascii"), np.uint8)
+                         .astype(np.int64) - 79) * 256,
+                        rate=_WAV_RATE))
+    return _frame_energy(media, _WAV_FRAME_MS, decimate=_DEC_M)
 
 
 @register(
     "q223_audio_fingerprint",
     oracle=f"""
-    WITH a AS (
-      SELECT doc_id,
-             regexp_replace(text, '[^ -~]', '', 'g') AS s
-      FROM documents
-    ),
-    v AS (
-      SELECT doc_id,
-             unnest(list_transform(range(1, length(s) + 1),
-               i -> (ascii(substr(s, i, 1)) - 79) * 256)) AS smp,
-             unnest(range(0, length(s))) AS pos
-      FROM a WHERE length(s) >= 1
-    ),
+    WITH {_ascii_sql()},
+    p AS (SELECT doc_id, pos, (val - 79) * 256 AS smp FROM v),
     f AS (
       SELECT doc_id,
              CAST(pos // {_WAV_SPF} AS BIGINT) AS frame_no,
              sqrt(CAST(sum(CAST(smp AS BIGINT) * smp) AS DOUBLE)
                   / count(*)) AS rms
-      FROM v GROUP BY 1, 2
+      FROM p GROUP BY 1, 2
     ),
     d AS (
       SELECT doc_id, frame_no,
@@ -1710,30 +1143,11 @@ def q223_audio_fingerprint(spark, sf_dir):
 
     import numpy as np
 
-    d = t(spark, sf_dir, "documents")
-    src = fan_out(
-        d.select(F.col("doc_id").alias("media_id"),
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .filter(F.length("s") >= 1)
-    )
-
-    def encode(it):
-        import pandas as pd
-
-        for pdf in it:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "content": pdf["s"].map(lambda s: encode_wav_pcm16(
-                    (np.frombuffer(s.encode("ascii"), np.uint8)
-                     .astype(np.int64) - 79) * 256,
-                    rate=_WAV_RATE)),
-            })
-
-    media_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ])
-    media = src.mapInPandas(encode, schema=media_schema)
+    media = _encode(fan_out(_ascii_docs(spark, sf_dir)),
+                    lambda mid, s: encode_wav_pcm16(
+                        (np.frombuffer(s.encode("ascii"), np.uint8)
+                         .astype(np.int64) - 79) * 256,
+                        rate=_WAV_RATE))
     byf = W.partitionBy("media_id").orderBy("frame_no")
     return (
         pcm_frame_energy(media, frame_ms=_WAV_FRAME_MS)
@@ -1762,12 +1176,12 @@ def q223_audio_fingerprint(spark, sf_dir):
 
 @register(
     "q224_exif_orientation",
-    oracle="""
+    oracle=f"""
+    WITH {_ascii_sql(min_len=4, cap=4)}
     SELECT doc_id,
            CASE WHEN doc_id % 5 = 0 THEN NULL
                 ELSE CAST(doc_id % 8 + 1 AS INT) END AS orientation
-    FROM documents
-    WHERE length(regexp_replace(text, '[^ -~]', '', 'g')) >= 4
+    FROM c
     ORDER BY doc_id
     """,
     tags=("media", "multimodal", "metadata"),
@@ -1795,35 +1209,14 @@ def q224_exif_orientation(spark, sf_dir):
     )
     from sunat_rree_demo_spark.operators.skew import fan_out
 
-    d = t(spark, sf_dir, "documents")
-    src = fan_out(
-        d.select(F.col("doc_id").alias("media_id"),
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .filter(F.length("s") >= 4)
-        .withColumn("s", F.expr("substring(s, 1, 4)"))
-    )
+    def mk(mid: int, s: str) -> bytes:
+        j = encode_jpeg_gray_blocks(s.encode("ascii"), 2)
+        if mid % 5 == 0:
+            return j
+        return insert_exif_orientation(j, mid % 8 + 1)
 
-    def encode(it):
-        import pandas as pd
-
-        def mk(mid: int, s: str) -> bytes:
-            j = encode_jpeg_gray_blocks(s.encode("ascii"), 2)
-            if mid % 5 == 0:
-                return j
-            return insert_exif_orientation(j, mid % 8 + 1)
-
-        for pdf in it:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "content": [mk(int(m), s) for m, s in
-                            zip(pdf["media_id"], pdf["s"])],
-            })
-
-    media_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ])
-    media = src.mapInPandas(encode, schema=media_schema)
+    media = _encode(fan_out(_ascii_docs(spark, sf_dir, min_len=4, cap=4)),
+                    mk)
     return (
         image_exif_meta(media)
         .select(F.col("media_id").alias("doc_id"), "orientation")
@@ -1839,19 +1232,12 @@ _MIX_W = 8
 @register(
     "q225_media_type_census",
     oracle=f"""
-    WITH a AS (
-      SELECT doc_id,
-             substr(regexp_replace(text, '[^ -~]', '', 'g'),
-                    1, {_MIX_W}) AS s
-      FROM documents
-    ),
-    c AS (
-      SELECT doc_id, doc_id % 7 AS m, s,
-             (SELECT sum(ascii(substr(s, i, 1)))
-              FROM range(1, {_MIX_W} + 1) AS t(i)) AS sv
-      FROM a WHERE length(s) >= {_MIX_W}
-    ),
+    WITH {_ascii_sql(min_len=_MIX_W, cap=_MIX_W)},
     k AS (
+      SELECT doc_id % 7 AS m, sum(val) AS sv
+      FROM v GROUP BY doc_id
+    ),
+    w AS (
       SELECT CASE m
                WHEN 0 THEN 'image/png'  WHEN 1 THEN 'image/jpeg'
                WHEN 2 THEN 'image/gif'  WHEN 3 THEN 'image/bmp'
@@ -1863,14 +1249,14 @@ _MIX_W = 8
              CASE m WHEN 0 THEN sv WHEN 1 THEN 64 * sv
                     WHEN 2 THEN 3 * sv WHEN 3 THEN 3 * sv
                     WHEN 4 THEN sv END AS sm
-      FROM c
+      FROM k
     )
     SELECT media_type,
            CAST(count(*) AS BIGINT) AS n_items,
            CAST(count(ns) AS BIGINT) AS n_decoded,
            CAST(coalesce(sum(ns), 0) AS BIGINT) AS total_samples,
            CAST(coalesce(sum(sm), 0) AS BIGINT) AS total_sum
-    FROM k GROUP BY 1 ORDER BY media_type
+    FROM w GROUP BY 1 ORDER BY media_type
     """,
     tags=("media", "multimodal", "routing"),
 )
@@ -1906,13 +1292,7 @@ def q225_media_type_census(spark, sf_dir):
 
     import numpy as np
 
-    d = t(spark, sf_dir, "documents")
-    src = fan_out(
-        d.select(F.col("doc_id").alias("media_id"),
-                 F.expr("substring(regexp_replace(text, '[^ -~]', '')"
-                        f", 1, {_MIX_W})").alias("s"))
-        .filter(F.length("s") >= _MIX_W)
-    )
+    src = fan_out(_ascii_docs(spark, sf_dir, min_len=_MIX_W, cap=_MIX_W))
 
     def encode(it):
         import pandas as pd
@@ -1987,71 +1367,23 @@ def _video_media(spark, sf_dir):
     )
     from sunat_rree_demo_spark.operators.skew import fan_out
 
-    d = t(spark, sf_dir, "documents")
-    src = fan_out(
-        d.select(F.col("doc_id").alias("media_id"),
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .withColumn("s", F.expr(
-            f"substring(s, 1, least(length(s) div {_VID_BPR}, "
-            f"{_VID_NF}) * {_VID_BPR})"))
-        .filter(F.length("s") >= _VID_BPR)
-    )
+    def mk(mid: int, s: str) -> bytes:
+        b = s.encode("ascii")
+        frames = [
+            encode_jpeg_gray_blocks(b[k:k + _VID_BPR], _VID_BPR)
+            for k in range(0, len(b), _VID_BPR)]
+        return encode_avi_mjpeg(frames, _VID_BPR * 8, 8,
+                                fps=5 + mid % 7)
 
-    def encode(it):
-        import pandas as pd
-
-        def mk(mid: int, s: str) -> bytes:
-            b = s.encode("ascii")
-            frames = [
-                encode_jpeg_gray_blocks(b[k:k + _VID_BPR], _VID_BPR)
-                for k in range(0, len(b), _VID_BPR)]
-            return encode_avi_mjpeg(frames, _VID_BPR * 8, 8,
-                                    fps=5 + mid % 7)
-
-        for pdf in it:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "content": [mk(int(m), s) for m, s in
-                            zip(pdf["media_id"], pdf["s"])],
-            })
-
-    media_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ])
-    return src.mapInPandas(encode, schema=media_schema)
-
-
-#: the common q226/q227 oracle prefix: per-(doc, frame) char slices
-_VID_ORACLE_FRAMES = f"""
-    WITH a AS (
-      SELECT doc_id,
-             regexp_replace(text, '[^ -~]', '', 'g') AS s
-      FROM documents
-    ),
-    c AS (
-      SELECT doc_id,
-             substr(s, 1, least(length(s) // {_VID_BPR}, {_VID_NF})
-                          * {_VID_BPR}) AS s
-      FROM a WHERE length(s) >= {_VID_BPR}
-    ),
-    fr AS (
-      SELECT doc_id, s,
-             unnest(range(0, length(s) // {_VID_BPR})) AS f
-      FROM c
-    )"""
+    return _encode(fan_out(_ascii_docs(spark, sf_dir, _VID_BPR,
+                                       cap=_VID_NF * _VID_BPR)), mk)
 
 
 @register(
     "q226_video_frame_stats",
-    oracle=_VID_ORACLE_FRAMES + f""",
-    v AS (
-      SELECT doc_id, f,
-             unnest(list_transform(range(1, {_VID_BPR} + 1),
-               i -> ascii(substr(s, CAST(f * {_VID_BPR} AS INT) + i,
-                                 1)))) AS val
-      FROM fr WHERE f % 3 = 0
-    )
+    oracle=f"""
+    WITH {_ascii_sql(_VID_BPR, cap=_VID_NF * _VID_BPR)},
+    fv AS (SELECT doc_id, pos // {_VID_BPR} AS f, val FROM v)
     SELECT doc_id,
            CAST(f AS BIGINT) AS frame_no,
            CAST(5 + doc_id % 7 AS INT) AS fps,
@@ -2063,7 +1395,8 @@ _VID_ORACLE_FRAMES = f"""
              AS mean_val,
            CAST(min(val) AS INT) AS min_val,
            CAST(max(val) AS INT) AS max_val
-    FROM v GROUP BY doc_id, f ORDER BY doc_id, frame_no
+    FROM fv WHERE f % 3 = 0
+    GROUP BY doc_id, f ORDER BY doc_id, frame_no
     """,
     tags=("media", "multimodal", "codec", "video"),
 )
@@ -2089,35 +1422,21 @@ def q226_video_frame_stats(spark, sf_dir):
     )
 
     fs = video_frame_stats(_video_media(spark, sf_dir), every_n=3)
-    return (
-        fs.select(
-            F.col("media_id").alias("doc_id"),
-            F.col("frame_no").cast("bigint").alias("frame_no"),
-            "fps", "width", "height",
-            F.col("n_samples").cast("bigint").alias("n_pixels"),
-            (F.expr("(2 * sum_val * 10000 + n_samples) "
-                    "div (2 * n_samples)").cast("double") / 10000.0)
-            .alias("mean_val"),
-            "min_val", "max_val",
-        )
-        .orderBy("doc_id", "frame_no")
-    )
+    return _pixel_stats(
+        fs, "n_pixels",
+        F.col("frame_no").cast("bigint").alias("frame_no"),
+        "fps", "width", "height",
+    ).orderBy("doc_id", "frame_no")
 
 
 @register(
     "q227_video_shot_cuts",
-    oracle=_VID_ORACLE_FRAMES + f""",
-    v AS (
-      SELECT doc_id, f,
-             unnest(list_transform(range(1, {_VID_BPR} + 1),
-               i -> ascii(substr(s, CAST(f * {_VID_BPR} AS INT) + i,
-                                 1)))) AS val
-      FROM fr
-    ),
+    oracle=f"""
+    WITH {_ascii_sql(_VID_BPR, cap=_VID_NF * _VID_BPR)},
     g AS (
-      SELECT doc_id, f,
+      SELECT doc_id, pos // {_VID_BPR} AS f,
              (1000 * 64 * sum(val)) // (64 * {_VID_BPR}) AS m
-      FROM v GROUP BY doc_id, f
+      FROM v GROUP BY 1, 2
     ),
     l AS (
       SELECT doc_id, f, m,
@@ -2182,28 +1501,9 @@ _ST_L, _ST_R = 512, 256
 @register(
     "q228_stereo_flac_energy",
     oracle=f"""
-    WITH a AS (
-      SELECT doc_id,
-             regexp_replace(text, '[^ -~]', '', 'g') AS s
-      FROM documents
-    ),
-    v AS (
-      SELECT doc_id,
-             unnest(list_transform(range(1, length(s) + 1),
-               i -> (ascii(substr(s, i, 1)) - 68) * 128)) AS smp,
-             unnest(range(0, length(s))) AS pos
-      FROM a WHERE length(s) >= 1
-    ),
-    f AS (
-      SELECT doc_id,
-             CAST(pos // {_WAV_SPF} AS BIGINT) AS frame_no,
-             CAST(count(*) AS BIGINT) AS n_samples,
-             sum(CAST(smp AS BIGINT) * smp) AS ssq
-      FROM v GROUP BY 1, 2
-    )
-    SELECT doc_id, frame_no, n_samples,
-           round(sqrt(CAST(ssq AS DOUBLE) / n_samples), 4) AS rms_4dp
-    FROM f ORDER BY doc_id, frame_no
+    WITH {_ascii_sql()},
+    p AS (SELECT doc_id, pos, (val - 68) * 128 AS smp FROM v),
+    {_FRAME_ENERGY_SQL}
     """,
     tags=("media", "multimodal", "codec", "audio"),
 )
@@ -2228,55 +1528,25 @@ def q228_stereo_flac_energy(spark, sf_dir):
     Scale shape: identical to q216 — fan_out → Arrow-batched encode →
     one decode+energy pass, frame-grain output, no shuffle before the
     output sort."""
-    from sunat_rree_demo_spark.operators.multimodal import (
-        encode_flac_pcm16,
-        pcm_frame_energy,
-    )
+    from sunat_rree_demo_spark.operators.multimodal import encode_flac_pcm16
     from sunat_rree_demo_spark.operators.skew import fan_out
 
     import numpy as np
 
-    d = t(spark, sf_dir, "documents")
-    src = fan_out(
-        d.select(F.col("doc_id").alias("media_id"),
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .filter(F.length("s") >= 1)
-    )
-
     _modes = ("indep", "left_side", "right_side", "mid_side")
 
-    def encode(it):
-        import pandas as pd
+    def mk(mid: int, s: str) -> bytes:
+        a = np.frombuffer(s.encode("ascii"), np.uint8) \
+            .astype(np.int64)
+        st = np.stack([(a - 79) * _ST_L, (90 - a) * _ST_R], axis=1)
+        return encode_flac_pcm16(
+            st, rate=_WAV_RATE, blocksize=256,
+            lpc=bool(mid % 2),
+            p_order=2 if mid % 5 == 0 else 0,
+            channel_mode=_modes[mid % 4])
 
-        def mk(mid: int, s: str) -> bytes:
-            a = np.frombuffer(s.encode("ascii"), np.uint8) \
-                .astype(np.int64)
-            st = np.stack([(a - 79) * _ST_L, (90 - a) * _ST_R], axis=1)
-            return encode_flac_pcm16(
-                st, rate=_WAV_RATE, blocksize=256,
-                lpc=bool(mid % 2),
-                p_order=2 if mid % 5 == 0 else 0,
-                channel_mode=_modes[mid % 4])
-
-        for pdf in it:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "content": [mk(int(m), s) for m, s in
-                            zip(pdf["media_id"], pdf["s"])],
-            })
-
-    media_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ])
-    media = src.mapInPandas(encode, schema=media_schema)
-    return (
-        pcm_frame_energy(media, frame_ms=_WAV_FRAME_MS)
-        .select(F.col("media_id").alias("doc_id"),
-                "frame_no", "n_samples",
-                F.round("rms", 4).alias("rms_4dp"))
-        .orderBy("doc_id", "frame_no")
-    )
+    media = _encode(fan_out(_ascii_docs(spark, sf_dir)), mk)
+    return _frame_energy(media, _WAV_FRAME_MS)
 
 
 #: q229 TIFF-LZW width — prime, distinct from q217's 23 and every
@@ -2287,23 +1557,7 @@ _TIFF_LZW_W = 19
 @register(
     "q229_tiff_lzw_stats",
     oracle=f"""
-    WITH a AS (
-      SELECT doc_id,
-             regexp_replace(text, '[^ -~]', '', 'g') AS s
-      FROM documents
-    ),
-    c AS (
-      SELECT doc_id,
-             substr(s, 1, (length(s) // {_TIFF_LZW_W})
-                          * {_TIFF_LZW_W}) AS s
-      FROM a WHERE length(s) >= {_TIFF_LZW_W}
-    ),
-    v AS (
-      SELECT doc_id, length(s) AS n,
-             unnest(list_transform(range(1, length(s) + 1),
-                                   i -> ascii(substr(s, i, 1)))) AS val
-      FROM c
-    )
+    WITH {_ascii_sql(_TIFF_LZW_W)}
     SELECT doc_id,
            CAST({_TIFF_LZW_W} AS INT) AS width,
            CAST(n // {_TIFF_LZW_W} AS INT) AS height,
@@ -2338,51 +1592,14 @@ def q229_tiff_lzw_stats(spark, sf_dir):
     )
     from sunat_rree_demo_spark.operators.skew import fan_out
 
-    d = t(spark, sf_dir, "documents")
-    src = fan_out(
-        d.select(F.col("doc_id").alias("media_id"),
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .withColumn("s", F.expr(
-            f"substring(s, 1, (length(s) div {_TIFF_LZW_W})"
-            f" * {_TIFF_LZW_W})"))
-        .filter(F.length("s") >= _TIFF_LZW_W)
-    )
-
-    def encode(it):
-        import pandas as pd
-
-        def mk(mid: int, s: str) -> bytes:
-            return encode_tiff_gray(
-                s.encode("ascii"), _TIFF_LZW_W,
-                lzw=True,
-                predictor=(mid % 2 == 0),
-                big_endian=(mid % 3 == 0))
-
-        for pdf in it:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "content": [mk(int(m), s) for m, s in
-                            zip(pdf["media_id"], pdf["s"])],
-            })
-
-    media_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ])
-    media = src.mapInPandas(encode, schema=media_schema)
-    stats = image_pixel_stats(media)
-    return (
-        stats.select(
-            F.col("media_id").alias("doc_id"),
-            "width", "height",
-            F.col("n_samples").cast("bigint").alias("n_samples"),
-            (F.expr("(2 * sum_val * 10000 + n_samples) "
-                    "div (2 * n_samples)").cast("double") / 10000.0)
-            .alias("mean_val"),
-            "min_val", "max_val",
-        )
-        .orderBy("doc_id")
-    )
+    media = _encode(fan_out(_ascii_docs(spark, sf_dir, _TIFF_LZW_W)),
+                    lambda mid, s: encode_tiff_gray(
+                        s.encode("ascii"), _TIFF_LZW_W,
+                        lzw=True,
+                        predictor=(mid % 2 == 0),
+                        big_endian=(mid % 3 == 0)))
+    return _pixel_stats(image_pixel_stats(media), "n_samples",
+                        "width", "height").orderBy("doc_id")
 
 
 #: q230 grid: 9×8 chars — the smallest grid dHash accepts, so every
@@ -2396,12 +1613,7 @@ _DD_FMTS = ("image/png", "image/jpeg", "image/gif", "image/bmp",
 @register(
     "q230_media_dedup_funnel",
     oracle=f"""
-    WITH a AS (
-      SELECT doc_id,
-             substr(regexp_replace(text, '[^ -~]', '', 'g'),
-                    1, {_DD_W * _DD_H}) AS s
-      FROM documents
-    ),
+    WITH {_ascii_sql(min_len=_DD_W * _DD_H, cap=_DD_W * _DD_H)},
     d AS (
       SELECT doc_id, s,
              array_to_string(list_transform(range(0, {_DD_H}), r ->
@@ -2411,7 +1623,7 @@ _DD_FMTS = ("image/png", "image/jpeg", "image/gif", "image/bmp",
                            < ascii(substr(s, r * {_DD_W} + c + 2, 1))
                       THEN 128 // (2 ** c) ELSE 0 END)) AS INT))), '')
                AS dhash
-      FROM a WHERE length(s) = {_DD_W * _DD_H}
+      FROM c
     ),
     g AS (
       SELECT dhash, min(doc_id) AS keep_doc FROM d GROUP BY dhash
@@ -2464,14 +1676,8 @@ def q230_media_dedup_funnel(spark, sf_dir):
     )
     from sunat_rree_demo_spark.operators.skew import fan_out
 
-    d = t(spark, sf_dir, "documents")
     n = _DD_W * _DD_H
-    src = fan_out(
-        d.select(F.col("doc_id").alias("doc_id"),
-                 F.expr("substring(regexp_replace(text, '[^ -~]', '')"
-                        f", 1, {n})").alias("s"))
-        .filter(F.length("s") == n)
-    )
+    src = fan_out(_ascii_docs(spark, sf_dir, min_len=n, cap=n))
 
     _enc = (
         lambda b: encode_png_gray(b, _DD_W),
@@ -2486,7 +1692,7 @@ def q230_media_dedup_funnel(spark, sf_dir):
 
         for pdf in it:
             ids, docs, copies, types, payloads = [], [], [], [], []
-            for did, s in zip(pdf["doc_id"], pdf["s"]):
+            for did, s in zip(pdf["media_id"], pdf["s"]):
                 b = s.encode("ascii")
                 for k in (0, 1):
                     p = _enc[(int(did) % 5 + k) % 5](b)
@@ -2533,25 +1739,14 @@ _AF_VARIANTS = ("wav", "flac", "flac_ms")
 @register(
     "q231_audio_dedup_funnel",
     oracle=f"""
-    WITH a AS (
-      SELECT doc_id,
-             regexp_replace(text, '[^ -~]', '', 'g') AS s
-      FROM documents
-    ),
-    ok AS (SELECT doc_id, s FROM a WHERE length(s) >= {_WAV_SPF} + 1),
-    v AS (
-      SELECT doc_id,
-             unnest(list_transform(range(1, length(s) + 1),
-               i -> (ascii(substr(s, i, 1)) - 79) * 256)) AS smp,
-             unnest(range(0, length(s))) AS pos
-      FROM ok
-    ),
+    WITH {_ascii_sql(min_len=_WAV_SPF + 1)},
+    p AS (SELECT doc_id, pos, (val - 79) * 256 AS smp FROM v),
     f AS (
       SELECT doc_id,
              CAST(pos // {_WAV_SPF} AS BIGINT) AS frame_no,
              sqrt(CAST(sum(CAST(smp AS BIGINT) * smp) AS DOUBLE)
                   / count(*)) AS rms
-      FROM v GROUP BY 1, 2
+      FROM p GROUP BY 1, 2
     ),
     d AS (
       SELECT doc_id, frame_no,
@@ -2614,12 +1809,7 @@ def q231_audio_dedup_funnel(spark, sf_dir):
 
     import numpy as np
 
-    d = t(spark, sf_dir, "documents")
-    src = fan_out(
-        d.select(F.col("doc_id").alias("doc_id"),
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .filter(F.length("s") >= _WAV_SPF + 1)
-    )
+    src = fan_out(_ascii_docs(spark, sf_dir, min_len=_WAV_SPF + 1))
 
     def encode(it):
         import pandas as pd
@@ -2638,7 +1828,7 @@ def q231_audio_dedup_funnel(spark, sf_dir):
 
         for pdf in it:
             ids, docs, variants, payloads = [], [], [], []
-            for did, s in zip(pdf["doc_id"], pdf["s"]):
+            for did, s in zip(pdf["media_id"], pdf["s"]):
                 for k in (0, 1, 2):
                     ids.append(int(did) * 3 + k)
                     docs.append(int(did))
@@ -2700,33 +1890,17 @@ _OR_BPR = 13
 @register(
     "q232_oriented_dims",
     oracle=f"""
-    WITH a AS (
-      SELECT doc_id,
-             substr(regexp_replace(text, '[^ -~]', '', 'g'),
-                    1, {_OR_BPR} * 2) AS s
-      FROM documents
-    ),
-    c AS (
-      SELECT doc_id,
-             substr(s, 1, (length(s) // {_OR_BPR}) * {_OR_BPR}) AS s,
-             CASE WHEN doc_id % 5 = 0 THEN NULL
-                  ELSE CAST(doc_id % 8 + 1 AS INT) END AS orientation
-      FROM a WHERE length(s) >= {_OR_BPR}
-    ),
-    v AS (
-      SELECT doc_id, orientation, length(s) AS n,
-             unnest(list_transform(range(1, length(s) + 1),
-                                   i -> ascii(substr(s, i, 1)))) AS val
-      FROM c
-    ),
+    WITH {_ascii_sql(_OR_BPR, cap=_OR_BPR * 2)},
     g AS (
-      SELECT doc_id, orientation,
+      SELECT doc_id,
+             CASE WHEN doc_id % 5 = 0 THEN NULL
+                  ELSE CAST(doc_id % 8 + 1 AS INT) END AS orientation,
              CAST({_OR_BPR} * 8 AS INT) AS raw_w,
              CAST((n // {_OR_BPR}) * 8 AS INT) AS raw_h,
              CAST(64 * n AS BIGINT) AS n_pixels,
              CAST(min(val) AS INT) AS min_val,
              CAST(max(val) AS INT) AS max_val
-      FROM v GROUP BY doc_id, orientation, n
+      FROM v GROUP BY doc_id, n
     )
     SELECT doc_id, orientation, raw_w, raw_h,
            CASE WHEN orientation >= 5 THEN raw_h ELSE raw_w END
@@ -2762,39 +1936,16 @@ def q232_oriented_dims(spark, sf_dir):
     )
     from sunat_rree_demo_spark.operators.skew import fan_out
 
-    d = t(spark, sf_dir, "documents")
-    src = fan_out(
-        d.select(F.col("doc_id").alias("media_id"),
-                 F.expr("substring(regexp_replace(text, '[^ -~]', '')"
-                        f", 1, {_OR_BPR * 2})").alias("s"))
-        .withColumn("s", F.expr(
-            f"substring(s, 1, (length(s) div {_OR_BPR}) * {_OR_BPR})"))
-        .filter(F.length("s") >= _OR_BPR)
-    )
+    def mk(mid: int, s: str) -> bytes:
+        j = encode_jpeg_gray_blocks(s.encode("ascii"), _OR_BPR)
+        if mid % 5 == 0:
+            return j
+        return insert_exif_orientation(j, mid % 8 + 1)
 
-    def encode(it):
-        import pandas as pd
-
-        def mk(mid: int, s: str) -> bytes:
-            j = encode_jpeg_gray_blocks(s.encode("ascii"), _OR_BPR)
-            if mid % 5 == 0:
-                return j
-            return insert_exif_orientation(j, mid % 8 + 1)
-
-        for pdf in it:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "content": [mk(int(m), s) for m, s in
-                            zip(pdf["media_id"], pdf["s"])],
-            })
-
-    media_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ])
     # no cache: the 26-char encode is cheaper than a persisted
     # intermediate (the q225 pattern — both extractors re-run it)
-    media = src.mapInPandas(encode, schema=media_schema)
+    media = _encode(
+        fan_out(_ascii_docs(spark, sf_dir, _OR_BPR, cap=_OR_BPR * 2)), mk)
     stats = image_pixel_stats(media)
     exif = image_exif_meta(media)
     joined = stats.join(exif, "media_id")
@@ -2823,28 +1974,13 @@ _BF_W = 11
 @register(
     "q233_bmp_bitfields_stats",
     oracle=f"""
-    WITH a AS (
-      SELECT doc_id,
-             regexp_replace(text, '[^ -~]', '', 'g') AS s
-      FROM documents
-    ),
-    c AS (
-      SELECT doc_id, doc_id % 3 AS m,
-             substr(s, 1, (length(s) // {_BF_W}) * {_BF_W}) AS s
-      FROM a WHERE length(s) >= {_BF_W}
-    ),
-    v AS (
-      SELECT doc_id, m, length(s) AS n,
-             unnest(list_transform(range(1, length(s) + 1),
-                                   i -> ascii(substr(s, i, 1)))) AS val
-      FROM c
-    ),
+    WITH {_ascii_sql(_BF_W)},
     ch AS (
-      SELECT doc_id, m, n,
-             CASE m WHEN 2 THEN val ELSE val // 8 END AS r,
-             CASE m WHEN 0 THEN val // 2 WHEN 1 THEN val // 4
+      SELECT doc_id, n,
+             CASE doc_id % 3 WHEN 2 THEN val ELSE val // 8 END AS r,
+             CASE doc_id % 3 WHEN 0 THEN val // 2 WHEN 1 THEN val // 4
                     ELSE 255 - val END AS g,
-             CASE m WHEN 2 THEN val // 2
+             CASE doc_id % 3 WHEN 2 THEN val // 2
                     ELSE (127 - val) // 4 END AS b
       FROM v
     )
@@ -2884,59 +2020,25 @@ def q233_bmp_bitfields_stats(spark, sf_dir):
 
     import numpy as np
 
-    d = t(spark, sf_dir, "documents")
-    src = fan_out(
-        d.select(F.col("doc_id").alias("media_id"),
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .withColumn("s", F.expr(
-            f"substring(s, 1, (length(s) div {_BF_W}) * {_BF_W})"))
-        .filter(F.length("s") >= _BF_W)
-    )
-
-    def encode(it):
-        import pandas as pd
-
-        def mk(mid: int, s: str) -> bytes:
-            a = (np.frombuffer(s.encode("ascii"), np.uint8)
-                 .astype(np.int64).reshape(-1, _BF_W))
-            m = mid % 3
-            if m == 0:
-                ch = np.stack([a // 8, a // 2, (127 - a) // 4], axis=2)
-                return encode_bmp_bitfields(
-                    ch, (0xF800, 0x07E0, 0x001F), 16, explicit=True)
-            if m == 1:
-                ch = np.stack([a // 8, a // 4, (127 - a) // 4], axis=2)
-                return encode_bmp_bitfields(
-                    ch, (0x7C00, 0x03E0, 0x001F), 16, explicit=False)
-            ch = np.stack([a, 255 - a, a // 2], axis=2)
+    def mk(mid: int, s: str) -> bytes:
+        a = (np.frombuffer(s.encode("ascii"), np.uint8)
+             .astype(np.int64).reshape(-1, _BF_W))
+        m = mid % 3
+        if m == 0:
+            ch = np.stack([a // 8, a // 2, (127 - a) // 4], axis=2)
             return encode_bmp_bitfields(
-                ch, (0xFF0000, 0x00FF00, 0x0000FF), 32, explicit=True)
+                ch, (0xF800, 0x07E0, 0x001F), 16, explicit=True)
+        if m == 1:
+            ch = np.stack([a // 8, a // 4, (127 - a) // 4], axis=2)
+            return encode_bmp_bitfields(
+                ch, (0x7C00, 0x03E0, 0x001F), 16, explicit=False)
+        ch = np.stack([a, 255 - a, a // 2], axis=2)
+        return encode_bmp_bitfields(
+            ch, (0xFF0000, 0x00FF00, 0x0000FF), 32, explicit=True)
 
-        for pdf in it:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "content": [mk(int(m), s) for m, s in
-                            zip(pdf["media_id"], pdf["s"])],
-            })
-
-    media_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ])
-    media = src.mapInPandas(encode, schema=media_schema)
-    stats = image_pixel_stats(media)
-    return (
-        stats.select(
-            F.col("media_id").alias("doc_id"),
-            "width", "height",
-            F.col("n_samples").cast("bigint").alias("n_samples"),
-            (F.expr("(2 * sum_val * 10000 + n_samples) "
-                    "div (2 * n_samples)").cast("double") / 10000.0)
-            .alias("mean_val"),
-            "min_val", "max_val",
-        )
-        .orderBy("doc_id")
-    )
+    media = _encode(fan_out(_ascii_docs(spark, sf_dir, _BF_W)), mk)
+    return _pixel_stats(image_pixel_stats(media), "n_samples",
+                        "width", "height").orderBy("doc_id")
 
 
 #: q234 geometry: 17 blocks/row (width 136, distinct from every other
@@ -2947,22 +2049,7 @@ _RST_BPR = 17
 @register(
     "q234_jpeg_restart_stats",
     oracle=f"""
-    WITH a AS (
-      SELECT doc_id,
-             regexp_replace(text, '[^ -~]', '', 'g') AS s
-      FROM documents
-    ),
-    c AS (
-      SELECT doc_id,
-             substr(s, 1, (length(s) // {_RST_BPR}) * {_RST_BPR}) AS s
-      FROM a WHERE length(s) >= {_RST_BPR}
-    ),
-    v AS (
-      SELECT doc_id, length(s) AS n,
-             unnest(list_transform(range(1, length(s) + 1),
-                                   i -> ascii(substr(s, i, 1)))) AS val
-      FROM c
-    )
+    WITH {_ascii_sql(_RST_BPR)}
     SELECT doc_id,
            CAST({_RST_BPR} * 8 AS INT) AS width,
            CAST((n // {_RST_BPR}) * 8 AS INT) AS height,
@@ -2999,50 +2086,16 @@ def q234_jpeg_restart_stats(spark, sf_dir):
 
     import numpy as np
 
-    d = t(spark, sf_dir, "documents")
-    src = fan_out(
-        d.select(F.col("doc_id").alias("media_id"),
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .withColumn("s", F.expr(
-            f"substring(s, 1, (length(s) div {_RST_BPR}) * {_RST_BPR})"))
-        .filter(F.length("s") >= _RST_BPR)
-    )
+    def mk(mid: int, s: str) -> bytes:
+        vals = np.frombuffer(s.encode("ascii"), np.uint8)
+        blocks = np.zeros((len(vals), 64), dtype=np.int64)
+        blocks[:, 0] = 8 * (vals.astype(np.int64) - 128)
+        return encode_jpeg_coeff_blocks(
+            blocks, _RST_BPR, restart_interval=1 + mid % 5)
 
-    def encode(it):
-        import pandas as pd
-
-        def mk(mid: int, s: str) -> bytes:
-            vals = np.frombuffer(s.encode("ascii"), np.uint8)
-            blocks = np.zeros((len(vals), 64), dtype=np.int64)
-            blocks[:, 0] = 8 * (vals.astype(np.int64) - 128)
-            return encode_jpeg_coeff_blocks(
-                blocks, _RST_BPR, restart_interval=1 + mid % 5)
-
-        for pdf in it:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "content": [mk(int(m), s) for m, s in
-                            zip(pdf["media_id"], pdf["s"])],
-            })
-
-    media_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ])
-    media = src.mapInPandas(encode, schema=media_schema)
-    stats = image_pixel_stats(media)
-    return (
-        stats.select(
-            F.col("media_id").alias("doc_id"),
-            "width", "height",
-            F.col("n_samples").cast("bigint").alias("n_pixels"),
-            (F.expr("(2 * sum_val * 10000 + n_samples) "
-                    "div (2 * n_samples)").cast("double") / 10000.0)
-            .alias("mean_val"),
-            "min_val", "max_val",
-        )
-        .orderBy("doc_id")
-    )
+    media = _encode(fan_out(_ascii_docs(spark, sf_dir, _RST_BPR)), mk)
+    return _pixel_stats(image_pixel_stats(media), "n_pixels",
+                        "width", "height").orderBy("doc_id")
 
 
 #: q235 variants: the same footage re-muxed at a different frame rate
@@ -3053,33 +2106,12 @@ _VF_VARIANTS = ("mjpeg_base", "mjpeg_prog")
 @register(
     "q235_video_dedup_funnel",
     oracle=f"""
-    WITH a AS (
-      SELECT doc_id,
-             regexp_replace(text, '[^ -~]', '', 'g') AS s
-      FROM documents
-    ),
-    c AS (
-      SELECT doc_id,
-             substr(s, 1, least(length(s) // {_VID_BPR}, {_VID_NF})
-                          * {_VID_BPR}) AS s
-      FROM a WHERE length(s) >= 2 * {_VID_BPR}
-    ),
-    fr AS (
-      SELECT doc_id, s,
-             unnest(range(0, length(s) // {_VID_BPR})) AS f
-      FROM c
-    ),
-    v AS (
-      SELECT doc_id, f,
-             unnest(list_transform(range(1, {_VID_BPR} + 1),
-               i -> ascii(substr(s, CAST(f * {_VID_BPR} AS INT) + i,
-                                 1)))) AS val
-      FROM fr
-    ),
+    WITH {_ascii_sql(_VID_BPR, min_len=2 * _VID_BPR,
+                     cap=_VID_NF * _VID_BPR)},
     g0 AS (
-      SELECT doc_id, f,
+      SELECT doc_id, pos // {_VID_BPR} AS f,
              (1000 * 64 * sum(val)) // (64 * {_VID_BPR}) AS m
-      FROM v GROUP BY doc_id, f
+      FROM v GROUP BY 1, 2
     ),
     d AS (
       SELECT doc_id, f,
@@ -3144,15 +2176,9 @@ def q235_video_dedup_funnel(spark, sf_dir):
 
     import numpy as np
 
-    d = t(spark, sf_dir, "documents")
-    src = fan_out(
-        d.select(F.col("doc_id").alias("doc_id"),
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .withColumn("s", F.expr(
-            f"substring(s, 1, least(length(s) div {_VID_BPR}, "
-            f"{_VID_NF}) * {_VID_BPR})"))
-        .filter(F.length("s") >= 2 * _VID_BPR)
-    )
+    src = fan_out(_ascii_docs(spark, sf_dir, _VID_BPR,
+                              min_len=2 * _VID_BPR,
+                              cap=_VID_NF * _VID_BPR))
 
     def encode(it):
         import pandas as pd
@@ -3173,7 +2199,7 @@ def q235_video_dedup_funnel(spark, sf_dir):
 
         for pdf in it:
             ids, docs, variants, payloads = [], [], [], []
-            for did, s in zip(pdf["doc_id"], pdf["s"]):
+            for did, s in zip(pdf["media_id"], pdf["s"]):
                 b = s.encode("ascii")
                 for k in (0, 1):
                     prog = (int(did) + k) % 2 == 1
@@ -3225,29 +2251,9 @@ _GIFA_NF = 20
 @register(
     "q236_gif_animation_stats",
     oracle=f"""
-    WITH a AS (
-      SELECT doc_id,
-             regexp_replace(text, '[^ -~]', '', 'g') AS s
-      FROM documents
-    ),
-    c AS (
-      SELECT doc_id,
-             substr(s, 1, least(length(s) // {_GIFA_SPF}, {_GIFA_NF})
-                          * {_GIFA_SPF}) AS s
-      FROM a WHERE length(s) >= 2 * {_GIFA_SPF}
-    ),
-    fr AS (
-      SELECT doc_id, s,
-             unnest(range(0, length(s) // {_GIFA_SPF})) AS f
-      FROM c
-    ),
-    v AS (
-      SELECT doc_id, f,
-             unnest(list_transform(range(1, {_GIFA_SPF} + 1),
-               i -> ascii(substr(s, CAST(f * {_GIFA_SPF} AS INT) + i,
-                                 1)))) AS val
-      FROM fr WHERE f % 2 = 0
-    )
+    WITH {_ascii_sql(_GIFA_SPF, min_len=2 * _GIFA_SPF,
+                     cap=_GIFA_NF * _GIFA_SPF)},
+    fv AS (SELECT doc_id, pos // {_GIFA_SPF} AS f, val FROM v)
     SELECT doc_id,
            CAST(f AS BIGINT) AS frame_no,
            CAST((200 + 4 + doc_id % 5)
@@ -3260,7 +2266,8 @@ _GIFA_NF = 20
              AS mean_4dp,
            CAST(min(val) AS INT) AS min_val,
            CAST(max(val) AS INT) AS max_val
-    FROM v GROUP BY doc_id, f ORDER BY doc_id, frame_no
+    FROM fv WHERE f % 2 = 0
+    GROUP BY doc_id, f ORDER BY doc_id, frame_no
     """,
     tags=("media", "multimodal", "codec", "video", "gif"),
 )
@@ -3291,52 +2298,22 @@ def q236_gif_animation_stats(spark, sf_dir):
     )
     from sunat_rree_demo_spark.operators.skew import fan_out
 
-    d = t(spark, sf_dir, "documents")
-    src = fan_out(
-        d.select(F.col("doc_id").alias("media_id"),
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .withColumn("s", F.expr(
-            f"substring(s, 1, least(length(s) div {_GIFA_SPF}, "
-            f"{_GIFA_NF}) * {_GIFA_SPF})"))
-        .filter(F.length("s") >= 2 * _GIFA_SPF)
-    )
+    def mk(mid: int, s: str) -> bytes:
+        b = s.encode("ascii")
+        frames = [b[k:k + _GIFA_SPF]
+                  for k in range(0, len(b), _GIFA_SPF)]
+        return encode_gif_animation(frames, _GIFA_W,
+                                    delay_cs=4 + mid % 5)
 
-    def encode(it):
-        import pandas as pd
-
-        def mk(mid: int, s: str) -> bytes:
-            b = s.encode("ascii")
-            frames = [b[k:k + _GIFA_SPF]
-                      for k in range(0, len(b), _GIFA_SPF)]
-            return encode_gif_animation(frames, _GIFA_W,
-                                        delay_cs=4 + mid % 5)
-
-        for pdf in it:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "content": [mk(int(m), s) for m, s in
-                            zip(pdf["media_id"], pdf["s"])],
-            })
-
-    media_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ])
-    media = src.mapInPandas(encode, schema=media_schema)
+    media = _encode(fan_out(_ascii_docs(spark, sf_dir, _GIFA_SPF,
+                                        min_len=2 * _GIFA_SPF,
+                                        cap=_GIFA_NF * _GIFA_SPF)), mk)
     fs = video_frame_stats(media, every_n=2)
-    return (
-        fs.select(
-            F.col("media_id").alias("doc_id"),
-            F.col("frame_no").cast("bigint").alias("frame_no"),
-            "fps", "width", "height",
-            F.col("n_samples").cast("bigint").alias("n_samples"),
-            (F.expr("(2 * sum_val * 10000 + n_samples) "
-                    "div (2 * n_samples)").cast("double") / 10000.0)
-            .alias("mean_4dp"),
-            "min_val", "max_val",
-        )
-        .orderBy("doc_id", "frame_no")
-    )
+    return _pixel_stats(
+        fs, "n_samples",
+        F.col("frame_no").cast("bigint").alias("frame_no"),
+        "fps", "width", "height", mean_col="mean_4dp",
+    ).orderBy("doc_id", "frame_no")
 
 
 _GV_VARIANTS = ("avi", "gif")
@@ -3345,33 +2322,12 @@ _GV_VARIANTS = ("avi", "gif")
 @register(
     "q238_gif_video_dedup",
     oracle=f"""
-    WITH a AS (
-      SELECT doc_id,
-             regexp_replace(text, '[^ -~]', '', 'g') AS s
-      FROM documents
-    ),
-    c AS (
-      SELECT doc_id,
-             substr(s, 1, least(length(s) // {_VID_BPR}, {_VID_NF})
-                          * {_VID_BPR}) AS s
-      FROM a WHERE length(s) >= 2 * {_VID_BPR}
-    ),
-    fr AS (
-      SELECT doc_id, s,
-             unnest(range(0, length(s) // {_VID_BPR})) AS f
-      FROM c
-    ),
-    v AS (
-      SELECT doc_id, f,
-             unnest(list_transform(range(1, {_VID_BPR} + 1),
-               i -> ascii(substr(s, CAST(f * {_VID_BPR} AS INT) + i,
-                                 1)))) AS val
-      FROM fr
-    ),
+    WITH {_ascii_sql(_VID_BPR, min_len=2 * _VID_BPR,
+                     cap=_VID_NF * _VID_BPR)},
     g0 AS (
-      SELECT doc_id, f,
+      SELECT doc_id, pos // {_VID_BPR} AS f,
              (1000 * sum(val)) // {_VID_BPR} AS m
-      FROM v GROUP BY doc_id, f
+      FROM v GROUP BY 1, 2
     ),
     d AS (
       SELECT doc_id, f,
@@ -3434,22 +2390,16 @@ def q238_gif_video_dedup(spark, sf_dir):
     )
     from sunat_rree_demo_spark.operators.skew import fan_out
 
-    d = t(spark, sf_dir, "documents")
-    src = fan_out(
-        d.select("doc_id",
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .withColumn("s", F.expr(
-            f"substring(s, 1, least(length(s) div {_VID_BPR}, "
-            f"{_VID_NF}) * {_VID_BPR})"))
-        .filter(F.length("s") >= 2 * _VID_BPR)
-    )
+    src = fan_out(_ascii_docs(spark, sf_dir, _VID_BPR,
+                              min_len=2 * _VID_BPR,
+                              cap=_VID_NF * _VID_BPR))
 
     def encode(it):
         import pandas as pd
 
         for pdf in it:
             ids, variants, payloads = [], [], []
-            for did, s in zip(pdf["doc_id"], pdf["s"]):
+            for did, s in zip(pdf["media_id"], pdf["s"]):
                 b = s.encode("ascii")
                 chunks = [b[k:k + _VID_BPR]
                           for k in range(0, len(b), _VID_BPR)]
@@ -3504,13 +2454,7 @@ _MC_SPF = _MC_RATE * 20 // 1000  # pcm_frame_energy default frame_ms
 @register(
     "q237_media_curation_summary",
     oracle=f"""
-    WITH a AS (
-      SELECT doc_id,
-             substr(regexp_replace(text, '[^ -~]', '', 'g'),
-                    1, {_MC_LEN}) AS s
-      FROM documents
-    ),
-    ok AS (SELECT doc_id, s FROM a WHERE length(s) = {_MC_LEN}),
+    WITH {_ascii_sql(min_len=_MC_LEN, cap=_MC_LEN)},
     img AS (
       SELECT doc_id,
              'img:' || array_to_string(list_transform(range(0, 8), r ->
@@ -3520,14 +2464,11 @@ _MC_SPF = _MC_RATE * 20 // 1000  # pcm_frame_energy default frame_ms
                            < ascii(substr(s, r * 9 + c + 2, 1))
                       THEN 128 // (2 ** c) ELSE 0 END)) AS INT))), '')
                AS dkey
-      FROM ok WHERE doc_id % 4 = 0
+      FROM c WHERE doc_id % 4 = 0
     ),
     av AS (
-      SELECT doc_id,
-             unnest(list_transform(range(1, {_MC_LEN} + 1),
-               i -> (ascii(substr(s, i, 1)) - 83) * 256)) AS smp,
-             unnest(range(0, {_MC_LEN})) AS pos
-      FROM ok WHERE doc_id % 4 = 1
+      SELECT doc_id, pos, (val - 83) * 256 AS smp
+      FROM v WHERE doc_id % 4 = 1
     ),
     af AS (
       SELECT doc_id, CAST(pos // {_MC_SPF} AS BIGINT) AS f,
@@ -3552,17 +2493,10 @@ _MC_SPF = _MC_RATE * 20 // 1000  # pcm_frame_energy default frame_ms
                                   '' ORDER BY bi) AS dkey
       FROM abyt GROUP BY doc_id
     ),
-    vv AS (
-      SELECT doc_id,
-             unnest(list_transform(range(1, {_MC_LEN} + 1),
-               i -> ascii(substr(s, i, 1)))) AS val,
-             unnest(range(0, {_MC_LEN})) AS pos
-      FROM ok WHERE doc_id % 4 = 2
-    ),
     vg AS (
       SELECT doc_id, CAST(pos // {_VID_BPR} AS BIGINT) AS f,
              (1000 * sum(val)) // {_VID_BPR} AS m
-      FROM vv GROUP BY 1, 2
+      FROM v WHERE doc_id % 4 = 2 GROUP BY 1, 2
     ),
     vd AS (
       SELECT doc_id, f,
@@ -3583,7 +2517,7 @@ _MC_SPF = _MC_RATE * 20 // 1000  # pcm_frame_energy default frame_ms
     ),
     txt AS (
       SELECT doc_id, 'txt:' || sha256(s) AS dkey
-      FROM ok
+      FROM c
       WHERE doc_id % 4 = 3
         AND NOT (s LIKE 'BM%' OR s LIKE 'GIF8%' OR s LIKE 'fLaC%'
                  OR s LIKE 'RIFF%' OR substr(s, 5, 4) = 'ftyp')
@@ -3650,13 +2584,9 @@ def q237_media_curation_summary(spark, sf_dir):
 
     import numpy as np
 
-    d = t(spark, sf_dir, "documents")
     src = fan_out(
-        d.select("doc_id",
-                 F.expr("substring(regexp_replace(text, '[^ -~]', '')"
-                        f", 1, {_MC_LEN})").alias("s"))
-        .filter(F.length("s") == _MC_LEN)
-        .filter((F.col("doc_id") % 4 != 3)
+        _ascii_docs(spark, sf_dir, min_len=_MC_LEN, cap=_MC_LEN)
+        .filter((F.col("media_id") % 4 != 3)
                 | ~(F.col("s").startswith("BM")
                     | F.col("s").startswith("GIF8")
                     | F.col("s").startswith("fLaC")
@@ -3690,17 +2620,13 @@ def q237_media_curation_summary(spark, sf_dir):
 
         for pdf in it:
             ids, payloads = [], []
-            for did, s in zip(pdf["doc_id"], pdf["s"]):
+            for did, s in zip(pdf["media_id"], pdf["s"]):
                 for k, p in enumerate(mk(int(did), s)):
                     ids.append(int(did) * 2 + k)
                     payloads.append(p)
             yield pd.DataFrame({"media_id": ids, "content": payloads})
 
-    media_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ])
-    media = src.mapInPandas(encode, schema=media_schema)
+    media = src.mapInPandas(encode, schema=_MEDIA_SCHEMA)
     return curate_media_summary(curate_media(media))
 
 
@@ -3715,20 +2641,16 @@ _VM_NF = 18
 @register(
     "q239_video_meta_census",
     oracle=f"""
-    WITH a AS (
+    WITH {_ascii_sql(_VID_BPR, min_len=2 * _VID_BPR,
+                     cap=_VM_NF * _VID_BPR)},
+    k AS (
       SELECT doc_id,
-             regexp_replace(text, '[^ -~]', '', 'g') AS s
-      FROM documents
-    ),
-    c AS (
-      SELECT doc_id,
-             least(length(s) // {_VID_BPR}, {_VM_NF}) AS nf,
+             length(s) // {_VID_BPR} AS nf,
              4 + doc_id % 6 AS afps,
              (200 + 3 + doc_id % 6)
                // (2 * (3 + doc_id % 6)) AS gfps
-      FROM a
-      WHERE length(s) >= 2 * {_VID_BPR}
-        AND NOT (doc_id % 3 = 2
+      FROM c
+      WHERE NOT (doc_id % 3 = 2
                  AND (s LIKE 'GIF8%' OR s LIKE 'RIFF%'
                       OR substr(s, 5, 4) = 'ftyp'))
     )
@@ -3749,7 +2671,7 @@ _VM_NF = 18
              WHEN 0 THEN CAST(8 AS INT)
              WHEN 1 THEN CAST(1 AS INT)
              ELSE NULL END AS height
-    FROM c ORDER BY doc_id
+    FROM k ORDER BY doc_id
     """,
     tags=("media", "multimodal", "video", "metadata"),
 )
@@ -3782,15 +2704,10 @@ def q239_video_meta_census(spark, sf_dir):
     )
     from sunat_rree_demo_spark.operators.skew import fan_out
 
-    d = t(spark, sf_dir, "documents")
     src = fan_out(
-        d.select("doc_id",
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .withColumn("s", F.expr(
-            f"substring(s, 1, least(length(s) div {_VID_BPR}, "
-            f"{_VM_NF}) * {_VID_BPR})"))
-        .filter(F.length("s") >= 2 * _VID_BPR)
-        .filter(~((F.col("doc_id") % 3 == 2)
+        _ascii_docs(spark, sf_dir, _VID_BPR, min_len=2 * _VID_BPR,
+                    cap=_VM_NF * _VID_BPR)
+        .filter(~((F.col("media_id") % 3 == 2)
                   & (F.col("s").startswith("GIF8")
                      | F.col("s").startswith("RIFF")
                      | (F.substring("s", 5, 4) == "ftyp"))))
@@ -3816,10 +2733,10 @@ def q239_video_meta_census(spark, sf_dir):
 
         for pdf in it:
             yield pd.DataFrame({
-                "media_id": pdf["doc_id"],
+                "media_id": pdf["media_id"],
                 "media_type": ["?"] * len(pdf),
                 "content": [mk(int(m), s) for m, s in
-                            zip(pdf["doc_id"], pdf["s"])],
+                            zip(pdf["media_id"], pdf["s"])],
             })
 
     media_schema = T.StructType([
@@ -3847,22 +2764,8 @@ _P16_W = 15
 @register(
     "q241_png16_stats",
     oracle=f"""
-    WITH a AS (
-      SELECT doc_id,
-             regexp_replace(text, '[^ -~]', '', 'g') AS s
-      FROM documents
-    ),
-    c AS (
-      SELECT doc_id,
-             substr(s, 1, (length(s) // {_P16_W}) * {_P16_W}) AS s
-      FROM a WHERE length(s) >= {_P16_W}
-    ),
-    v AS (
-      SELECT doc_id, length(s) AS n,
-             unnest(list_transform(range(1, length(s) + 1),
-                    i -> ascii(substr(s, i, 1)) * 257)) AS val
-      FROM c
-    )
+    WITH {_ascii_sql(_P16_W)},
+    w AS (SELECT doc_id, n, val * 257 AS val FROM v)
     SELECT doc_id,
            CAST({_P16_W} AS INT) AS width,
            CAST(n // {_P16_W} AS INT) AS height,
@@ -3872,7 +2775,7 @@ _P16_W = 15
              / 10000.0 AS mean_val,
            CAST(min(val) AS INT) AS min_val,
            CAST(max(val) AS INT) AS max_val
-    FROM v GROUP BY doc_id, n ORDER BY doc_id
+    FROM w GROUP BY doc_id, n ORDER BY doc_id
     """,
     tags=("media", "multimodal", "codec", "png", "16-bit"),
 )
@@ -3898,48 +2801,12 @@ def q241_png16_stats(spark, sf_dir):
     )
     from sunat_rree_demo_spark.operators.skew import fan_out
 
-    d = t(spark, sf_dir, "documents")
-    src = fan_out(
-        d.select(F.col("doc_id").alias("media_id"),
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .withColumn("s", F.expr(
-            f"substring(s, 1, (length(s) div {_P16_W}) * {_P16_W})"))
-        .filter(F.length("s") >= _P16_W)
-    )
-
-    def encode(it):
-        import pandas as pd
-
-        def mk(mid: int, s: str) -> bytes:
-            vals = [ord(ch) * 257 for ch in s]
-            return encode_png_gray(vals, _P16_W, "cycle",
-                                   interlace=(mid % 2 == 0), depth=16)
-
-        for pdf in it:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "content": [mk(int(m), s) for m, s in
-                            zip(pdf["media_id"], pdf["s"])],
-            })
-
-    media_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ])
-    media = src.mapInPandas(encode, schema=media_schema)
-    stats = image_pixel_stats(media)
-    return (
-        stats.select(
-            F.col("media_id").alias("doc_id"),
-            "width", "height", "bit_depth",
-            F.col("n_samples").cast("bigint").alias("n_samples"),
-            (F.expr("(2 * sum_val * 10000 + n_samples) "
-                    "div (2 * n_samples)").cast("double") / 10000.0)
-            .alias("mean_val"),
-            "min_val", "max_val",
-        )
-        .orderBy("doc_id")
-    )
+    media = _encode(fan_out(_ascii_docs(spark, sf_dir, _P16_W)),
+                    lambda mid, s: encode_png_gray(
+                        [ord(ch) * 257 for ch in s], _P16_W, "cycle",
+                        interlace=(mid % 2 == 0), depth=16))
+    return _pixel_stats(image_pixel_stats(media), "n_samples",
+                        "width", "height", "bit_depth").orderBy("doc_id")
 
 
 #: q242 MP4 device: 10 uniform blocks per frame (width 80 — unique
@@ -3951,29 +2818,8 @@ _MP4_NF = 20
 @register(
     "q242_mp4_frame_stats",
     oracle=f"""
-    WITH a AS (
-      SELECT doc_id,
-             regexp_replace(text, '[^ -~]', '', 'g') AS s
-      FROM documents
-    ),
-    c AS (
-      SELECT doc_id,
-             substr(s, 1, least(length(s) // {_MP4_BPR}, {_MP4_NF})
-                          * {_MP4_BPR}) AS s
-      FROM a WHERE length(s) >= {_MP4_BPR}
-    ),
-    fr AS (
-      SELECT doc_id, s,
-             unnest(range(0, length(s) // {_MP4_BPR})) AS f
-      FROM c
-    ),
-    v AS (
-      SELECT doc_id, f,
-             unnest(list_transform(range(1, {_MP4_BPR} + 1),
-               i -> ascii(substr(s, CAST(f * {_MP4_BPR} AS INT) + i,
-                                 1)))) AS val
-      FROM fr WHERE f % 2 = 0
-    )
+    WITH {_ascii_sql(_MP4_BPR, cap=_MP4_NF * _MP4_BPR)},
+    fv AS (SELECT doc_id, pos // {_MP4_BPR} AS f, val FROM v)
     SELECT doc_id,
            CAST(f AS BIGINT) AS frame_no,
            CAST(3 + doc_id % 5 AS INT) AS fps,
@@ -3985,7 +2831,8 @@ _MP4_NF = 20
              AS mean_val,
            CAST(min(val) AS INT) AS min_val,
            CAST(max(val) AS INT) AS max_val
-    FROM v GROUP BY doc_id, f ORDER BY doc_id, frame_no
+    FROM fv WHERE f % 2 = 0
+    GROUP BY doc_id, f ORDER BY doc_id, frame_no
     """,
     tags=("media", "multimodal", "codec", "video", "mp4"),
 )
@@ -4012,85 +2859,33 @@ def q242_mp4_frame_stats(spark, sf_dir):
     )
     from sunat_rree_demo_spark.operators.skew import fan_out
 
-    d = t(spark, sf_dir, "documents")
-    src = fan_out(
-        d.select(F.col("doc_id").alias("media_id"),
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .withColumn("s", F.expr(
-            f"substring(s, 1, least(length(s) div {_MP4_BPR}, "
-            f"{_MP4_NF}) * {_MP4_BPR})"))
-        .filter(F.length("s") >= _MP4_BPR)
-    )
+    def mk(mid: int, s: str) -> bytes:
+        b = s.encode("ascii")
+        frames = [
+            encode_jpeg_gray_blocks(b[k:k + _MP4_BPR], _MP4_BPR)
+            for k in range(0, len(b), _MP4_BPR)]
+        return encode_mp4_mjpeg(frames, _MP4_BPR * 8, 8,
+                                fps=3 + mid % 5)
 
-    def encode(it):
-        import pandas as pd
-
-        def mk(mid: int, s: str) -> bytes:
-            b = s.encode("ascii")
-            frames = [
-                encode_jpeg_gray_blocks(b[k:k + _MP4_BPR], _MP4_BPR)
-                for k in range(0, len(b), _MP4_BPR)]
-            return encode_mp4_mjpeg(frames, _MP4_BPR * 8, 8,
-                                    fps=3 + mid % 5)
-
-        for pdf in it:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "content": [mk(int(m), s) for m, s in
-                            zip(pdf["media_id"], pdf["s"])],
-            })
-
-    media_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ])
-    media = src.mapInPandas(encode, schema=media_schema)
+    media = _encode(fan_out(_ascii_docs(spark, sf_dir, _MP4_BPR,
+                                        cap=_MP4_NF * _MP4_BPR)), mk)
     fs = video_frame_stats(media, every_n=2)
-    return (
-        fs.select(
-            F.col("media_id").alias("doc_id"),
-            F.col("frame_no").cast("bigint").alias("frame_no"),
-            "fps", "width", "height",
-            F.col("n_samples").cast("bigint").alias("n_pixels"),
-            (F.expr("(2 * sum_val * 10000 + n_samples) "
-                    "div (2 * n_samples)").cast("double") / 10000.0)
-            .alias("mean_val"),
-            "min_val", "max_val",
-        )
-        .orderBy("doc_id", "frame_no")
-    )
+    return _pixel_stats(
+        fs, "n_pixels",
+        F.col("frame_no").cast("bigint").alias("frame_no"),
+        "fps", "width", "height",
+    ).orderBy("doc_id", "frame_no")
 
 
 @register(
     "q243_video_dedup_cross_container",
     oracle=f"""
-    WITH a AS (
-      SELECT doc_id,
-             regexp_replace(text, '[^ -~]', '', 'g') AS s
-      FROM documents
-    ),
-    c AS (
-      SELECT doc_id,
-             substr(s, 1, least(length(s) // {_VID_BPR}, {_VID_NF})
-                          * {_VID_BPR}) AS s
-      FROM a WHERE length(s) >= 2 * {_VID_BPR}
-    ),
-    fr AS (
-      SELECT doc_id, s,
-             unnest(range(0, length(s) // {_VID_BPR})) AS f
-      FROM c
-    ),
-    v AS (
-      SELECT doc_id, f,
-             unnest(list_transform(range(1, {_VID_BPR} + 1),
-               i -> ascii(substr(s, CAST(f * {_VID_BPR} AS INT) + i,
-                                 1)))) AS val
-      FROM fr
-    ),
+    WITH {_ascii_sql(_VID_BPR, min_len=2 * _VID_BPR,
+                     cap=_VID_NF * _VID_BPR)},
     g0 AS (
-      SELECT doc_id, f,
+      SELECT doc_id, pos // {_VID_BPR} AS f,
              (1000 * sum(val)) // {_VID_BPR} AS m
-      FROM v GROUP BY doc_id, f
+      FROM v GROUP BY 1, 2
     ),
     d AS (
       SELECT doc_id, f,
@@ -4154,22 +2949,16 @@ def q243_video_dedup_cross_container(spark, sf_dir):
     )
     from sunat_rree_demo_spark.operators.skew import fan_out
 
-    d = t(spark, sf_dir, "documents")
-    src = fan_out(
-        d.select("doc_id",
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .withColumn("s", F.expr(
-            f"substring(s, 1, least(length(s) div {_VID_BPR}, "
-            f"{_VID_NF}) * {_VID_BPR})"))
-        .filter(F.length("s") >= 2 * _VID_BPR)
-    )
+    src = fan_out(_ascii_docs(spark, sf_dir, _VID_BPR,
+                              min_len=2 * _VID_BPR,
+                              cap=_VID_NF * _VID_BPR))
 
     def encode(it):
         import pandas as pd
 
         for pdf in it:
             ids, variants, payloads = [], [], []
-            for did, s in zip(pdf["doc_id"], pdf["s"]):
+            for did, s in zip(pdf["media_id"], pdf["s"]):
                 b = s.encode("ascii")
                 chunks = [b[k:k + _VID_BPR]
                           for k in range(0, len(b), _VID_BPR)]
@@ -4228,30 +3017,15 @@ _MXD_W = 18
 @register(
     "q244_mixed_depth_census",
     oracle=f"""
-    WITH a AS (
-      SELECT doc_id,
-             regexp_replace(text, '[^ -~]', '', 'g') AS s
-      FROM documents
-    ),
-    c AS (
-      SELECT doc_id,
-             substr(s, 1, (length(s) // {_MXD_W}) * {_MXD_W}) AS s,
-             CASE WHEN doc_id % 2 = 0 THEN 8 ELSE 16 END AS bit_depth,
-             CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 257 END AS wt
-      FROM a WHERE length(s) >= {_MXD_W}
-    ),
-    v AS (
-      SELECT doc_id, bit_depth, wt, length(s) AS n,
-             unnest(list_transform(range(1, length(s) + 1),
-                    i -> ascii(substr(s, i, 1)))) AS val
-      FROM c
-    ),
+    WITH {_ascii_sql(_MXD_W)},
     per AS (
-      SELECT bit_depth,
+      SELECT CASE WHEN doc_id % 2 = 0 THEN 8 ELSE 16 END AS bit_depth,
              count(DISTINCT doc_id) AS n_images,
              CAST(sum(1) AS BIGINT) AS n_samples,
-             sum(CAST(val AS BIGINT) * wt) AS sum_val
-      FROM v GROUP BY bit_depth
+             sum(CAST(val AS BIGINT)
+                 * CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 257 END)
+               AS sum_val
+      FROM v GROUP BY 1
     )
     SELECT CAST(bit_depth AS INT) AS bit_depth,
            CAST(n_images AS BIGINT) AS n_images,
@@ -4285,36 +3059,13 @@ def q244_mixed_depth_census(spark, sf_dir):
     )
     from sunat_rree_demo_spark.operators.skew import fan_out
 
-    d = t(spark, sf_dir, "documents")
-    src = fan_out(
-        d.select(F.col("doc_id").alias("media_id"),
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .withColumn("s", F.expr(
-            f"substring(s, 1, (length(s) div {_MXD_W}) * {_MXD_W})"))
-        .filter(F.length("s") >= _MXD_W)
-    )
+    def mk(mid: int, s: str) -> bytes:
+        if mid % 2 == 0:
+            return encode_png_gray(s.encode("ascii"), _MXD_W)
+        return encode_png_gray([ord(ch) * 257 for ch in s],
+                               _MXD_W, depth=16)
 
-    def encode(it):
-        import pandas as pd
-
-        def mk(mid: int, s: str) -> bytes:
-            if mid % 2 == 0:
-                return encode_png_gray(s.encode("ascii"), _MXD_W)
-            return encode_png_gray([ord(ch) * 257 for ch in s],
-                                   _MXD_W, depth=16)
-
-        for pdf in it:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "content": [mk(int(m), s) for m, s in
-                            zip(pdf["media_id"], pdf["s"])],
-            })
-
-    media_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ])
-    media = src.mapInPandas(encode, schema=media_schema)
+    media = _encode(fan_out(_ascii_docs(spark, sf_dir, _MXD_W)), mk)
     stats = image_pixel_stats(media)
     den = "n_samples * ((1 << bit_depth) - 1)"
     return (
@@ -4333,28 +3084,9 @@ def q244_mixed_depth_census(spark, sf_dir):
 @register(
     "q245_m4a_frame_energy",
     oracle=f"""
-    WITH a AS (
-      SELECT doc_id,
-             regexp_replace(text, '[^ -~]', '', 'g') AS s
-      FROM documents
-    ),
-    v AS (
-      SELECT doc_id,
-             unnest(list_transform(range(1, length(s) + 1),
-               i -> (ascii(substr(s, i, 1)) - 85) * 256)) AS smp,
-             unnest(range(0, length(s))) AS pos
-      FROM a WHERE length(s) >= 1
-    ),
-    f AS (
-      SELECT doc_id,
-             CAST(pos // {_WAV_SPF} AS BIGINT) AS frame_no,
-             CAST(count(*) AS BIGINT) AS n_samples,
-             sum(CAST(smp AS BIGINT) * smp) AS ssq
-      FROM v GROUP BY 1, 2
-    )
-    SELECT doc_id, frame_no, n_samples,
-           round(sqrt(CAST(ssq AS DOUBLE) / n_samples), 4) AS rms_4dp
-    FROM f ORDER BY doc_id, frame_no
+    WITH {_ascii_sql()},
+    p AS (SELECT doc_id, pos, (val - 85) * 256 AS smp FROM v),
+    {_FRAME_ENERGY_SQL}
     """,
     tags=("media", "multimodal", "codec", "audio", "mp4"),
 )
@@ -4373,73 +3105,32 @@ def q245_m4a_frame_energy(spark, sf_dir):
     Scale shape: identical to q207 — one encode pass, one
     demux+energy pass at media grain, frame-grain output, no
     shuffle before the output sort."""
-    from sunat_rree_demo_spark.operators.multimodal import (
-        encode_mp4_pcm16,
-        pcm_frame_energy,
-    )
+    from sunat_rree_demo_spark.operators.multimodal import encode_mp4_pcm16
     from sunat_rree_demo_spark.operators.skew import fan_out
 
     import numpy as np
 
-    d = t(spark, sf_dir, "documents")
-    src = fan_out(
-        d.select(F.col("doc_id").alias("media_id"),
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .filter(F.length("s") >= 1)
-    )
+    def mk(mid: int, s: str) -> bytes:
+        smp = (np.frombuffer(s.encode("ascii"), np.uint8)
+               .astype(np.int64) - 85) * 256
+        return encode_mp4_pcm16(smp, rate=_WAV_RATE,
+                                big_endian=(mid % 2 == 1))
 
-    def encode(it):
-        import pandas as pd
-
-        def mk(mid: int, s: str) -> bytes:
-            smp = (np.frombuffer(s.encode("ascii"), np.uint8)
-                   .astype(np.int64) - 85) * 256
-            return encode_mp4_pcm16(smp, rate=_WAV_RATE,
-                                    big_endian=(mid % 2 == 1))
-
-        for pdf in it:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "content": [mk(int(m), s) for m, s in
-                            zip(pdf["media_id"], pdf["s"])],
-            })
-
-    media_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ])
-    media = src.mapInPandas(encode, schema=media_schema)
-    return (
-        pcm_frame_energy(media, frame_ms=_WAV_FRAME_MS)
-        .select(F.col("media_id").alias("doc_id"),
-                "frame_no", "n_samples",
-                F.round("rms", 4).alias("rms_4dp"))
-        .orderBy("doc_id", "frame_no")
-    )
+    media = _encode(fan_out(_ascii_docs(spark, sf_dir)), mk)
+    return _frame_energy(media, _WAV_FRAME_MS)
 
 
 @register(
     "q246_audio_dedup_cross_container",
     oracle=f"""
-    WITH a AS (
-      SELECT doc_id,
-             regexp_replace(text, '[^ -~]', '', 'g') AS s
-      FROM documents
-    ),
-    ok AS (SELECT doc_id, s FROM a WHERE length(s) >= {_WAV_SPF} + 1),
-    v AS (
-      SELECT doc_id,
-             unnest(list_transform(range(1, length(s) + 1),
-               i -> (ascii(substr(s, i, 1)) - 79) * 256)) AS smp,
-             unnest(range(0, length(s))) AS pos
-      FROM ok
-    ),
+    WITH {_ascii_sql(min_len=_WAV_SPF + 1)},
+    p AS (SELECT doc_id, pos, (val - 79) * 256 AS smp FROM v),
     f AS (
       SELECT doc_id,
              CAST(pos // {_WAV_SPF} AS BIGINT) AS frame_no,
              sqrt(CAST(sum(CAST(smp AS BIGINT) * smp) AS DOUBLE)
                   / count(*)) AS rms
-      FROM v GROUP BY 1, 2
+      FROM p GROUP BY 1, 2
     ),
     d AS (
       SELECT doc_id, frame_no,
@@ -4501,19 +3192,14 @@ def q246_audio_dedup_cross_container(spark, sf_dir):
 
     import numpy as np
 
-    d = t(spark, sf_dir, "documents")
-    src = fan_out(
-        d.select("doc_id",
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .filter(F.length("s") >= _WAV_SPF + 1)
-    )
+    src = fan_out(_ascii_docs(spark, sf_dir, min_len=_WAV_SPF + 1))
 
     def encode(it):
         import pandas as pd
 
         for pdf in it:
             ids, variants, payloads = [], [], []
-            for did, s in zip(pdf["doc_id"], pdf["s"]):
+            for did, s in zip(pdf["media_id"], pdf["s"]):
                 smp = (np.frombuffer(s.encode("ascii"), np.uint8)
                        .astype(np.int64) - 79) * 256
                 ids.append(int(did) * 2)
@@ -4557,18 +3243,14 @@ def q246_audio_dedup_cross_container(spark, sf_dir):
 @register(
     "q247_mp4_meta_census",
     oracle=f"""
-    WITH a AS (
+    WITH {_ascii_sql(_VID_BPR, min_len=2 * _VID_BPR,
+                     cap=_VM_NF * _VID_BPR)},
+    k AS (
       SELECT doc_id,
-             regexp_replace(text, '[^ -~]', '', 'g') AS s
-      FROM documents
-    ),
-    c AS (
-      SELECT doc_id,
-             least(length(s) // {_VID_BPR}, {_VM_NF}) AS nf,
+             length(s) // {_VID_BPR} AS nf,
              4 + doc_id % 6 AS fps
-      FROM a
-      WHERE length(s) >= 2 * {_VID_BPR}
-        AND NOT (doc_id % 2 = 1
+      FROM c
+      WHERE NOT (doc_id % 2 = 1
                  AND (s LIKE 'GIF8%' OR s LIKE 'RIFF%'
                       OR substr(s, 5, 4) IN
                          ('ftyp', 'moov', 'mdat', 'free', 'wide')))
@@ -4581,7 +3263,7 @@ def q246_audio_dedup_cross_container(spark, sf_dir):
            CASE WHEN doc_id % 2 = 0
                 THEN CAST({_VID_BPR} * 8 AS INT) END AS width,
            CASE WHEN doc_id % 2 = 0 THEN CAST(8 AS INT) END AS height
-    FROM c ORDER BY doc_id
+    FROM k ORDER BY doc_id
     """,
     tags=("media", "multimodal", "video", "metadata", "mp4"),
 )
@@ -4611,15 +3293,10 @@ def q247_mp4_meta_census(spark, sf_dir):
     )
     from sunat_rree_demo_spark.operators.skew import fan_out
 
-    d = t(spark, sf_dir, "documents")
     src = fan_out(
-        d.select("doc_id",
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .withColumn("s", F.expr(
-            f"substring(s, 1, least(length(s) div {_VID_BPR}, "
-            f"{_VM_NF}) * {_VID_BPR})"))
-        .filter(F.length("s") >= 2 * _VID_BPR)
-        .filter(~((F.col("doc_id") % 2 == 1)
+        _ascii_docs(spark, sf_dir, _VID_BPR, min_len=2 * _VID_BPR,
+                    cap=_VM_NF * _VID_BPR)
+        .filter(~((F.col("media_id") % 2 == 1)
                   & (F.col("s").startswith("GIF8")
                      | F.col("s").startswith("RIFF")
                      | F.substring("s", 5, 4).isin(
@@ -4641,10 +3318,10 @@ def q247_mp4_meta_census(spark, sf_dir):
 
         for pdf in it:
             yield pd.DataFrame({
-                "media_id": pdf["doc_id"],
+                "media_id": pdf["media_id"],
                 "media_type": ["?"] * len(pdf),
                 "content": [mk(int(m), s) for m, s in
-                            zip(pdf["doc_id"], pdf["s"])],
+                            zip(pdf["media_id"], pdf["s"])],
             })
 
     media_schema = T.StructType([
@@ -4672,20 +3349,15 @@ _AM_CAP = 400
 @register(
     "q250_m4a_meta_census",
     oracle=f"""
-    WITH a AS (
+    WITH {_ascii_sql(2, min_len=4, cap=_AM_CAP)},
+    k AS (
       SELECT doc_id,
-             regexp_replace(text, '[^ -~]', '', 'g') AS s
-      FROM documents
-    ),
-    c AS (
-      SELECT doc_id,
-             (least(length(s), {_AM_CAP}) // 2) * 2 AS ns,
+             length(s) AS ns,
              CASE (doc_id // 2) % 3 WHEN 0 THEN 8000
                   WHEN 1 THEN 11025 ELSE 16000 END AS rate,
              1 + (doc_id // 2) % 2 AS ch
-      FROM a
-      WHERE length(s) >= 4
-        AND NOT (doc_id % 2 = 1
+      FROM c
+      WHERE NOT (doc_id % 2 = 1
                  AND (s LIKE 'RIFF%' OR s LIKE 'fLaC%'
                       OR substr(s, 5, 4) IN
                          ('ftyp', 'moov', 'mdat', 'free', 'wide')))
@@ -4700,7 +3372,7 @@ _AM_CAP = 400
            CASE WHEN doc_id % 2 = 0
                 THEN CAST((ns // ch) * 1000 // rate AS BIGINT)
                 END AS duration_ms
-    FROM c ORDER BY doc_id
+    FROM k ORDER BY doc_id
     """,
     tags=("media", "multimodal", "audio", "metadata", "mp4"),
 )
@@ -4732,47 +3404,26 @@ def q250_m4a_meta_census(spark, sf_dir):
 
     import numpy as np
 
-    d = t(spark, sf_dir, "documents")
+    def mk(did: int, s: str) -> bytes:
+        b = s.encode("ascii")
+        if did % 2 == 1:
+            return b  # raw bytes: NULL metadata row
+        smp = (np.frombuffer(b, np.uint8).astype(np.int64)
+               - 79) * 256
+        rate = (8000, 11025, 16000)[(did // 2) % 3]
+        return encode_mp4_pcm16(smp, rate=rate,
+                                channels=1 + (did // 2) % 2)
+
     src = fan_out(
-        d.select("doc_id",
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .withColumn("s", F.expr(
-            f"substring(s, 1, (least(length(s), {_AM_CAP}) div 2) * 2)"))
-        .filter(F.length("s") >= 4)
-        .filter(~((F.col("doc_id") % 2 == 1)
+        _ascii_docs(spark, sf_dir, 2, min_len=4, cap=_AM_CAP)
+        .filter(~((F.col("media_id") % 2 == 1)
                   & (F.col("s").startswith("RIFF")
                      | F.col("s").startswith("fLaC")
                      | F.substring("s", 5, 4).isin(
                          "ftyp", "moov", "mdat", "free", "wide"))))
     )
-
-    def encode(it):
-        import pandas as pd
-
-        def mk(did: int, s: str) -> bytes:
-            b = s.encode("ascii")
-            if did % 2 == 1:
-                return b  # raw bytes: NULL metadata row
-            smp = (np.frombuffer(b, np.uint8).astype(np.int64)
-                   - 79) * 256
-            rate = (8000, 11025, 16000)[(did // 2) % 3]
-            return encode_mp4_pcm16(smp, rate=rate,
-                                    channels=1 + (did // 2) % 2)
-
-        for pdf in it:
-            yield pd.DataFrame({
-                "media_id": pdf["doc_id"],
-                "content": [mk(int(m), s) for m, s in
-                            zip(pdf["doc_id"], pdf["s"])],
-            })
-
-    media_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ])
-    media = src.mapInPandas(encode, schema=media_schema)
     return (
-        extract_audio_meta(media)
+        extract_audio_meta(_encode(src, mk))
         .select(F.col("media_id").alias("doc_id"),
                 "sample_rate", "n_channels", "bits_per_sample",
                 F.col("duration_ms").cast("bigint").alias("duration_ms"))
@@ -4796,16 +3447,7 @@ def _ima_tables_sql() -> str:
 @register(
     "q249_adpcm_decode_census",
     oracle=f"""
-    WITH RECURSIVE a AS (
-      SELECT doc_id,
-             regexp_replace(text, '[^ -~]', '', 'g') AS s
-      FROM documents
-    ),
-    c AS (
-      SELECT doc_id,
-             substr(s, 1, (least(length(s), {_ADPCM_CAP}) // 2) * 2) AS s
-      FROM a WHERE length(s) >= 2
-    ),
+    WITH RECURSIVE {_ascii_sql(2, cap=_ADPCM_CAP)},
     st AS (SELECT {_ima_tables_sql()} AS tbl),
     sim AS (
       SELECT doc_id, s, 0 AS k, 0 AS pred, 0 AS idx FROM c
@@ -4867,15 +3509,7 @@ def q249_adpcm_decode_census(spark, sf_dir):
 
     import numpy as np
 
-    d = t(spark, sf_dir, "documents")
-    src = fan_out(
-        d.select("doc_id",
-                 F.regexp_replace("text", "[^ -~]", "").alias("s"))
-        .withColumn("s", F.expr(
-            f"substring(s, 1, (least(length(s), {_ADPCM_CAP}) div 2)"
-            " * 2)"))
-        .filter(F.length("s") >= 2)
-    )
+    src = fan_out(_ascii_docs(spark, sf_dir, 2, cap=_ADPCM_CAP))
 
     def decode_census(it):
         import pandas as pd
@@ -4891,7 +3525,7 @@ def q249_adpcm_decode_census(spark, sf_dir):
 
         for pdf in it:
             rows = [one(int(i), s) for i, s in
-                    zip(pdf["doc_id"], pdf["s"])]
+                    zip(pdf["media_id"], pdf["s"])]
             yield pd.DataFrame(rows, columns=[
                 "doc_id", "n_samples", "sum_amp", "sum_sq"])
 

@@ -36,6 +36,18 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return fs, jpath
 
 
+def analysis_error_is(exc: Exception, *classes: str) -> bool:
+    """True iff the AnalysisException ``exc`` carries one of the error
+    ``classes``. The error class is checked first (``getCondition`` on
+    Spark 4, the deprecated ``getErrorClass`` elsewhere), the message
+    text second, for versions that wrap the class into the message
+    only. Callers re-raise on False, so a corrupt or unreadable store
+    stays loud."""
+    get_cls = getattr(exc, "getCondition", None) or exc.getErrorClass
+    return (get_cls() or "") in classes \
+        or any(c in str(exc) for c in classes)
+
+
 def clear_commit_marker(spark: SparkSession, dir_path: str) -> None:
     """Delete ``dir_path/_SUCCESS`` before an overwrite-rewrite of a
     committed-only-read partition: ``mode("overwrite")`` deletes the

@@ -13,11 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-
-def write_partitioned(df: DataFrame, path: str, partition_by: str = "year",
-                      mode: str = "overwrite") -> None:
-    """S8 — partitioned parquet sink; readers get partition pruning."""
-    df.write.mode(mode).partitionBy(partition_by).parquet(path)
+from sunat_rree_demo_spark.sources.batch_store import analysis_error_is
 
 
 def write_bucketed_table(spark: SparkSession, df: DataFrame, name: str,
@@ -93,22 +89,15 @@ def upsert_partitioned(spark: SparkSession, updates: DataFrame, path: str,
             f"partition column {partition_by!r} must be part of key_cols "
             f"{key_cols!r}: upsert only rewrites touched partitions, so a "
             "cross-partition key move would strand its old row")
+    from pyspark.errors import AnalysisException
+
     touched = updates.select(partition_by).distinct()
     try:
         base = (spark.read.parquet(path)
                 .join(F.broadcast(touched), partition_by, "left_semi")
                 .withColumn("_src", F.lit(0)))
-    except Exception as exc:  # first batch: nothing to merge into
-        from pyspark.errors import AnalysisException
-
-        if not isinstance(exc, AnalysisException):
-            raise
-        # error-class check first (Spark 4: getCondition; fall back to
-        # the deprecated accessor, then substring) — same device as
-        # dedup_index._read_or_empty; anything else stays loud
-        get_cls = getattr(exc, "getCondition", None) or exc.getErrorClass
-        if (get_cls() or "") != "PATH_NOT_FOUND" \
-                and "PATH_NOT_FOUND" not in str(exc):
+    except AnalysisException as exc:  # first batch: nothing to merge into
+        if not analysis_error_is(exc, "PATH_NOT_FOUND"):
             raise
         base = None
     up = updates.withColumn("_src", F.lit(1))

@@ -14,6 +14,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from sunat_rree_demo_spark.sources.batch_store import analysis_error_is
+
+
 def _events_schema(ts_type: T.DataType) -> T.StructType:
     """events.parquet logical schema with the given physical ts type."""
     return T.StructType([
@@ -70,11 +73,8 @@ def events_file_stream(spark: SparkSession, directory: str,
                            .parquet(directory).dtypes).get("ts")
             ts_variant = "nanos" if ts_type == "bigint" else "micros"
         except AnalysisException as exc:
-            get_cls = getattr(exc, "getCondition", None) or exc.getErrorClass
-            cls = get_cls() or ""
-            if cls in ("UNABLE_TO_INFER_SCHEMA", "PATH_NOT_FOUND") \
-                    or "UNABLE_TO_INFER_SCHEMA" in str(exc) \
-                    or "PATH_NOT_FOUND" in str(exc):
+            if analysis_error_is(exc, "UNABLE_TO_INFER_SCHEMA",
+                                 "PATH_NOT_FOUND"):
                 ts_variant = "nanos"  # empty dir: stream starts, files later
             else:
                 raise  # disagreeing footers / corrupt files stay loud

@@ -7,6 +7,7 @@ import os
 import time
 
 import pytest
+from pyspark.errors import AnalysisException
 
 
 def _store(root):
@@ -80,3 +81,75 @@ def test_drain_times_out_and_stops_the_query(spark, tmp_path):
         drain(stream, handle, store, 2, "slow")
     assert spark.streams.active == []
     assert os.path.isdir(f"{store}/_stream_checkpoint")
+
+
+class _Cond(AnalysisException):
+    """An AnalysisException built without a JVM, with a chosen Spark 4
+    ``getCondition``."""
+
+    def __init__(self, msg, cond):
+        super().__init__(message=msg)
+        self._cond = cond
+
+    def getCondition(self):
+        return self._cond
+
+
+class _ErrClassOnly(Exception):
+    """A pre-4 AnalysisException stand-in: ``getErrorClass`` only."""
+
+    def __init__(self, msg, cls):
+        super().__init__(msg)
+        self._cls = cls
+
+    def getErrorClass(self):
+        return self._cls
+
+
+class _ReadFails:
+    """A session stand-in whose every parquet read raises ``exc``."""
+
+    def __init__(self, exc):
+        self.exc = exc
+        self.read = self
+
+    def schema(self, _schema):
+        return self
+
+    def parquet(self, _path):
+        raise self.exc
+
+    def createDataFrame(self, rows, schema):
+        return ("empty", rows, schema)
+
+
+@pytest.mark.parametrize("exc, classes, expected", [
+    (_Cond("Path does not exist", "PATH_NOT_FOUND"),
+     ("PATH_NOT_FOUND",), True),
+    (_ErrClassOnly("cannot infer", "UNABLE_TO_INFER_SCHEMA"),
+     ("UNABLE_TO_INFER_SCHEMA", "PATH_NOT_FOUND"), True),
+    (_Cond("[PATH_NOT_FOUND] Path does not exist: /x", None),
+     ("PATH_NOT_FOUND",), True),
+    (_Cond("Table or view not found", "TABLE_OR_VIEW_NOT_FOUND"),
+     ("PATH_NOT_FOUND",), False),
+], ids=["getCondition", "getErrorClass-only", "message-only", "other"])
+def test_analysis_error_is(exc, classes, expected):
+    """The error class decides first, from whichever accessor exists;
+    the message decides when the class is missing; any other class is
+    not a match."""
+    from sunat_rree_demo_spark.sources.batch_store import analysis_error_is
+
+    assert analysis_error_is(exc, *classes) is expected
+
+
+def test_read_or_empty_reraises_other_analysis_errors():
+    """A missing index reads as empty; any other analysis error, such
+    as a corrupt existing index, propagates."""
+    from sunat_rree_demo_spark.operators import dedup_index
+
+    missing = _Cond("Path does not exist", "PATH_NOT_FOUND")
+    assert dedup_index._read_or_empty(_ReadFails(missing), "/x", "s") \
+        == ("empty", [], "s")
+    other = _Cond("corrupt footer", "FAILED_READ_FILE")
+    with pytest.raises(_Cond, match="corrupt footer"):
+        dedup_index._read_or_empty(_ReadFails(other), "/x", "s")

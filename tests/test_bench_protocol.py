@@ -94,3 +94,78 @@ def test_failed_run_never_writes_green_baseline():
     assert bench.is_green_run(["q40_ngram_jaccard_pairs"]) is False
     # and main() must actually route the write through it
     assert "is_green_run(offenders)" in inspect.getsource(bench.main)
+
+
+class _Seq:
+    """A Scala Seq as py4j exposes it: ``size()`` and ``apply(i)``."""
+
+    def __init__(self, items):
+        self.items = list(items)
+
+    def size(self):
+        return len(self.items)
+
+    def apply(self, i):
+        return self.items[i]
+
+
+class _Opt:
+    def __init__(self, v):
+        self.v = v
+
+    def isDefined(self):
+        return self.v is not None
+
+    def get(self):
+        return self.v
+
+
+class _Stage:
+    def __init__(self, sid, run_ms):
+        self.sid, self.run_ms = sid, run_ms
+
+    def stageId(self):
+        return self.sid
+
+    def executorRunTime(self):
+        return self.run_ms
+
+
+class _Job:
+    def __init__(self, desc, stage_ids):
+        self.desc, self.sids = desc, stage_ids
+
+    def description(self):
+        return _Opt(self.desc)
+
+    def stageIds(self):
+        return _Seq(self.sids)
+
+
+class _FakeSc:
+    """Just enough SparkContext for ``_task_time_ms``: a status store
+    listing ``stages`` and ``jobs``."""
+
+    def __init__(self, stages, jobs):
+        store = type("Store", (), {
+            "stageList": lambda _s, *a: _Seq(stages),
+            "jobsList": lambda _s, _status: _Seq(jobs),
+        })()
+        jsc_sc = type("JSc", (), {"statusStore": lambda _s: store})()
+        self._jsc = type("Jsc", (), {"sc": lambda _s: jsc_sc})()
+        self._gateway = type("Gw", (), {"new_array": lambda _s, *a: []})()
+        self._jvm = type("Jvm", (), {"double": float})()
+
+
+def test_task_time_counts_a_shared_stage_once():
+    """Stage 1 ran once (1000 ms) and both reps' jobs list it — the
+    second rep skipped it — so it counts once; a job outside the
+    timed descriptions never counts."""
+    from bench import _task_time_ms
+
+    sc = _FakeSc(
+        stages=[_Stage(1, 1000), _Stage(2, 30), _Stage(3, 40),
+                _Stage(4, 500)],
+        jobs=[_Job("q_r1", [1, 2]), _Job("q_r2", [1, 3]),
+              _Job("other", [4]), _Job(None, [4])])
+    assert _task_time_ms(sc, {"q_r1", "q_r2"}) == 1070
