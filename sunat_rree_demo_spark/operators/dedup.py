@@ -44,7 +44,11 @@ def _minhash_params(k: int = MINHASH_K) -> list[tuple[int, int]]:
 
 
 def base_hash_py(s: str) -> int:
-    """Python golden twin of ``base_hash_col`` (tests)."""
+    """28-bit engine-independent hash of a string in Python: the leading
+    hex of sha-256, bit-equal to ``base_hash_col``. The one base hash of
+    every Arrow-batched pass here (rolling window keys, MinHash
+    signatures) and the golden twin the tests check the engine
+    against."""
     return int(hashlib.sha256(s.encode()).hexdigest()[:HASH_HEX_LEN], 16)
 
 
@@ -481,9 +485,8 @@ def rolling_window_keys(docs: DataFrame, id_col: str, text_col: str,
         for _pdf, toks in _doc_token_batches(batches, id_col, text_col, n):
             ids, kys = [], []
             for i, tk in toks:
-                h = np.fromiter(
-                    (int(hashlib.sha256(t.encode()).hexdigest()[:HASH_HEX_LEN], 16)
-                     for t in tk), dtype="int64", count=len(tk))
+                h = np.fromiter(map(base_hash_py, tk), dtype="int64",
+                                count=len(tk))
                 win = np.lib.stride_tricks.sliding_window_view(h, n)
                 ids.append(i)
                 kys.append(np.unique(win @ pw % ROLL_MOD))
@@ -537,10 +540,8 @@ def exact_substring_spans(docs: DataFrame, id_col: str, text_col: str,
         for _pdf, toks in _doc_token_batches(batches, id_col, text_col, n):
             ids, kys = [], []
             for i, tk in toks:
-                h = np.fromiter(
-                    (int(hashlib.sha256(t.encode())
-                         .hexdigest()[:HASH_HEX_LEN], 16)
-                     for t in tk), dtype="int64", count=len(tk))
+                h = np.fromiter(map(base_hash_py, tk), dtype="int64",
+                                count=len(tk))
                 win = np.lib.stride_tricks.sliding_window_view(h, n)
                 ids.append(i)
                 kys.append(win @ pw % ROLL_MOD)  # in order, NOT unique
@@ -794,9 +795,24 @@ def minhash_signatures(docs: DataFrame, id_col: str, text_col: str,
     (the earlier exploded-rows + k-MIN-aggregates form paid both).
     Numerically identical: int64 never overflows (a < 2^25, h < 2^28)
     and the golden test pins it to the pure-Python twin."""
-    import hashlib
-    import re
+    def shingle_sets(batches):
+        for _pdf, toks in _doc_token_batches(batches, id_col, text_col, n):
+            yield [(i, {" ".join(tk[j:j + n])
+                        for j in range(len(tk) - n + 1)})
+                   for i, tk in toks]
 
+    return _minhash_pass(fan_out(docs.select(id_col, text_col)), id_col,
+                         k, shingle_sets)
+
+
+def _minhash_pass(src: DataFrame, id_col: str, k: int,
+                  shingle_sets) -> DataFrame:
+    """The one MinHash signature kernel: ``shingle_sets(batches)``
+    yields, per Arrow batch of ``src``, a list of (id, non-empty
+    shingle collection); each doc's signature is the min over its
+    shingles' base hashes of the k affine permutations mod
+    ``MERSENNE_P``, one vectorized (k × n_shingles) step. Output is
+    (id, sig array<bigint>) at doc grain."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -810,26 +826,23 @@ def minhash_signatures(docs: DataFrame, id_col: str, text_col: str,
     # a handful of Column expressions instead of ~200 — measured 2.6s →
     # sub-second builder construction+analysis for q41 at any k
     out_schema = T.StructType([
-        T.StructField(id_col, docs.schema[id_col].dataType),
+        T.StructField(id_col, src.schema[id_col].dataType),
         T.StructField("sig", T.ArrayType(T.LongType())),
     ])
 
     def gen(batches):
-        for _pdf, toks in _doc_token_batches(batches, id_col, text_col, n):
+        for docs in shingle_sets(batches):
             ids: list = []
             sigs: list = []
-            for i, tk in toks:
-                sh = {" ".join(tk[j:j + n]) for j in range(len(tk) - n + 1)}
-                h = np.fromiter(
-                    (int(hashlib.sha256(s.encode()).hexdigest()[:HASH_HEX_LEN], 16)
-                     for s in sh), dtype="int64", count=len(sh))
+            for i, sh in docs:
+                h = np.fromiter(map(base_hash_py, sh), dtype="int64",
+                                count=len(sh))
                 sigs.append(((A * h[None, :] + B) % MERSENNE_P).min(axis=1))
                 ids.append(i)
             if ids:
                 yield pd.DataFrame({id_col: ids, "sig": sigs})
 
-    return fan_out(docs.select(id_col, text_col)).mapInPandas(
-        gen, schema=out_schema)
+    return src.mapInPandas(gen, schema=out_schema)
 
 
 def band_rows(sig: DataFrame, id_col: str, k: int = MINHASH_K,
@@ -853,6 +866,28 @@ def band_rows(sig: DataFrame, id_col: str, k: int = MINHASH_K,
     ).select(id_col, "bb.band", "bb.bucket")
 
 
+def _band_pairs(bands: DataFrame, id_col: str) -> DataFrame:
+    """Distinct (id1 < id2) pairs of docs sharing any (band, bucket) —
+    the one LSH band-collision self-join over (id, band, bucket) rows
+    (``band_rows`` output, or the persisted index's band table). The
+    join key is (band, bucket), so its shuffle volume is O(docs ×
+    bands) whatever the shingle skew; a table bucketed on that key
+    joins with no Exchange at all (q187)."""
+    a = bands.select("band", "bucket", F.col(id_col).alias("id1"))
+    b = bands.select("band", "bucket", F.col(id_col).alias("id2"))
+    return (a.join(b, ["band", "bucket"])
+            .filter(F.col("id1") < F.col("id2"))
+            .select("id1", "id2").distinct())
+
+
+def _sig_agreement(a, b):
+    """Σ [a_i = b_i] over two signature array columns — the number of
+    agreeing MinHash components, the Spark twin of the oracle's
+    ``queries.dedup.minhash_eq_sum()``."""
+    return F.aggregate(F.zip_with(a, b, lambda x, y: (x == y).cast("int")),
+                       F.lit(0), lambda acc, v: acc + v)
+
+
 def minhash_lsh_pairs(docs: DataFrame, id_col: str, text_col: str,
                       n: int = 5, k: int = MINHASH_K, bands: int = LSH_BANDS,
                       threshold: float = 0.3,
@@ -873,17 +908,7 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str, text_col: str,
            if arr is not None
            else minhash_signatures(docs, id_col, text_col, n, k)) \
         .localCheckpoint()
-    bb = band_rows(sig, id_col, k, bands)
-
-    a = bb.alias("a")
-    b = bb.alias("b")
-    cand = (
-        a.join(b, on=["band", "bucket"])
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(F.col(f"a.{id_col}").alias("id1"),
-                F.col(f"b.{id_col}").alias("id2"))
-        .distinct()
-    )
+    cand = _band_pairs(band_rows(sig, id_col, k, bands), id_col)
     return estimate_pairs(cand, sig, id_col, k, threshold)
 
 
@@ -901,8 +926,7 @@ def estimate_pairs(cand: DataFrame, sig: DataFrame, id_col: str,
     keep-hot-loops-in-numpy rule doesn't bite here."""
     s1 = sig.select(F.col(id_col).alias("id1"), F.col("sig").alias("a_sig"))
     s2 = sig.select(F.col(id_col).alias("id2"), F.col("sig").alias("b_sig"))
-    eq = F.zip_with("a_sig", "b_sig", lambda x, y: (x == y).cast("int"))
-    est = F.aggregate(eq, F.lit(0), lambda acc, v: acc + v) / float(k)
+    est = _sig_agreement("a_sig", "b_sig") / float(k)
     return (
         cand.join(s1, "id1").join(s2, "id2")
         .withColumn("jaccard_est", F.round(est, 4))
@@ -941,21 +965,13 @@ def minhash_containment_pairs(docs: DataFrame, id_col: str,
         arr = doc_shingle_arrays(docs, id_col, text_col, n) \
             .localCheckpoint()
     sig = _signatures_from_shingle_arrays(arr, id_col, k).localCheckpoint()
-    bb = band_rows(sig, id_col, k, bands)
-    cand = (
-        bb.alias("a").join(bb.alias("b"), ["band", "bucket"])
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(F.col(f"a.{id_col}").alias("id1"),
-                F.col(f"b.{id_col}").alias("id2"))
-        .distinct()
-    )
+    cand = _band_pairs(band_rows(sig, id_col, k, bands), id_col)
     s1 = sig.select(F.col(id_col).alias("id1"), F.col("sig").alias("a_sig"))
     s2 = sig.select(F.col(id_col).alias("id2"), F.col("sig").alias("b_sig"))
     sizes = arr.select(F.col(id_col), F.size("shingles").alias("_n"))
     sa = sizes.withColumnRenamed(id_col, "id1").withColumnRenamed("_n", "n1")
     sb = sizes.withColumnRenamed(id_col, "id2").withColumnRenamed("_n", "n2")
-    eqv = F.zip_with("a_sig", "b_sig", lambda x, y: (x == y).cast("int"))
-    eq = F.aggregate(eqv, F.lit(0), lambda acc, v: acc + v)
+    eq = _sig_agreement("a_sig", "b_sig")
     num = (eq * (F.col("n1") + F.col("n2"))).cast("bigint")
     den1 = ((eq + F.lit(k)) * F.col("n1")).cast("bigint")
     den2 = ((eq + F.lit(k)) * F.col("n2")).cast("bigint")
@@ -985,39 +1001,15 @@ def _signatures_from_shingle_arrays(arr: DataFrame, id_col: str,
     already materialized the arrays (the two-tier verify) derive
     signatures without re-running the regex shingler over the corpus.
     Pinned bit-equal to ``minhash_signatures`` by tests/test_dedup.py."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    params = _minhash_params(k)
-    A = np.array([a for a, _ in params], dtype="int64")[:, None]
-    B = np.array([b for _, b in params], dtype="int64")[:, None]
-    out_schema = T.StructType([
-        T.StructField(id_col, arr.schema[id_col].dataType),
-        T.StructField("sig", T.ArrayType(T.LongType())),
-    ])
-
-    def gen(batches):
+    def shingle_sets(batches):
         for pdf in batches:
-            ids: list = []
-            sigs: list = []
-            for i, sh in zip(pdf[id_col], pdf["shingles"]):
-                if not len(sh):
-                    continue
-                h = np.fromiter(
-                    (int(hashlib.sha256(s.encode()).hexdigest()[:HASH_HEX_LEN], 16)
-                     for s in sh), dtype="int64", count=len(sh))
-                sigs.append(((A * h[None, :] + B) % MERSENNE_P).min(axis=1))
-                ids.append(i)
-            if ids:
-                yield pd.DataFrame({id_col: ids, "sig": sigs})
+            yield [(i, sh) for i, sh in zip(pdf[id_col], pdf["shingles"])
+                   if len(sh)]
 
     # no fan_out here (r12, A/B'd — see pair_intersection_table):
     # repartitioning the shingle-array payload costs more than the
     # few-task Python pass it would parallelize (q41 1.21s -> 1.76s)
-    return arr.mapInPandas(gen, schema=out_schema)
+    return _minhash_pass(arr, id_col, k, shingle_sets)
 
 
 def lsh_candidate_pairs_from_arrays(arr: DataFrame, id_col: str,
@@ -1031,14 +1023,7 @@ def lsh_candidate_pairs_from_arrays(arr: DataFrame, id_col: str,
     stays per-call. Signatures and banding are per-doc properties, so
     the pair set is a pure function of (arr, k, bands)."""
     sig = _signatures_from_shingle_arrays(arr, id_col, k).localCheckpoint()
-    b = band_rows(sig, id_col, k, bands)
-    return (
-        b.alias("a").join(b.alias("b"), ["band", "bucket"])
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(F.col(f"a.{id_col}").alias("id1"),
-                F.col(f"b.{id_col}").alias("id2"))
-        .distinct()
-    )
+    return _band_pairs(band_rows(sig, id_col, k, bands), id_col)
 
 
 def verified_near_dup_pairs(docs: DataFrame, id_col: str, text_col: str,

@@ -38,8 +38,6 @@ joins; plain parquet keeps this module engine-portable.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
@@ -166,10 +164,17 @@ def write_minhash_index(docs: DataFrame, path: str, id_col: str = "doc_id",
     into several index builds (q185's even/odd shards) writes
     identical indexes to two independent passes at half the Python
     shingle/minhash cost."""
-    spark = docs.sparkSession
     if sig is None:
         sig = minhash_signatures(docs, id_col, text_col, n,
                                  k).localCheckpoint()
+    _write_generation(sig, path, batch_id, id_col, k, bands)
+
+
+def _write_generation(sig: DataFrame, path: str, batch_id: int,
+                      id_col: str, k: int, bands: int) -> None:
+    """Overwrite the WHOLE index (every partition of both tables) with
+    the one generation ``batch_id`` built from ``sig``: sigs first,
+    then the bands derived from them."""
     bnd = band_rows(sig, id_col, k, bands)
     for df, table in ((sig, "sigs"), (bnd, "bands")):
         retry_transient_write(
@@ -177,6 +182,31 @@ def write_minhash_index(docs: DataFrame, path: str, id_col: str = "doc_id",
             df.withColumn(BATCH_COL, F.lit(batch_id))
             .write.partitionBy(BATCH_COL).mode("overwrite")
             .parquet(f"{path}/{table}"))
+
+
+def _write_batch(spark: SparkSession, sig: DataFrame, path: str,
+                 batch_id: int, id_col: str, k: int, bands: int) -> None:
+    """Overwrite batch ``batch_id``'s partition of both tables from
+    ``sig`` — the one place the index's commit order lives: clear the
+    bands marker, write ``sigs/batch_id=N``, then ``bands/batch_id=N``
+    last, whose ``_SUCCESS`` commits the batch (``batch_committed``)."""
+    # One file per partition (r12, guide §6): a batch's signature frame
+    # inherits the shuffle partition count, and absorb used to write
+    # 32 ~4.5 KB files PER BATCH PER TABLE, so after k batches every
+    # probe paid 2k×32 footer reads + listings (measured: the dedup
+    # stream's probe stage was 3× its siblings at sf0.1). One file per
+    # batch partition is the right layout at any realistic micro-batch
+    # size (≈ batch×k longs ≪ the 128 MB-1 GB/file target). coalesce
+    # keeps the replay contract: same batch content → same rewritten
+    # files.
+    clear_commit_marker(spark, f"{path}/bands/{BATCH_COL}={batch_id}")
+    retry_transient_write(
+        lambda: sig.coalesce(1).write.mode("overwrite").parquet(
+            f"{path}/sigs/{BATCH_COL}={batch_id}"))
+    retry_transient_write(
+        lambda: band_rows(sig, id_col, k, bands)
+        .coalesce(1).write.mode("overwrite").parquet(
+            f"{path}/bands/{BATCH_COL}={batch_id}"))
 
 
 def absorb_batch(docs: DataFrame, path: str, batch_id: int,
@@ -196,30 +226,10 @@ def absorb_batch(docs: DataFrame, path: str, batch_id: int,
     (``incremental_near_dup_pairs`` does) passes them via ``sig`` —
     the per-doc Python shingle/minhash pass is the dominant ingest
     cost and must not run twice per micro-batch."""
-    spark = docs.sparkSession
     if sig is None:
         sig = minhash_signatures(docs, id_col, text_col, n, k) \
             .localCheckpoint()
-    # Coalesced writes (r12, guide §6): a micro-batch is bounded by
-    # construction, but its signature frame inherits the shuffle
-    # partition count — absorb used to write 32 ~4.5 KB files PER
-    # BATCH PER TABLE, so after k batches every probe paid 2k×32
-    # footer reads + listings (measured: the dedup stream's probe
-    # stage was 3× its siblings at sf0.1). One file per batch
-    # partition is the right layout at any realistic micro-batch size
-    # (≈ batch×k longs ≪ the 128 MB-1 GB/file target); deployments
-    # ingesting giant batches raise SPARK_GRAFT_ABSORB_FILES.
-    # coalesce keeps the replay contract: same batch content → same
-    # rewritten files.
-    n_files = int(os.environ.get("SPARK_GRAFT_ABSORB_FILES", "1"))
-    clear_commit_marker(spark, f"{path}/bands/{BATCH_COL}={batch_id}")
-    retry_transient_write(
-        lambda: sig.coalesce(n_files).write.mode("overwrite").parquet(
-            f"{path}/sigs/{BATCH_COL}={batch_id}"))
-    retry_transient_write(
-        lambda: band_rows(sig, id_col, k, bands)
-        .coalesce(n_files).write.mode("overwrite").parquet(
-            f"{path}/bands/{BATCH_COL}={batch_id}"))
+    _write_batch(docs.sparkSession, sig, path, batch_id, id_col, k, bands)
 
 
 def append_minhash_index(docs: DataFrame, path: str, **kw) -> None:
@@ -263,13 +273,7 @@ def compact_minhash_index(spark: SparkSession, path: str,
     latest = (sigs.groupBy(id_col)
               .agg(F.max_by("sig", BATCH_COL).alias("sig"))
               .localCheckpoint())  # sever lineage from the files being replaced
-    for df, table in ((latest, "sigs"),
-                      (band_rows(latest, id_col, k, bands), "bands")):
-        retry_transient_write(
-            lambda df=df, table=table:
-            df.withColumn(BATCH_COL, F.lit(bid))
-            .write.partitionBy(BATCH_COL).mode("overwrite")
-            .parquet(f"{path}/{table}"))
+    _write_generation(latest, path, bid, id_col, k, bands)
 
 
 def write_bucketed_bands(spark: SparkSession, index_path: str,
@@ -406,14 +410,5 @@ def forget_ids(spark: SparkSession, path: str, ids: list,
         keep = (spark.read.parquet(f"{path}/sigs/{BATCH_COL}={bid}")
                 .join(F.broadcast(id_df), id_col, "left_anti")
                 .localCheckpoint())  # sever lineage from files replaced
-        clear_commit_marker(spark, f"{path}/bands/{BATCH_COL}={bid}")
-        retry_transient_write(
-            lambda keep=keep, bid=bid:
-            keep.write.mode("overwrite").parquet(
-                f"{path}/sigs/{BATCH_COL}={bid}"))
-        retry_transient_write(
-            lambda keep=keep, bid=bid:
-            band_rows(keep, id_col, k, bands)
-            .write.mode("overwrite").parquet(
-                f"{path}/bands/{BATCH_COL}={bid}"))
+        _write_batch(spark, keep, path, bid, id_col, k, bands)
     return touched

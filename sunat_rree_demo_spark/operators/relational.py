@@ -8,7 +8,7 @@ materialization (e.g. filter-after-load at ``app.py:187``).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def filter_not_total(df: DataFrame, month_col: str = "month") -> DataFrame:
@@ -16,13 +16,6 @@ def filter_not_total(df: DataFrame, month_col: str = "month") -> DataFrame:
     consumer of the ``trade`` tables applies (``metrics.py:26``,
     ``models/metrics.sql:27``, ``app.py:46``)."""
     return df.filter(F.col(month_col) != "Total")
-
-
-def flow_amount(flow_value: str, flow_col: str = "flow", amount_col: str = "usd") -> Column:
-    """F6 — conditional projection ``CASE WHEN flow=x THEN usd END``; the
-    deliberate NULL else-branch makes SUM skip the other flow
-    (``metrics.py:23-24``, ``models/metrics.sql:24-25``)."""
-    return F.when(F.col(flow_col) == flow_value, F.col(amount_col))
 
 
 def ensure_columns(df: DataFrame, cols: dict[str, object]) -> DataFrame:

@@ -133,28 +133,31 @@ def shingle_cte(src: str = "documents") -> str:
 
 _SHINGLE_CTE = shingle_cte()
 
+#: per-doc MinHash signature columns mh0..mh{k-1} over ``_SHINGLE_CTE``'s
+#: base hashes, generated from the operator's own (a, b) constants —
+#: the one oracle render of the signature every MinHash oracle reads
+_SIG_CTE = """
+    sig AS (
+      SELECT doc_id,
+             {cols}
+      FROM h GROUP BY doc_id
+    )""".format(cols=",\n             ".join(
+    f"min(({a} * bh + {b}) % {MERSENNE_P}) AS mh{i}"
+    for i, (a, b) in enumerate(_minhash_params())))
+
 
 def _minhash_cand_ctes() -> str:
     """The LSH candidate derivation (signatures → band buckets →
     collision pairs) as CTE text appended after ``_SHINGLE_CTE`` —
     shared by the q41 estimate oracle and the q71 exact-verify oracle
     so the candidate set cannot drift between them."""
-    params = _minhash_params()
-    sig_cols = ",\n             ".join(
-        f"min(({a} * bh + {b}) % {MERSENNE_P}) AS mh{i}"
-        for i, (a, b) in enumerate(params))
     rows_per_band = MINHASH_K // LSH_BANDS
     band_selects = "\n      UNION ALL\n      ".join(
         "SELECT doc_id, {b} AS band, concat_ws('_', {cols}) AS bucket FROM sig"
         .format(b=bi, cols=", ".join(
             f"mh{bi * rows_per_band + r}" for r in range(rows_per_band)))
         for bi in range(LSH_BANDS))
-    return f"""
-    sig AS (
-      SELECT doc_id,
-             {sig_cols}
-      FROM h GROUP BY doc_id
-    ),
+    return f"""{_SIG_CTE},
     bands AS (
       {band_selects}
     ),
@@ -609,11 +612,6 @@ def q149_simhash_pairs(spark, sf_dir):
 
 
 # --------------------------------------------------------------------- q151
-_MC_EQ = " + ".join(
-    f"CASE WHEN s1.mh{i} = s2.mh{i} THEN 1 ELSE 0 END"
-    for i in range(MINHASH_K))
-
-
 @register(
     "q151_minhash_containment",
     memoize=False,  # builder localCheckpoints signatures (eager-ish)
@@ -622,7 +620,7 @@ _MC_EQ = " + ".join(
     {_minhash_cand_ctes()}
     , sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
     est AS (
-      SELECT id1, id2, ({_MC_EQ}) AS eq, sa.n AS n1, sb.n AS n2
+      SELECT id1, id2, ({minhash_eq_sum()}) AS eq, sa.n AS n1, sb.n AS n2
       FROM cand
       JOIN sig s1 ON id1 = s1.doc_id
       JOIN sig s2 ON id2 = s2.doc_id
@@ -799,6 +797,23 @@ def q181_winnowing_fingerprints(spark, sf_dir):
 
 
 # --------------------------------------------------------------------- q185
+def _index_scratch(spark, sf_dir: str, prefix: str) -> tuple[str, str]:
+    """(root, sfx) for a session's on-disk index build: reaps the dead
+    sessions' ``xband_`` tables, makes a fresh temp root named
+    ``prefix…``, and returns the sanitized ``<sf>_<app id>`` suffix
+    that keeps this session's bucketed band table names its own."""
+    import re
+    import tempfile
+
+    from sunat_rree_demo_spark.sources.sinks import drop_stale_app_tables
+
+    drop_stale_app_tables(spark, "xband_")
+    root = tempfile.mkdtemp(prefix=prefix)
+    return root, re.sub(
+        r"\W", "_",
+        f"{sf_dir.rstrip('/').rsplit('/', 1)[-1]}_{app_id(spark)}")
+
+
 @register(
     "q185_index_join_candidates",
     memoize=False,  # builder materializes two index generations (eager)
@@ -833,15 +848,7 @@ def q185_index_join_candidates(spark, sf_dir):
     )
 
     def build():
-        import re
-        import tempfile
-
-        from sunat_rree_demo_spark.sources.sinks import (
-            drop_stale_app_tables,
-        )
-
-        drop_stale_app_tables(spark, "xband_")
-        root = tempfile.mkdtemp(prefix="xshard_idx_")
+        root, sfx = _index_scratch(spark, sf_dir, "xshard_idx_")
         d = t(spark, sf_dir, "documents")
         # one checkpointed signature pass feeds both shard builds —
         # signatures are pure per-doc, so the two indexes are
@@ -857,8 +864,6 @@ def q185_index_join_candidates(spark, sf_dir):
                             sig=sig.filter("doc_id % 2 = 0"))
         write_minhash_index(d, f"{root}/odd",
                             sig=sig.filter("doc_id % 2 = 1"))
-        sfx = re.sub(r"\W", "_", f"{sf_dir.rstrip('/').rsplit('/', 1)[-1]}"
-                                 f"_{app_id(spark)}")
         cand = cross_index_candidates(
             spark, f"{root}/even", f"{root}/odd",
             f"xband_even_{sfx}", f"xband_odd_{sfx}")
@@ -913,33 +918,20 @@ def full_index_pairs(spark, sf_dir: str):
     semi-join on both endpoints) is IDENTICAL to running the banded
     pipeline over S alone — the algebraic fact the served funnel
     rests on."""
-    from sunat_rree_demo_spark.operators.dedup import estimate_pairs
+    from sunat_rree_demo_spark.operators.dedup import (
+        _band_pairs,
+        estimate_pairs,
+    )
     from sunat_rree_demo_spark.operators.dedup_index import (
         write_bucketed_bands,
         write_minhash_index,
     )
 
     def build():
-        import re
-        import tempfile
-
-        from sunat_rree_demo_spark.sources.sinks import (
-            drop_stale_app_tables,
-        )
-
-        drop_stale_app_tables(spark, "xband_")
-        root = tempfile.mkdtemp(prefix="full_idx_")
+        root, sfx = _index_scratch(spark, sf_dir, "full_idx_")
         write_minhash_index(t(spark, sf_dir, "documents"), root)
-        tn = "xband_all_" + re.sub(
-            r"\W", "_",
-            f"{sf_dir.rstrip('/').rsplit('/', 1)[-1]}_{app_id(spark)}")
-        write_bucketed_bands(spark, root, tn)
-        bands = spark.table(tn)
-        a = bands.select("band", "bucket", F.col("doc_id").alias("id1"))
-        b = bands.select("band", "bucket", F.col("doc_id").alias("id2"))
-        cand = (a.join(b, ["band", "bucket"])
-                .filter(F.col("id1") < F.col("id2"))
-                .select("id1", "id2").distinct())
+        write_bucketed_bands(spark, root, f"xband_all_{sfx}")
+        cand = _band_pairs(spark.table(f"xband_all_{sfx}"), "doc_id")
         sigs = spark.read.parquet(f"{root}/sigs").select("doc_id", "sig")
         return estimate_pairs(cand, sigs, "doc_id", threshold=0.3)
 
@@ -1036,10 +1028,6 @@ def _q203_oracle() -> str:
     """Generated from the operator's own (a, b) permutation constants
     and band layout, like ``_minhash_oracle_sql`` — one source of
     truth for signatures AND band geometry."""
-    params = _minhash_params()
-    sig_cols = ",\n             ".join(
-        f"min(({a} * bh + {b}) % {MERSENNE_P}) AS mh{i}"
-        for i, (a, b) in enumerate(params))
     r = MINHASH_K // LSH_BANDS
     eq_sum = minhash_eq_sum()
     band_sum = " + ".join(
@@ -1048,12 +1036,7 @@ def _q203_oracle() -> str:
         + " THEN 1 ELSE 0 END"
         for bi in range(LSH_BANDS))
     return f"""
-    WITH {_SHINGLE_CTE},
-    sig AS (
-      SELECT doc_id,
-             {sig_cols}
-      FROM h GROUP BY doc_id
-    ),
+    WITH {_SHINGLE_CTE},{_SIG_CTE},
     p AS (
       SELECT ({eq_sum}) AS eq, ({band_sum}) AS n_bands
       FROM sig s1 JOIN sig s2
@@ -1095,6 +1078,7 @@ def q203_lsh_band_scurve(spark, sf_dir):
     100 TB the same query runs on a SAMPLE of ids — the diagnostic
     needs a spectrum, not the corpus."""
     from sunat_rree_demo_spark.operators.dedup import (
+        _sig_agreement,
         _signatures_from_shingle_arrays,
     )
 
@@ -1114,9 +1098,7 @@ def q203_lsh_band_scurve(spark, sf_dir):
         .join(sig.select(F.col("doc_id").alias("id2"),
                          F.col("sig").alias("sig2")), "id2")
     )
-    eq = F.aggregate(
-        F.zip_with("sig1", "sig2", lambda x, y: (x == y).cast("int")),
-        F.lit(0), lambda acc, v: acc + v)
+    eq = _sig_agreement("sig1", "sig2")
     band_hit = [
         F.when(
             F.array_min(F.array(*[

@@ -1606,8 +1606,6 @@ def q229_tiff_lzw_stats(spark, sf_dir):
 #: cell is ONE character and the oracle's hash is adjacent-char
 #:  comparisons; five formats re-encode the same picture
 _DD_W, _DD_H = 9, 8
-_DD_FMTS = ("image/png", "image/jpeg", "image/gif", "image/bmp",
-            "image/tiff")
 
 
 @register(
@@ -2314,9 +2312,6 @@ def q236_gif_animation_stats(spark, sf_dir):
         F.col("frame_no").cast("bigint").alias("frame_no"),
         "fps", "width", "height", mean_col="mean_4dp",
     ).orderBy("doc_id", "frame_no")
-
-
-_GV_VARIANTS = ("avi", "gif")
 
 
 @register(

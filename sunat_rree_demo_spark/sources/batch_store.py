@@ -11,15 +11,19 @@ bloom/media, …), so every check here takes the marker directory
 explicitly. A rewrite of a committed partition clears the marker
 first (``clear_commit_marker``) and its write recreates it last.
 
-Readers use ``committed_batch_dirs``; repair and compaction passes use
-``all_batch_dirs``, which also returns torn batches so crash leftovers
-can be healed. ``drain`` is the one availableNow runner the stores'
-``run_*_stream`` functions share.
+Readers use ``read_committed`` (every committed batch as one frame,
+an empty store as an empty frame of the caller's schema) or, for the
+directories themselves, ``committed_batch_dirs``; repair and
+compaction passes use ``all_batch_dirs``, which also returns torn
+batches so crash leftovers can be healed. ``drain`` is the one
+availableNow runner the stores' ``run_*_stream`` functions share.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+
+from sunat_rree_demo_spark.localrel import local_df
 
 #: partition column of every store table. No leading underscore:
 #: Spark's file index treats ``_``-prefixed paths as hidden.
@@ -93,6 +97,18 @@ def committed_batch_dirs(spark: SparkSession, table_dir: str,
     torn batches are invisible."""
     return {bid: d for bid, d in all_batch_dirs(spark, table_dir).items()
             if marker_committed(spark, marker_dir, bid)}
+
+
+def read_committed(spark: SparkSession, table_dir: str, marker_dir: str,
+                   empty_schema) -> DataFrame:
+    """Every committed batch of ``table_dir`` (``committed_batch_dirs``)
+    read as one frame. A store with no committed batch yet reads as an
+    empty frame of ``empty_schema`` (a DDL string or StructType), so a
+    first micro-batch can probe a store nothing was written to."""
+    dirs = committed_batch_dirs(spark, table_dir, marker_dir)
+    if not dirs:
+        return local_df(spark, [], empty_schema)
+    return spark.read.parquet(*dirs.values())
 
 
 def drain(stream: DataFrame, handle, store_path: str, timeout: float,

@@ -60,6 +60,7 @@ from sunat_rree_demo_spark.sources.batch_store import (
     committed_batch_dirs,
     drain,
     marker_committed,
+    read_committed,
 )
 
 BLOOM_WORDS = 256                   #: m = 256·63 = 16128 bits
@@ -76,20 +77,14 @@ def _positions(dg_col):
 
 def current_bloom(spark: SparkSession, store_path: str) -> DataFrame:
     """(word, m): bit_or merge of every committed batch's masks."""
-    dirs = committed_batch_dirs(spark, f"{store_path}/bloom",
-                                f"{store_path}/kept")
-    if not dirs:
-        return local_df(spark, [], "word bigint, m bigint")
-    return (spark.read.parquet(*dirs.values())
+    return (read_committed(spark, f"{store_path}/bloom",
+                           f"{store_path}/kept", "word bigint, m bigint")
             .groupBy("word").agg(F.bit_or("m").alias("m")))
 
 
 def committed_digests(spark: SparkSession, store_path: str) -> DataFrame:
-    dirs = committed_batch_dirs(spark, f"{store_path}/digests",
-                                f"{store_path}/kept")
-    if not dirs:
-        return local_df(spark, [], "dg string")
-    return spark.read.parquet(*dirs.values()).select("dg")
+    return read_committed(spark, f"{store_path}/digests",
+                          f"{store_path}/kept", "dg string").select("dg")
 
 
 def process_bloom_batch(spark: SparkSession, batch_df: DataFrame,
@@ -174,21 +169,14 @@ def load_kept(spark: SparkSession, store_path: str,
               id_col: str = "doc_id") -> DataFrame:
     """(id, dg) of every kept row across committed batches."""
     kept = f"{store_path}/kept"
-    dirs = committed_batch_dirs(spark, kept, kept)
-    if not dirs:
-        return local_df(spark, [], f"dg string, {id_col} long")
-    return spark.read.parquet(*dirs.values())
+    return read_committed(spark, kept, kept, f"dg string, {id_col} long")
 
 
 def load_gate_stats(spark: SparkSession, store_path: str) -> DataFrame:
-    dirs = committed_batch_dirs(spark, f"{store_path}/stats",
-                                f"{store_path}/kept")
-    if not dirs:
-        return local_df(spark, 
-            [], "batch_id long, n_docs long, n_unique long, "
-                "n_definite_new long, n_maybe long, n_false_pos long, "
-                "n_kept long")
-    return spark.read.parquet(*dirs.values())
+    return read_committed(
+        spark, f"{store_path}/stats", f"{store_path}/kept",
+        "batch_id long, n_docs long, n_unique long, "
+        "n_definite_new long, n_maybe long, n_false_pos long, n_kept long")
 
 
 def compact_bloom_store(spark: SparkSession, store_path: str) -> None:

@@ -25,14 +25,12 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
-from sunat_rree_demo_spark.localrel import local_df
-
 from sunat_rree_demo_spark.operators.clustering import assign_under
 from sunat_rree_demo_spark.sources.batch_store import (
     BATCH_COL,
-    committed_batch_dirs,
     drain,
     marker_committed,
+    read_committed,
 )
 
 EMB_FILE_SCHEMA = "vec_id long, embedding array<float>, label int"
@@ -80,8 +78,5 @@ def load_assignments(spark: SparkSession, store_path: str,
     """All COMMITTED batches' assignments (torn partials invisible).
     ``id_col`` names the empty-store schema's id column."""
     assign = f"{store_path}/assign"
-    dirs = committed_batch_dirs(spark, assign, assign)
-    if not dirs:
-        return local_df(spark, 
-            [], f"{id_col} long, cluster int, d2 bigint")
-    return spark.read.parquet(*dirs.values())
+    return read_committed(spark, assign, assign,
+                          f"{id_col} long, cluster int, d2 bigint")

@@ -34,8 +34,8 @@ from sunat_rree_demo_spark.operators.text import tokens
 from sunat_rree_demo_spark.sources.batch_store import (
     BATCH_COL,
     clear_commit_marker,
-    committed_batch_dirs,
     marker_committed,
+    read_committed,
 )
 
 
@@ -83,10 +83,7 @@ def load_cms(spark: SparkSession, cms_path: str) -> DataFrame:
     path skips it — otherwise a torn partial could be summed in and a
     mid-stream probe would undercount, breaking the one-sided
     est ≥ exact guarantee."""
-    committed = committed_batch_dirs(spark, cms_path, cms_path)
-    if not committed:
-        return local_df(spark, [], _CMS_SCHEMA)
-    return (spark.read.parquet(*committed.values())
+    return (read_committed(spark, cms_path, cms_path, _CMS_SCHEMA)
             .groupBy("j", "bucket")
             .agg(F.sum("c").cast("bigint").alias("c")))
 

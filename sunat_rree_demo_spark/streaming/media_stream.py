@@ -71,9 +71,9 @@ from sunat_rree_demo_spark.plans.curate_media import route_media
 from sunat_rree_demo_spark.sources.batch_store import (
     BATCH_COL,
     clear_commit_marker,
-    committed_batch_dirs,
     drain,
     marker_committed,
+    read_committed,
 )
 
 
@@ -126,11 +126,9 @@ def perceptual_keys(batch_df: DataFrame,
 
 
 def committed_hashes(spark: SparkSession, store_path: str) -> DataFrame:
-    dirs = committed_batch_dirs(spark, f"{store_path}/hashes",
-                                f"{store_path}/kept")
-    if not dirs:
-        return local_df(spark, [], "dhash string")
-    return spark.read.parquet(*dirs.values()).select("dhash")
+    return read_committed(spark, f"{store_path}/hashes",
+                          f"{store_path}/kept", "dhash string") \
+        .select("dhash")
 
 
 def process_media_batch(spark: SparkSession, batch_df: DataFrame,
@@ -196,17 +194,11 @@ def load_kept(spark: SparkSession, store_path: str,
     """``id_col`` must match the one the batches were processed with —
     the empty-store fallback schema carries it (review finding r8)."""
     kept = f"{store_path}/kept"
-    dirs = committed_batch_dirs(spark, kept, kept)
-    if not dirs:
-        return local_df(spark, [], f"{id_col} long, dhash string")
-    return spark.read.parquet(*dirs.values())
+    return read_committed(spark, kept, kept, f"{id_col} long, dhash string")
 
 
 def load_gate_stats(spark: SparkSession, store_path: str) -> DataFrame:
-    dirs = committed_batch_dirs(spark, f"{store_path}/stats",
-                                f"{store_path}/kept")
-    if not dirs:
-        return local_df(spark, 
-            [], f"{BATCH_COL} long, n_media long, n_hashed long, "
-                "n_ungated long, n_kept long")
-    return spark.read.parquet(*dirs.values())
+    return read_committed(
+        spark, f"{store_path}/stats", f"{store_path}/kept",
+        f"{BATCH_COL} long, n_media long, n_hashed long, "
+        "n_ungated long, n_kept long")

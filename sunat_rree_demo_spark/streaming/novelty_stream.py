@@ -38,25 +38,20 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from sunat_rree_demo_spark.localrel import local_df
-
 from sunat_rree_demo_spark.operators.dedup import rolling_window_keys
 from sunat_rree_demo_spark.sources.batch_store import (
     BATCH_COL,
     clear_commit_marker,
-    committed_batch_dirs,
     drain,
     marker_committed,
+    read_committed,
 )
 
 
 def seen_keys(spark: SparkSession, store_path: str) -> DataFrame:
     """Every key in a COMMITTED batch (torn partials invisible)."""
     keys = f"{store_path}/keys"
-    dirs = committed_batch_dirs(spark, keys, keys)
-    if not dirs:
-        return local_df(spark, [], "key bigint")
-    return spark.read.parquet(*dirs.values()).select("key")
+    return read_committed(spark, keys, keys, "key bigint").select("key")
 
 
 def process_novelty_batch(spark: SparkSession, batch_df: DataFrame,
@@ -124,10 +119,7 @@ def load_novelty_stats(spark: SparkSession, store_path: str,
     """All committed batches' per-doc stats (q150 output shape).
     ``id_col`` must match the drain's — it names the empty-store
     schema's id column so the empty and non-empty paths agree."""
-    dirs = committed_batch_dirs(spark, f"{store_path}/stats",
-                                f"{store_path}/keys")
-    if not dirs:
-        return local_df(spark, 
-            [], f"{id_col} long, n_windows bigint, n_novel bigint, "
-                "novelty_frac double")
-    return spark.read.parquet(*dirs.values())
+    return read_committed(
+        spark, f"{store_path}/stats", f"{store_path}/keys",
+        f"{id_col} long, n_windows bigint, n_novel bigint, "
+        "novelty_frac double")

@@ -97,3 +97,49 @@ def test_replay_is_exactly_once(spark, tmp_path, docs_two_files):
     shutil.rmtree(f"{idx}/sigs/batch_id=1")
     process_batch(spark, halves[1], 1, idx, pairs_out)
     assert _state_snapshot(spark, idx, pairs_out) == clean
+
+
+def test_crash_between_sigs_and_bands_writes(spark, tmp_path,
+                                             docs_two_files, monkeypatch):
+    """A crash after an index batch's sigs write landed and before its
+    bands write leaves the batch uncommitted, and a replay restores the
+    clean state. The crash hits a re-absorb of the COMMITTED batch 1,
+    so the old bands ``_SUCCESS`` survives it unless the writer clears
+    the marker first, and a writer that put bands before sigs would
+    have committed before the crash."""
+    from sunat_rree_demo_spark.operators import dedup_index
+    from sunat_rree_demo_spark.sources.batch_store import all_batch_dirs
+    from sunat_rree_demo_spark.streaming.dedup_stream import process_batch
+
+    idx = str(tmp_path / "idx")
+    pairs_out = str(tmp_path / "pairs")
+    halves = [
+        spark.read.parquet(f"{docs_two_files}/part1.parquet"),
+        spark.read.parquet(f"{docs_two_files}/part2.parquet"),
+    ]
+    for bid, batch in enumerate(halves):
+        process_batch(spark, batch, bid, idx, pairs_out)
+    clean = _state_snapshot(spark, idx, pairs_out)
+
+    writes = []
+    real_write = dedup_index.retry_transient_write
+
+    def crash_on_second_write(write_fn, cleanup=None):
+        writes.append(write_fn)
+        if len(writes) == 2:
+            raise OSError("injected crash before the batch's last write")
+        real_write(write_fn, cleanup)
+
+    monkeypatch.setattr(dedup_index, "retry_transient_write",
+                        crash_on_second_write)
+    with pytest.raises(OSError, match="injected crash"):
+        dedup_index.absorb_batch(halves[1], idx, 1)
+    monkeypatch.undo()
+
+    assert len(writes) == 2
+    assert 1 in all_batch_dirs(spark, f"{idx}/sigs")
+    assert dedup_index.batch_committed(spark, idx, 1) is False
+
+    process_batch(spark, halves[1], 1, idx, pairs_out)
+    assert dedup_index.batch_committed(spark, idx, 1)
+    assert _state_snapshot(spark, idx, pairs_out) == clean

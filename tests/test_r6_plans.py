@@ -77,11 +77,12 @@ def test_q186_stats_survive_arbitrary_partitioning(spark):
 
 
 def test_q187_bucketed_self_join_no_exchange(spark, tmp_path):
-    """The full-corpus band table self-join (q187's candidate path)
-    plans bucket-aligned: no Exchange on either side even with
-    broadcast off."""
+    """The full-corpus band table self-join (q187's candidate path,
+    ``_band_pairs`` over the bucketed table) plans bucket-aligned: no
+    Exchange on either side even with broadcast off."""
     import shutil
 
+    from sunat_rree_demo_spark.operators.dedup import _band_pairs
     from sunat_rree_demo_spark.operators.dedup_index import (
         write_bucketed_bands,
         write_minhash_index,
@@ -98,12 +99,7 @@ def test_q187_bucketed_self_join_no_exchange(spark, tmp_path):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        bands = spark.table("xc_all")
-        a = bands.select("band", "bucket", F.col("doc_id").alias("id1"))
-        b = bands.select("band", "bucket", F.col("doc_id").alias("id2"))
-        cand = (a.join(b, ["band", "bucket"])
-                .filter(F.col("id1") < F.col("id2"))
-                .select("id1", "id2").distinct())
+        cand = _band_pairs(spark.table("xc_all"), "doc_id")
         plan = plan_of(cand)
         assert "Bucketed: true" in plan
         # the candidate JOIN must not shuffle on (band, bucket); the
