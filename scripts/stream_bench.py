@@ -7,7 +7,10 @@ replayable file source, exactly as the equivalence tests drive it.
     python scripts/stream_bench.py [sf_dir ...]    # default sf0.01 sf0.1
 
 Prints one markdown table (paste into SCALE.md) plus a JSON line per
-(sf, stream). Serialize with other gates — these share the box.
+(sf, stream). The dedup stream's line also carries its per-warm-batch
+driver cost: the median py4j round trips and Spark jobs of its batches
+after the first (SCALE.md "Streaming dedup: per warm batch"). Serialize
+with other gates — these share the box.
 """
 
 from __future__ import annotations
@@ -15,8 +18,10 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
 import sys
 import tempfile
+import threading
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -73,6 +78,40 @@ DOCS_DDL = ("doc_id long, text string, lang string, source string, "
             "n_chars long")
 
 
+def _count_batch_cost(cost: list) -> None:
+    """Count, per ``dedup_stream.process_batch`` call, the py4j round
+    trips made on the calling thread (py4j sends its object deletes
+    from a thread of its own) and the Spark jobs the batch started, as
+    (batch_id, round trips, jobs) rows appended to ``cost``."""
+    from py4j.clientserver import ClientServerConnection
+
+    from sunat_rree_demo_spark.streaming import dedup_stream
+
+    calls: dict[int, int] = {}
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        me = threading.get_ident()
+        calls[me] = calls.get(me, 0) + 1
+        return send(self, command)
+
+    ClientServerConnection.send_command = counting
+    process_batch = dedup_stream.process_batch
+
+    def counted(spark, batch_df, batch_id, *args, **kw):
+        sc, me = spark.sparkContext, threading.get_ident()
+        # the stream thread's job group: the query's run id
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        jobs0 = set(sc.statusTracker().getJobIdsForGroup(group))
+        c0 = calls.get(me, 0)
+        process_batch(spark, batch_df, batch_id, *args, **kw)
+        c1 = calls.get(me, 0)
+        jobs = set(sc.statusTracker().getJobIdsForGroup(group)) - jobs0
+        cost.append((batch_id, c1 - c0, len(jobs)))
+
+    dedup_stream.process_batch = counted
+
+
 def main() -> None:
     sf_dirs = sys.argv[1:] or ["/root/testdata/sf0.01",
                                "/root/testdata/sf0.1"]
@@ -91,6 +130,8 @@ def main() -> None:
     )
 
     spark = get_spark("stream-bench")
+    cost: list = []
+    _count_batch_cost(cost)
 
     # Session warmup (r12): the session's first foreachBatch pays
     # one-time JVM/codegen/Python-worker/AQE first-touch costs — the
@@ -140,6 +181,7 @@ def main() -> None:
         # absorb write — the r10 table argued (not measured) that the
         # 10x outlier rides the probe's index read, not state growth
         split: list = []
+        cost.clear()
         timed("dedup_minhash_index", n_docs, lambda: run_dedup_stream(
             spark, _file_stream(spark, docs_dir, DOCS_DDL),
             os.path.join(root, "dedup_idx"),
@@ -149,7 +191,11 @@ def main() -> None:
                 "sig_sec": round(sum(t[1] for t in split), 2),
                 "probe_sec": round(sum(t[2] for t in split), 2),
                 "absorb_sec": round(sum(t[3] for t in split), 2),
-                "by_batch": [list(t) for t in split]}})
+                "by_batch": [list(t) for t in split]},
+                "py4j_per_warm_batch": statistics.median(
+                    c for b, c, _ in cost if b > 0),
+                "jobs_per_warm_batch": statistics.median(
+                    j for b, _, j in cost if b > 0)})
         timed("bloom_exact_dedup", n_docs, lambda: run_bloom_dedup_stream(
             spark, _file_stream(spark, docs_dir, DOCS_DDL),
             os.path.join(root, "bloom_store"), timeout=1200))

@@ -845,25 +845,24 @@ def _minhash_pass(src: DataFrame, id_col: str, k: int,
     return src.mapInPandas(gen, schema=out_schema)
 
 
+def _band_sql(k: int = MINHASH_K, bands: int = LSH_BANDS) -> str:
+    """SQL generator over a ``sig`` column yielding one (band, bucket)
+    row per band: the bucket key is the band's signature slice joined
+    to a string. ``band_rows`` and the stream probe's SQL both embed
+    this one text."""
+    r = k // bands
+    return "inline(array({}))".format(", ".join(
+        f"struct({bi} AS band, concat_ws('_', CAST(slice(sig, "
+        f"{bi * r + 1}, {r}) AS array<string>)) AS bucket)"
+        for bi in range(bands)))
+
+
 def band_rows(sig: DataFrame, id_col: str, k: int = MINHASH_K,
               bands: int = LSH_BANDS) -> DataFrame:
-    """(id, band, bucket) rows from a signature frame: per band, the
-    bucket key is the band's signature slice joined to a string. The
-    (band, bucket) pair is the LSH join key — also the layout of the
-    persisted index (operators.dedup_index)."""
-    rows_per_band = k // bands
-    return sig.select(
-        F.col(id_col),
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(bi).alias("band"),
-                F.concat_ws("_", F.slice("sig", bi * rows_per_band + 1,
-                                         rows_per_band)
-                            .cast("array<string>")).alias("bucket"),
-            )
-            for bi in range(bands)
-        ])).alias("bb"),
-    ).select(id_col, "bb.band", "bb.bucket")
+    """(id, band, bucket) rows from a signature frame (``_band_sql``).
+    The (band, bucket) pair is the LSH join key — also the layout of
+    the persisted index (operators.dedup_index)."""
+    return sig.selectExpr(f"`{id_col}`", _band_sql(k, bands))
 
 
 def _band_pairs(bands: DataFrame, id_col: str) -> DataFrame:
@@ -880,12 +879,18 @@ def _band_pairs(bands: DataFrame, id_col: str) -> DataFrame:
             .select("id1", "id2").distinct())
 
 
-def _sig_agreement(a, b):
-    """Σ [a_i = b_i] over two signature array columns — the number of
-    agreeing MinHash components, the Spark twin of the oracle's
-    ``queries.dedup.minhash_eq_sum()``."""
-    return F.aggregate(F.zip_with(a, b, lambda x, y: (x == y).cast("int")),
-                       F.lit(0), lambda acc, v: acc + v)
+def _sig_agreement_sql(a: str, b: str) -> str:
+    """Σ [a_i = b_i] over two signature array columns, as SQL text —
+    the number of agreeing MinHash components and the ONE copy of the
+    Spark agreement count (``_sig_agreement`` wraps it; the estimate
+    SQL embeds it). Oracle twin: ``queries.dedup.minhash_eq_sum()``."""
+    return (f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x = y AS INT)), "
+            f"0, (acc, v) -> acc + v)")
+
+
+def _sig_agreement(a: str, b: str):
+    """``_sig_agreement_sql`` as a Column over two named columns."""
+    return F.expr(_sig_agreement_sql(a, b))
 
 
 def minhash_lsh_pairs(docs: DataFrame, id_col: str, text_col: str,
@@ -912,27 +917,38 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str, text_col: str,
     return estimate_pairs(cand, sig, id_col, k, threshold)
 
 
+def _estimate_sql(cand: str, sig: str, id_col: str, k: int,
+                  threshold: float) -> str:
+    """The estimate step as SQL text over a candidate (id1, id2)
+    relation ``cand`` and an (id, sig) relation ``sig``: the fraction
+    of agreeing components, rounded to 4dp, kept when ≥ threshold. The
+    divisor and threshold are DOUBLE literals (``32D``): a plain
+    ``32.0`` parses as DECIMAL and would turn the estimate into one."""
+    agree = _sig_agreement_sql("s1.sig", "s2.sig")
+    return f"""SELECT id1, id2, jaccard_est FROM (
+      SELECT c.id1, c.id2, round({agree} / {k}D, 4) AS jaccard_est
+      FROM {cand} c
+      JOIN {sig} s1 ON c.id1 = s1.`{id_col}`
+      JOIN {sig} s2 ON c.id2 = s2.`{id_col}`)
+    WHERE jaccard_est >= {float(threshold)!r}D"""
+
+
 def estimate_pairs(cand: DataFrame, sig: DataFrame, id_col: str,
                    k: int = MINHASH_K,
                    threshold: float = 0.3) -> DataFrame:
     """Estimated Jaccard for candidate (id1, id2) pairs from a
-    signature frame: fraction of equal components, rounded to 4dp,
-    filtered to ≥ threshold. Shared by the batch-global pipeline and
-    the incremental index (operators.dedup_index) so the two stay
-    estimate-identical by construction.
+    signature frame (``_estimate_sql``), as (id1, id2, jaccard_est).
+    Shared by the batch-global pipeline and the incremental index
+    (operators.dedup_index) so the two stay estimate-identical by
+    construction. One SQL text: the frames enter as temp views of
+    ``cand``'s session, so both must belong to it.
 
     Interpreted HOF, but only over the candidate pairs (bounded by the
     band collisions — hundreds of rows, never the corpus), so the
     keep-hot-loops-in-numpy rule doesn't bite here."""
-    s1 = sig.select(F.col(id_col).alias("id1"), F.col("sig").alias("a_sig"))
-    s2 = sig.select(F.col(id_col).alias("id2"), F.col("sig").alias("b_sig"))
-    est = _sig_agreement("a_sig", "b_sig") / float(k)
-    return (
-        cand.join(s1, "id1").join(s2, "id2")
-        .withColumn("jaccard_est", F.round(est, 4))
-        .filter(F.col("jaccard_est") >= threshold)
-        .select("id1", "id2", "jaccard_est")
-    )
+    return cand.sparkSession.sql(
+        _estimate_sql("{cand}", "{sig}", id_col, k, threshold),
+        cand=cand, sig=sig)
 
 
 def minhash_containment_pairs(docs: DataFrame, id_col: str,

@@ -28,9 +28,16 @@ until compaction the index carries one extra row per re-ingest, not
 wrong answers.
 
 Scale design: an ingest batch is small relative to the corpus, so the
-batch's band rows BROADCAST and the stored band table is probed by a
-map-side hash join — the corpus-side shuffle is zero. Estimates then
-join signatures for just the candidate ids (semi-join-sized reads).
+batch's band rows BROADCAST and the stored band table (plus the batch's
+own band rows, for new-vs-new pairs) is probed by ONE map-side hash
+join on (band, bucket) — the corpus-side shuffle is zero. Estimates
+then read signatures for just the candidate ids (a broadcast semi-join
+on the stored sigs) and resolve re-ingests latest-batch-wins at
+candidate scale. Each step is one SQL text with DataFrame arguments
+(``_probe_candidates``, ``_probe_estimates``), so a probe costs two
+parse/analyze round trips instead of hundreds of Column calls; the
+text runs on the batch signatures' own session (a stream's
+micro-batch session — its temp views live there).
 With the bucketed-table sink (plans/bucketed) the bands table can
 additionally be bucketed by ``bucket`` for shuffle-free index-vs-index
 joins; plain parquet keeps this module engine-portable.
@@ -39,14 +46,14 @@ joins; plain parquet keeps this module engine-portable.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql import types as T
 
 from sunat_rree_demo_spark.localrel import local_df
 from sunat_rree_demo_spark.operators.dedup import (
     LSH_BANDS,
     MINHASH_K,
+    _band_sql,
+    _estimate_sql,
     band_rows,
-    estimate_pairs,
     minhash_signatures,
 )
 from sunat_rree_demo_spark.sources.batch_store import (
@@ -58,9 +65,9 @@ from sunat_rree_demo_spark.sources.batch_store import (
 )
 
 
-def _with_batch_schema(schema: T.StructType) -> T.StructType:
-    return T.StructType(list(schema.fields)
-                        + [T.StructField(BATCH_COL, T.LongType())])
+#: batch id the probe gives the batch's own signatures: above every
+#: stored batch, so latest-batch-wins resolution keeps them.
+_NEWEST = 2**63 - 1
 
 
 def _read_or_empty(spark: SparkSession, path: str, schema) -> DataFrame:
@@ -296,6 +303,48 @@ def write_bucketed_bands(spark: SparkSession, index_path: str,
                          n_buckets)
 
 
+def _probe_candidates(new_sig: DataFrame, idx_bands: DataFrame,
+                      id_col: str, k: int, bands: int) -> DataFrame:
+    """Distinct candidate (id1 < id2) pairs touching the batch, as ONE
+    SQL text on the batch's session: the batch's band rows broadcast,
+    and the stored bands ∪ the batch's own band rows probe them on
+    (band, bucket) — new-vs-index and new-vs-new in one map-side join,
+    the corpus side never shuffled."""
+    band_sql = _band_sql(k, bands)
+    return new_sig.sparkSession.sql(f"""
+    SELECT /*+ BROADCAST(n) */ DISTINCT
+           least(b.`{id_col}`, n._nid) AS id1,
+           greatest(b.`{id_col}`, n._nid) AS id2
+    FROM (SELECT `{id_col}`, band, bucket FROM {{idx}}
+          UNION ALL
+          SELECT `{id_col}`, {band_sql} FROM {{sig}}) b
+    JOIN (SELECT `{id_col}` AS _nid, {band_sql} FROM {{sig}}) n
+      ON b.band = n.band AND b.bucket = n.bucket AND b.`{id_col}` != n._nid
+    """, sig=new_sig, idx=idx_bands)
+
+
+def _probe_estimates(cand: DataFrame, new_sig: DataFrame,
+                     idx_sigs: DataFrame, id_col: str, k: int,
+                     threshold: float) -> DataFrame:
+    """The estimate step of the probe, as ONE SQL text on the batch's
+    session: the stored and the batch's signatures are read only
+    through a broadcast semi-join on the candidate ids, then resolved
+    latest-batch-wins at candidate scale (``max_by`` over the batch id;
+    the batch's own signatures carry the largest id, so a re-ingested
+    doc's NEW signature wins) — the corpus table is never shuffled."""
+    return new_sig.sparkSession.sql(f"""
+    WITH ids AS (SELECT explode(array(id1, id2)) AS _id FROM {{cand}}),
+    latest AS (
+      SELECT /*+ BROADCAST(ids) */ v.`{id_col}`, max_by(v.sig, v._bid) AS sig
+      FROM (SELECT `{id_col}`, sig, {BATCH_COL} AS _bid FROM {{idx}}
+            UNION ALL
+            SELECT `{id_col}`, sig, {_NEWEST}L AS _bid FROM {{sig}}) v
+      LEFT SEMI JOIN ids ON v.`{id_col}` = ids._id
+      GROUP BY v.`{id_col}`)
+    """ + _estimate_sql("{cand}", "latest", id_col, k, threshold),
+        cand=cand, sig=new_sig, idx=idx_sigs)
+
+
 def incremental_near_dup_pairs(spark: SparkSession, new_docs: DataFrame,
                                path: str, id_col: str = "doc_id",
                                text_col: str = "text", n: int = 5,
@@ -307,55 +356,31 @@ def incremental_near_dup_pairs(spark: SparkSession, new_docs: DataFrame,
     batch-global ``minhash_lsh_pairs`` restricted to pairs with at
     least one new doc — pinned by tests/test_dedup_index.py.
     ``new_sig`` lets the caller share one checkpointed signature frame
-    between this probe and the subsequent ``absorb_batch``."""
+    between this probe and the subsequent ``absorb_batch``.
+
+    The candidate and estimate steps are each one SQL text whose frames
+    enter as temp views, so everything runs on the session the batch's
+    signatures belong to (in a stream that is the micro-batch's own
+    session, not ``spark``): the index reads, their empty fallback and
+    both queries."""
     if new_sig is None:
         new_sig = minhash_signatures(new_docs, id_col, text_col, n, k) \
             .localCheckpoint()
-    new_bands = band_rows(new_sig, id_col, k, bands)
-    idx_bands = _read_or_empty(spark, f"{path}/bands",
-                               _with_batch_schema(new_bands.schema))
-    idx_sigs = _read_or_empty(spark, f"{path}/sigs",
-                              _with_batch_schema(new_sig.schema))
-
-    # candidates sharing any (band, bucket): corpus side probes the
-    # broadcast batch; within-batch pairs from the tiny self-join.
+    bs = new_sig.sparkSession
+    id_type = new_sig.schema[id_col].dataType.simpleString()
+    idx_bands = _read_or_empty(
+        bs, f"{path}/bands",
+        f"`{id_col}` {id_type}, band int, bucket string, {BATCH_COL} long")
+    idx_sigs = _read_or_empty(
+        bs, f"{path}/sigs",
+        f"`{id_col}` {id_type}, sig array<bigint>, {BATCH_COL} long")
     # Eagerly checkpointed: cand feeds both the estimate join and the
-    # candidate-id restriction below, and an unmaterialized cand would
-    # probe the corpus-side band table once per plan branch. Candidate
-    # sets are band-collision-sized (tiny), so this is a cheap action.
-    nb = new_bands.select("band", "bucket", F.col(id_col).alias("_nid"))
-    cross = (
-        idx_bands.join(F.broadcast(nb), ["band", "bucket"])
-        .select(F.least(id_col, "_nid").alias("id1"),
-                F.greatest(id_col, "_nid").alias("id2"))
-    )
-    within = (
-        new_bands.alias("a")
-        .join(F.broadcast(new_bands.alias("b")), ["band", "bucket"])
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(F.col(f"a.{id_col}").alias("id1"),
-                F.col(f"b.{id_col}").alias("id2"))
-    )
-    cand = cross.union(within).filter("id1 != id2").distinct() \
+    # candidate-id semi-join, and an unmaterialized cand would probe the
+    # corpus-side band table once per plan branch. Candidate sets are
+    # band-collision-sized (tiny), so this is a cheap action.
+    cand = _probe_candidates(new_sig, idx_bands, id_col, k, bands) \
         .localCheckpoint()
-
-    # signatures for candidate ids only: semi-join the corpus table to
-    # the (broadcast) candidate ids FIRST, then resolve duplicates
-    # latest-batch-wins at candidate scale — a re-ingested doc id keeps
-    # its newest signature without ever shuffling the corpus table
-    cand_ids = (cand.select(F.col("id1").alias(id_col))
-                .union(cand.select(F.col("id2").alias(id_col)))
-                .distinct())
-    idx_needed = (
-        idx_sigs.join(F.broadcast(cand_ids), id_col, "left_semi")
-        .groupBy(id_col)
-        .agg(F.max_by("sig", BATCH_COL).alias("sig"))
-    )
-    # a doc id present in BOTH the index and the current batch
-    # (re-ingested edited doc): the NEW batch's signature wins
-    sigs = (idx_needed.join(new_sig.select(id_col), id_col, "left_anti")
-            .union(new_sig.select(id_col, "sig")))
-    return estimate_pairs(cand, sigs, id_col, k, threshold)
+    return _probe_estimates(cand, new_sig, idx_sigs, id_col, k, threshold)
 
 
 def cross_index_candidates(spark: SparkSession, path_a: str, path_b: str,

@@ -798,20 +798,22 @@ def q181_winnowing_fingerprints(spark, sf_dir):
 
 # --------------------------------------------------------------------- q185
 def _index_scratch(spark, sf_dir: str, prefix: str) -> tuple[str, str]:
-    """(root, sfx) for a session's on-disk index build: reaps the dead
-    sessions' ``xband_`` tables, makes a fresh temp root named
-    ``prefix…``, and returns the sanitized ``<sf>_<app id>`` suffix
-    that keeps this session's bucketed band table names its own."""
+    """(root, sfx) for a session's on-disk index build. ``sfx`` is the
+    sanitized ``<sf>_<app id>`` suffix that keeps this session's names
+    its own: the bucketed band tables ``xband_…_<sfx>`` and the index
+    root ``<warehouse>/<prefix><sfx>``. Both end in the app id, so the
+    warehouse janitor reaps a dead session's tables and roots, called
+    here before the build."""
     import re
-    import tempfile
 
     from sunat_rree_demo_spark.sources.sinks import drop_stale_app_tables
 
-    drop_stale_app_tables(spark, "xband_")
-    root = tempfile.mkdtemp(prefix=prefix)
-    return root, re.sub(
-        r"\W", "_",
-        f"{sf_dir.rstrip('/').rsplit('/', 1)[-1]}_{app_id(spark)}")
+    for stale in ("xband_", prefix):
+        drop_stale_app_tables(spark, stale)
+    sfx = re.sub(r"\W", "_",
+                 f"{sf_dir.rstrip('/').rsplit('/', 1)[-1]}_{app_id(spark)}")
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").rstrip("/")
+    return f"{warehouse}/{prefix}{sfx}", sfx
 
 
 @register(

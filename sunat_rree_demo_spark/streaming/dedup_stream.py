@@ -14,6 +14,14 @@ join against the stored band rows (no corpus shuffle — see
 dedup_index); state lives in the index parquet, not the state store,
 so it survives restarts and is queryable mid-stream.
 
+Per-batch driver cost: the probe is two SQL texts (candidates, then
+estimates) run on the micro-batch's own session — foreachBatch hands
+the handler a frame of the stream's session, and SQL with DataFrame
+arguments registers its temp views on the session it runs on. A warm
+batch stays within 300 py4j round trips and 12 Spark jobs (pinned by
+tests/test_dedup_stream_cost.py), and ``drain`` releases the batch's
+JVM objects when the handler returns (sources/batch_store).
+
 Exactly-once: foreachBatch redelivers a batch (with the SAME batch id)
 after a crash, so every write is keyed by that id and idempotent —
 pairs overwrite ``pairs_path/batch_id=N``, the index absorbs via

@@ -217,6 +217,39 @@ def test_warehouse_janitor_ttl(spark):
                 os.rmdir(d)
 
 
+def test_index_scratch_root_is_reaped_when_stale(spark):
+    """q185/q187 build their on-disk index under the warehouse, in a
+    root named ``<prefix><sf>_<app id>``: the warehouse janitor the
+    next build runs reaps a dead session's stale root and keeps the
+    current session's own."""
+    import os
+    import shutil
+    import time
+
+    from sunat_rree_demo_spark.queries.dedup import _index_scratch
+
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    stale = os.path.join(wh, "full_idx_sf0_001_local_1000000000000")
+    os.makedirs(os.path.join(stale, "sigs"), exist_ok=True)
+    old = time.time() - 48 * 3600
+    os.utime(stale, (old, old))
+
+    root, sfx = _index_scratch(spark, SF_SMOKE, "full_idx_")
+    own = root.removeprefix("file:")
+    assert os.path.dirname(own) == wh.rstrip("/")
+    assert os.path.basename(own) == f"full_idx_{sfx}"
+    made = not os.path.isdir(own)
+    os.makedirs(own, exist_ok=True)  # as the build writes it
+    try:
+        _index_scratch(spark, SF_SMOKE, "full_idx_")  # the next build
+        assert not os.path.exists(stale)
+        assert os.path.isdir(own)
+    finally:
+        shutil.rmtree(stale, ignore_errors=True)
+        if made:
+            shutil.rmtree(own, ignore_errors=True)
+
+
 def test_skyline_survives_multi_batch_candidates(spark):
     """Regression (r6 review): phase 2 must sweep the WHOLE candidate
     set — with >10k candidates Arrow splits the coalesced partition

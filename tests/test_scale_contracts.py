@@ -853,3 +853,149 @@ def test_global_windows_only_on_bounded_grains(spark):
     # the allowlist must not go stale: every pinned site still exists
     gone = sorted(set(bounded) - set(flagged))
     assert not gone, f"allowlisted sites no longer flagged (stale): {gone}"
+
+
+def _plan_tree(plan: str) -> list[tuple[int, str]]:
+    """(depth, node) for each line of a formatted plan's tree section
+    (of an executed adaptive plan, the final plan's); depth is the
+    column the node name starts at."""
+    import re
+
+    out = []
+    tree = plan.split("\n\n")[0].split("== Initial Plan ==")[0]
+    for ln in tree.splitlines():
+        m = re.match(r"^([\s:+\-*]*)(\w.*)$", ln)
+        if m and not ln.startswith("=="):
+            out.append((len(m.group(1)), m.group(2)))
+    return out
+
+
+def _ancestors(tree: list[tuple[int, str]], i: int) -> list[str]:
+    """Nodes on the path from tree line ``i`` up to the root, nearest
+    first."""
+    out, depth = [], tree[i][0]
+    for d, node in reversed(tree[:i]):
+        if d < depth:
+            out.append(node)
+            depth = d
+    return out
+
+
+def test_dedup_probe_one_broadcast_and_candidate_scale_sigs(
+        spark, tmp_path, monkeypatch):
+    """The streaming dedup probe (``incremental_near_dup_pairs``):
+    the candidate step broadcasts the batch's band rows ONCE, keyed on
+    (band, bucket), and the stored band table streams into that join
+    with no Exchange in between (its only shuffle is the DISTINCT at
+    candidate-pair grain); the estimate step reads the stored sigs only
+    through the broadcast candidate-id semi-join, so latest-batch-wins
+    resolution aggregates candidate-scale rows, never the corpus."""
+    import re
+
+    from sunat_rree_demo_spark.operators import dedup_index as di
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    idx = str(tmp_path / "idx")
+    di.write_minhash_index(docs.filter("doc_id % 5 != 0"), idx)
+
+    seen = {}
+    for step in ("_probe_candidates", "_probe_estimates"):
+        real = getattr(di, step)
+        monkeypatch.setattr(di, step, lambda *a, real=real, step=step:
+                            seen.setdefault(step, real(*a)))
+    di.incremental_near_dup_pairs(spark, docs.filter("doc_id % 5 = 0"),
+                                  idx)
+
+    cand = plan_of(seen["_probe_candidates"])
+    tree = _plan_tree(cand)
+    bx = [i for i, (_, n) in enumerate(tree)
+          if n.startswith("BroadcastExchange")]
+    assert len(bx) == 1, cand
+    up = [n for n in _ancestors(tree, bx[0])
+          if not n.startswith("BroadcastQueryStage")]
+    assert up[0].startswith("BroadcastHashJoin Inner"), cand
+    assert re.search(r"Left keys \[2\]: \[band#\d+, bucket#\d+\]", cand)
+    assert re.search(r"HashedRelationBroadcastMode\(List\(input\[\d+, "
+                     r"int, \w+\], input\[\d+, string, \w+\]\)", cand)
+    scans = [i for i, (_, n) in enumerate(tree)
+             if n.startswith("Scan parquet")]
+    assert len(scans) == 1 and f"{idx}/bands" in cand, cand
+    up = _ancestors(tree, scans[0])
+    join = next(k for k, n in enumerate(up) if "BroadcastHashJoin" in n)
+    assert not any("Exchange" in n for n in up[:join]), cand
+    shuffles = re.findall(r"Arguments: hashpartitioning\((\w+)#\d+L?, "
+                          r"(\w+)#", cand)
+    assert set(shuffles) == {("id1", "id2")}, cand
+
+    est = plan_of(seen["_probe_estimates"])
+    tree = _plan_tree(est)
+    scans = [i for i, (_, n) in enumerate(tree)
+             if n.startswith("Scan parquet")]
+    assert scans and f"{idx}/sigs" in est, est
+    for i in scans:
+        up = [n for n in _ancestors(tree, i)
+              if not n.startswith(("Filter", "ColumnarToRow", "Project"))]
+        assert up[0].startswith("BroadcastHashJoin LeftSemi"), est
+        assert any("Aggregate" in n for n in up[1:4]), est
+    assert "hashpartitioning(doc_id" in est  # latest-wins, candidate ids
+
+
+def test_drain_leaves_no_batch_proxies_in_cyclic_garbage(spark, tmp_path):
+    """``batch_store.drain`` releases each batch's py4j proxies when its
+    handler returns: a proxy pins its Dataset (and the broadcast
+    relations behind it) on the JVM side, and sits in a reference cycle
+    only Python's cyclic collector frees. Over a two-batch dedup drain
+    with automatic collection off, no JavaObject a handler created is
+    in cyclic garbage at the start of the next batch or after the
+    drain."""
+    import gc
+
+    import pyarrow.parquet as pq
+    from py4j.java_gateway import JavaObject
+
+    from sunat_rree_demo_spark.sources.batch_store import drain
+    from sunat_rree_demo_spark.streaming.dedup_stream import (
+        docs_file_stream,
+        process_batch,
+    )
+
+    src = tmp_path / "src"
+    src.mkdir()
+    tbl = pq.read_table(f"{SF_SMOKE}/documents.parquet")
+    half = tbl.num_rows // 2
+    pq.write_table(tbl.slice(0, half), src / "part1.parquet")
+    pq.write_table(tbl.slice(half), src / "part2.parquet")
+    idx, pairs = str(tmp_path / "idx"), str(tmp_path / "pairs")
+
+    made, left = set(), []  # py4j target ids: never reused
+
+    def in_cyclic_garbage():
+        gc.set_debug(gc.DEBUG_SAVEALL)
+        try:
+            gc.collect()
+            return [o._target_id for o in gc.garbage
+                    if isinstance(o, JavaObject) and o._target_id in made]
+        finally:
+            gc.set_debug(0)
+            gc.garbage.clear()
+
+    def handle(batch_df, batch_id):
+        left.extend(in_cyclic_garbage())
+        before = {o._target_id for o in gc.get_objects()
+                  if isinstance(o, JavaObject)}
+        process_batch(spark, batch_df, batch_id, idx, pairs)
+        made.update(o._target_id for o in gc.get_objects()
+                    if isinstance(o, JavaObject)
+                    and o._target_id not in before)
+
+    # no automatic collection: the release must not rely on one (a
+    # batch that makes few py4j calls allocates too little to trigger
+    # it), and the bookkeeping above must not run one either
+    gc.disable()
+    try:
+        drain(docs_file_stream(spark, str(src)), handle, idx, 300,
+              "release")
+        left.extend(in_cyclic_garbage())
+    finally:
+        gc.enable()
+    assert len(made) > 20 and not left, left
