@@ -3,16 +3,21 @@
 stops at pairs; a production dedup pipeline groups pairs into clusters
 and keeps one representative per cluster, cf. q61/q65).
 
-Algorithm: iterative min-label propagation. Every node starts labeled
-with itself; each round replaces a node's label with the minimum label
-in its closed neighborhood; convergence when no label changes. Rounds
-needed = the maximum component diameter. Near-dup graphs are
+Algorithm: iterative min-label propagation, the engine's one
+connected-components operator. Every node starts labeled with itself;
+each round replaces a node's label with the minimum label in its closed
+neighborhood; convergence when no label changes. Rounds needed = the
+maximum component diameter. Every caller feeds a near-dup pair graph
+(q61/q65/q68/q170, plans/curate, ``incremental_components``), which is
 star-or-clique-shaped (a handful of versions of one document), so the
-diameter is small and 2-4 rounds settle the labels; for genuinely
-high-diameter graphs (web link graphs) the alternating large-star /
-small-star scheme of Kiveris et al., "Connected Components in
-MapReduce and Beyond" (SoCC'14), converges in O(log² n) rounds with the
-same per-round join shape and would slot in here unchanged.
+diameter is small and 2-4 rounds settle the labels. At that size the
+per-job framework cost sets the time, not compute: the alternating
+large-star / small-star scheme of Kiveris et al., "Connected Components
+in MapReduce and Beyond" (SoCC'14), needs O(log² n) rounds on any shape
+but started 21 jobs per build-and-collect where this loop starts 14-16
+on the sf0.01/sf0.1 pair graphs (identical labels), so it was removed.
+A graph whose diameter exceeds ``max_rounds`` raises instead of
+returning split components.
 
 Scale design: each round is one shuffle — join labels to the symmetric
 edge list on the destination, min-aggregate per source, join back. The
@@ -69,6 +74,12 @@ def connected_components(edges: DataFrame, src: str = "id1",
         .agg(F.least(F.min("b"), F.min("a")).alias("comp"))
         .localCheckpoint()
     )
+    # Keep each round's reads of `labels` as they are. Catalyst's size
+    # estimate of the lazily checkpointed `labels` already grows ~19
+    # decimal digits per round (BigInteger products); one more `labels`
+    # join per round, e.g. a pointer-jumping shortcut for long paths,
+    # doubles the digit count every round instead and stalls planning
+    # for minutes (2,408 digits by round 6 on a 40-node path).
     for _ in range(max_rounds):
         nbr_min = (
             sym.join(labels.select(F.col("node").alias("b"),
@@ -92,137 +103,11 @@ def connected_components(edges: DataFrame, src: str = "id1",
         if changed == 0:
             return labels
     # no-silent-caps: unconverged labels are WRONG labels — fail loudly
-    # rather than hand back split components (raise max_rounds, or use
-    # connected_components_two_phase for diameter > max_rounds graphs)
+    # rather than hand back split components (raise max_rounds for
+    # graphs whose diameter exceeds it)
     raise RuntimeError(
         f"connected_components did not converge in {max_rounds} rounds "
         f"(component diameter exceeds max_rounds)")
-
-
-def _is_star_forest(E: DataFrame) -> bool:
-    """True iff the canonical edge list is a disjoint union of stars
-    rooted at their component minima — the EXACT fixed point of the
-    alternating large-star/small-star iteration (Kiveris et al.
-    SoCC'14, Thm 1): LS and SS both map a min-rooted star forest to
-    itself, and any non-star shape is changed by one of them.
-
-    Shape test, one aggregate job over the 2|E| adjacency rows: every
-    member (``b``) appears exactly once, and no node is both a root
-    (``a``) and a member (``b``) — chains and doubly-attached members
-    are the only canonical (a<b, distinct) violations. Canonical a<b
-    already makes each root the min of its star. Testing the shape
-    directly replaces the old fingerprint-equality rule, which could
-    only detect convergence one full (large-star + small-star) round
-    AFTER the fixed point was reached, plus an exceptAll confirmation —
-    this check stops the loop the moment the shape appears and doubles
-    as the structural precondition of the member/root extraction
-    below."""
-    adj = E.select(F.col("a").alias("node"),
-                   F.lit(1).alias("ia"), F.lit(0).alias("ib"))         .union(E.select(F.col("b").alias("node"),
-                        F.lit(0).alias("ia"), F.lit(1).alias("ib")))
-    row = (adj.groupBy("node")
-           .agg(F.max("ia").alias("ha"), F.max("ib").alias("hb"),
-                F.sum("ib").alias("nb"))
-           .agg(F.count_if((F.col("ha") + F.col("hb") == 2)
-                           | (F.col("nb") > 1)).alias("bad"))
-           .first())
-    return row["bad"] == 0
-
-
-def _canonical(df: DataFrame) -> DataFrame:
-    """Undirected edge canon: (a < b), no self-loops, distinct."""
-    return (df.select(F.least("a", "b").alias("a"),
-                      F.greatest("a", "b").alias("b"))
-            .filter(F.col("a") != F.col("b")).distinct())
-
-
-def _adj(E: DataFrame) -> DataFrame:
-    """Symmetric adjacency (u, v) of a canonical edge list."""
-    return E.select(F.col("a").alias("u"), F.col("b").alias("v")) \
-        .union(E.select(F.col("b").alias("u"), F.col("a").alias("v")))
-
-
-def _large_star(E: DataFrame) -> DataFrame:
-    """Connect every strictly-larger neighbor of each node to the min of
-    its closed neighborhood."""
-    adj = _adj(E)
-    m = (adj.groupBy("u")
-         .agg(F.least(F.min("v"), F.min("u")).alias("m")))
-    return _canonical(
-        adj.join(m, "u").filter(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("a"), F.col("m").alias("b")))
-
-
-def _small_star(E: DataFrame) -> DataFrame:
-    """Connect every smaller neighbor (and the node itself) to the min
-    of the node's smaller neighborhood."""
-    smaller = _adj(E).filter(F.col("v") < F.col("u"))
-    m = smaller.groupBy("u").agg(F.min("v").alias("m"))
-    member_edges = smaller.join(m, "u").select(
-        F.col("v").alias("a"), F.col("m").alias("b"))
-    self_edges = m.select(F.col("u").alias("a"), F.col("m").alias("b"))
-    return _canonical(member_edges.union(self_edges))
-
-
-def connected_components_two_phase(edges: DataFrame, src: str = "id1",
-                                   dst: str = "id2",
-                                   max_rounds: int = 100) -> DataFrame:
-    """Alternating large-star / small-star connected components
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — the high-diameter path: O(log² n) rounds regardless of
-    component shape, where min-label propagation above needs
-    O(diameter). Same output contract as ``connected_components``:
-    (node, comp = min node of the component), nodes drawn from the edge
-    list. Each phase is two shuffles (neighborhood min + emit); the
-    edge set is localCheckpointed per round so lineage stays flat."""
-    # one eager checkpoint of the raw edge projection: all_nodes and the
-    # canonical E both read from it, so the upstream edge plan (e.g. the
-    # near-dup pair pipeline) runs exactly once — the r3 form paid it
-    # twice (once per eager checkpoint)
-    raw = edges.select(F.col(src).alias("a"),
-                       F.col(dst).alias("b")).localCheckpoint()
-    # all_nodes is only read once, by the final singleton restore — a
-    # rescan of the tiny checkpointed raw frame, no checkpoint needed
-    all_nodes = (raw.select(F.col("a").alias("node"))
-                 .union(raw.select(F.col("b").alias("node")))
-                 .distinct())
-    E = _canonical(raw).localCheckpoint(eager=False)
-    for _ in range(max_rounds):
-        # transform FIRST, then test: LS/SS map a star forest to
-        # itself, so transforming an already-converged input is a
-        # cheap identity and testing before the first transform would
-        # cost one extra job on every real (non-star) input. The
-        # star-forest test is the convergence rule AND the first
-        # action through the round's lazy checkpoints, so transform,
-        # checkpoint materialization, and shape check ride one job
-        # per round. The large-star intermediate still checkpoints
-        # (persist + lineage cut: _small_star reads it from three plan
-        # branches, so an unpersisted LS would replicate its subtree
-        # into every round's lineage); lazy materialization means at
-        # worst a concurrently-scheduled stage recomputes an LS
-        # partition before the persist lands — bounded by the three
-        # in-job references, deterministic either way.
-        E = _small_star(_large_star(E).localCheckpoint(eager=False)) \
-            .localCheckpoint(eager=False)
-        if _is_star_forest(E):
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components_two_phase did not converge in "
-            f"{max_rounds} rounds")
-    # converged: every component is a star (root = min node); members
-    # appear as b with a = root, roots only as a. Nodes whose every
-    # edge was a self-loop vanished at canonicalization — restore them
-    # as singleton components (same output contract as
-    # connected_components, which keeps them).
-    members = E.select(F.col("b").alias("node"), F.col("a").alias("comp"))
-    linked = members.select("node").union(E.select(F.col("a").alias("node")))
-    singletons = (all_nodes.join(linked.distinct(), "node", "left_anti")
-                  .withColumn("comp", F.col("node")))
-    roots = (E.select(F.col("a").alias("node"))
-             .join(members.select("node"), "node", "left_anti")
-             .distinct().withColumn("comp", F.col("node")))
-    return members.union(roots).union(singletons)
 
 
 def label_propagation(edges: DataFrame, rounds: int = 3,
@@ -235,9 +120,9 @@ def label_propagation(edges: DataFrame, rounds: int = 3,
     textbook random-order variant, so the result is engine-checkable.
     Returns (node, label) after ``rounds`` synchronous updates.
 
-    Distinct from the connected-components family above: CC merges
-    anything reachable; LPA's frequency vote finds densely-connected
-    communities INSIDE a component and stops label creep at weak cuts.
+    Distinct from ``connected_components`` above: CC merges anything
+    reachable; LPA's frequency vote finds densely-connected communities
+    INSIDE a component and stops label creep at weak cuts.
 
     Scale shape: each round is one shuffle — edges join the previous
     labels on the neighbor id (labels-sized side, AQE broadcasts when
@@ -245,7 +130,9 @@ def label_propagation(edges: DataFrame, rounds: int = 3,
     combine and a per-node argmax window. The plan is lazily composed
     across rounds (no driver round-trips, no checkpoints needed at
     fixed small round counts — callers wanting convergence-driven
-    stopping should reuse the two-phase CC's lineage discipline)."""
+    stopping should reuse ``connected_components``' lineage discipline:
+    a lazy checkpoint per round, materialized by the convergence
+    count)."""
     if rounds < 0:
         raise ValueError("rounds must be >= 0")
     w = (F.col(weight_col) if weight_col

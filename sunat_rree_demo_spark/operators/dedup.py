@@ -462,14 +462,13 @@ def roll_powers(n: int) -> list[int]:
     return [pow(ROLL_BASE, n - 1 - i, ROLL_MOD) for i in range(n)]
 
 
-def rolling_window_keys(docs: DataFrame, id_col: str, text_col: str,
-                        n: int = 8) -> DataFrame:
-    """(id, key) — each doc's DISTINCT overlapping n-token window keys
-    under the Rabin–Karp polynomial hash (see ``rolling_chunk_stats``
-    for the hash contract; the DuckDB oracles of q143/q150 recompute
-    the keys from the same constants). One Arrow-batched Python pass;
-    the per-doc key set is computed as one int64 sliding-window dot
-    product (exact — see ROLL_MOD bound)."""
+def _window_key_arrays(docs: DataFrame, id_col: str, text_col: str,
+                       n: int) -> DataFrame:
+    """(id, keys array<bigint>) — each doc's overlapping n-token window
+    keys under the Rabin–Karp polynomial hash, IN ORDER (keys[j] is the
+    window starting at token j; repeats kept). The one Arrow-batched
+    key pass: per doc, one int64 sliding-window dot product (exact —
+    see ROLL_MOD bound). Docs with fewer than n tokens emit no row."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -489,13 +488,24 @@ def rolling_window_keys(docs: DataFrame, id_col: str, text_col: str,
                                 count=len(tk))
                 win = np.lib.stride_tricks.sliding_window_view(h, n)
                 ids.append(i)
-                kys.append(np.unique(win @ pw % ROLL_MOD))
+                kys.append(win @ pw % ROLL_MOD)
             if ids:
                 yield pd.DataFrame({id_col: ids, "keys": kys})
 
     return (fan_out(docs.select(id_col, text_col))
-            .mapInPandas(gen, schema=out_schema)
-            .select(F.col(id_col), F.explode("keys").alias("key")))
+            .mapInPandas(gen, schema=out_schema))
+
+
+def rolling_window_keys(docs: DataFrame, id_col: str, text_col: str,
+                        n: int = 8) -> DataFrame:
+    """(id, key) — each doc's DISTINCT overlapping n-token window keys
+    under the Rabin–Karp polynomial hash (see ``rolling_chunk_stats``
+    for the hash contract; the DuckDB oracles of q143/q150 recompute
+    the keys from the same constants): the ``_window_key_arrays`` pass,
+    de-duplicated per doc before the explode."""
+    return (_window_key_arrays(docs, id_col, text_col, n)
+            .select(F.col(id_col),
+                    F.explode(F.array_distinct("keys")).alias("key")))
 
 
 def exact_substring_spans(docs: DataFrame, id_col: str, text_col: str,
@@ -525,31 +535,7 @@ def exact_substring_spans(docs: DataFrame, id_col: str, text_col: str,
     window for the island grouping — bounded by doc length, the same
     two-shuffle budget as ``rolling_chunk_stats`` plus the doc-grain
     repartition every per-doc rewrite pays anyway."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    pw = np.array(roll_powers(n), dtype="int64")
-
-    out_schema = T.StructType([
-        T.StructField(id_col, docs.schema[id_col].dataType),
-        T.StructField("keys", T.ArrayType(T.LongType())),
-    ])
-
-    def gen(batches):
-        for _pdf, toks in _doc_token_batches(batches, id_col, text_col, n):
-            ids, kys = [], []
-            for i, tk in toks:
-                h = np.fromiter(map(base_hash_py, tk), dtype="int64",
-                                count=len(tk))
-                win = np.lib.stride_tricks.sliding_window_view(h, n)
-                ids.append(i)
-                kys.append(win @ pw % ROLL_MOD)  # in order, NOT unique
-            if ids:
-                yield pd.DataFrame({id_col: ids, "keys": kys})
-
-    ks = (fan_out(docs.select(id_col, text_col))
-          .mapInPandas(gen, schema=out_schema)
+    ks = (_window_key_arrays(docs, id_col, text_col, n)
           .select(F.col(id_col),
                   F.posexplode("keys").alias("j", "key")))
     occ = F.count("*").over(Window.partitionBy("key"))

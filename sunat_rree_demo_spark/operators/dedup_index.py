@@ -58,8 +58,8 @@ from sunat_rree_demo_spark.operators.dedup import (
 )
 from sunat_rree_demo_spark.sources.batch_store import (
     BATCH_COL,
+    _hadoop_fs,
     all_batch_dirs,
-    analysis_error_is,
     clear_commit_marker,
     marker_committed,
 )
@@ -72,17 +72,14 @@ _NEWEST = 2**63 - 1
 
 def _read_or_empty(spark: SparkSession, path: str, schema) -> DataFrame:
     """The not-yet-bootstrapped index reads as empty (first streaming
-    micro-batch probes before anything was ever appended). ONLY the
-    path-missing case falls back — a corrupt or unreadable existing
+    micro-batch probes before anything was ever appended). The path is
+    checked first, so a missing index is never handed to ``spark.read``
+    (whose miss logs a stack trace); a corrupt or unreadable existing
     index must fail loudly, not silently drop every cross-batch pair."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.schema(schema).parquet(path)
-    except AnalysisException as exc:
-        if analysis_error_is(exc, "PATH_NOT_FOUND"):
-            return spark.createDataFrame([], schema)
-        raise
+    fs, jpath = _hadoop_fs(spark, path)
+    if not fs.exists(jpath):
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(path)
 
 
 def batch_committed(spark: SparkSession, path: str, batch_id: int) -> bool:

@@ -107,10 +107,12 @@ class _ErrClassOnly(Exception):
 
 
 class _ReadFails:
-    """A session stand-in whose every parquet read raises ``exc``."""
+    """A session stand-in over a real ``SparkContext`` (for the path
+    check) whose every parquet read raises ``exc``."""
 
-    def __init__(self, exc):
+    def __init__(self, exc, sc):
         self.exc = exc
+        self.sparkContext = sc
         self.read = self
 
     def schema(self, _schema):
@@ -142,14 +144,23 @@ def test_analysis_error_is(exc, classes, expected):
     assert analysis_error_is(exc, *classes) is expected
 
 
-def test_read_or_empty_reraises_other_analysis_errors():
-    """A missing index reads as empty; any other analysis error, such
-    as a corrupt existing index, propagates."""
+def test_read_or_empty_missing_path_skips_read(spark, tmp_path):
+    """A missing index reads as empty without calling ``spark.read``,
+    whose miss would log a stack trace."""
     from sunat_rree_demo_spark.operators import dedup_index
 
-    missing = _Cond("Path does not exist", "PATH_NOT_FOUND")
-    assert dedup_index._read_or_empty(_ReadFails(missing), "/x", "s") \
-        == ("empty", [], "s")
+    never = _ReadFails(AssertionError("spark.read called"),
+                       spark.sparkContext)
+    assert dedup_index._read_or_empty(
+        never, str(tmp_path / "missing"), "s") == ("empty", [], "s")
+
+
+def test_read_or_empty_reraises_other_analysis_errors(spark, tmp_path):
+    """An existing index whose read fails, such as a corrupt one,
+    propagates the error."""
+    from sunat_rree_demo_spark.operators import dedup_index
+
     other = _Cond("corrupt footer", "FAILED_READ_FILE")
     with pytest.raises(_Cond, match="corrupt footer"):
-        dedup_index._read_or_empty(_ReadFails(other), "/x", "s")
+        dedup_index._read_or_empty(
+            _ReadFails(other, spark.sparkContext), str(tmp_path), "s")

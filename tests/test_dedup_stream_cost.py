@@ -10,8 +10,9 @@ import threading
 
 from tests.conftest import SF_SMOKE
 
-#: Measured here: 136 round trips and 11 jobs (sf0.001, two 250-document
-#: batches); perfbench's ~1,580-document batches give 135 and 11. The
+#: Measured here: 154 round trips and 11 jobs (sf0.001, two 250-document
+#: batches), 18 of the round trips the two index path checks; perfbench's
+#: ~1,580-document batches gave 135 and 11 before those checks. The
 #: candidate step and the estimate step are one SQL text each; the
 #: Column-at-a-time probe they replaced made 1,908 round trips here
 #: (~2,400 per perfbench batch with py4j's own object deletes) and 14

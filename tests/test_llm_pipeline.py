@@ -102,59 +102,47 @@ def _union_find_labels(edges):
             for v in touched}
 
 
+def _shuffled_path(rng, n):
+    """A path over a random permutation of 0..n-1: min-label needs up
+    to n-1 rounds, and ids do not grow along the path."""
+    ids = rng.sample(range(n), n)
+    return [tuple(sorted(e)) for e in zip(ids, ids[1:])]
+
+
+def _random_tree(rng, n):
+    """A random recursive tree over shuffled ids: node i attaches to a
+    random earlier node."""
+    ids = rng.sample(range(n), n)
+    return [tuple(sorted((ids[i], ids[rng.randrange(i)])))
+            for i in range(1, n)]
+
+
 def test_components_match_union_find_on_random_graphs(spark):
-    """Cross-check BOTH algorithms (min-label propagation and
-    large-star/small-star) against a pure-Python union-find on seeded
-    random graphs."""
+    """Cross-check min-label propagation against a pure-Python
+    union-find on seeded random graphs, shuffled-id paths and random
+    trees: the shapes where the loop needs the most rounds."""
     import random
 
-    from sunat_rree_demo_spark.operators.components import (
-        connected_components_two_phase,
-    )
-
+    graphs = []
     for seed, n_nodes, n_edges in [(7, 20, 12), (11, 30, 25), (13, 12, 6)]:
         rng = random.Random(seed)
-        edges = sorted({tuple(sorted(rng.sample(range(n_nodes), 2)))
-                        for _ in range(n_edges)})
-        want = _union_find_labels(edges)
-        assert _components(spark, edges) == want, f"seed={seed}"
-        df = spark.createDataFrame([Row(id1=a, id2=b) for a, b in edges])
-        got2 = {r.node: r.comp
-                for r in connected_components_two_phase(df).collect()}
-        assert got2 == want, f"two-phase seed={seed}"
+        graphs.append((f"random seed={seed}", sorted(
+            {tuple(sorted(rng.sample(range(n_nodes), 2)))
+             for _ in range(n_edges)})))
+    for seed, n in [(17, 12), (19, 16)]:
+        graphs.append((f"path seed={seed}",
+                       _shuffled_path(random.Random(seed), n)))
+    for seed, n in [(23, 15), (29, 25)]:
+        graphs.append((f"tree seed={seed}",
+                       _random_tree(random.Random(seed), n)))
+    for name, edges in graphs:
+        assert _components(spark, edges) == _union_find_labels(edges), name
 
 
-def test_two_phase_keeps_self_loop_only_nodes(spark):
-    """Contract parity with connected_components: a node whose only
-    edge is a self-pair stays in the output as its own singleton."""
-    from sunat_rree_demo_spark.operators.components import (
-        connected_components,
-        connected_components_two_phase,
-    )
-
-    df = spark.createDataFrame(
-        [Row(id1=5, id2=5), Row(id1=1, id2=2)])
-    want = {1: 1, 2: 1, 5: 5}
-    assert {r.node: r.comp
-            for r in connected_components(df).collect()} == want
-    assert {r.node: r.comp
-            for r in connected_components_two_phase(df).collect()} == want
-
-
-def test_two_phase_converges_on_long_path(spark):
-    """A 120-node path (diameter 119): large-star/small-star must
-    converge in far fewer rounds than the diameter — the O(log² n)
-    contract that makes it the high-diameter path."""
-    from sunat_rree_demo_spark.operators.components import (
-        connected_components_two_phase,
-    )
-
-    edges = [(i, i + 1) for i in range(119)]
-    df = spark.createDataFrame([Row(id1=a, id2=b) for a, b in edges])
-    got = {r.node: r.comp
-           for r in connected_components_two_phase(df, max_rounds=15)
-           .collect()}
-    assert got == {i: 0 for i in range(120)}
+def test_components_keep_self_loop_only_nodes(spark):
+    """A node whose only edge is a self-pair stays in the output as its
+    own singleton."""
+    assert _components(spark, [(5, 5), (1, 2)]) == {1: 1, 2: 1, 5: 5}
 
 
 def test_pack_sequences_chunks_are_exact_cover(spark):

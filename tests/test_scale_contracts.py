@@ -147,8 +147,7 @@ def test_bucketed_join_is_shuffle_free(spark):
 _EAGER_BUILDERS = {
     "q40_ngram_jaccard_pairs", "q41_minhash_lsh_pairs",
     "q43_cosine_topk", "q54_ann_ivf_topk",
-    # iterative label propagation / star contraction: per-round
-    # convergence counts
+    # iterative min-label propagation: per-round convergence counts
     "q61_dup_clusters", "q65_cluster_representatives",
     "q68_dup_clusters_two_phase",
     # r4: recall joins the brute-force side (bounded query-batch fetch,
