@@ -260,3 +260,45 @@ def test_slow_slideshow_delay_clamps_to_one_fps():
     assert gif_anim_meta(g)[2] == 1
     # and extract_video_meta survives it end to end
     assert gif_anim_meta(g)[3] * 1000 // gif_anim_meta(g)[2] == 2000
+
+
+#: a 2x2 R/G/B/K image as decode_gif_pixels returns it
+_RGBK = (2, 2, 3, bytes([255, 0, 0, 0, 255, 0, 0, 0, 255, 0, 0, 0]))
+
+
+@pytest.mark.parametrize("payload, pixels, frames_error, meta", [
+    # truncated extension header before any image
+    (_HDR + b"\x21", None, "truncated GIF extension", (2, 2, 10, 0)),
+    # truncated extension header after the first image
+    (_HDR + _img(0, 0, 2, 2, [1, 2, 3, 0]) + b"\x21", _RGBK,
+     "truncated GIF extension", (2, 2, 10, 1)),
+    # truncated extension sub-block after the first image
+    (_HDR + _img(0, 0, 2, 2, [1, 2, 3, 0]) + b"\x21\xfe\x05ab", _RGBK,
+     "truncated GIF data sub-block", (2, 2, 10, 1)),
+    # zero logical screen
+    (b"GIF89a" + struct.pack("<HHBBB", 0, 0, 0x81, 0, 0) + _PAL
+     + _img(0, 0, 2, 2, [1, 2, 3, 0]) + b"\x3b", _RGBK,
+     "empty GIF logical screen", (0, 0, 10, 1)),
+    # frame rectangle outside the logical screen
+    (_HDR + _img(1, 1, 2, 2, [1, 2, 3, 0]) + b"\x3b", _RGBK,
+     "outside logical screen", (2, 2, 10, 1)),
+    # graphic control block shorter than its 4 fields
+    (_HDR + b"\x21\xf9\x02\x00\x00\x00" + _img(0, 0, 2, 2, [1, 2, 3, 0])
+     + b"\x3b", _RGBK, "short GIF graphic control", (2, 2, 10, 1)),
+])
+def test_where_the_gif_walkers_disagree(payload, pixels, frames_error,
+                                        meta):
+    """The checks only one GIF reader makes stay with that reader:
+    decode_gif_frames rejects each of these, decode_gif_pixels returns
+    the first image when it comes before the fault (else ValueError),
+    and gif_anim_meta counts what it can hop over."""
+    from sunat_rree_demo_spark.operators.multimodal import gif_anim_meta
+
+    if pixels is None:
+        with pytest.raises(ValueError):
+            decode_gif_pixels(payload)
+    else:
+        assert decode_gif_pixels(payload) == pixels
+    with pytest.raises(ValueError, match=frames_error):
+        decode_gif_frames(payload)
+    assert gif_anim_meta(payload) == meta
