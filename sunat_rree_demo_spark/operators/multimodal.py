@@ -195,7 +195,7 @@ def _decode_bmff_audio_meta(payload: bytes) \
     ``decode_video_meta``): the first ``trak`` whose ``minf`` carries
     an ``smhd`` (the sound-media header that marks an audio track,
     ISO/IEC 14496-12 §8.4.5.3) answers from its ``mdhd``
-    (timescale u32 + duration u32/u64, version-dependent — §8.4.2)
+    (timescale and duration — ``_bmff_timing``)
     and the first ``stsd`` SoundDescription's v0 fixed fields
     (channelcount u16, samplesize u16 at entry offset 24 — §12.2.3).
     Returns (sample_rate, n_channels, bits_per_sample, duration_ms)
@@ -216,20 +216,10 @@ def _decode_bmff_audio_meta(payload: bytes) \
                 if mtyp != b"mdia":
                     continue
                 for dtyp, d0, d1 in _iter_boxes(payload, m0, m1):
-                    if dtyp == b"mdhd" and d1 - d0 >= 20:
-                        version = payload[d0]
-                        if version == 1:
-                            if d1 - d0 < 32:
-                                continue
-                            mdhd_ts = int.from_bytes(
-                                payload[d0 + 20:d0 + 24], "big")
-                            mdhd_dur = int.from_bytes(
-                                payload[d0 + 24:d0 + 32], "big")
-                        else:
-                            mdhd_ts = int.from_bytes(
-                                payload[d0 + 12:d0 + 16], "big")
-                            mdhd_dur = int.from_bytes(
-                                payload[d0 + 16:d0 + 20], "big")
+                    if dtyp == b"mdhd":
+                        ts, dur = _bmff_timing(payload, d0, d1)
+                        if dur is not None:
+                            mdhd_ts, mdhd_dur = ts, dur
                     elif dtyp == b"minf":
                         for ntyp, n0, n1 in _iter_boxes(payload, d0, d1):
                             if ntyp == b"smhd":
@@ -265,29 +255,65 @@ def decode_audio_meta(payload: bytes) \
     (STREAMINFO — see ``_decode_flac_streaminfo``). Returns
     (sample_rate, n_channels, bits_per_sample, duration_ms), or None
     for other codecs — callers treat those as opaque."""
+    wav = _wav_chunks(payload)
+    if wav is None:
+        if _is_bmff(payload):
+            return _decode_bmff_audio_meta(payload)
+        return _decode_flac_streaminfo(payload)
+    _tag, channels, rate, block_align, bits, _spb, _fact, _at, data_len \
+        = wav
+    # the DECLARED data length: a header-only probe still has a duration
+    if not rate or not channels or data_len is None or not block_align:
+        return None
+    n_frames = data_len // block_align
+    return (rate, channels, bits or 0, n_frames * 1000 // rate)
+
+
+def _wav_chunks(payload: bytes):
+    """The one RIFF/WAVE chunk walk (WAVE spec: RIFF registration,
+    multimedia programming interface §4): (format tag, channels, rate,
+    block_align, bits, samples per block, fact body, data offset,
+    declared data length) from the ``fmt `` (and its extension),
+    ``fact`` and ``data`` chunks, the last of each winning; a field is
+    None when its chunk is absent. None for non-WAVE payloads; never
+    raises."""
     import struct
 
     if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        if len(payload) >= 16 and payload[4:8] in (
-                b"ftyp", b"moov", b"mdat", b"free", b"wide"):
-            return _decode_bmff_audio_meta(payload)
-        return _decode_flac_streaminfo(payload)
-    rate = channels = bits = block_align = None
-    data_len = None
+        return None
+    tag = rate = channels = bits = block_align = spb = None
+    fact = data_at = data_len = None
     i = 12
     while i + 8 <= len(payload):
         cid = payload[i:i + 4]
         (clen,) = struct.unpack("<I", payload[i + 4:i + 8])
         if cid == b"fmt " and clen >= 16 and i + 24 <= len(payload):
-            channels, rate = struct.unpack("<HI", payload[i + 10:i + 16])
+            tag, channels, rate = struct.unpack(
+                "<HHI", payload[i + 8:i + 16])
             block_align, bits = struct.unpack("<HH", payload[i + 20:i + 24])
+            if clen >= 20 and i + 28 <= len(payload):
+                (spb,) = struct.unpack("<H", payload[i + 26:i + 28])
+        elif cid == b"fact" and clen >= 4:
+            fact = payload[i + 8:i + 12]
         elif cid == b"data":
-            data_len = clen
+            data_at, data_len = i + 8, clen
         i += 8 + clen + (clen & 1)  # chunks are word-aligned
-    if not rate or not channels or data_len is None or not block_align:
-        return None
-    n_frames = data_len // block_align
-    return (rate, channels, bits or 0, n_frames * 1000 // rate)
+    return (tag, channels, rate, block_align, bits, spb, fact, data_at,
+            data_len)
+
+
+def _wav_riff(fmt: bytes, data: bytes, fact: int | None = None) -> bytes:
+    """The one RIFF/WAVE writer: the ``fmt `` chunk, an optional
+    ``fact`` chunk holding the total sample count, and the ``data``
+    chunk with its odd-length pad byte outside the declared length."""
+    import struct
+
+    chunks = b"fmt " + struct.pack("<I", len(fmt)) + fmt
+    if fact is not None:
+        chunks += b"fact" + struct.pack("<II", 4, fact)
+    chunks += (b"data" + struct.pack("<I", len(data)) + data
+               + b"\x00" * (len(data) & 1))
+    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
 
 
 def extract_audio_meta(media: DataFrame) -> DataFrame:
@@ -296,24 +322,30 @@ def extract_audio_meta(media: DataFrame) -> DataFrame:
     (r11) ISO-BMFF moov walks all parse for real (stdlib, no sample
     decode); other codecs (mp3 — no libraries here) yield NULL
     metadata rather than fakes."""
+    return _meta_pass(media, decode_audio_meta, AUDIO_META_SCHEMA)
+
+
+def _meta_pass(media: DataFrame, decode, schema: T.StructType) -> DataFrame:
+    """The one metadata pass: an Arrow-batched mapInPandas writing
+    ``media_id``, ``byte_len`` and then, in ``schema`` order, the
+    fields of ``decode(content)`` — all NULL where it returns None."""
     import pandas as pd
+
+    fields = schema.names[2:]
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             meta = pdf["content"].map(
-                lambda b: decode_audio_meta(bytes(b)) if b is not None
-                else None)
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "byte_len": pdf["content"].map(
-                    lambda b: len(b) if b is not None else 0).astype("int64"),
-                "sample_rate": meta.map(lambda m: m[0] if m else None),
-                "n_channels": meta.map(lambda m: m[1] if m else None),
-                "bits_per_sample": meta.map(lambda m: m[2] if m else None),
-                "duration_ms": meta.map(lambda m: m[3] if m else None),
-            })
+                lambda b: decode(bytes(b)) if b is not None else None)
+            out = {"media_id": pdf["media_id"],
+                   "byte_len": pdf["content"].map(
+                       lambda b: len(b) if b is not None else 0
+                   ).astype("int64")}
+            for k, name in enumerate(fields):
+                out[name] = meta.map(lambda m, k=k: m[k] if m else None)
+            yield pd.DataFrame(out)
 
-    return media.mapInPandas(batches, schema=AUDIO_META_SCHEMA)
+    return media.mapInPandas(batches, schema=schema)
 
 
 VIDEO_META_SCHEMA = T.StructType([
@@ -348,6 +380,24 @@ def _iter_boxes(buf: bytes, start: int, end: int):
         i += size
 
 
+def _bmff_timing(payload: bytes, b0: int, b1: int) \
+        -> tuple[int | None, int | None]:
+    """(timescale, duration) of the mvhd or mdhd body ``payload[b0:b1]``
+    — the one version-dependent read (ISO/IEC 14496-12 §8.2.2,
+    §8.4.2): version 1 widens creation/modification time and duration
+    to u64, moving timescale from offset 12 to 20. Each field is None
+    when the box is too short to hold it, so a torn box never reads
+    past its end, and a v1 box is never read with the v0 offsets,
+    which hold half a timestamp."""
+    ts_at, dur_len = (20, 8) if b1 > b0 and payload[b0] == 1 else (12, 4)
+    dur_at = ts_at + 4
+    ts = (int.from_bytes(payload[b0 + ts_at:b0 + dur_at], "big")
+          if b1 - b0 >= dur_at else None)
+    dur = (int.from_bytes(payload[b0 + dur_at:b0 + dur_at + dur_len], "big")
+           if b1 - b0 >= dur_at + dur_len else None)
+    return ts, dur
+
+
 def decode_video_meta(payload: bytes) \
         -> tuple[int, int, int | None, int | None] | None:
     """REAL stdlib header parse for ISO-BMFF (MP4/MOV) video: walk the
@@ -357,29 +407,18 @@ def decode_video_meta(payload: bytes) \
     width/height (ISO/IEC 14496-12 §8.2.2, §8.3.2). Returns
     (duration_ms, timescale, width, height) or None for
     non-ISO-BMFF payloads."""
-    # sniff: first box must be a known top-level type with 'ftyp' usual
-    if len(payload) < 16 or payload[4:8] not in (b"ftyp", b"moov", b"mdat",
-                                                 b"free", b"wide"):
+    if not _is_bmff(payload):
         return None
     duration_ms = timescale = width = height = None
     for btype, b0, b1 in _iter_boxes(payload, 0, len(payload)):
         if btype != b"moov":
             continue
         for ityp, i0, i1 in _iter_boxes(payload, b0, b1):
-            if ityp == b"mvhd" and i1 - i0 >= 20:
-                version = payload[i0]
-                if version == 1:
-                    # v1 needs 32 body bytes (8-byte times + u64
-                    # duration); a truncated v1 box yields NULL — it
-                    # must neither read past the box end nor fall into
-                    # the v0 layout, whose offsets hold creation time
-                    if i1 - i0 < 32:
-                        continue
-                    timescale = int.from_bytes(payload[i0 + 20:i0 + 24], "big")
-                    dur = int.from_bytes(payload[i0 + 24:i0 + 32], "big")
-                else:
-                    timescale = int.from_bytes(payload[i0 + 12:i0 + 16], "big")
-                    dur = int.from_bytes(payload[i0 + 16:i0 + 20], "big")
+            if ityp == b"mvhd":
+                ts, dur = _bmff_timing(payload, i0, i1)
+                if dur is None:
+                    continue  # a torn box yields NULL, not a guess
+                timescale = ts
                 if timescale:
                     duration_ms = dur * 1000 // timescale
             elif ityp == b"trak" and width is None:
@@ -405,8 +444,6 @@ def extract_video_meta(media: DataFrame) -> DataFrame:
     never pay pixel decode; single-frame GIFs are images and yield
     NULL here); other containers yield NULL metadata rather than
     fakes."""
-    import pandas as pd
-
     def one(b: bytes):
         m = decode_video_meta(b)
         if m is not None:
@@ -424,22 +461,7 @@ def extract_video_meta(media: DataFrame) -> DataFrame:
         w, h, fps, frames = avi
         return (len(frames) * 1000 // fps, fps, w, h)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            meta = pdf["content"].map(
-                lambda b: one(bytes(b)) if b is not None
-                else None)
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "byte_len": pdf["content"].map(
-                    lambda b: len(b) if b is not None else 0).astype("int64"),
-                "duration_ms": meta.map(lambda m: m[0] if m else None),
-                "timescale": meta.map(lambda m: m[1] if m else None),
-                "width": meta.map(lambda m: m[2] if m else None),
-                "height": meta.map(lambda m: m[3] if m else None),
-            })
-
-    return media.mapInPandas(batches, schema=VIDEO_META_SCHEMA)
+    return _meta_pass(media, one, VIDEO_META_SCHEMA)
 
 
 def decode_media(media: DataFrame, real_codec: bool = False) -> DataFrame:
@@ -665,17 +687,13 @@ def encode_wav_ima_adpcm(codes: "np.ndarray", rate: int = 8000) -> bytes:
     fmt = struct.pack("<HHIIHHHH", 0x11, 1, rate,
                       rate * block_align // n_samples or 1,
                       block_align, 4, 2, n_samples)
-    body = (b"WAVE"
-            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"fact" + struct.pack("<II", 4, n_samples)
-            + b"data" + struct.pack("<I", len(block)) + block
-            + (b"\x00" if len(block) % 2 else b""))
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return _wav_riff(fmt, block, fact=n_samples)
 
 
 def _wav_pcm16_data(payload: bytes) -> tuple[int, int, bytes] | None:
     """(sample_rate, n_channels, PCM16-LE data bytes) for a RIFF/WAVE
-    payload, walking the chunk list like ``decode_audio_meta``.
+    payload, from the chunk walk ``decode_audio_meta`` shares
+    (``_wav_chunks``).
     Handles format tag 1 (16-bit linear PCM, returned as stored), the
     G.711 companded telephony codecs — tag 7 (μ-law) and tag 6
     (A-law), 8 bits per sample, expanded to linear int16 through the
@@ -688,29 +706,15 @@ def _wav_pcm16_data(payload: bytes) -> tuple[int, int, bytes] | None:
     callers treat those as opaque, the degrade path."""
     import struct
 
-    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
+    wav = _wav_chunks(payload)
+    if wav is None:
         return None
-    tag = rate = channels = bits = None
-    block_align = spb = fact_total = None
-    data = None
-    i = 12
-    while i + 8 <= len(payload):
-        cid = payload[i:i + 4]
-        (clen,) = struct.unpack("<I", payload[i + 4:i + 8])
-        if cid == b"fmt " and clen >= 16 and i + 24 <= len(payload):
-            tag, channels, rate = struct.unpack(
-                "<HHI", payload[i + 8:i + 16])
-            (block_align, bits) = struct.unpack(
-                "<HH", payload[i + 20:i + 24])
-            if clen >= 20 and i + 28 <= len(payload):
-                (spb,) = struct.unpack("<H", payload[i + 26:i + 28])
-        elif cid == b"fact" and clen >= 4:
-            (fact_total,) = struct.unpack("<I", payload[i + 8:i + 12])
-        elif cid == b"data":
-            data = payload[i + 8:i + 8 + clen]
-        i += 8 + clen + (clen & 1)
-    if not rate or not channels or data is None:
+    tag, channels, rate, block_align, bits, spb, fact, data_at, data_len \
+        = wav
+    fact_total = None if fact is None else struct.unpack("<I", fact)[0]
+    if not rate or not channels or data_at is None:
         return None
+    data = payload[data_at:data_at + data_len]
     if tag == 1 and bits == 16:
         return rate, channels, data
     if tag in (6, 7) and bits == 8:
@@ -1392,6 +1396,106 @@ def _gif_lzw_decode(data: bytes, min_code: int) -> bytes:
     raise ValueError("LZW stream ended without EOI")
 
 
+def _gif_interlace_rows(height: int) -> list[int]:
+    """Display rows in the order an interlaced image stores them:
+    stored row k is display row ``rows[k]``."""
+    return [r for start, step in _GIF_PASSES
+            for r in range(start, height, step)]
+
+
+def _gif_palette(payload: bytes, pos: int, flags: int, scope: str):
+    """(color table or None, position after it) for the table that
+    ``flags`` (a screen or image descriptor's packed byte) declares at
+    ``pos``; a torn table raises ValueError."""
+    if not flags & 0x80:
+        return None, pos
+    n = 3 * (2 << (flags & 0x07))
+    table = payload[pos:pos + n]
+    if len(table) != n:
+        raise ValueError(f"truncated GIF {scope} color table")
+    return table, pos + n
+
+
+def _gif_sub_blocks(payload: bytes, pos: int) -> tuple[list[bytes], int]:
+    """(chunks, position after the terminator) of the sub-block chain
+    at ``pos``; a torn sub-block raises ValueError."""
+    chunks = []
+    while pos < len(payload) and payload[pos]:
+        ln = payload[pos]
+        chunk = payload[pos + 1:pos + 1 + ln]
+        if len(chunk) != ln:
+            raise ValueError("truncated GIF data sub-block")
+        chunks.append(chunk)
+        pos += 1 + ln
+    return chunks, pos + 1
+
+
+def _gif_screen(payload: bytes):
+    """(width, height, background index, global palette or None,
+    position of the first block) from a GIF87a/89a header and logical
+    screen descriptor; None for non-GIF payloads."""
+    import struct
+
+    if len(payload) < 13 or payload[:6] not in (b"GIF87a", b"GIF89a"):
+        return None
+    w, h, packed, bg, _ar = struct.unpack("<HHBBB", payload[6:13])
+    gct, pos = _gif_palette(payload, 13, packed, "global")
+    return w, h, bg, gct, pos
+
+
+def _gif_blocks(payload: bytes, pos: int, gct: bytes | None):
+    """The one GIF block walker, from ``pos`` to the trailer: yields
+    ``(label, sub_blocks)`` per extension and ``(None, (left, top,
+    indexes, rgb))`` per image — ``indexes`` the (ih, iw) palette
+    indexes after LZW decode and interlace reorder, ``rgb`` the
+    (ih, iw, 3) expansion through the local palette, else ``gct``.
+    Bad block ids, torn tables, sub-blocks or descriptors, an image
+    without a palette or pixels, and out-of-range indexes raise
+    ValueError; where the image sits on the screen is the caller's
+    business."""
+    import struct
+
+    while pos < len(payload):
+        b0 = payload[pos]
+        if b0 == 0x3B:  # trailer
+            return
+        if b0 == 0x21:  # extension: label + sub-blocks
+            if pos + 2 > len(payload):
+                raise ValueError("truncated GIF extension")
+            label = payload[pos + 1]
+            blocks, pos = _gif_sub_blocks(payload, pos + 2)
+            yield label, blocks
+            continue
+        if b0 != 0x2C:
+            raise ValueError(f"bad GIF block 0x{b0:02x}")
+        if pos + 10 > len(payload):
+            raise ValueError("truncated GIF image descriptor")
+        left, top, iw, ih, ip = struct.unpack("<HHHHB",
+                                              payload[pos + 1:pos + 10])
+        local, pos = _gif_palette(payload, pos + 10, ip, "local")
+        pal = local if ip & 0x80 else gct
+        if pal is None:
+            raise ValueError("GIF image without a color table")
+        if not iw or not ih:
+            raise ValueError("empty GIF image descriptor")
+        if pos >= len(payload):
+            raise ValueError("GIF truncated before LZW data")
+        min_code = payload[pos]
+        data, pos = _gif_sub_blocks(payload, pos + 1)
+        idx = _gif_lzw_decode(b"".join(data), min_code)
+        if len(idx) < iw * ih:
+            raise ValueError("GIF pixel data short")
+        arr = np.frombuffer(idx, np.uint8, iw * ih).reshape(ih, iw)
+        if ip & 0x40:  # interlaced: rows arrive in 4 passes
+            shown = np.empty_like(arr)
+            shown[_gif_interlace_rows(ih)] = arr
+            arr = shown
+        if int(arr.max()) * 3 + 3 > len(pal):
+            raise ValueError("GIF palette index out of range")
+        rgb = np.frombuffer(pal, np.uint8).reshape(-1, 3)[arr]
+        yield None, (left, top, arr, rgb)
+
+
 def decode_gif_pixels(payload: bytes) \
         -> tuple[int, int, int, bytes] | None:
     """(width, height, 3, rgb_samples) for a GIF87a/89a payload — REAL
@@ -1404,110 +1508,45 @@ def decode_gif_pixels(payload: bytes) \
 
     Returns None for non-GIF payloads; ValueError for corrupt
     streams (same taxonomy as the PNG/JPEG decoders)."""
-    import struct
-
-    if len(payload) < 13 or payload[:6] not in (b"GIF87a", b"GIF89a"):
+    screen = _gif_screen(payload)
+    if screen is None:
         return None
-    w, h, packed, _bg, _ar = struct.unpack("<HHBBB", payload[6:13])
-    pos = 13
-    gct = None
-    if packed & 0x80:
-        n = 2 << (packed & 0x07)
-        gct = payload[pos:pos + 3 * n]
-        if len(gct) != 3 * n:
-            raise ValueError("truncated GIF global color table")
-        pos += 3 * n
-    while pos < len(payload):
-        b0 = payload[pos]
-        if b0 == 0x3B:  # trailer before any image
-            raise ValueError("GIF without an image block")
-        if b0 == 0x21:  # extension: label + sub-blocks
-            pos += 2
-            while pos < len(payload) and payload[pos]:
-                pos += 1 + payload[pos]
-            pos += 1
-            continue
-        if b0 != 0x2C:
-            raise ValueError(f"bad GIF block 0x{b0:02x}")
-        if pos + 10 > len(payload):
-            raise ValueError("truncated GIF image descriptor")
-        left, top, iw, ih, ip = struct.unpack("<HHHHB",
-                                              payload[pos + 1:pos + 10])
-        pos += 10
-        pal = gct
-        if ip & 0x80:  # local color table
-            n = 2 << (ip & 0x07)
-            pal = payload[pos:pos + 3 * n]
-            if len(pal) != 3 * n:
-                raise ValueError("truncated GIF local color table")
-            pos += 3 * n
-        if pal is None:
-            raise ValueError("GIF image without a color table")
-        if not iw or not ih:
-            raise ValueError("empty GIF image descriptor")
-        if pos >= len(payload):
-            raise ValueError("GIF truncated before LZW data")
-        min_code = payload[pos]
-        pos += 1
-        data = bytearray()
-        while pos < len(payload) and payload[pos]:
-            ln = payload[pos]
-            chunk = payload[pos + 1:pos + 1 + ln]
-            if len(chunk) != ln:
-                raise ValueError("truncated GIF data sub-block")
-            data += chunk
-            pos += 1 + ln
-        idx = _gif_lzw_decode(bytes(data), min_code)
-        if len(idx) < iw * ih:
-            raise ValueError("GIF pixel data short")
-        idx = idx[:iw * ih]
-        if ip & 0x40:  # interlaced: rows arrive in 4 passes
-            rows = [idx[r * iw:(r + 1) * iw] for r in range(ih)]
-            order = [r for start, step in _GIF_PASSES
-                     for r in range(start, ih, step)]
-            seq = [b""] * ih
-            for src, dst in enumerate(order):
-                seq[dst] = rows[src]
-            idx = b"".join(seq)
-        arr = np.frombuffer(idx, np.uint8)
-        if int(arr.max()) * 3 + 3 > len(pal):
-            raise ValueError("GIF palette index out of range")
-        rgb = (np.frombuffer(pal, np.uint8)
-               .reshape(-1, 3)[arr].astype(np.uint8))
-        # dims are the IMAGE descriptor's (the common whole-screen
-        # frame); a sub-rectangle frame reports its own dims — stats
-        # still cover exactly the stored pixels
-        return (iw, ih, 3, rgb.tobytes())
+    for label, image in _gif_blocks(payload, screen[4], screen[3]):
+        if label is None:
+            # dims are the IMAGE descriptor's (the common whole-screen
+            # frame); a sub-rectangle frame reports its own dims —
+            # stats still cover exactly the stored pixels
+            _left, _top, arr, rgb = image
+            return (arr.shape[1], arr.shape[0], 3, rgb.tobytes())
     raise ValueError("GIF without an image block")
 
 
-def encode_gif_gray(pixels: bytes, width: int,
-                    interlace: bool = False) -> bytes:
-    """Grayscale GIF encoder (identity 256-entry palette, the
-    'uncompressed GIF' LZW form: 9-bit literal codes with a CLEAR
-    every 254 symbols so the decoder's table never forces a width
-    bump) — the q212 device twin: decode(encode(bytes)) returns each
-    source byte as an (v,v,v) RGB pixel, so the oracle computes stats
-    straight from the characters. Real compressed streams'
-    dict-growth/KwKwK decode paths are pinned separately by
-    handcrafted-bitstream tests."""
+def _gif_gray_head(width: int, height: int) -> bytearray:
+    """GIF89a header, logical screen and the identity 256-gray global
+    palette that both gray encoders write."""
     import struct
 
-    if width <= 0 or len(pixels) % width:
-        raise ValueError("pixels must be height x width bytes")
-    height = len(pixels) // width
     if width > 0xFFFF or height > 0xFFFF:
         raise ValueError("GIF dimensions must fit 16 bits")
     out = bytearray(b"GIF89a")
     out += struct.pack("<HHBBB", width, height, 0xF7, 0, 0)  # GCT 256
     out += bytes(v for i in range(256) for v in (i, i, i))
-    out += b"\x2c" + struct.pack("<HHHHB", 0, 0, width, height,
-                                 0x40 if interlace else 0x00)
+    return out
+
+
+def _gif_gray_image(pixels: bytes, width: int, height: int,
+                    interlace: bool = False) -> bytes:
+    """One whole-screen image block in the 'uncompressed GIF' LZW form:
+    the descriptor, then 9-bit literal codes with a CLEAR every 254
+    symbols (so the decoder's table never forces a width bump) and EOI,
+    cut into 255-byte sub-blocks and terminated."""
+    import struct
+
+    out = bytearray(b"\x2c" + struct.pack(
+        "<HHHHB", 0, 0, width, height, 0x40 if interlace else 0x00))
     if interlace:
-        order = [r for start, step in _GIF_PASSES
-                 for r in range(start, height, step)]
         pixels = b"".join(pixels[r * width:(r + 1) * width]
-                          for r in order)
+                          for r in _gif_interlace_rows(height))
     out += b"\x08"  # LZW minimum code size (256 literals)
     acc = nb = 0
     codes = bytearray()
@@ -1532,8 +1571,25 @@ def encode_gif_gray(pixels: bytes, width: int,
     for i in range(0, len(codes), 255):
         blk = codes[i:i + 255]
         out += bytes([len(blk)]) + blk
-    out += b"\x00\x3b"
-    return bytes(out)
+    return bytes(out + b"\x00")
+
+
+def encode_gif_gray(pixels: bytes, width: int,
+                    interlace: bool = False) -> bytes:
+    """Grayscale GIF encoder (identity 256-entry palette, the
+    'uncompressed GIF' LZW form: 9-bit literal codes with a CLEAR
+    every 254 symbols so the decoder's table never forces a width
+    bump) — the q212 device twin: decode(encode(bytes)) returns each
+    source byte as an (v,v,v) RGB pixel, so the oracle computes stats
+    straight from the characters. Real compressed streams'
+    dict-growth/KwKwK decode paths are pinned separately by
+    handcrafted-bitstream tests."""
+    if width <= 0 or len(pixels) % width:
+        raise ValueError("pixels must be height x width bytes")
+    height = len(pixels) // width
+    out = _gif_gray_head(width, height)
+    out += _gif_gray_image(pixels, width, height, interlace)
+    return bytes(out + b"\x3b")
 
 
 def decode_gif_frames(payload: bytes) \
@@ -1561,17 +1617,10 @@ def decode_gif_frames(payload: bytes) \
     rects or palette indexes) — the decode_gif_pixels taxonomy."""
     import struct
 
-    if len(payload) < 13 or payload[:6] not in (b"GIF87a", b"GIF89a"):
+    screen = _gif_screen(payload)
+    if screen is None:
         return None
-    w, h, packed, bg, _ar = struct.unpack("<HHBBB", payload[6:13])
-    pos = 13
-    gct = None
-    if packed & 0x80:
-        n = 2 << (packed & 0x07)
-        gct = payload[pos:pos + 3 * n]
-        if len(gct) != 3 * n:
-            raise ValueError("truncated GIF global color table")
-        pos += 3 * n
+    w, h, bg, gct, pos = screen
     if not w or not h:
         raise ValueError("empty GIF logical screen")
     if gct is not None and bg * 3 + 3 <= len(gct):
@@ -1583,85 +1632,25 @@ def decode_gif_frames(payload: bytes) \
     frames = []
     fps = None
     pend = None  # (disposal, transparent_index_or_None, delay_cs)
-    while pos < len(payload):
-        b0 = payload[pos]
-        if b0 == 0x3B:  # trailer
-            break
-        if b0 == 0x21:  # extension
-            if pos + 2 > len(payload):
-                raise ValueError("truncated GIF extension")
-            label = payload[pos + 1]
-            pos += 2
-            blocks = []
-            while pos < len(payload) and payload[pos]:
-                ln = payload[pos]
-                chunk = payload[pos + 1:pos + 1 + ln]
-                if len(chunk) != ln:
-                    raise ValueError("truncated GIF data sub-block")
-                blocks.append(chunk)
-                pos += 1 + ln
-            pos += 1
-            if label == 0xF9:  # Graphic Control Extension
-                if not blocks or len(blocks[0]) < 4:
-                    raise ValueError("short GIF graphic control block")
-                gp, delay, tidx = struct.unpack("<BHB", blocks[0][:4])
-                pend = ((gp >> 2) & 0x07,
-                        tidx if gp & 0x01 else None, delay)
-                if fps is None and delay:
-                    # clamp to >=1: a slideshow GIF with a >2 s tick
-                    # is well-formed and must not round to fps=0
-                    # (review finding r9, second pass)
-                    fps = max(1, (200 + delay) // (2 * delay))
+    for label, item in _gif_blocks(payload, pos, gct):
+        if label == 0xF9:  # Graphic Control Extension
+            if not item or len(item[0]) < 4:
+                raise ValueError("short GIF graphic control block")
+            gp, delay, tidx = struct.unpack("<BHB", item[0][:4])
+            pend = ((gp >> 2) & 0x07,
+                    tidx if gp & 0x01 else None, delay)
+            if fps is None and delay:
+                # clamp to >=1: a slideshow GIF with a >2 s tick
+                # is well-formed and must not round to fps=0
+                # (review finding r9, second pass)
+                fps = max(1, (200 + delay) // (2 * delay))
             continue
-        if b0 != 0x2C:
-            raise ValueError(f"bad GIF block 0x{b0:02x}")
-        if pos + 10 > len(payload):
-            raise ValueError("truncated GIF image descriptor")
-        left, top, iw, ih, ip = struct.unpack(
-            "<HHHHB", payload[pos + 1:pos + 10])
-        pos += 10
-        pal = gct
-        if ip & 0x80:
-            n = 2 << (ip & 0x07)
-            pal = payload[pos:pos + 3 * n]
-            if len(pal) != 3 * n:
-                raise ValueError("truncated GIF local color table")
-            pos += 3 * n
-        if pal is None:
-            raise ValueError("GIF image without a color table")
-        if not iw or not ih:
-            raise ValueError("empty GIF image descriptor")
+        if label is not None:
+            continue  # other extensions carry nothing drawn
+        left, top, arr, rgb = item
+        ih, iw = arr.shape
         if left + iw > w or top + ih > h:
             raise ValueError("GIF frame rect outside logical screen")
-        if pos >= len(payload):
-            raise ValueError("GIF truncated before LZW data")
-        min_code = payload[pos]
-        pos += 1
-        data = bytearray()
-        while pos < len(payload) and payload[pos]:
-            ln = payload[pos]
-            chunk = payload[pos + 1:pos + 1 + ln]
-            if len(chunk) != ln:
-                raise ValueError("truncated GIF data sub-block")
-            data += chunk
-            pos += 1 + ln
-        pos += 1
-        idx = _gif_lzw_decode(bytes(data), min_code)
-        if len(idx) < iw * ih:
-            raise ValueError("GIF pixel data short")
-        idx = idx[:iw * ih]
-        if ip & 0x40:  # interlaced rows arrive in 4 passes
-            rows = [idx[r * iw:(r + 1) * iw] for r in range(ih)]
-            order = [r for start, step in _GIF_PASSES
-                     for r in range(start, ih, step)]
-            seq = [b""] * ih
-            for src, dst in enumerate(order):
-                seq[dst] = rows[src]
-            idx = b"".join(seq)
-        arr = np.frombuffer(idx, np.uint8).reshape(ih, iw)
-        if int(arr.max()) * 3 + 3 > len(pal):
-            raise ValueError("GIF palette index out of range")
-        rgb = np.frombuffer(pal, np.uint8).reshape(-1, 3)[arr]
         disposal, tidx, _delay = pend or (0, None, 0)
         prev = canvas.copy() if disposal == 3 else None
         rect = canvas[top:top + ih, left:left + iw]
@@ -1769,44 +1758,14 @@ def encode_gif_animation(frames: list[bytes], width: int,
     height = len(frames[0]) // width
     if any(len(f) != width * height for f in frames):
         raise ValueError("all frames must share dimensions")
-    if width > 0xFFFF or height > 0xFFFF:
-        raise ValueError("GIF dimensions must fit 16 bits")
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", width, height, 0xF7, 0, 0)
-    out += bytes(v for i in range(256) for v in (i, i, i))
+    out = _gif_gray_head(width, height)
     # NETSCAPE2.0 application extension: loop forever
     out += b"\x21\xff\x0bNETSCAPE2.0\x03\x01\x00\x00\x00"
     for fr in frames:
         out += b"\x21\xf9\x04" + struct.pack(
             "<BHB", 0x04, delay_cs, 0) + b"\x00"  # disposal 1
-        out += b"\x2c" + struct.pack("<HHHHB", 0, 0, width, height, 0)
-        out += b"\x08"
-        acc = nb = 0
-        codes = bytearray()
-
-        def put(code):
-            nonlocal acc, nb
-            acc |= code << nb
-            nb += 9
-            while nb >= 8:
-                codes.append(acc & 0xFF)
-                acc >>= 8
-                nb -= 8
-
-        put(256)
-        for i, px in enumerate(fr):
-            if i and i % 254 == 0:
-                put(256)
-            put(px)
-        put(257)
-        if nb:
-            codes.append(acc & 0xFF)
-        for i in range(0, len(codes), 255):
-            blk = codes[i:i + 255]
-            out += bytes([len(blk)]) + blk
-        out += b"\x00"
-    out += b"\x3b"
-    return bytes(out)
+        out += _gif_gray_image(fr, width, height)
+    return bytes(out + b"\x3b")
 
 
 # --------------------------------------------------------------- BMP pixels
@@ -3386,14 +3345,9 @@ def encode_wav_pcm16(samples: "np.ndarray", rate: int = 8000,
     import struct
 
     pcm = np.asarray(samples, dtype="<i2").tobytes()
-    # 16-bit samples: len(pcm) is always even, so the RIFF odd-chunk
-    # pad byte can never be needed here (review finding r7: a pad
-    # branch was unreachable armor)
-    fmt = struct.pack("<HHIIHH", 1, channels, rate,
-                      rate * channels * 2, channels * 2, 16)
-    chunks = (b"fmt " + struct.pack("<I", len(fmt)) + fmt
-              + b"data" + struct.pack("<I", len(pcm)) + pcm)
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+    return _wav_riff(struct.pack("<HHIIHH", 1, channels, rate,
+                                 rate * channels * 2, channels * 2, 16),
+                     pcm)
 
 
 def encode_wav_g711(codes: bytes, law: str = "ulaw",
@@ -3410,12 +3364,8 @@ def encode_wav_g711(codes: bytes, law: str = "ulaw",
     if law not in ("ulaw", "alaw"):
         raise ValueError("law must be 'ulaw' or 'alaw'")
     tag = 7 if law == "ulaw" else 6
-    fmt = struct.pack("<HHIIHH", tag, channels, rate,
-                      rate * channels, channels, 8)
-    data = codes + (b"\x00" if len(codes) & 1 else b"")
-    chunks = (b"fmt " + struct.pack("<I", len(fmt)) + fmt
-              + b"data" + struct.pack("<I", len(codes)) + data)
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+    return _wav_riff(struct.pack("<HHIIHH", tag, channels, rate,
+                                 rate * channels, channels, 8), codes)
 
 
 # -------------------------------------------------------------- FLAC frames
@@ -4712,54 +4662,79 @@ def encode_mp4_mjpeg(frames: list[bytes], width: int, height: int,
     if fps <= 0 or width <= 0 or height <= 0:
         raise ValueError("fps/width/height must be positive")
 
+    offs, o = [], 0  # sample offsets from the first mdat byte
+    for f in frames:
+        offs.append(o)
+        o += len(f)
+    entry = (struct.pack(">I", 86) + b"jpeg" + bytes(6)
+             + struct.pack(">H", 1) + bytes(16)
+             + struct.pack(">HHIIIH", width, height,
+                           0x480000, 0x480000, 0, 1)
+             + bytes(32) + struct.pack(">Hh", 24, -1))
+    return _mp4_mux(
+        b"isom" + struct.pack(">I", 0x200) + b"isom" + b"iso2",
+        b"".join(frames), fps, b"vide", b"MJPEG\x00",
+        (b"vmhd", 1, bytes(8)), entry, [(1, 1, 1)],
+        [len(f) for f in frames], offs, dims=(width, height))
+
+
+def _mp4_mux(brands: bytes, media: bytes, timescale: int, handler: bytes,
+             name: bytes, mhd: tuple[bytes, int, bytes], entry: bytes,
+             stsc: list[tuple[int, int, int]], sizes: int | list[int],
+             offs: list[int], volume: int = 0,
+             dims: tuple[int, int] = (0, 0)) -> bytes:
+    """The one single-track ISO-BMFF writer both muxers share: ftyp
+    (``brands``: major, minor version, compatibles) + mdat (``media``)
+    + moov, moov last so the absolute ``stco`` offsets are known in one
+    pass. One tick per table sample at ``timescale``; ``handler``/
+    ``name`` fill hdlr, ``mhd`` is the media-header box (type, flags,
+    body), ``entry`` the one stsd sample entry, ``stsc`` the
+    (first chunk, samples per chunk, entry) runs, ``sizes`` one size
+    for every sample or a size per sample, ``offs`` each chunk's
+    offset from the first mdat byte; ``volume`` and ``dims`` go to
+    tkhd."""
+    import struct
+
     def box(typ: bytes, body: bytes) -> bytes:
         return struct.pack(">I", 8 + len(body)) + typ + body
 
     def full(typ: bytes, version: int, flags: int, body: bytes) -> bytes:
         return box(typ, bytes([version]) + flags.to_bytes(3, "big") + body)
 
-    n = len(frames)
-    ftyp = box(b"ftyp", b"isom" + struct.pack(">I", 0x200)
-               + b"isom" + b"iso2")
-    mdat = box(b"mdat", b"".join(frames))
-    offs, o = [], len(ftyp) + 8  # first sample right after mdat header
-    for f in frames:
-        offs.append(o)
-        o += len(f)
-
+    ftyp = box(b"ftyp", brands)
+    mdat = box(b"mdat", media)
+    if isinstance(sizes, int):
+        n, size_list = len(media) // sizes, []
+    else:
+        n, size_list = len(sizes), sizes
     matrix = struct.pack(">9i", 0x10000, 0, 0, 0, 0x10000, 0,
                          0, 0, 0x40000000)
     mvhd = full(b"mvhd", 0, 0, struct.pack(
-        ">IIIIiH", 0, 0, fps, n, 0x10000, 0x100)
+        ">IIIIiH", 0, 0, timescale, n, 0x10000, 0x100)
         + bytes(10) + matrix + bytes(24) + struct.pack(">I", 2))
     tkhd = full(b"tkhd", 0, 3, struct.pack(
         ">IIIII", 0, 0, 1, 0, n) + bytes(8)
-        + struct.pack(">hhhH", 0, 0, 0, 0) + matrix
-        + struct.pack(">II", width << 16, height << 16))
+        + struct.pack(">hhhH", 0, 0, volume, 0) + matrix
+        + struct.pack(">II", dims[0] << 16, dims[1] << 16))
     mdhd = full(b"mdhd", 0, 0, struct.pack(
-        ">IIIIHH", 0, 0, fps, n, 0x55C4, 0))
-    hdlr = full(b"hdlr", 0, 0, struct.pack(">I", 0) + b"vide"
-                + bytes(12) + b"MJPEG\x00")
-    entry = (struct.pack(">I", 86) + b"jpeg" + bytes(6)
-             + struct.pack(">H", 1) + bytes(16)
-             + struct.pack(">HHIIIH", width, height,
-                           0x480000, 0x480000, 0, 1)
-             + bytes(32) + struct.pack(">Hh", 24, -1))
-    stsd = full(b"stsd", 0, 0, struct.pack(">I", 1) + entry)
-    stts = full(b"stts", 0, 0, struct.pack(">III", 1, n, 1))
-    stsc = full(b"stsc", 0, 0, struct.pack(">IIII", 1, 1, 1, 1))
-    stsz = full(b"stsz", 0, 0, struct.pack(">II", 0, n)
-                + b"".join(struct.pack(">I", len(f)) for f in frames))
-    stco = full(b"stco", 0, 0, struct.pack(">I", n)
-                + b"".join(struct.pack(">I", x) for x in offs))
-    stbl = box(b"stbl", stsd + stts + stsc + stsz + stco)
-    vmhd = full(b"vmhd", 0, 1, struct.pack(">HHHH", 0, 0, 0, 0))
+        ">IIIIHH", 0, 0, timescale, n, 0x55C4, 0))
+    hdlr = full(b"hdlr", 0, 0, struct.pack(">I", 0) + handler
+                + bytes(12) + name)
+    stbl = box(b"stbl", full(b"stsd", 0, 0, struct.pack(">I", 1) + entry)
+               + full(b"stts", 0, 0, struct.pack(">III", 1, n, 1))
+               + full(b"stsc", 0, 0, struct.pack(">I", len(stsc))
+                      + b"".join(struct.pack(">III", *r) for r in stsc))
+               + full(b"stsz", 0, 0, struct.pack(
+                   ">II", 0 if size_list else sizes, n)
+                   + b"".join(struct.pack(">I", x) for x in size_list))
+               + full(b"stco", 0, 0, struct.pack(">I", len(offs))
+                      + b"".join(struct.pack(">I", len(ftyp) + 8 + x)
+                                 for x in offs)))
     dinf = box(b"dinf", full(b"dref", 0, 0, struct.pack(">I", 1)
                              + full(b"url ", 0, 1, b"")))
-    minf = box(b"minf", vmhd + dinf + stbl)
+    minf = box(b"minf", full(mhd[0], 0, mhd[1], mhd[2]) + dinf + stbl)
     mdia = box(b"mdia", mdhd + hdlr + minf)
-    trak = box(b"trak", tkhd + mdia)
-    moov = box(b"moov", mvhd + trak)
+    moov = box(b"moov", mvhd + box(b"trak", tkhd + mdia))
     return ftyp + mdat + moov
 
 
@@ -4853,8 +4828,6 @@ def decode_mp4_mjpeg(payload: bytes) \
     Returns None for non-ISO-BMFF payloads and for containers with no
     video track (audio-only MP4s are not corrupt); raises ValueError
     for torn sample tables or out-of-range samples."""
-    import struct
-
     if not _is_bmff(payload):
         return None
     for handler, timescale, tables in _mp4_tracks(payload):
@@ -4890,11 +4863,7 @@ def _is_bmff(payload: bytes) -> bool:
 def _mp4_tracks(payload: bytes):
     """Yield (handler fourcc, mdhd timescale, stbl (start, end)) per
     trak of an ISO-BMFF payload — the shared moov walk of the video
-    and audio demuxers. mdhd version 1 widens creation/modification
-    to u64, moving timescale to offset 20 (same layout split
-    ``decode_video_meta`` handles for mvhd) — reading the v0 offset
-    there would yield half a timestamp as a silently wrong
-    timescale."""
+    and audio demuxers (mdhd read by ``_bmff_timing``)."""
     for btype, b0, b1 in _iter_boxes(payload, 0, len(payload)):
         if btype != b"moov":
             continue
@@ -4907,14 +4876,10 @@ def _mp4_tracks(payload: bytes):
                 if mtyp != b"mdia":
                     continue
                 for ityp, i0, i1 in _iter_boxes(payload, m0, m1):
-                    if ityp == b"mdhd" and i1 - i0 >= 16:
-                        if payload[i0] == 1:
-                            if i1 - i0 >= 24:
-                                timescale = int.from_bytes(
-                                    payload[i0 + 20:i0 + 24], "big")
-                        else:
-                            timescale = int.from_bytes(
-                                payload[i0 + 12:i0 + 16], "big")
+                    if ityp == b"mdhd":
+                        ts, _dur = _bmff_timing(payload, i0, i1)
+                        if ts is not None:
+                            timescale = ts
                     elif ityp == b"hdlr" and i1 - i0 >= 12:
                         handler = payload[i0 + 8:i0 + 12]
                     elif ityp == b"minf":
@@ -5003,38 +4968,12 @@ def encode_mp4_pcm16(samples: "np.ndarray", rate: int = 8000,
     bpf = 2 * channels                # bytes per PCM frame
     spc = max(1, rate // 10)          # ~100 ms of frames per chunk
 
-    def box(typ: bytes, body: bytes) -> bytes:
-        return struct.pack(">I", 8 + len(body)) + typ + body
-
-    def full(typ: bytes, version: int, flags: int, body: bytes) -> bytes:
-        return box(typ, bytes([version]) + flags.to_bytes(3, "big") + body)
-
-    ftyp = box(b"ftyp", b"M4A " + struct.pack(">I", 0)
-               + b"M4A " + b"isom")
-    mdat = box(b"mdat", pcm)
     n_chunks = (n + spc - 1) // spc
-    offs = [len(ftyp) + 8 + ci * spc * bpf for ci in range(n_chunks)]
-
-    matrix = struct.pack(">9i", 0x10000, 0, 0, 0, 0x10000, 0,
-                         0, 0, 0x40000000)
-    mvhd = full(b"mvhd", 0, 0, struct.pack(
-        ">IIIIiH", 0, 0, rate, n, 0x10000, 0x100)
-        + bytes(10) + matrix + bytes(24) + struct.pack(">I", 2))
-    tkhd = full(b"tkhd", 0, 3, struct.pack(
-        ">IIIII", 0, 0, 1, 0, n) + bytes(8)
-        + struct.pack(">hhhH", 0, 0, 0x100, 0) + matrix
-        + struct.pack(">II", 0, 0))
-    mdhd = full(b"mdhd", 0, 0, struct.pack(
-        ">IIIIHH", 0, 0, rate, n, 0x55C4, 0))
-    hdlr = full(b"hdlr", 0, 0, struct.pack(">I", 0) + b"soun"
-                + bytes(12) + b"PCM\x00")
     entry = (struct.pack(">I", 36)
              + (b"twos" if big_endian else b"sowt") + bytes(6)
              + struct.pack(">H", 1)          # data_ref_index
              + bytes(8)                      # version/revision/vendor
              + struct.pack(">HHHHI", channels, 16, 0, 0, rate << 16))
-    stsd = full(b"stsd", 0, 0, struct.pack(">I", 1) + entry)
-    stts = full(b"stts", 0, 0, struct.pack(">III", 1, n, 1))
     # stsc: every chunk holds spc frames, the LAST may be shorter —
     # the standard two-run form
     last = n - spc * (n_chunks - 1)
@@ -5043,20 +4982,10 @@ def encode_mp4_pcm16(samples: "np.ndarray", rate: int = 8000,
         stsc_runs.append((n_chunks, last, 1))
     elif n_chunks == 1:
         stsc_runs = [(1, n, 1)]
-    stsc = full(b"stsc", 0, 0, struct.pack(">I", len(stsc_runs))
-                + b"".join(struct.pack(">III", *r) for r in stsc_runs))
-    stsz = full(b"stsz", 0, 0, struct.pack(">II", bpf, n))
-    stco = full(b"stco", 0, 0, struct.pack(">I", n_chunks)
-                + b"".join(struct.pack(">I", x) for x in offs))
-    smhd = full(b"smhd", 0, 0, struct.pack(">HH", 0, 0))
-    dinf = box(b"dinf", full(b"dref", 0, 0, struct.pack(">I", 1)
-                             + full(b"url ", 0, 1, b"")))
-    stbl = box(b"stbl", stsd + stts + stsc + stsz + stco)
-    minf = box(b"minf", smhd + dinf + stbl)
-    mdia = box(b"mdia", mdhd + hdlr + minf)
-    trak = box(b"trak", tkhd + mdia)
-    moov = box(b"moov", mvhd + trak)
-    return ftyp + mdat + moov
+    return _mp4_mux(
+        b"M4A " + struct.pack(">I", 0) + b"M4A " + b"isom", pcm, rate,
+        b"soun", b"PCM\x00", (b"smhd", 0, bytes(4)), entry, stsc_runs,
+        bpf, [ci * spc * bpf for ci in range(n_chunks)], volume=0x100)
 
 
 def decode_mp4_pcm16(payload: bytes) \

@@ -141,6 +141,28 @@ def _frame_energy(media, frame_ms, decimate=1):
     )
 
 
+def _survivor_census(media, keys, by, key="fp"):
+    """The dedup funnels' census: every ``media`` row joined to its
+    ``keys`` row (``media_id``, ``key``) on media_id, each ``key``
+    elects its min media_id as the survivor, and per ``by`` group the
+    BIGINT ``n_items`` and ``n_survivors`` come out in ``by`` order."""
+    from pyspark.sql import Window
+
+    elected = (
+        media.select("media_id", by)
+        .join(keys, "media_id")
+        .withColumn("_keep", F.min("media_id").over(
+            Window.partitionBy(key)))
+    )
+    return (
+        elected.groupBy(by)
+        .agg(F.count("*").cast("bigint").alias("n_items"),
+             F.sum(F.when(F.col("media_id") == F.col("_keep"), 1)
+                   .otherwise(0)).cast("bigint").alias("n_survivors"))
+        .orderBy(by)
+    )
+
+
 #: pixels per PNG row for the manufactured images
 _PNG_W = 16
 
@@ -1135,11 +1157,11 @@ def q223_audio_fingerprint(spark, sf_dir):
     Scale shape: the q207 passes, then one media-grain window and one
     media-grain aggregate; fingerprints shuffle as short hex strings."""
     from sunat_rree_demo_spark.operators.multimodal import (
+        delta_sign_fingerprint,
         encode_wav_pcm16,
         pcm_frame_energy,
     )
     from sunat_rree_demo_spark.operators.skew import fan_out
-    from pyspark.sql import Window as W
 
     import numpy as np
 
@@ -1148,28 +1170,14 @@ def q223_audio_fingerprint(spark, sf_dir):
                         (np.frombuffer(s.encode("ascii"), np.uint8)
                          .astype(np.int64) - 79) * 256,
                         rate=_WAV_RATE))
-    byf = W.partitionBy("media_id").orderBy("frame_no")
+    # one fp byte per 8 padded bits: 4 bits per hex digit
     return (
-        pcm_frame_energy(media, frame_ms=_WAV_FRAME_MS)
-        .withColumn("_nxt", F.lead("rms").over(byf))
-        .filter(F.col("_nxt").isNotNull())
-        .withColumn("_b", F.when(F.col("rms") < F.col("_nxt"), 1)
-                    .otherwise(0))
-        .withColumn("_bi", (F.col("frame_no") / 8).cast("bigint"))
-        .groupBy("media_id", "_bi")
-        .agg(F.sum(F.expr(
-            "_b * shiftleft(1L, CAST(7 - frame_no % 8 AS INT))"))
-            .alias("_byte"))
-        .groupBy("media_id")
-        .agg((F.count("*") * 8).cast("bigint").alias("n_bits_padded"),
-             F.array_join(
-                 F.transform(
-                     F.array_sort(F.collect_list(
-                         F.struct("_bi", "_byte"))),
-                     lambda s: F.format_string("%02x", s["_byte"])),
-                 "").alias("fp"))
+        delta_sign_fingerprint(
+            pcm_frame_energy(media, frame_ms=_WAV_FRAME_MS),
+            "media_id", "frame_no", "rms")
         .select(F.col("media_id").alias("doc_id"),
-                "n_bits_padded", "fp")
+                (4 * F.length("fp")).cast("bigint").alias("n_bits_padded"),
+                "fp")
         .orderBy("doc_id")
     )
 
@@ -1712,21 +1720,8 @@ def q230_media_dedup_funnel(spark, sf_dir):
     ])
     media = src.mapInPandas(encode, schema=media_schema)
     hashes = image_dhash(media.select("media_id", "content"))
-    from pyspark.sql import Window
-
-    byh = Window.partitionBy("dhash")
-    elected = (
-        media.select("media_id", "media_type")
-        .join(hashes.select("media_id", "dhash"), "media_id")
-        .withColumn("_keep", F.min("media_id").over(byh))
-    )
-    return (
-        elected.groupBy("media_type")
-        .agg(F.count("*").cast("bigint").alias("n_items"),
-             F.sum(F.when(F.col("media_id") == F.col("_keep"), 1)
-                   .otherwise(0)).cast("bigint").alias("n_survivors"))
-        .orderBy("media_type")
-    )
+    return _survivor_census(media, hashes.select("media_id", "dhash"),
+                            "media_type", key="dhash")
 
 
 #: q231 variants: the same signal in three genuine containers; the
@@ -1798,12 +1793,12 @@ def q231_audio_dedup_funnel(spark, sf_dir):
     decode+energy pass, a media-grain fingerprint window/aggregate,
     then a census over short hex keys — samples never shuffle."""
     from sunat_rree_demo_spark.operators.multimodal import (
+        delta_sign_fingerprint,
         encode_flac_pcm16,
         encode_wav_pcm16,
         pcm_frame_energy,
     )
     from sunat_rree_demo_spark.operators.skew import fan_out
-    from pyspark.sql import Window as W
 
     import numpy as np
 
@@ -1843,41 +1838,11 @@ def q231_audio_dedup_funnel(spark, sf_dir):
         T.StructField("content", T.BinaryType()),
     ])
     media = src.mapInPandas(encode, schema=media_schema)
-    byf = W.partitionBy("media_id").orderBy("frame_no")
-    fps = (
+    fps = delta_sign_fingerprint(
         pcm_frame_energy(media.select("media_id", "content"),
-                         frame_ms=_WAV_FRAME_MS)
-        .withColumn("_nxt", F.lead("rms").over(byf))
-        .filter(F.col("_nxt").isNotNull())
-        .withColumn("_b", F.when(F.col("rms") < F.col("_nxt"), 1)
-                    .otherwise(0))
-        .withColumn("_bi", (F.col("frame_no") / 8).cast("bigint"))
-        .groupBy("media_id", "_bi")
-        .agg(F.sum(F.expr(
-            "_b * shiftleft(1L, CAST(7 - frame_no % 8 AS INT))"))
-            .alias("_byte"))
-        .groupBy("media_id")
-        .agg(F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("_bi", "_byte"))),
-                lambda s: F.format_string("%02x", s["_byte"])),
-            "").alias("fp"))
-    )
-    from pyspark.sql import Window
-
-    byfp = Window.partitionBy("fp")
-    elected = (
-        media.select("media_id", "variant")
-        .join(fps, "media_id")
-        .withColumn("_keep", F.min("media_id").over(byfp))
-    )
-    return (
-        elected.groupBy("variant")
-        .agg(F.count("*").cast("bigint").alias("n_items"),
-             F.sum(F.when(F.col("media_id") == F.col("_keep"), 1)
-                   .otherwise(0)).cast("bigint").alias("n_survivors"))
-        .orderBy("variant")
-    )
+                         frame_ms=_WAV_FRAME_MS),
+        "media_id", "frame_no", "rms")
+    return _survivor_census(media, fps, "variant")
 
 
 #: q232 grid: 13 blocks per row (width 104 — distinct from every
@@ -2221,21 +2186,7 @@ def q235_video_dedup_funnel(spark, sf_dir):
     fps = video_fingerprint(
         video_frame_stats(media.select("media_id", "content"),
                           every_n=1))
-    from pyspark.sql import Window
-
-    byfp = Window.partitionBy("fp")
-    elected = (
-        media.select("media_id", "variant")
-        .join(fps, "media_id")
-        .withColumn("_keep", F.min("media_id").over(byfp))
-    )
-    return (
-        elected.groupBy("variant")
-        .agg(F.count("*").cast("bigint").alias("n_items"),
-             F.sum(F.when(F.col("media_id") == F.col("_keep"), 1)
-                   .otherwise(0)).cast("bigint").alias("n_survivors"))
-        .orderBy("variant")
-    )
+    return _survivor_census(media, fps, "variant")
 
 
 #: q236 GIF-animation device: 22 chars per frame on an 11x2 canvas
@@ -2420,21 +2371,7 @@ def q238_gif_video_dedup(spark, sf_dir):
     fps = video_fingerprint(
         video_frame_stats(media.select("media_id", "content"),
                           every_n=1))
-    from pyspark.sql import Window
-
-    byfp = Window.partitionBy("fp")
-    elected = (
-        media.select("media_id", "variant")
-        .join(fps, "media_id")
-        .withColumn("_keep", F.min("media_id").over(byfp))
-    )
-    return (
-        elected.groupBy("variant")
-        .agg(F.count("*").cast("bigint").alias("n_items"),
-             F.sum(F.when(F.col("media_id") == F.col("_keep"), 1)
-                   .otherwise(0)).cast("bigint").alias("n_survivors"))
-        .orderBy("variant")
-    )
+    return _survivor_census(media, fps, "variant")
 
 
 #: q237 mixed-corpus device: 72 printable chars per doc; modality by
@@ -2984,21 +2921,7 @@ def q243_video_dedup_cross_container(spark, sf_dir):
     fps = video_fingerprint(
         video_frame_stats(media.select("media_id", "content"),
                           every_n=1))
-    from pyspark.sql import Window
-
-    byfp = Window.partitionBy("fp")
-    elected = (
-        media.select("media_id", "variant")
-        .join(fps, "media_id")
-        .withColumn("_keep", F.min("media_id").over(byfp))
-    )
-    return (
-        elected.groupBy("variant")
-        .agg(F.count("*").cast("bigint").alias("n_items"),
-             F.sum(F.when(F.col("media_id") == F.col("_keep"), 1)
-                   .otherwise(0)).cast("bigint").alias("n_survivors"))
-        .orderBy("variant")
-    )
+    return _survivor_census(media, fps, "variant")
 
 
 #: q244 mixed-depth device: width 18; even docs encode 8-bit
@@ -3175,8 +3098,6 @@ def q246_audio_dedup_cross_container(spark, sf_dir):
     pass, a media-grain fingerprint window, then a census over short
     hex keys — samples never shuffle (q231's shape with the fourth
     container swapped in)."""
-    from pyspark.sql import Window as W
-
     from sunat_rree_demo_spark.operators.multimodal import (
         delta_sign_fingerprint,
         encode_mp4_pcm16,
@@ -3219,19 +3140,7 @@ def q246_audio_dedup_cross_container(spark, sf_dir):
         pcm_frame_energy(media.select("media_id", "content"),
                          frame_ms=_WAV_FRAME_MS),
         "media_id", "frame_no", "rms")
-    byfp = W.partitionBy("fp")
-    elected = (
-        media.select("media_id", "variant")
-        .join(fps, "media_id")
-        .withColumn("_keep", F.min("media_id").over(byfp))
-    )
-    return (
-        elected.groupBy("variant")
-        .agg(F.count("*").cast("bigint").alias("n_items"),
-             F.sum(F.when(F.col("media_id") == F.col("_keep"), 1)
-                   .otherwise(0)).cast("bigint").alias("n_survivors"))
-        .orderBy("variant")
-    )
+    return _survivor_census(media, fps, "variant")
 
 
 # --------------------------------------------------------------------- q247

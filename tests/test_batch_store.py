@@ -4,6 +4,7 @@ directories the two walks return, and how ``drain`` gives up."""
 from __future__ import annotations
 
 import os
+import threading
 import time
 
 import pytest
@@ -64,6 +65,73 @@ def test_committed_batch_dirs_drops_torn_in_listing_order(spark, tmp_path):
     (marker / "batch_id=1" / "_SUCCESS").write_text("")
     assert committed_batch_dirs(spark, table, str(marker)) \
         == {1: f"{table}/batch_id=1"}
+
+
+def test_marker_committed_makes_at_most_four_round_trips(spark, tmp_path,
+                                                         monkeypatch):
+    """A replay check runs on every micro-batch: Path construction,
+    ``getFileSystem`` and ``exists`` are its only JVM calls once the
+    context's Path class and Hadoop configuration are held."""
+    from py4j.clientserver import ClientServerConnection
+
+    from sunat_rree_demo_spark.sources.batch_store import marker_committed
+
+    table = _store(tmp_path / "t")
+    assert marker_committed(spark, table, 3)  # warm the context's handles
+    me, calls = threading.get_ident(), [0]
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        if threading.get_ident() == me:
+            calls[0] += 1
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    verdicts, per_call = [], []
+    try:
+        for b in (3, 1, -1):
+            calls[0] = 0
+            verdicts.append(marker_committed(spark, table, b))
+            per_call.append(calls[0])
+    finally:
+        monkeypatch.undo()
+    assert verdicts == [True, False, True]
+    assert max(per_call) <= 4, per_call
+
+
+def test_hadoop_fs_holds_handles_per_context():
+    """Each SparkContext resolves the Path class and the configuration
+    once; a restarted context (a new object) fetches its own."""
+    from types import SimpleNamespace as NS
+
+    from sunat_rree_demo_spark.sources.batch_store import _hadoop_fs
+
+    def context():
+        conf, fetched = object(), []
+
+        class Path:
+            def __init__(self, path):
+                self.path = path
+
+            def getFileSystem(self, c):
+                return c
+
+        def hadoop_conf():
+            fetched.append(conf)
+            return conf
+
+        jvm = NS(org=NS(apache=NS(hadoop=NS(fs=NS(Path=Path)))))
+        sc = NS(_jvm=jvm, _jsc=NS(hadoopConfiguration=hadoop_conf))
+        return NS(sparkContext=sc), conf, fetched
+
+    old, old_conf, old_fetched = context()
+    for path in ("/a", "/b"):
+        fs, jpath = _hadoop_fs(old, path)
+        assert (fs, jpath.path) == (old_conf, path)
+    assert len(old_fetched) == 1
+    new, new_conf, new_fetched = context()
+    assert _hadoop_fs(new, "/a")[0] is new_conf
+    assert len(new_fetched) == 1
 
 
 def test_drain_times_out_and_stops_the_query(spark, tmp_path):
