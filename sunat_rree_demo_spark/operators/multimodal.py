@@ -1511,7 +1511,8 @@ def decode_gif_pixels(payload: bytes) \
     screen = _gif_screen(payload)
     if screen is None:
         return None
-    for label, image in _gif_blocks(payload, screen[4], screen[3]):
+    _w, _h, _bg, gct, pos = screen
+    for label, image in _gif_blocks(payload, pos, gct):
         if label is None:
             # dims are the IMAGE descriptor's (the common whole-screen
             # frame); a sub-rectangle frame reports its own dims —
