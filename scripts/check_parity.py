@@ -169,7 +169,7 @@ def main() -> int:
         # a DATA path — the signature of the r6 janitor bug — is NOT
         # retried, only scratch/commit paths are), and a HASH/ROWS
         # mismatch is a real correctness signal and is NEVER retried.
-        from sunat_rree_demo_spark.operators.dedup_index import (
+        from sunat_rree_demo_spark.sources.batch_store import (
             is_transient_storage_error,
         )
 

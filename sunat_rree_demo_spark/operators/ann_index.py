@@ -54,10 +54,12 @@ from sunat_rree_demo_spark.operators.clustering import (
 )
 from sunat_rree_demo_spark.sources.batch_store import (
     BATCH_COL,
-    _hadoop_fs,
     clear_commit_marker,
     committed_batch_dirs,
+    delete_dirs,
     marker_committed,
+    touch_marker,
+    write_batch,
 )
 
 
@@ -74,10 +76,10 @@ def write_ivf_index(emb: DataFrame, path: str, k: int = 8,
         spark, [(int(ci), [int(v) for v in cent[ci]]) for ci in range(k)],
         "cluster int, centroid array<bigint>")
     cent_df.write.mode("overwrite").parquet(f"{path}/centroids")
-    (emb.select(id_col, vec_col)
-     .join(assign.select(id_col, "cluster", "d2"), id_col)
-     .write.partitionBy("cluster").mode("overwrite")
-     .parquet(f"{path}/vectors/{BATCH_COL}=-1"))
+    vecs = (emb.select(id_col, vec_col)
+            .join(assign.select(id_col, "cluster", "d2"), id_col))
+    write_batch(spark, -1,
+                [(f"{path}/vectors", vecs.write.partitionBy("cluster"))])
 
 
 def committed_vector_dirs(spark: SparkSession, path: str) -> list[str]:
@@ -100,11 +102,10 @@ def absorb_ivf_batch(spark: SparkSession, new_emb: DataFrame, path: str,
         return
     cent = load_centroids(spark, path)
     assign = assign_under(new_emb, cent, id_col=id_col, vec_col=vec_col)
-    clear_commit_marker(spark, f"{path}/vectors/{BATCH_COL}={batch_id}")
-    (new_emb.select(id_col, vec_col)
-     .join(assign.select(id_col, "cluster", "d2"), id_col)
-     .write.partitionBy("cluster").mode("overwrite")
-     .parquet(f"{path}/vectors/{BATCH_COL}={batch_id}"))
+    vecs = (new_emb.select(id_col, vec_col)
+            .join(assign.select(id_col, "cluster", "d2"), id_col))
+    write_batch(spark, batch_id,
+                [(f"{path}/vectors", vecs.write.partitionBy("cluster"))])
 
 
 def load_centroids(spark: SparkSession, path: str) -> np.ndarray:
@@ -186,13 +187,6 @@ def ivf_index_search(spark: SparkSession, path: str,
     )
 
 
-def _touch_marker(spark: SparkSession, dir_path: str) -> None:
-    """(Re)create ``dir_path/_SUCCESS`` — restores a batch's commit
-    marker after an in-place maintenance rewrite of its cell dirs."""
-    fs, marker = _hadoop_fs(spark, f"{dir_path}/_SUCCESS")
-    fs.create(marker, True).close()
-
-
 def forget_vectors(spark: SparkSession, path: str, ids: list,
                    id_col: str = "vec_id") -> list[tuple[int, int]]:
     """DELETION PROPAGATION for the vector index: drop the given ids,
@@ -228,7 +222,7 @@ def forget_vectors(spark: SparkSession, path: str, ids: list,
                     .join(F.broadcast(id_df), id_col, "left_anti")
                     .localCheckpoint())
             keep.write.mode("overwrite").parquet(part)
-        _touch_marker(spark, bdir)
+        touch_marker(spark, bdir)
     return touched
 
 
@@ -265,10 +259,8 @@ def compact_ivf_index(spark: SparkSession, path: str,
     latest = (vecs.groupBy(id_col)
               .agg(F.max_by(F.struct(*other), BATCH_COL).alias("_s"))
               .select(id_col, *[F.col(f"_s.{c}").alias(c) for c in other]))
-    (latest.write.partitionBy("cluster").mode("overwrite")
-     .parquet(f"{path}/vectors/{BATCH_COL}={target}"))
+    write_batch(spark, target,
+                [(f"{path}/vectors", latest.write.partitionBy("cluster"))])
     # the new generation is committed (its _SUCCESS landed with the
     # write); only now retire the sources it replaced
-    fs, _ = _hadoop_fs(spark, path)
-    for d in dirs:
-        fs.delete(_hadoop_fs(spark, d)[1], True)
+    delete_dirs(spark, dirs)

@@ -13,11 +13,10 @@ batch):
   batch's commit marker (see ``batch_committed``).
 
 Exactly-once: every batch write is an OVERWRITE of that batch's own
-partition directory, so a foreachBatch crash-replay rewrites the same
-files instead of appending duplicates — (id, sig) and (id, band,
-bucket) rows are unique per (batch, doc) by construction. The partition
-column is ``batch_id`` (no leading underscore: Spark's file index
-treats ``_``-prefixed paths as hidden and would skip the partitions).
+partition directory (``batch_store.write_batch``), so a foreachBatch
+crash-replay rewrites the same files instead of appending duplicates —
+(id, sig) and (id, band, bucket) rows are unique per (batch, doc) by
+construction.
 
 A doc id re-ingested in a LATER batch (an edited document) legitimately
 appears in several partitions; reads resolve it latest-batch-wins at
@@ -60,8 +59,9 @@ from sunat_rree_demo_spark.sources.batch_store import (
     BATCH_COL,
     _hadoop_fs,
     all_batch_dirs,
-    clear_commit_marker,
     marker_committed,
+    retry_transient_write,
+    write_batch,
 )
 
 
@@ -89,61 +89,6 @@ def batch_committed(spark: SparkSession, path: str, batch_id: int) -> bool:
     the sigs partition (and, in the streaming flow, the pairs
     partition written before either) are complete."""
     return marker_committed(spark, f"{path}/bands", batch_id)
-
-
-#: error signatures of this box's intermittent storage blips (r7):
-#: a failed task write, or a raw EIO bubbling out of the JVM. Real
-#: correctness failures never match these.
-TRANSIENT_WRITE_ERRORS = ("TASK_WRITE_FAILED", "Input/output error")
-
-#: FileNotFoundException is transient ONLY on Spark-managed scratch /
-#: commit paths (a shuffle or temp file an EIO blip made unopenable);
-#: a missing DATA file is a genuine bug — a janitor reaping a live
-#: table or a torn-batch read surfaces with the same exception class
-#: (r6 actually shipped one), so the bare class name must never be a
-#: retry ticket (review finding r7).
-_FNF_SCRATCH_MARKERS = ("blockmgr-", "_temporary", "shuffle_",
-                        ".spark-staging", "temp_shuffle_")
-
-
-def is_transient_storage_error(exc: BaseException) -> bool:
-    """THE one test for 'this failure is a storage blip, retrying is
-    safe': a task-write failure / raw EIO signature anywhere in the
-    message, or a FileNotFoundException whose OWN path is Spark
-    scratch (shuffle, block manager, output-committer temp) rather
-    than data. The marker must sit on the same line as the exception
-    mention — a Py4J trace can carry a data-file FNF plus an
-    unrelated '_temporary' cleanup frame further down, and matching
-    anywhere would hand that genuine bug a retry (review finding
-    r8)."""
-    s = str(exc)
-    if any(t in s for t in TRANSIENT_WRITE_ERRORS):
-        return True
-    for seg in s.split("FileNotFoundException")[1:]:
-        line = seg.split("\n", 1)[0]
-        if any(m in line for m in _FNF_SCRATCH_MARKERS):
-            return True
-    return False
-
-
-def retry_transient_write(write_fn, cleanup=None) -> None:
-    """Run an idempotent overwrite-mode write, retrying ONCE on a
-    transient storage signature: local[*] runs with
-    spark.task.maxFailures=1, so a single blip (observed on this box:
-    intermittent EIO under load, r7) kills the whole job where a real
-    cluster would re-run the task. Overwrite semantics make the retry
-    safe; a second failure — or any non-transient error — propagates.
-    ``cleanup`` runs between attempts (e.g. DROP TABLE for a torn
-    saveAsTable). The ONE copy of the policy: sinks.write_bucketed_table
-    and the index writes all route through here."""
-    try:
-        write_fn()
-    except Exception as exc:  # noqa: BLE001 - retry-once, then re-raise
-        if not is_transient_storage_error(exc):
-            raise
-        if cleanup is not None:
-            cleanup()
-        write_fn()
 
 
 def write_minhash_index(docs: DataFrame, path: str, id_col: str = "doc_id",
@@ -191,9 +136,9 @@ def _write_generation(sig: DataFrame, path: str, batch_id: int,
 def _write_batch(spark: SparkSession, sig: DataFrame, path: str,
                  batch_id: int, id_col: str, k: int, bands: int) -> None:
     """Overwrite batch ``batch_id``'s partition of both tables from
-    ``sig`` — the one place the index's commit order lives: clear the
-    bands marker, write ``sigs/batch_id=N``, then ``bands/batch_id=N``
-    last, whose ``_SUCCESS`` commits the batch (``batch_committed``)."""
+    ``sig`` through ``batch_store.write_batch``: ``sigs`` first, then
+    ``bands`` last, whose ``_SUCCESS`` commits the batch
+    (``batch_committed``)."""
     # One file per partition (r12, guide §6): a batch's signature frame
     # inherits the shuffle partition count, and absorb used to write
     # 32 ~4.5 KB files PER BATCH PER TABLE, so after k batches every
@@ -203,14 +148,10 @@ def _write_batch(spark: SparkSession, sig: DataFrame, path: str,
     # size (≈ batch×k longs ≪ the 128 MB-1 GB/file target). coalesce
     # keeps the replay contract: same batch content → same rewritten
     # files.
-    clear_commit_marker(spark, f"{path}/bands/{BATCH_COL}={batch_id}")
-    retry_transient_write(
-        lambda: sig.coalesce(1).write.mode("overwrite").parquet(
-            f"{path}/sigs/{BATCH_COL}={batch_id}"))
-    retry_transient_write(
-        lambda: band_rows(sig, id_col, k, bands)
-        .coalesce(1).write.mode("overwrite").parquet(
-            f"{path}/bands/{BATCH_COL}={batch_id}"))
+    write_batch(spark, batch_id, [
+        (f"{path}/sigs", sig.coalesce(1).write),
+        (f"{path}/bands", band_rows(sig, id_col, k, bands).coalesce(1).write),
+    ])
 
 
 def absorb_batch(docs: DataFrame, path: str, batch_id: int,
@@ -218,13 +159,10 @@ def absorb_batch(docs: DataFrame, path: str, batch_id: int,
                  n: int = 5, k: int = MINHASH_K,
                  bands: int = LSH_BANDS,
                  sig: DataFrame | None = None) -> None:
-    """Idempotently absorb one identified batch: sigs then bands are
-    each OVERWRITTEN into their ``batch_id=N`` partition directory, so
-    a replay (foreachBatch crash recovery) rewrites identical files
-    rather than appending duplicates. Bands last = commit marker
-    (``batch_committed``) — its ``_SUCCESS`` is removed BEFORE the
-    rewrite so a replay's overwrite can't expose a torn partition to a
-    committed-only reader mid-delete.
+    """Idempotently absorb one identified batch (``_write_batch``:
+    sigs, then bands, the commit marker), so a replay (foreachBatch
+    crash recovery) rewrites identical files rather than appending
+    duplicates.
 
     A streaming handler that already computed the batch's signatures
     (``incremental_near_dup_pairs`` does) passes them via ``sig`` —

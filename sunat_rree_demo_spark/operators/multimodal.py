@@ -293,7 +293,7 @@ def _wav_chunks(payload: bytes):
             block_align, bits = struct.unpack("<HH", payload[i + 20:i + 24])
             if clen >= 20 and i + 28 <= len(payload):
                 (spb,) = struct.unpack("<H", payload[i + 26:i + 28])
-        elif cid == b"fact" and clen >= 4:
+        elif cid == b"fact" and clen >= 4 and i + 12 <= len(payload):
             fact = payload[i + 8:i + 12]
         elif cid == b"data":
             data_at, data_len = i + 8, clen

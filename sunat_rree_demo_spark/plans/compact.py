@@ -31,7 +31,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
-from sunat_rree_demo_spark.sources.batch_store import _hadoop_fs
+from sunat_rree_demo_spark.sources.batch_store import _hadoop_fs, _hadoop_path
 
 
 @dataclass(frozen=True)
@@ -47,11 +47,10 @@ def _data_files(fs, jpath):
             if st.isFile() and not st.getPath().getName().startswith(("_", "."))]
 
 
-def _tmp_path(spark: SparkSession, part_path: str):
-    jvm = spark.sparkContext._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(part_path)
-    return jvm.org.apache.hadoop.fs.Path(
-        jpath.getParent(), f"_compact_tmp_{jpath.getName()}")
+def _tmp_path(part_path: str) -> str:
+    """The ``_compact_tmp_<dir>`` sibling of ``part_path``."""
+    parent, sep, name = part_path.rstrip("/").rpartition("/")
+    return f"{parent}{sep}_compact_tmp_{name}"
 
 
 def compaction_census(spark: SparkSession, root: str,
@@ -88,12 +87,12 @@ def _finish_pending_swap(spark: SparkSession, fs, part_path: str) -> bool:
     the temp in. A temp without _SUCCESS, or one next to a still-
     populated partition, is a stale partial — delete it. Returns True
     if a rename was performed."""
-    jvm = spark.sparkContext._jvm
-    tmp = _tmp_path(spark, part_path)
+    tmp_dir = _tmp_path(part_path)
+    tmp = _hadoop_path(spark, tmp_dir)
     if not fs.exists(tmp):
         return False
-    part = jvm.org.apache.hadoop.fs.Path(part_path)
-    committed = fs.exists(jvm.org.apache.hadoop.fs.Path(tmp, "_SUCCESS"))
+    part = _hadoop_path(spark, part_path)
+    committed = fs.exists(_hadoop_path(spark, f"{tmp_dir}/_SUCCESS"))
     part_has_data = fs.exists(part) and bool(_data_files(fs, part))
     if committed and not part_has_data:
         if fs.exists(part):
@@ -136,16 +135,16 @@ def compact_parquet(spark: SparkSession, root: str,
     for c in compaction_census(spark, root, target_bytes):
         if c.n_files <= max(c.target_files, min_files_to_compact):
             continue
-        tmp = _tmp_path(spark, c.path)
-        if fs.exists(tmp):  # stale partial from a failed attempt
-            fs.delete(tmp, True)
+        tmp = _tmp_path(c.path)
+        jtmp = _hadoop_path(spark, tmp)
+        if fs.exists(jtmp):  # stale partial from a failed attempt
+            fs.delete(jtmp, True)
         (spark.read.parquet(c.path)
          .repartition(c.target_files)
-         .write.parquet(tmp.toString()))
+         .write.parquet(tmp))
         # the committed temp is now the durable copy; swap it in
-        jvm = spark.sparkContext._jvm
-        part = jvm.org.apache.hadoop.fs.Path(c.path)
+        part = _hadoop_path(spark, c.path)
         fs.delete(part, True)
-        fs.rename(tmp, part)
+        fs.rename(jtmp, part)
         acted.append(c)
     return acted

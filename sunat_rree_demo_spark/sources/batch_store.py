@@ -8,8 +8,10 @@ instead of appending). A batch is visible only once the ``_SUCCESS``
 of its LAST-written table exists: which table that is stays the
 store's own decision (``bands`` for the dedup index, ``kept`` for
 bloom/media, …), so every check here takes the marker directory
-explicitly. A rewrite of a committed partition clears the marker
-first (``clear_commit_marker``) and its write recreates it last.
+explicitly. Every batch is written by ``write_batch``, which clears
+the marker first, writes the tables in order with the marker table
+last, and runs each write under the one storage-retry policy
+(``retry_transient_write``).
 
 Readers use ``read_committed`` (every committed batch as one frame,
 an empty store as an empty frame of the caller's schema) or, for the
@@ -32,24 +34,29 @@ from sunat_rree_demo_spark.localrel import local_df
 BATCH_COL = "batch_id"
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) for ``path`` via the JVM Hadoop API — works
-    for any supported filesystem (local, HDFS, object stores), unlike
-    ``os.path`` probes.
+def _hadoop_path(spark: SparkSession, path: str):
+    """The JVM Hadoop ``Path`` for ``path``: one round trip.
 
     The Path class and the Hadoop configuration are resolved once per
     SparkContext and kept on it: py4j resolves ``org.apache.hadoop.fs.
     Path`` one package segment per round trip, so looking both up on
-    every call makes a path check 9 round trips instead of 3. A restarted context is a
-    new object, so it never sees a stopped one's configuration."""
+    every call makes a path check 9 round trips instead of 3. A
+    restarted context is a new object, so it never sees a stopped
+    one's configuration."""
     sc = spark.sparkContext
     hadoop = getattr(sc, "_hadoop_path_conf", None)
     if hadoop is None:
         hadoop = sc._hadoop_path_conf = (
             sc._jvm.org.apache.hadoop.fs.Path, sc._jsc.hadoopConfiguration())
-    path_cls, conf = hadoop
-    jpath = path_cls(path)
-    return jpath.getFileSystem(conf), jpath
+    return hadoop[0](path)
+
+
+def _hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path) for ``path`` via the JVM Hadoop API — works
+    for any supported filesystem (local, HDFS, object stores), unlike
+    ``os.path`` probes."""
+    jpath = _hadoop_path(spark, path)
+    return jpath.getFileSystem(spark.sparkContext._hadoop_path_conf[1]), jpath
 
 
 def analysis_error_is(exc: Exception, *classes: str) -> bool:
@@ -75,6 +82,98 @@ def clear_commit_marker(spark: SparkSession, dir_path: str) -> None:
     fs, marker = _hadoop_fs(spark, f"{dir_path}/_SUCCESS")
     if fs.exists(marker):
         fs.delete(marker, False)
+
+
+def touch_marker(spark: SparkSession, dir_path: str,
+                 name: str = "_SUCCESS") -> None:
+    """(Re)create ``dir_path/<name>`` — the inverse of
+    ``clear_commit_marker``: restores a batch's commit marker after an
+    in-place maintenance rewrite, or lays a store's own marker file
+    (the sketch store's ``_COVERS_<n>``) once its write committed."""
+    fs, marker = _hadoop_fs(spark, f"{dir_path}/{name}")
+    fs.create(marker, True).close()
+
+
+def delete_dirs(spark: SparkSession, dirs: list[str]) -> None:
+    """Recursively delete every directory in ``dirs`` (one store's,
+    so one filesystem): the FileSystem is resolved once per call."""
+    if dirs:
+        fs, _ = _hadoop_fs(spark, dirs[0])
+        for d in dirs:
+            fs.delete(_hadoop_path(spark, d), True)
+
+
+#: error signatures of intermittent storage blips: a failed task
+#: write, or a raw EIO bubbling out of the JVM. Real correctness
+#: failures never match these.
+TRANSIENT_WRITE_ERRORS = ("TASK_WRITE_FAILED", "Input/output error")
+
+#: FileNotFoundException is transient ONLY on Spark-managed scratch /
+#: commit paths (a shuffle or temp file an EIO blip made unopenable);
+#: a missing DATA file is a genuine bug — a janitor reaping a live
+#: table or a torn-batch read surfaces with the same exception class,
+#: so the bare class name must never be a retry ticket.
+_FNF_SCRATCH_MARKERS = ("blockmgr-", "_temporary", "shuffle_",
+                        ".spark-staging", "temp_shuffle_")
+
+
+def is_transient_storage_error(exc: BaseException) -> bool:
+    """THE one test for 'this failure is a storage blip, retrying is
+    safe': a task-write failure / raw EIO signature anywhere in the
+    message, or a FileNotFoundException whose OWN path is Spark
+    scratch (shuffle, block manager, output-committer temp) rather
+    than data. The marker must sit on the same line as the exception
+    mention — a Py4J trace can carry a data-file FNF plus an
+    unrelated '_temporary' cleanup frame further down, and matching
+    anywhere would hand that genuine bug a retry."""
+    s = str(exc)
+    if any(t in s for t in TRANSIENT_WRITE_ERRORS):
+        return True
+    for seg in s.split("FileNotFoundException")[1:]:
+        line = seg.split("\n", 1)[0]
+        if any(m in line for m in _FNF_SCRATCH_MARKERS):
+            return True
+    return False
+
+
+def retry_transient_write(write_fn, cleanup=None) -> None:
+    """Run an idempotent overwrite-mode write, retrying ONCE on a
+    transient storage signature: local[*] runs with
+    spark.task.maxFailures=1, so a single blip (intermittent EIO under
+    load) kills the whole job where a real cluster would re-run the
+    task. Overwrite semantics make the retry
+    safe; a second failure — or any non-transient error — propagates.
+    ``cleanup`` runs between attempts (e.g. DROP TABLE for a torn
+    saveAsTable). The ONE copy of the policy: ``write_batch``, the
+    dedup index's generation write and sinks.write_bucketed_table all
+    route through here."""
+    try:
+        write_fn()
+    except Exception as exc:  # noqa: BLE001 - retry-once, then re-raise
+        if not is_transient_storage_error(exc):
+            raise
+        if cleanup is not None:
+            cleanup()
+        write_fn()
+
+
+def write_batch(spark: SparkSession, batch_id: int, tables) -> None:
+    """Overwrite and commit batch ``batch_id`` of every table in
+    ``tables``, an ordered list of ``(table_dir, DataFrameWriter)``
+    (``df.write``, ``df.coalesce(1).write``,
+    ``df.write.partitionBy("cluster")``) whose LAST table is the
+    marker table: its ``batch_id=N/_SUCCESS`` is cleared first, then
+    each table's ``batch_id=N`` partition is overwritten in list
+    order, so the marker comes back last and a crash anywhere leaves
+    the batch uncommitted for a replay to rewrite. Each write is an
+    overwrite of its own partition, so ``retry_transient_write`` may
+    run it twice; a retry re-runs the same writer."""
+    marker_table = tables[-1][0]
+    clear_commit_marker(spark, f"{marker_table}/{BATCH_COL}={batch_id}")
+    for table_dir, writer in tables:
+        part = f"{table_dir}/{BATCH_COL}={batch_id}"
+        retry_transient_write(
+            lambda w=writer, p=part: w.mode("overwrite").parquet(p))
 
 
 def marker_committed(spark: SparkSession, marker_dir: str,

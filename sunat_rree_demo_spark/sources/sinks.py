@@ -27,9 +27,7 @@ def write_bucketed_table(spark: SparkSession, df: DataFrame, name: str,
     (``spark.sql.requireAllClusterKeysForCoPartition``), a table
     bucketed on a subset of the join keys is planned with the bucketing
     disabled and shuffles anyway."""
-    from sunat_rree_demo_spark.operators.dedup_index import (
-        retry_transient_write,
-    )
+    from sunat_rree_demo_spark.sources.batch_store import retry_transient_write
 
     cols = [bucket_col] if isinstance(bucket_col, str) else list(bucket_col)
 

@@ -54,13 +54,14 @@ from sunat_rree_demo_spark.localrel import local_df
 from sunat_rree_demo_spark.operators.dedup import base_hash_col
 from sunat_rree_demo_spark.sources.batch_store import (
     BATCH_COL,
-    _hadoop_fs,
     all_batch_dirs,
     clear_commit_marker,
     committed_batch_dirs,
+    delete_dirs,
     drain,
     marker_committed,
     read_committed,
+    write_batch,
 )
 
 BLOOM_WORDS = 256                   #: m = 256·63 = 16128 bits
@@ -133,23 +134,18 @@ def process_bloom_batch(spark: SparkSession, batch_df: DataFrame,
           n_false_pos, n_kept)],
         "batch_id long, n_docs long, n_unique long, n_definite_new long, "
         "n_maybe long, n_false_pos long, n_kept long")
-    # the batch becomes uncommitted for the whole rewrite window (a
-    # crash replay re-enters here), then the kept write restores the
-    # marker LAST
-    clear_commit_marker(spark, f"{store_path}/kept/{BATCH_COL}={batch_id}")
-    (stats.write.mode("overwrite")
-     .parquet(f"{store_path}/stats/{BATCH_COL}={batch_id}"))
-    (kept.select("dg").write.mode("overwrite")
-     .parquet(f"{store_path}/digests/{BATCH_COL}={batch_id}"))
-    (kept.select(F.explode(_positions(F.col("dg"))).alias("pos"))
-     .select((F.col("pos") / 63).cast("bigint").alias("word"),
-             F.expr("shiftleft(CAST(1 AS BIGINT), "
-                    "CAST(pos % 63 AS INT))").alias("mk"))
-     .groupBy("word").agg(F.bit_or("mk").alias("m"))
-     .write.mode("overwrite")
-     .parquet(f"{store_path}/bloom/{BATCH_COL}={batch_id}"))
-    (kept.write.mode("overwrite")
-     .parquet(f"{store_path}/kept/{BATCH_COL}={batch_id}"))
+    words = (
+        kept.select(F.explode(_positions(F.col("dg"))).alias("pos"))
+        .select((F.col("pos") / 63).cast("bigint").alias("word"),
+                F.expr("shiftleft(CAST(1 AS BIGINT), "
+                       "CAST(pos % 63 AS INT))").alias("mk"))
+        .groupBy("word").agg(F.bit_or("mk").alias("m")))
+    write_batch(spark, batch_id, [
+        (f"{store_path}/stats", stats.write),
+        (f"{store_path}/digests", kept.select("dg").write),
+        (f"{store_path}/bloom", words.write),
+        (f"{store_path}/kept", kept.write),  # the commit marker, last
+    ])
 
 
 def run_bloom_dedup_stream(spark: SparkSession, docs_stream: DataFrame,
@@ -202,22 +198,18 @@ def compact_bloom_store(spark: SparkSession, store_path: str) -> None:
     merged_bloom = (spark.read.parquet(*dirs_b.values())
                     .groupBy("word").agg(F.bit_or("m").alias("m"))
                     .localCheckpoint())
-    (merged_dg.write.mode("overwrite")
-     .parquet(f"{store_path}/digests/{BATCH_COL}={target}"))
-    (merged_bloom.write.mode("overwrite")
-     .parquet(f"{store_path}/bloom/{BATCH_COL}={target}"))
     # commit: an empty kept partition carries the target's marker
     kept_schema = spark.read.parquet(f"{kept}/{BATCH_COL}={bids[0]}").schema
-    (local_df(spark, [], kept_schema).write.mode("overwrite")
-     .parquet(f"{kept}/{BATCH_COL}={target}"))
-    fs, _ = _hadoop_fs(spark, store_path)
-    for d in [*dirs_d.values(), *dirs_b.values()]:
-        fs.delete(_hadoop_fs(spark, d)[1], True)
+    write_batch(spark, target, [
+        (f"{store_path}/digests", merged_dg.write),
+        (f"{store_path}/bloom", merged_bloom.write),
+        (kept, local_df(spark, [], kept_schema).write),
+    ])
     # superseded negative generations' EMPTY kept markers go too (the
     # positive kept dirs are real history and stay); without this,
     # periodic compaction leaks one marker partition per run
-    for bid in {b for b in bids if b < 0}:
-        fs.delete(_hadoop_fs(spark, f"{kept}/{BATCH_COL}={bid}")[1], True)
+    delete_dirs(spark, [*dirs_d.values(), *dirs_b.values(),
+                        *(f"{kept}/{BATCH_COL}={b}" for b in bids if b < 0)])
 
 
 def forget_docs(spark: SparkSession, store_path: str, ids: list,

@@ -27,10 +27,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 from sunat_rree_demo_spark.operators.clustering import assign_under
 from sunat_rree_demo_spark.sources.batch_store import (
-    BATCH_COL,
     drain,
     marker_committed,
     read_committed,
+    write_batch,
 )
 
 EMB_FILE_SCHEMA = "vec_id long, embedding array<float>, label int"
@@ -55,8 +55,7 @@ def process_assign_batch(spark: SparkSession, batch_df: DataFrame,
     if marker_committed(spark, f"{store_path}/assign", batch_id):
         return
     out = assign_under(batch_df, centroids, id_col=id_col, vec_col=vec_col)
-    (out.write.mode("overwrite")
-     .parquet(f"{store_path}/assign/{BATCH_COL}={batch_id}"))
+    write_batch(spark, batch_id, [(f"{store_path}/assign", out.write)])
 
 
 def run_cluster_stream(spark: SparkSession, emb_stream: DataFrame,

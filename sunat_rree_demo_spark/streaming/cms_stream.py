@@ -32,10 +32,9 @@ from sunat_rree_demo_spark.operators.sketches import (
 )
 from sunat_rree_demo_spark.operators.text import tokens
 from sunat_rree_demo_spark.sources.batch_store import (
-    BATCH_COL,
-    clear_commit_marker,
     marker_committed,
     read_committed,
+    write_batch,
 )
 
 
@@ -47,14 +46,8 @@ def absorb_tokens_batch(spark: SparkSession, batch_df: DataFrame,
     skipped, an interrupted one is overwritten whole)."""
     if marker_committed(spark, cms_path, batch_id):
         return
-    # drop the commit marker BEFORE the overwrite: the delete phase
-    # removes files in unspecified order, so load_cms could otherwise
-    # see _SUCCESS while counter files are already gone mid-rewrite
-    clear_commit_marker(spark, f"{cms_path}/{BATCH_COL}={batch_id}")
     tk = batch_df.select(F.explode(tokens(F.col(text_col))).alias("term"))
-    (cms_partial_counts(tk)
-     .write.mode("overwrite")
-     .parquet(f"{cms_path}/{BATCH_COL}={batch_id}"))
+    write_batch(spark, batch_id, [(cms_path, cms_partial_counts(tk).write)])
 
 
 def cms_ingest_handler(spark: SparkSession, cms_path: str,

@@ -59,6 +59,7 @@ from sunat_rree_demo_spark.sources.batch_store import (
     BATCH_COL,
     committed_batch_dirs,
     drain,
+    write_batch,
 )
 
 
@@ -102,16 +103,14 @@ def process_curate_batch(spark: SparkSession, batch_df: DataFrame,
     gated = gate_docs(
         batch_df, probe, id_col, text_col, min_quality,
         contamination_n, contamination_min_overlap).localCheckpoint()
-    (gated.write.mode("overwrite")
-     .parquet(f"{store_path}/docs/{BATCH_COL}={batch_id}"))
     # one signature pass shared by probe and absorb (see dedup_stream)
     sig = minhash_signatures(gated, id_col, text_col).localCheckpoint()
-    (incremental_near_dup_pairs(spark, gated, index_path,
-                                id_col=id_col, text_col=text_col,
-                                threshold=near_dup_threshold,
-                                new_sig=sig)
-     .write.mode("overwrite")
-     .parquet(f"{store_path}/pairs/{BATCH_COL}={batch_id}"))
+    pairs = incremental_near_dup_pairs(spark, gated, index_path,
+                                       id_col=id_col, text_col=text_col,
+                                       threshold=near_dup_threshold,
+                                       new_sig=sig)
+    write_batch(spark, batch_id, [(f"{store_path}/docs", gated.write),
+                                  (f"{store_path}/pairs", pairs.write)])
     absorb_batch(gated, index_path, batch_id,
                  id_col=id_col, text_col=text_col, sig=sig)
 

@@ -43,7 +43,7 @@ from sunat_rree_demo_spark.operators.dedup_index import (
     batch_committed,
     incremental_near_dup_pairs,
 )
-from sunat_rree_demo_spark.sources.batch_store import BATCH_COL, drain
+from sunat_rree_demo_spark.sources.batch_store import drain, write_batch
 
 #: documents.parquet logical schema (file-source streams need one).
 DOCS_FILE_SCHEMA = T.StructType([
@@ -90,10 +90,9 @@ def process_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
     # checkpointed.
     sig = minhash_signatures(batch_df, "doc_id", "text").localCheckpoint()
     t1 = time.monotonic()
-    (incremental_near_dup_pairs(spark, batch_df, index_path,
-                                threshold=threshold, new_sig=sig)
-     .write.mode("overwrite")
-     .parquet(f"{pairs_path}/{BATCH_COL}={batch_id}"))
+    pairs = incremental_near_dup_pairs(spark, batch_df, index_path,
+                                       threshold=threshold, new_sig=sig)
+    write_batch(spark, batch_id, [(pairs_path, pairs.write)])
     t2 = time.monotonic()
     absorb_batch(batch_df, index_path, batch_id, sig=sig)
     if timings is not None:

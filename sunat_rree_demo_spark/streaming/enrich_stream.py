@@ -28,10 +28,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 from sunat_rree_demo_spark.operators.range_join import point_in_interval_join
 from sunat_rree_demo_spark.sources.batch_store import (
-    BATCH_COL,
     committed_batch_dirs,
     drain,
     marker_committed,
+    write_batch,
 )
 
 
@@ -52,8 +52,7 @@ def process_enrich_batch(spark: SparkSession, batch_df: DataFrame,
     intervals = spark.read.parquet(f"{store_path}/intervals")
     out = point_in_interval_join(batch_df, intervals, point_col,
                                  lo_col, hi_col, bucket_width)
-    (out.write.mode("overwrite")
-     .parquet(f"{store_path}/out/{BATCH_COL}={batch_id}"))
+    write_batch(spark, batch_id, [(f"{store_path}/out", out.write)])
 
 
 def run_enrich_stream(spark: SparkSession, points_stream: DataFrame,

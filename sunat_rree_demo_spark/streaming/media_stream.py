@@ -70,10 +70,10 @@ from sunat_rree_demo_spark.operators.multimodal import (
 from sunat_rree_demo_spark.plans.curate_media import route_media
 from sunat_rree_demo_spark.sources.batch_store import (
     BATCH_COL,
-    clear_commit_marker,
     drain,
     marker_committed,
     read_committed,
+    write_batch,
 )
 
 
@@ -166,15 +166,12 @@ def process_media_batch(spark: SparkSession, batch_df: DataFrame,
           kept.count())],
         f"{BATCH_COL} long, n_media long, n_hashed long, "
         "n_ungated long, n_kept long")
-    # uncommitted for the whole rewrite window; kept restores LAST
-    clear_commit_marker(spark, f"{store_path}/kept/{BATCH_COL}={batch_id}")
-    (stats.write.mode("overwrite")
-     .parquet(f"{store_path}/stats/{BATCH_COL}={batch_id}"))
-    (kept.filter(F.col("dhash").isNotNull()).select("dhash")
-     .write.mode("overwrite")
-     .parquet(f"{store_path}/hashes/{BATCH_COL}={batch_id}"))
-    (kept.write.mode("overwrite")
-     .parquet(f"{store_path}/kept/{BATCH_COL}={batch_id}"))
+    write_batch(spark, batch_id, [
+        (f"{store_path}/stats", stats.write),
+        (f"{store_path}/hashes",
+         kept.filter(F.col("dhash").isNotNull()).select("dhash").write),
+        (f"{store_path}/kept", kept.write),  # the commit marker, last
+    ])
 
 
 def run_media_dedup_stream(spark: SparkSession, media_stream: DataFrame,

@@ -40,11 +40,10 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from sunat_rree_demo_spark.operators.dedup import rolling_window_keys
 from sunat_rree_demo_spark.sources.batch_store import (
-    BATCH_COL,
-    clear_commit_marker,
     drain,
     marker_committed,
     read_committed,
+    write_batch,
 )
 
 
@@ -90,15 +89,10 @@ def process_novelty_batch(spark: SparkSession, batch_df: DataFrame,
             F.expr("(2*10000*n_novel + n_windows) div (2*n_windows)")
             .cast("double") / 10000.0)
     )
-    (stats.write.mode("overwrite")
-     .parquet(f"{store_path}/stats/{BATCH_COL}={batch_id}"))
-    # drop the commit marker before the keys rewrite (see
-    # batch_store.clear_commit_marker: closes the mid-delete window
-    # where a committed-only reader could take a torn partition)
-    clear_commit_marker(spark, f"{store_path}/keys/{BATCH_COL}={batch_id}")
-    (fresh.select("key").distinct()
-     .write.mode("overwrite")
-     .parquet(f"{store_path}/keys/{BATCH_COL}={batch_id}"))
+    write_batch(spark, batch_id, [
+        (f"{store_path}/stats", stats.write),
+        (f"{store_path}/keys", fresh.select("key").distinct().write),
+    ])
 
 
 def run_novelty_stream(spark: SparkSession, docs_stream: DataFrame,

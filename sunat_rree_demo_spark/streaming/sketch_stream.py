@@ -39,10 +39,12 @@ from sunat_rree_demo_spark.sources.batch_store import (
     BATCH_COL,
     _hadoop_fs,
     all_batch_dirs,
-    clear_commit_marker,
     committed_batch_dirs,
+    delete_dirs,
     drain,
     marker_committed,
+    touch_marker,
+    write_batch,
 )
 
 
@@ -91,9 +93,7 @@ def process_sketch_batch(spark: SparkSession, batch_df: DataFrame,
     if marker_committed(spark, f"{store_path}/hist", batch_id):
         return
     part = equi_width_histogram(batch_df, F.col(cents_col), width)
-    clear_commit_marker(spark, f"{store_path}/hist/{BATCH_COL}={batch_id}")
-    (part.write.mode("overwrite")
-     .parquet(f"{store_path}/hist/{BATCH_COL}={batch_id}"))
+    write_batch(spark, batch_id, [(f"{store_path}/hist", part.write)])
 
 
 def merged_sketch(spark: SparkSession, store_path: str) -> DataFrame:
@@ -129,7 +129,6 @@ def compact_sketch(spark: SparkSession, store_path: str) -> None:
     readers already resolve through the marker, a re-run finishes the
     cleanup."""
     hist = f"{store_path}/hist"
-    fs, _ = _hadoop_fs(spark, hist)
     every = all_batch_dirs(spark, hist)
     dirs = _visible_hist_dirs(spark, store_path)
     if not dirs:
@@ -150,26 +149,23 @@ def compact_sketch(spark: SparkSession, store_path: str) -> None:
         # crashed compaction left behind, so the rebuild never
         # overwrites one mid-heal under a reused id
         target = min(min(every), 0) - 1
-        tdir = f"{hist}/{BATCH_COL}={target}"
         merged = merge_histograms(spark.read.parquet(*dirs))
-        merged.write.mode("overwrite").parquet(tdir)
+        write_batch(spark, target, [(hist, merged.write)])
         covers = max([b for b in bids if b >= 0], default=-1)
         if min(bids) < 0:  # absorbed generation's covers carry over
             cov = _covers_of(spark, dirs[0])
             covers = max(covers, cov if cov is not None else -1)
-        fs.create(_hadoop_fs(spark, f"{tdir}/_COVERS_{covers}")[1],
-                  True).close()
+        touch_marker(spark, f"{hist}/{BATCH_COL}={target}",
+                     f"_COVERS_{covers}")
     # the target is visible now; retire everything it absorbed or
     # supersedes — other negative generations (incl. torn targets),
     # the merged positives, and committed positive leftovers a crashed
     # delete phase left under the covers mark. Positive TORN batches
     # belong to the stream writer and heal by replay — leave them.
-    for bid, d in every.items():
-        if bid == target:
-            continue
-        if bid < 0 or bid in set(bids) or (
-                bid <= covers and marker_committed(spark, hist, bid)):
-            fs.delete(_hadoop_fs(spark, d)[1], True)
+    delete_dirs(spark, [
+        d for bid, d in every.items() if bid != target and (
+            bid < 0 or bid in bids
+            or (bid <= covers and marker_committed(spark, hist, bid)))])
 
 
 def run_sketch_stream(spark: SparkSession, stream: DataFrame,

@@ -7,8 +7,11 @@ import os
 import threading
 import time
 
+import numpy as np
 import pytest
 from pyspark.errors import AnalysisException
+
+from tests.conftest import SF_SMOKE
 
 
 def _store(root):
@@ -232,3 +235,317 @@ def test_read_or_empty_reraises_other_analysis_errors(spark, tmp_path):
     with pytest.raises(_Cond, match="corrupt footer"):
         dedup_index._read_or_empty(
             _ReadFails(other, spark.sparkContext), str(tmp_path), "s")
+
+
+# --- the one writer --------------------------------------------------------
+
+
+def test_write_batch_retries_with_the_same_writer(spark, tmp_path):
+    """A transient failure re-runs the SAME DataFrameWriter, which keeps
+    its partitioning and runs the write again, and the batch commits."""
+    import shutil
+
+    from sunat_rree_demo_spark.sources.batch_store import (
+        marker_committed,
+        write_batch,
+    )
+
+    class BlipOnce:
+        """The real writer, whose first write lands and is then lost to
+        an injected storage blip."""
+
+        def __init__(self, writer, part):
+            self.writer, self.part, self.calls = writer, part, 0
+
+        def mode(self, mode):
+            self.writer.mode(mode)
+            return self
+
+        def parquet(self, path):
+            self.calls += 1
+            self.writer.parquet(path)
+            if self.calls == 1:
+                shutil.rmtree(self.part)
+                raise OSError("java.io.IOException: Input/output error")
+
+    df = spark.range(6).selectExpr("id", "id % 2 AS cell")
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    flaky = BlipOnce(df.write.partitionBy("cell"), f"{b}/batch_id=4")
+    write_batch(spark, 4, [(a, df.write), (b, flaky)])
+    assert flaky.calls == 2
+    assert {"_SUCCESS", "cell=0", "cell=1"} \
+        <= set(os.listdir(f"{b}/batch_id=4"))
+    assert marker_committed(spark, b, 4)
+    assert spark.read.parquet(b).count() == 6
+
+
+def _docs(spark, lo, hi, reship=()):
+    """Documents ``lo <= doc_id < hi`` of the smoke warehouse, plus the
+    texts of ``reship`` under new ids (cross-batch duplicates)."""
+    from sunat_rree_demo_spark.sources.catalog import load_table
+
+    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
+    batch = docs.filter(f"doc_id >= {lo} AND doc_id < {hi}")
+    if reship:
+        batch = batch.unionByName(
+            docs.filter(f"doc_id IN ({','.join(map(str, reship))})")
+            .selectExpr("doc_id + 100000 AS doc_id", "text"))
+    return batch
+
+
+def _media(spark, rows):
+    from sunat_rree_demo_spark.operators.multimodal import (
+        encode_gif_gray,
+        encode_jpeg_gray_blocks,
+        encode_png_gray,
+    )
+
+    rng = np.random.RandomState(5)
+    texts = [bytes(rng.randint(32, 127, 72, dtype=np.uint8).astype(np.uint8))
+             for _ in range(6)]
+    enc = (encode_png_gray, encode_jpeg_gray_blocks, encode_gif_gray)
+    return spark.createDataFrame(
+        [(i, bytearray(b"\x00junk" if t is None else enc[f](texts[t], 9)))
+         for i, t, f in rows], "media_id long, content binary")
+
+
+def _emb(spark, lo, hi):
+    from sunat_rree_demo_spark.sources.catalog import load_table
+
+    return load_table(spark, SF_SMOKE, "embeddings") \
+        .filter(f"vec_id >= {lo} AND vec_id < {hi}")
+
+
+def _rows(*frames):
+    return [sorted(repr(tuple(r)) for r in f.collect()) for f in frames]
+
+
+def _store_cases():
+    """name -> (module whose replay check the forced rewrite bypasses,
+    marker table, setup, the two batches, handler, committed reader)
+    for every per-batch store writer."""
+    from sunat_rree_demo_spark.operators import ann_index, dedup_index
+    from sunat_rree_demo_spark.sources.batch_store import read_committed
+    from sunat_rree_demo_spark.streaming import (
+        bloom_stream,
+        cluster_stream,
+        cms_stream,
+        enrich_stream,
+        media_stream,
+        novelty_stream,
+        sketch_stream,
+    )
+
+    cent = np.array([[0, 0], [1_000_000, 1_000_000]], dtype=np.int64)
+
+    def points(spark, rows):
+        return spark.createDataFrame(rows, "pid long, p long")
+
+    def vecs(spark, rows):
+        return spark.createDataFrame(rows,
+                                     "vec_id long, embedding array<float>")
+
+    def cents(spark, rows):
+        return spark.createDataFrame([(c,) for c in rows],
+                                     "price_cents long")
+
+    def intervals(spark, store):
+        enrich_stream.write_interval_store(spark.createDataFrame(
+            [(7, 0, 100), (8, 90, 300)], "iid long, lo long, hi long"),
+            store)
+
+    def ivf(spark, store):
+        ann_index.write_ivf_index(_emb(spark, 0, 100), store, k=4, iters=1)
+
+    def index_rows(spark, store):
+        return _rows(*[read_committed(
+            spark, f"{store}/{t}", f"{store}/bands", "doc_id long")
+            for t in ("sigs", "bands")])
+
+    docs = (lambda s: _docs(s, 0, 40),
+            lambda s: _docs(s, 40, 80, reship=(1, 2, 3)))
+    return {
+        "bloom": (bloom_stream, "kept", None, docs,
+                  bloom_stream.process_bloom_batch,
+                  lambda s, st: _rows(bloom_stream.load_kept(s, st),
+                                      bloom_stream.load_gate_stats(s, st),
+                                      bloom_stream.current_bloom(s, st))),
+        "media": (media_stream, "kept", None,
+                  (lambda s: _media(s, [(1, 0, 0), (2, 1, 0), (3, 2, 0)]),
+                   lambda s: _media(s, [(4, 0, 2), (5, 3, 1), (6, None, 0)])),
+                  media_stream.process_media_batch,
+                  lambda s, st: _rows(media_stream.load_kept(s, st),
+                                      media_stream.load_gate_stats(s, st))),
+        "novelty": (novelty_stream, "keys", None, docs,
+                    novelty_stream.process_novelty_batch,
+                    lambda s, st: _rows(
+                        novelty_stream.load_novelty_stats(s, st),
+                        novelty_stream.seen_keys(s, st))),
+        "cms": (cms_stream, "", None, docs,
+                cms_stream.absorb_tokens_batch,
+                lambda s, st: _rows(cms_stream.load_cms(s, st))),
+        "sketch": (sketch_stream, "hist", None,
+                   (lambda s: cents(s, [100, 250, 999]),
+                    lambda s: cents(s, [100, 50_000])),
+                   lambda s, df, bid, st: sketch_stream.process_sketch_batch(
+                       s, df, bid, st, width=100),
+                   lambda s, st: _rows(sketch_stream.merged_sketch(s, st))),
+        "cluster": (cluster_stream, "assign", None,
+                    (lambda s: vecs(s, [(1, [0.1, 0.0]), (2, [0.9, 1.1])]),
+                     lambda s: vecs(s, [(3, [0.0, 0.2]), (4, [1.0, 0.9])])),
+                    lambda s, df, bid, st: cluster_stream.process_assign_batch(
+                        s, df, bid, st, cent),
+                    lambda s, st: _rows(
+                        cluster_stream.load_assignments(s, st))),
+        "enrich": (enrich_stream, "out", intervals,
+                   (lambda s: points(s, [(1, 50), (2, 500)]),
+                    lambda s: points(s, [(3, 99), (4, 250)])),
+                   lambda s, df, bid, st: enrich_stream.process_enrich_batch(
+                       s, df, bid, st, "p", "lo", "hi", 64),
+                   lambda s, st: _rows(enrich_stream.load_enriched(s, st))),
+        "ivf": (ann_index, "vectors", ivf,
+                (lambda s: _emb(s, 100, 150),
+                 lambda s: _emb(s, 150, 200).unionByName(_emb(s, 0, 10))),
+                lambda s, df, bid, st: ann_index.absorb_ivf_batch(
+                    s, df, st, bid),
+                lambda s, st: _rows(
+                    s.read.option("basePath", f"{st}/vectors")
+                    .parquet(*ann_index.committed_vector_dirs(s, st)))),
+        "dedup_index": (None, "bands", None, docs,
+                        lambda s, df, bid, st: dedup_index.absorb_batch(
+                            df, st, bid),
+                        index_rows),
+    }
+
+
+#: (store, k) for every write step k of the store's per-batch writer
+_CRASH_POINTS = [(name, k) for name, n in (
+    ("bloom", 4), ("media", 3), ("novelty", 2), ("cms", 1), ("sketch", 1),
+    ("cluster", 1), ("enrich", 1), ("ivf", 1), ("dedup_index", 2))
+    for k in range(n)]
+
+
+@pytest.fixture(scope="module")
+def committed_stores(spark, tmp_path_factory):
+    """Per store, built once: a store holding committed batches 0 and
+    1, and its committed reader's view after batch 0 and after batch 1
+    (an uninterrupted run)."""
+    built = {}
+
+    def get(name):
+        if name not in built:
+            _mod, _mark, setup, batches, handle, read = _store_cases()[name]
+            store = str(tmp_path_factory.mktemp(f"crash_{name}") / "store")
+            if setup is not None:
+                setup(spark, store)
+            handle(spark, batches[0](spark), 0, store)
+            before = read(spark, store)
+            handle(spark, batches[1](spark), 1, store)
+            built[name] = (store, before, read(spark, store))
+        return built[name]
+
+    return get
+
+
+@pytest.mark.parametrize("name, k", _CRASH_POINTS,
+                         ids=[f"{n}-before-write-{k + 1}"
+                              for n, k in _CRASH_POINTS])
+def test_crash_at_every_store_write_step(spark, tmp_path, monkeypatch,
+                                         committed_stores, name, k):
+    """A re-write of committed batch 1 crashes before its write k+1
+    (``write_batch`` runs every store's writes): the batch then reads
+    uncommitted, the committed reader shows the store as it was before
+    batch 1, and a replay of the handler restores the uninterrupted
+    result. The re-write is forced past the handler's replay check, as
+    a forget pass or a raced replay would reach it."""
+    import shutil
+
+    from sunat_rree_demo_spark.sources import batch_store
+
+    mod, mark, _setup, batches, handle, read = _store_cases()[name]
+    template, before, clean = committed_stores(name)
+    store = str(tmp_path / "store")
+    shutil.copytree(template, store)
+
+    writes, crash = [], True
+    real_write = batch_store.retry_transient_write
+
+    def counted_write(write_fn, cleanup=None):
+        if len(writes) == k and crash:
+            raise OSError(f"injected crash before write {k + 1}")
+        writes.append(write_fn)
+        real_write(write_fn, cleanup)
+
+    monkeypatch.setattr(batch_store, "retry_transient_write", counted_write)
+    with monkeypatch.context() as m:
+        if mod is not None:
+            m.setattr(mod, "marker_committed", lambda *_a: False)
+        with pytest.raises(OSError, match="injected crash"):
+            handle(spark, batches[1](spark), 1, store)
+    assert len(writes) == k
+    marker = f"{store}/{mark}".rstrip("/")
+    assert not batch_store.marker_committed(spark, marker, 1)
+    assert read(spark, store) == before
+
+    # the replay runs every write step; the last one commits
+    writes.clear()
+    crash = False
+    handle(spark, batches[1](spark), 1, store)
+    assert len(writes) == sum(n == name for n, _k in _CRASH_POINTS)
+    assert batch_store.marker_committed(spark, marker, 1)
+    assert read(spark, store) == clean
+
+
+def test_store_format_lives_in_batch_store():
+    """The layout rule, checked over the package source: outside
+    ``sources/batch_store.py`` no module resolves the Hadoop ``Path``
+    class, defines a transient-retry helper, or clears a commit marker
+    — except the two forget passes, whose in-place rewrites clear the
+    markers of the batches they touch."""
+    import ast
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "sunat_rree_demo_spark"
+    forget = {"forget_docs", "forget_vectors"}
+    offenders = []
+
+    class Scan(ast.NodeVisitor):
+        def __init__(self, rel):
+            self.rel, self.funcs = rel, []
+
+        def flag(self, node, what):
+            offenders.append(f"{self.rel}:{node.lineno} {what}")
+
+        def visit_FunctionDef(self, node):
+            if re.search(r"retry|transient", node.name):
+                self.flag(node, f"defines {node.name}")
+            self.funcs.append(node.name)
+            self.generic_visit(node)
+            self.funcs.pop()
+
+        visit_AsyncFunctionDef = visit_FunctionDef
+
+        def visit_Attribute(self, node):
+            if ast.unparse(node).endswith("hadoop.fs.Path"):
+                self.flag(node, "resolves org.apache.hadoop.fs.Path")
+            self.generic_visit(node)
+
+        def visit_Constant(self, node):
+            if isinstance(node.value, str) \
+                    and "org.apache.hadoop.fs.Path" in node.value:
+                self.flag(node, "names org.apache.hadoop.fs.Path")
+
+        def visit_Call(self, node):
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else \
+                getattr(f, "id", None)
+            if name == "clear_commit_marker" and not forget & set(self.funcs):
+                self.flag(node, "clears a commit marker")
+            self.generic_visit(node)
+
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel != "sources/batch_store.py":
+            Scan(rel).visit(ast.parse(path.read_text(), rel))
+    assert offenders == []

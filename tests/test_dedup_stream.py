@@ -108,6 +108,7 @@ def test_crash_between_sigs_and_bands_writes(spark, tmp_path,
     the marker first, and a writer that put bands before sigs would
     have committed before the crash."""
     from sunat_rree_demo_spark.operators import dedup_index
+    from sunat_rree_demo_spark.sources import batch_store
     from sunat_rree_demo_spark.sources.batch_store import all_batch_dirs
     from sunat_rree_demo_spark.streaming.dedup_stream import process_batch
 
@@ -122,7 +123,7 @@ def test_crash_between_sigs_and_bands_writes(spark, tmp_path,
     clean = _state_snapshot(spark, idx, pairs_out)
 
     writes = []
-    real_write = dedup_index.retry_transient_write
+    real_write = batch_store.retry_transient_write
 
     def crash_on_second_write(write_fn, cleanup=None):
         writes.append(write_fn)
@@ -130,7 +131,7 @@ def test_crash_between_sigs_and_bands_writes(spark, tmp_path,
             raise OSError("injected crash before the batch's last write")
         real_write(write_fn, cleanup)
 
-    monkeypatch.setattr(dedup_index, "retry_transient_write",
+    monkeypatch.setattr(batch_store, "retry_transient_write",
                         crash_on_second_write)
     with pytest.raises(OSError, match="injected crash"):
         dedup_index.absorb_batch(halves[1], idx, 1)

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import pytest
 
-from sunat_rree_demo_spark.operators.dedup_index import (
+from sunat_rree_demo_spark.sources.batch_store import (
     is_transient_storage_error,
     retry_transient_write,
 )
@@ -97,13 +97,13 @@ def test_write_bucketed_append_bypasses_retry(spark, monkeypatch):
     """mode != 'overwrite' must take the plain-write path: the retry's
     DROP-TABLE cleanup would discard every pre-existing row, and even
     without the drop an append retry double-appends."""
-    from sunat_rree_demo_spark.operators import dedup_index
+    from sunat_rree_demo_spark.sources import batch_store
     from sunat_rree_demo_spark.sources.sinks import write_bucketed_table
 
     def forbidden(*_a, **_k):  # pragma: no cover - failure path
         raise AssertionError("append must not route through the retry")
 
-    monkeypatch.setattr(dedup_index, "retry_transient_write", forbidden)
+    monkeypatch.setattr(batch_store, "retry_transient_write", forbidden)
     name = "t_append_retry_guard"
     spark.sql(f"DROP TABLE IF EXISTS {name}")
     df = spark.range(3).withColumnRenamed("id", "k")
