@@ -13,9 +13,10 @@ story the dedup/ANN indexes exist for, measured instead of assumed:
   corpus-side cost is one columnar scan of the (band,bucket,id) table
   (no shuffle), so the ratio should be well under 10.
 - COMPACT each index after a re-ingest batch (compact_minhash_index /
-  compact_ivf_index): a full rewrite, expected ~linear — the point of
-  measuring it is to document that compaction is the one O(index)
-  maintenance op, amortized over many absorbs.
+  compact_ivf_index): a generation swap that rewrites the whole
+  index, expected ~linear — the point of measuring it is to document
+  that compaction is the one O(index) maintenance op, amortized over
+  many absorbs.
 
 Usage: python scripts/scale_probe_index.py [small_sf_dir big_sf_dir]
 Prints one markdown table row per (op, scale) for SCALE.md.

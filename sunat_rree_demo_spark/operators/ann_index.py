@@ -6,8 +6,9 @@ form of q172's session-memoized fit.
 
 Layout under ``<path>/``:
 
-* ``centroids/`` — (cluster int, centroid array<bigint>): the k
-  micro-unit centroid rows (the Faiss-style coarse quantizer).
+* ``centroids/batch_id=G/`` — (cluster int, centroid array<bigint>):
+  the k micro-unit centroid rows (the Faiss-style coarse quantizer) of
+  generation G, written with that generation's vectors.
 * ``vectors/batch_id=N/cluster=K/`` — (vec_id, embedding, d2): each
   ingest batch partitioned by assigned cell, under its own batch
   directory. A search filters on the cell column, so Spark's file
@@ -17,12 +18,13 @@ Layout under ``<path>/``:
   (pinned by tests/test_ann_index.py's execution-pruning contract).
 
 Incremental lifecycle (the dedup_index protocol applied to vectors):
-the bootstrap build lands as ``batch_id=-1`` (negative space, never
-colliding with stream epochs); ``absorb_ivf_batch`` assigns new
-vectors under the FIXED stored centroids (``assign_under`` is
-stateless and deterministic) and OVERWRITES its own batch directory,
-whose ``_SUCCESS`` is the commit marker — replay-idempotent, torn
-batches invisible to ``committed_vector_dirs`` readers. Centroids
+a build or a compaction is a ``batch_store.swap_generation`` to one
+negative-id generation (never colliding with stream epochs), whose
+centroids go live with its vectors' marker; ``absorb_ivf_batch``
+assigns new vectors under the FIXED stored centroids (``assign_under``
+is stateless and deterministic) and OVERWRITES its own batch
+directory, whose ``_SUCCESS`` is the commit marker — replay-idempotent,
+torn batches invisible to ``committed_vector_dirs`` readers. Centroids
 stay frozen between offline refits (standard IVF practice: cell
 drift degrades recall slowly; refit + rewrite is the compaction
 analog).
@@ -54,32 +56,36 @@ from sunat_rree_demo_spark.operators.clustering import (
 )
 from sunat_rree_demo_spark.sources.batch_store import (
     BATCH_COL,
-    clear_commit_marker,
+    all_batch_dirs,
     committed_batch_dirs,
-    delete_dirs,
     marker_committed,
-    touch_marker,
+    rewrite_parts,
+    swap_generation,
     write_batch,
 )
+
+
+def _generation(path: str, cent: np.ndarray, vecs: DataFrame):
+    """A generation's tables, vectors (the marker) last."""
+    cent_df = local_df(
+        vecs.sparkSession,
+        [(ci, [int(v) for v in row]) for ci, row in enumerate(cent)],
+        "cluster int, centroid array<bigint>")
+    return [(f"{path}/centroids", cent_df.write),
+            (f"{path}/vectors", vecs.write.partitionBy("cluster"))]
 
 
 def write_ivf_index(emb: DataFrame, path: str, k: int = 8,
                     iters: int = 2, id_col: str = "vec_id",
                     vec_col: str = "embedding") -> None:
-    """Build the index at ``path`` (full overwrite): fit, then write
-    centroids and the cell-partitioned corpus as batch −1 (negative
-    space — stream epochs start at 0, see module docstring)."""
-    spark = emb.sparkSession
+    """Build the index at ``path``: fit, then write centroids and the
+    cell-partitioned corpus as a generation that replaces every batch
+    already there (batch −1 on an empty path)."""
     cent, assign = kmeans_fit(emb, k=k, iters=iters,
                               id_col=id_col, vec_col=vec_col)
-    cent_df = local_df(
-        spark, [(int(ci), [int(v) for v in cent[ci]]) for ci in range(k)],
-        "cluster int, centroid array<bigint>")
-    cent_df.write.mode("overwrite").parquet(f"{path}/centroids")
     vecs = (emb.select(id_col, vec_col)
             .join(assign.select(id_col, "cluster", "d2"), id_col))
-    write_batch(spark, -1,
-                [(f"{path}/vectors", vecs.write.partitionBy("cluster"))])
+    swap_generation(emb.sparkSession, _generation(path, cent, vecs))
 
 
 def committed_vector_dirs(spark: SparkSession, path: str) -> list[str]:
@@ -109,10 +115,16 @@ def absorb_ivf_batch(spark: SparkSession, new_emb: DataFrame, path: str,
 
 
 def load_centroids(spark: SparkSession, path: str) -> np.ndarray:
-    """(k × d) int64 centroid matrix, row i = cluster i."""
-    rows = (spark.read.parquet(f"{path}/centroids")
-            .orderBy("cluster").collect())
-    return np.asarray([r.centroid for r in rows], dtype=np.int64)
+    """(k × d) int64 centroid matrix, row i = cluster i, of the newest
+    generation whose vectors are committed (while a forget pass holds
+    that marker cleared: of the oldest, which no swap replaced)."""
+    rows = spark.read.parquet(f"{path}/centroids").orderBy("cluster") \
+        .collect()
+    gens = {r[BATCH_COL] for r in rows}
+    live = [g for g in gens if marker_committed(spark, f"{path}/vectors", g)]
+    gen = min(live) if live else max(gens)
+    return np.asarray([r.centroid for r in rows if r[BATCH_COL] == gen],
+                      dtype=np.int64)
 
 
 def ivf_index_search(spark: SparkSession, path: str,
@@ -191,38 +203,32 @@ def forget_vectors(spark: SparkSession, path: str, ids: list,
                    id_col: str = "vec_id") -> list[tuple[int, int]]:
     """DELETION PROPAGATION for the vector index: drop the given ids,
     rewriting only the (batch, cell) partitions that hold them — one
-    committed-dirs scan locates them (torn batches stay untouched and
-    invisible, the module's reader rule), untouched directories stay
-    byte-identical (test-pinned). Each touched batch's commit marker
-    is CLEARED before its cells rewrite and restored after, so a
-    concurrent committed-gated search never torn-reads a cell
-    mid-overwrite (same discipline as dedup_index.forget_ids).
-    Returns the touched (batch_id, cluster) pairs. OFFLINE maintenance
-    (not transactional against a concurrent absorb); centroids are
-    unchanged — deletion never moves surviving vectors between cells,
-    so searches stay consistent throughout."""
-    dirs = committed_vector_dirs(spark, path)
+    scan over every batch directory locates them (torn ones too: a
+    crashed pass leaves its batch's marker cleared, and a re-run must
+    find it), untouched directories stay byte-identical (test-pinned).
+    Each touched batch is rewritten by ``batch_store.rewrite_parts``:
+    its commit marker is CLEARED before its cells rewrite and restored
+    after, so a concurrent committed-gated search never torn-reads a
+    cell mid-overwrite. Returns the touched (batch_id, cluster) pairs.
+    OFFLINE maintenance (not transactional against a concurrent
+    absorb); centroids are unchanged — deletion never moves surviving
+    vectors between cells, so searches stay consistent throughout."""
+    dirs = all_batch_dirs(spark, f"{path}/vectors")
     if not dirs:
         return []
     id_df = local_df(spark, [(i,) for i in ids], f"{id_col} long")
-    vecs = spark.read.option("basePath", f"{path}/vectors").parquet(*dirs)
+    vecs = spark.read.option("basePath", f"{path}/vectors") \
+        .parquet(*dirs.values())
     touched = sorted(
         (r[BATCH_COL], r["cluster"])
         for r in vecs.join(F.broadcast(id_df), id_col, "left_semi")
         .select(BATCH_COL, "cluster").distinct().collect())
-    by_batch: dict[int, list[int]] = {}
-    for bid, cell in touched:
-        by_batch.setdefault(bid, []).append(cell)
-    for bid, cells in by_batch.items():
-        bdir = f"{path}/vectors/{BATCH_COL}={bid}"
-        clear_commit_marker(spark, bdir)
-        for cell in cells:
-            part = f"{bdir}/cluster={cell}"
-            keep = (spark.read.parquet(part)
-                    .join(F.broadcast(id_df), id_col, "left_anti")
-                    .localCheckpoint())
-            keep.write.mode("overwrite").parquet(part)
-        touch_marker(spark, bdir)
+    for bid in sorted({b for b, _c in touched}):
+        parts = [f"{dirs[bid]}/cluster={c}" for b, c in touched if b == bid]
+        rewrite_parts(spark, dirs[bid], [
+            (p, spark.read.parquet(p)
+             .join(F.broadcast(id_df), id_col, "left_anti")
+             .localCheckpoint()) for p in parts])
     return touched
 
 
@@ -232,35 +238,28 @@ def compact_ivf_index(spark: SparkSession, path: str,
     keeping the LATEST batch's row per vector id — reclaims re-ingest
     duplicates and makes search results exact again for vectors whose
     edit moved them between cells (see ``ivf_index_search``'s
-    candidate-scale latest-wins caveat). Same rules as
-    ``dedup_index.compact_minhash_index``: negative target id (never a
-    stream epoch), OFFLINE maintenance.
+    candidate-scale latest-wins caveat). The live centroids are copied
+    into the generation unchanged. Same rules as
+    ``dedup_index.compact_minhash_index``: a ``swap_generation`` to a
+    negative target id (never a stream epoch), OFFLINE maintenance.
 
-    CRASH-SAFE in any window without coordination (review finding r6:
-    the original delete-before-write ordering lost the whole corpus on
-    a crash between the deletes and the write): the compacted
-    generation is written and committed FIRST, old directories deleted
-    after — ``compact_bloom_store``'s ordering. Transient coexistence
-    is benign because every reader resolves latest-batch-wins and the
-    compacted generation carries the LOWEST batch id with exactly the
-    newest copy per vector id, so a reader that sees both picks the
-    original's newest row — identical values. A crash mid-delete
-    leaves survivors whose rows equal the compacted copies; re-running
-    this pass merges them away."""
-    dirs = committed_vector_dirs(spark, path)
-    if not dirs:
+    CRASH-SAFE at every step: the compacted generation is written and
+    committed FIRST, the batches it merged retired after. Transient
+    coexistence is benign because every reader resolves
+    latest-batch-wins and the compacted generation carries the LOWEST
+    batch id with exactly the newest copy per vector id, so a reader
+    that sees both picks the original's newest row — identical values.
+    A crash mid-retire leaves survivors whose rows equal the compacted
+    copies; re-running this pass merges them away."""
+    vectors = f"{path}/vectors"
+    sources = committed_batch_dirs(spark, vectors, vectors)
+    if not sources:
         return
-    bids = [int(d.rsplit("=", 1)[1]) for d in dirs]
-    if len(dirs) == 1 and bids[0] < 0:
-        return  # already a single compacted generation: no-op
-    target = min(min(bids), 0) - 1
-    vecs = spark.read.option("basePath", f"{path}/vectors").parquet(*dirs)
+    vecs = spark.read.option("basePath", vectors).parquet(*sources.values())
     other = [c for c in vecs.columns if c not in (id_col, BATCH_COL)]
     latest = (vecs.groupBy(id_col)
               .agg(F.max_by(F.struct(*other), BATCH_COL).alias("_s"))
               .select(id_col, *[F.col(f"_s.{c}").alias(c) for c in other]))
-    write_batch(spark, target,
-                [(f"{path}/vectors", latest.write.partitionBy("cluster"))])
-    # the new generation is committed (its _SUCCESS landed with the
-    # write); only now retire the sources it replaced
-    delete_dirs(spark, dirs)
+    swap_generation(
+        spark, _generation(path, load_centroids(spark, path), latest),
+        sources, list(sources.values()))

@@ -25,6 +25,8 @@ table is never shuffled for it. Long-lived indexes with many re-ingests
 should periodically compact (rewrite keeping the max-batch row per id);
 until compaction the index carries one extra row per re-ingest, not
 wrong answers.
+Builds and compactions are a ``batch_store.swap_generation`` (write
+the new generation, then retire what it replaces).
 
 Scale design: an ingest batch is small relative to the corpus, so the
 batch's band rows BROADCAST and the stored band table (plus the batch's
@@ -59,8 +61,9 @@ from sunat_rree_demo_spark.sources.batch_store import (
     BATCH_COL,
     _hadoop_fs,
     all_batch_dirs,
+    committed_batch_dirs,
     marker_committed,
-    retry_transient_write,
+    swap_generation,
     write_batch,
 )
 
@@ -94,18 +97,12 @@ def batch_committed(spark: SparkSession, path: str, batch_id: int) -> bool:
 def write_minhash_index(docs: DataFrame, path: str, id_col: str = "doc_id",
                         text_col: str = "text", n: int = 5,
                         k: int = MINHASH_K, bands: int = LSH_BANDS,
-                        batch_id: int = -1,
                         sig: DataFrame | None = None) -> None:
-    """Materialize the index from scratch (full overwrite) as batch
-    ``batch_id``. Incremental growth goes through ``absorb_batch``
-    (idempotent) or ``append_minhash_index``.
-
-    The default id is **-1**: out-of-band writes (bootstrap,
-    compaction) live in the NEGATIVE id space so they can never collide
-    with foreachBatch epochs, which start at 0 — a bootstrap at
-    batch_id=0 would look uncommitted to ``batch_committed`` and the
-    stream's genuine epoch 0 would absorb-overwrite the whole corpus
-    partition with one micro-batch.
+    """Build the index from ``docs`` as one generation that replaces
+    every batch already at ``path`` (``swap_generation``; -1 on an
+    empty path — the NEGATIVE id space, so a bootstrap never collides
+    with a stream epoch, which starts at 0). Incremental growth goes
+    through ``absorb_batch`` (idempotent) or ``append_minhash_index``.
 
     A caller that already materialized the signatures passes them via
     ``sig`` (same contract as ``absorb_batch``) — a signature is a
@@ -116,21 +113,10 @@ def write_minhash_index(docs: DataFrame, path: str, id_col: str = "doc_id",
     if sig is None:
         sig = minhash_signatures(docs, id_col, text_col, n,
                                  k).localCheckpoint()
-    _write_generation(sig, path, batch_id, id_col, k, bands)
-
-
-def _write_generation(sig: DataFrame, path: str, batch_id: int,
-                      id_col: str, k: int, bands: int) -> None:
-    """Overwrite the WHOLE index (every partition of both tables) with
-    the one generation ``batch_id`` built from ``sig``: sigs first,
-    then the bands derived from them."""
-    bnd = band_rows(sig, id_col, k, bands)
-    for df, table in ((sig, "sigs"), (bnd, "bands")):
-        retry_transient_write(
-            lambda df=df, table=table:
-            df.withColumn(BATCH_COL, F.lit(batch_id))
-            .write.partitionBy(BATCH_COL).mode("overwrite")
-            .parquet(f"{path}/{table}"))
+    swap_generation(docs.sparkSession, [
+        (f"{path}/sigs", sig.write),
+        (f"{path}/bands", band_rows(sig, id_col, k, bands).write),
+    ])
 
 
 def _write_batch(spark: SparkSession, sig: DataFrame, path: str,
@@ -189,33 +175,37 @@ def append_minhash_index(docs: DataFrame, path: str, **kw) -> None:
 def compact_minhash_index(spark: SparkSession, path: str,
                           id_col: str = "doc_id", k: int = MINHASH_K,
                           bands: int = LSH_BANDS) -> None:
-    """Rewrite the index keeping only the latest-batch signature per
-    doc id — reclaims the one-extra-row-per-re-ingest growth the batch
-    layout accrues (module docstring). Band rows REGENERATE from the
-    surviving signatures rather than being deduped independently: they
-    are a pure function of the signature, so the two tables cannot
-    drift.
+    """Collapse the committed batches into one generation keeping
+    only the latest-batch signature per doc id — reclaims the
+    one-extra-row-per-re-ingest growth the batch layout accrues
+    (module docstring). Band rows REGENERATE from the surviving
+    signatures rather than being deduped independently: they are a
+    pure function of the signature, so the two tables cannot drift.
 
-    The result lands in the NEGATIVE id space (min(existing, 0) − 1),
-    never at a stream epoch: a compacted partition numbered like a
-    stream batch would make ``batch_committed`` lie to a resumed
-    stream, and a crash-replay of that epoch would absorb-overwrite the
-    whole compacted corpus with one micro-batch. With a negative id,
-    a replayed epoch re-absorbs into its OWN partition and latest-wins
-    resolution keeps probes exact — no data-loss window even if the
-    offline requirement below is violated.
+    The generation lands in the NEGATIVE id space
+    (``swap_generation``), never at a stream epoch: a compacted
+    partition numbered like a stream batch would make
+    ``batch_committed`` lie to a resumed stream. Until the swap retires
+    the merged batches, a probe sees them next to the generation, and
+    both resolve latest-batch-wins to the same signatures, so probes
+    are unchanged at every crash point. Torn positive batches are left
+    to their stream's replay.
 
-    OFFLINE maintenance: the two full-table overwrites are not
-    transactional against a CONCURRENT absorb_batch."""
-    existing = all_batch_dirs(spark, f"{path}/sigs")
-    if not existing:
+    OFFLINE maintenance: not transactional against a CONCURRENT
+    absorb_batch."""
+    sources = committed_batch_dirs(spark, f"{path}/sigs", f"{path}/bands")
+    if not sources:
         return  # empty index: nothing to compact
-    bid = min(min(existing), 0) - 1
-    sigs = spark.read.parquet(f"{path}/sigs")
-    latest = (sigs.groupBy(id_col)
+    latest = (spark.read.option("basePath", f"{path}/sigs")
+              .parquet(*sources.values())
+              .groupBy(id_col)
               .agg(F.max_by("sig", BATCH_COL).alias("sig"))
-              .localCheckpoint())  # sever lineage from the files being replaced
-    _write_generation(latest, path, bid, id_col, k, bands)
+              .localCheckpoint(eager=False))  # one merge feeds both tables
+    swap_generation(spark, [
+        (f"{path}/sigs", latest.write),
+        (f"{path}/bands", band_rows(latest, id_col, k, bands).write),
+    ], sources, [f"{path}/{t}/{BATCH_COL}={b}"
+                 for t in ("sigs", "bands") for b in sources])
 
 
 def write_bucketed_bands(spark: SparkSession, index_path: str,
@@ -349,22 +339,24 @@ def forget_ids(spark: SparkSession, path: str, ids: list,
                bands: int = LSH_BANDS) -> list[int]:
     """DELETION PROPAGATION (right-to-be-forgotten): remove the given
     doc ids from the index, rewriting ONLY the batch partitions that
-    contain them — one scan finds the touched batches (the id list
-    broadcasts), every untouched partition's files stay byte-identical
-    (test-pinned), so maintenance cost scales with the deletion's
-    spread, not the corpus. Band rows REGENERATE from the surviving
+    contain them — one scan of the bands finds the touched batches
+    (the id list broadcasts), every untouched partition's files stay
+    byte-identical (test-pinned), so maintenance cost scales with the
+    deletion's spread, not the corpus. Band rows REGENERATE from the surviving
     signatures (the compaction rule: bands are a pure function of
     sigs, the tables cannot drift). Returns the touched batch ids.
 
     OFFLINE maintenance like ``compact_minhash_index``: each touched
-    batch's marker is cleared first (committed-only readers skip it
-    mid-rewrite) and restored by the bands write, but the pass as a
-    whole is not transactional against a concurrent absorb."""
+    batch is rewritten by ``_write_batch`` (marker cleared first,
+    restored by the bands write, the last), but the pass as a whole is
+    not transactional against a concurrent absorb; bands hold an id
+    until its batch's rewrite is done, so a re-run finishes a crashed
+    one."""
     id_df = local_df(spark, [(i,) for i in ids], f"{id_col} long")
-    sigs = spark.read.parquet(f"{path}/sigs")
     touched = sorted(
         r[BATCH_COL]
-        for r in sigs.join(F.broadcast(id_df), id_col, "left_semi")
+        for r in spark.read.parquet(f"{path}/bands")
+        .join(F.broadcast(id_df), id_col, "left_semi")
         .select(BATCH_COL).distinct().collect())
     for bid in touched:
         keep = (spark.read.parquet(f"{path}/sigs/{BATCH_COL}={bid}")

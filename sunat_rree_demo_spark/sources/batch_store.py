@@ -11,7 +11,10 @@ bloom/media, …), so every check here takes the marker directory
 explicitly. Every batch is written by ``write_batch``, which clears
 the marker first, writes the tables in order with the marker table
 last, and runs each write under the one storage-retry policy
-(``retry_transient_write``).
+(``retry_transient_write``). Builds and compactions go through
+``swap_generation`` (write one negative-id generation, then retire
+what it replaced), in-place rewrites of some parts of a batch through
+``rewrite_parts``.
 
 Readers use ``read_committed`` (every committed batch as one frame,
 an empty store as an empty frame of the caller's schema) or, for the
@@ -88,19 +91,10 @@ def touch_marker(spark: SparkSession, dir_path: str,
                  name: str = "_SUCCESS") -> None:
     """(Re)create ``dir_path/<name>`` — the inverse of
     ``clear_commit_marker``: restores a batch's commit marker after an
-    in-place maintenance rewrite, or lays a store's own marker file
-    (the sketch store's ``_COVERS_<n>``) once its write committed."""
+    in-place rewrite, or lays a swap's own mark file (the sketch
+    store's ``_COVERS_<n>``) once its generation committed."""
     fs, marker = _hadoop_fs(spark, f"{dir_path}/{name}")
     fs.create(marker, True).close()
-
-
-def delete_dirs(spark: SparkSession, dirs: list[str]) -> None:
-    """Recursively delete every directory in ``dirs`` (one store's,
-    so one filesystem): the FileSystem is resolved once per call."""
-    if dirs:
-        fs, _ = _hadoop_fs(spark, dirs[0])
-        for d in dirs:
-            fs.delete(_hadoop_path(spark, d), True)
 
 
 #: error signatures of intermittent storage blips: a failed task
@@ -144,9 +138,9 @@ def retry_transient_write(write_fn, cleanup=None) -> None:
     task. Overwrite semantics make the retry
     safe; a second failure — or any non-transient error — propagates.
     ``cleanup`` runs between attempts (e.g. DROP TABLE for a torn
-    saveAsTable). The ONE copy of the policy: ``write_batch``, the
-    dedup index's generation write and sinks.write_bucketed_table all
-    route through here."""
+    saveAsTable). The ONE copy of the policy: ``write_batch`` (and so
+    every generation swap), ``rewrite_parts`` and
+    sinks.write_bucketed_table all route through here."""
     try:
         write_fn()
     except Exception as exc:  # noqa: BLE001 - retry-once, then re-raise
@@ -174,6 +168,54 @@ def write_batch(spark: SparkSession, batch_id: int, tables) -> None:
         part = f"{table_dir}/{BATCH_COL}={batch_id}"
         retry_transient_write(
             lambda w=writer, p=part: w.mode("overwrite").parquet(p))
+
+
+def swap_generation(spark: SparkSession, tables, sources=(),
+                    replaced=None, mark: str | None = None) -> None:
+    """Replace batches of a store with ONE generation, write first.
+    When ``sources`` (the ids of the batches the generation merges; a
+    build passes none) is a single negative id, the store already is
+    one generation and nothing is written. Otherwise the target id
+    goes below every batch id of the tables, torn ones included, and
+    ``write_batch`` writes and commits it (``tables`` is its list, over
+    lazy frames); ``mark``, a file name, is then laid in the marker
+    table's target directory. Only after that commit are the
+    ``replaced`` batch directories (default: every batch of the
+    tables, a build) and every other negative-id batch of the tables
+    (older generations, torn targets) deleted, the marker table's
+    first, so a retired batch turns uncommitted before it goes. A
+    crash before the commit leaves the store as it was; one after it
+    leaves batches next to the generation until a re-run retires
+    them."""
+    every = {d: b for t, _w in reversed(tables)
+             for b, d in all_batch_dirs(spark, t).items()}
+    replaced = set(every if replaced is None else replaced)
+    if len(sources) == 1 and min(sources) < 0:
+        target = min(sources)
+    else:
+        target = min([*every.values(), 0]) - 1
+        write_batch(spark, target, tables)
+        if mark is not None:
+            touch_marker(spark, f"{tables[-1][0]}/{BATCH_COL}={target}",
+                         mark)
+    fs, _ = _hadoop_fs(spark, tables[-1][0])
+    for d, b in every.items():
+        if b != target and (b < 0 or d in replaced):
+            fs.delete(_hadoop_path(spark, d), True)
+
+
+def rewrite_parts(spark: SparkSession, batch_dir: str, parts) -> None:
+    """Overwrite some parts of one committed batch in place: ``parts``
+    is a list of ``(part_dir, DataFrame)`` under ``batch_dir`` (each
+    frame checkpointed, since it is read from the files it replaces).
+    The batch's marker is cleared first, so committed readers skip the
+    batch while its parts are rewritten; each overwrite runs under
+    ``retry_transient_write``; the marker comes back last."""
+    clear_commit_marker(spark, batch_dir)
+    for part, df in parts:
+        retry_transient_write(
+            lambda p=part, d=df: d.write.mode("overwrite").parquet(p))
+    touch_marker(spark, batch_dir)
 
 
 def marker_committed(spark: SparkSession, marker_dir: str,

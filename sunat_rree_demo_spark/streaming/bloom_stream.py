@@ -31,7 +31,9 @@ masks the exactly-once-friendly state representation.
 Exactly-once: a committed batch id short-circuits; a crash replay
 recomputes identical partitions (probes read committed state only) and
 overwrites them byte-identically — same protocol as the cms/novelty
-streams.
+streams. Maintenance writes through ``sources/batch_store.py`` too:
+``compact_bloom_store`` is a ``swap_generation`` and ``forget_docs``
+rewrites each touched batch with ``write_batch``.
 
 STORE FORMAT: the commit marker has lived on the kept table since the
 format was finalized (pre-release within r6 — interim same-round
@@ -55,12 +57,11 @@ from sunat_rree_demo_spark.operators.dedup import base_hash_col
 from sunat_rree_demo_spark.sources.batch_store import (
     BATCH_COL,
     all_batch_dirs,
-    clear_commit_marker,
     committed_batch_dirs,
-    delete_dirs,
     drain,
     marker_committed,
     read_committed,
+    swap_generation,
     write_batch,
 )
 
@@ -177,39 +178,27 @@ def load_gate_stats(spark: SparkSession, store_path: str) -> DataFrame:
 
 def compact_bloom_store(spark: SparkSession, store_path: str) -> None:
     """Collapse committed digest/bloom batches into one negative-id
-    generation (kept/stats are history and stay). CRASH-SAFE in any
-    window without coordination, because this store's semantics are
-    set-idempotent: digests deduplicate through the anti-join and
-    bloom words merge by bit_or, so a crash that leaves BOTH the new
-    generation and not-yet-deleted old batches behind changes nothing
-    a probe computes — the new generation is written and committed
-    FIRST, old directories deleted after."""
+    generation (kept/stats are history and stay; an older generation's
+    EMPTY kept marker goes): a ``swap_generation``, CRASH-SAFE at every
+    step because this store is set-idempotent — digests deduplicate
+    through the anti-join and bloom words merge by bit_or, so the new
+    generation next to not-yet-retired old batches changes nothing a
+    probe computes."""
     kept = f"{store_path}/kept"
     dirs_b = committed_batch_dirs(spark, f"{store_path}/bloom", kept)
     if not dirs_b:
         return
-    bids = list(dirs_b)
-    if len(dirs_b) == 1 and bids[0] < 0:
-        return  # already a single compacted generation: no-op
-    target = min(min(bids), 0) - 1
     dirs_d = committed_batch_dirs(spark, f"{store_path}/digests", kept)
-    merged_dg = spark.read.parquet(*dirs_d.values()).select("dg") \
-        .distinct().localCheckpoint()
-    merged_bloom = (spark.read.parquet(*dirs_b.values())
-                    .groupBy("word").agg(F.bit_or("m").alias("m"))
-                    .localCheckpoint())
-    # commit: an empty kept partition carries the target's marker
-    kept_schema = spark.read.parquet(f"{kept}/{BATCH_COL}={bids[0]}").schema
-    write_batch(spark, target, [
-        (f"{store_path}/digests", merged_dg.write),
-        (f"{store_path}/bloom", merged_bloom.write),
+    kept_schema = spark.read.parquet(
+        f"{kept}/{BATCH_COL}={next(iter(dirs_b))}").schema
+    swap_generation(spark, [
+        (f"{store_path}/digests",
+         spark.read.parquet(*dirs_d.values()).select("dg").distinct().write),
+        (f"{store_path}/bloom",
+         spark.read.parquet(*dirs_b.values())
+         .groupBy("word").agg(F.bit_or("m").alias("m")).write),
         (kept, local_df(spark, [], kept_schema).write),
-    ])
-    # superseded negative generations' EMPTY kept markers go too (the
-    # positive kept dirs are real history and stay); without this,
-    # periodic compaction leaks one marker partition per run
-    delete_dirs(spark, [*dirs_d.values(), *dirs_b.values(),
-                        *(f"{kept}/{BATCH_COL}={b}" for b in bids if b < 0)])
+    ], dirs_b, [*dirs_d.values(), *dirs_b.values()])
 
 
 def forget_docs(spark: SparkSession, store_path: str, ids: list,
@@ -217,14 +206,11 @@ def forget_docs(spark: SparkSession, store_path: str, ids: list,
     """DELETION PROPAGATION (right-to-be-forgotten) for the dedup
     store: remove the given doc ids from the kept rows and their
     digests from the exact store, rewriting only the touched batch
-    partitions. Discovery scans ALL batch directories (not just
-    committed ones — review finding r6: a committed-only scan made a
-    crash between marker-clear and rewrite unhealable), and digests
-    are dropped from EVERY partition holding them, including the
-    negative-id generation a compaction produced (same finding: the
-    per-batch digest rewrite alone left forgotten digests alive in the
-    compacted generation, so re-shipped forgotten content stayed
-    suppressed).
+    partitions. Discovery scans ALL batch directories, torn ones too
+    (a crashed pass leaves its batch uncommitted for a re-run to
+    find), and digests are dropped from EVERY partition holding them,
+    including a compaction's negative-id generation (or re-shipped
+    forgotten content would stay suppressed).
 
     The BLOOM WORDS ARE LEFT ALONE — a bloom filter cannot unset bits,
     and it never needs to here: it is purely a routing layer, so a
@@ -232,25 +218,22 @@ def forget_docs(spark: SparkSession, store_path: str, ids: list,
     authoritative digest removal means a future re-ship of the
     forgotten content is treated as NEW and kept (the correct RTBF
     semantics). Returns the touched batch ids (kept and/or digest
-    side). OFFLINE maintenance like its index siblings: in-place
-    partition overwrites are not transactional against a concurrent
-    micro-batch, and a crash mid-OVERWRITE of one partition needs this
-    same pass re-run to finish healing (markers stay cleared until the
-    kept rewrite completes)."""
+    side). Each touched batch is rewritten by ``write_batch`` (digests,
+    then kept, the marker), so a crash leaves at most that batch
+    uncommitted, for a re-run of this pass to finish. OFFLINE
+    maintenance like its index siblings."""
     id_df = local_df(spark, [(i,) for i in ids], f"{id_col} long")
     kept_dirs = all_batch_dirs(spark, f"{store_path}/kept")
     if not kept_dirs:
         return []
     kept = spark.read.option("basePath", f"{store_path}/kept") \
         .parquet(*kept_dirs.values())
-    touched_kept = sorted(
-        r[BATCH_COL]
-        for r in kept.join(F.broadcast(id_df), id_col, "left_semi")
-        .select(BATCH_COL).distinct().collect())
+    hit = (kept.join(F.broadcast(id_df), id_col, "left_semi")
+           .select(BATCH_COL, "dg").localCheckpoint())
+    touched_kept = {r[BATCH_COL] for r in hit.select(BATCH_COL).collect()}
     if not touched_kept:
         return []
-    drop_dgs = (kept.join(F.broadcast(id_df), id_col, "left_semi")
-                .select("dg").distinct().localCheckpoint())
+    drop_dgs = hit.select("dg").distinct()
     dg_dirs = all_batch_dirs(spark, f"{store_path}/digests")
     dgs = spark.read.option("basePath", f"{store_path}/digests") \
         .parquet(*dg_dirs.values())
@@ -258,28 +241,31 @@ def forget_docs(spark: SparkSession, store_path: str, ids: list,
         r[BATCH_COL]
         for r in dgs.join(F.broadcast(drop_dgs), "dg", "left_semi")
         .select(BATCH_COL).distinct().collect())
-    all_touched = sorted(set(touched_kept) | set(touched_dgs))
-    # uncommit every touched batch for the whole rewrite window; a
-    # digests dir can exist WITHOUT a kept twin — the torn leftover of
-    # a crash between process_bloom_batch's digests and kept writes
-    # (or between compaction's digests/bloom writes and its empty-kept
-    # marker) — and such a batch was never committed, so there is no
-    # marker to clear and no kept side to rewrite: only its digest
-    # side is scrubbed below (review finding r6: the unconditional
-    # kept_dirs[bid] raised KeyError and aborted the whole pass)
+    # a generation's kept side is an empty marker partition, so a
+    # generation a crashed run left uncommitted shows nothing else to
+    # find: every uncommitted one is rewritten (recommitted) too
+    all_touched = sorted(touched_kept | set(touched_dgs) | {
+        b for b in kept_dirs
+        if b < 0 and not marker_committed(spark, f"{store_path}/kept", b)})
+
+    def scrub(part, drop, key):
+        return (spark.read.parquet(part)
+                .join(F.broadcast(drop), key, "left_anti")
+                .localCheckpoint().write)
+
     for bid in all_touched:
+        tables = []
+        if bid in touched_dgs:
+            tables.append((f"{store_path}/digests",
+                           scrub(dg_dirs[bid], drop_dgs, "dg")))
+        # a digests dir can exist WITHOUT a kept twin — the torn
+        # leftover of a crash between process_bloom_batch's digests
+        # and kept writes — and such a batch was never committed: only
+        # its digest side is scrubbed, with no marker to restore
+        # (review finding r6: the unconditional kept_dirs[bid] raised
+        # KeyError and aborted the whole pass)
         if bid in kept_dirs:
-            clear_commit_marker(spark, kept_dirs[bid])
-    for bid in touched_dgs:
-        keep_dg = (spark.read.parquet(dg_dirs[bid])
-                   .join(F.broadcast(drop_dgs), "dg", "left_anti")
-                   .localCheckpoint())
-        keep_dg.write.mode("overwrite").parquet(dg_dirs[bid])
-    for bid in all_touched:
-        if bid not in kept_dirs:
-            continue  # torn digests-only batch: no kept side exists
-        keep = (spark.read.parquet(kept_dirs[bid])
-                .join(F.broadcast(id_df), id_col, "left_anti")
-                .localCheckpoint())
-        keep.write.mode("overwrite").parquet(kept_dirs[bid])  # marker back
+            tables.append((f"{store_path}/kept",
+                           scrub(kept_dirs[bid], id_df, id_col)))
+        write_batch(spark, bid, tables)
     return all_touched

@@ -18,8 +18,10 @@ rewrites byte-identically, torn batches invisible to readers).
 
 Scale: a partial is at most |bin domain| rows per batch regardless of
 batch size (map-side combine); the store grows by bins-per-batch, and
-a periodic compaction (merge committed partials into one negative-id
-batch) keeps reads O(domain), the dedup_index compaction analog.
+a periodic compaction (merge the visible partials into one negative-id
+generation through ``batch_store.swap_generation``, which also lays
+the generation's ``_COVERS_<n>`` mark) keeps reads O(domain), the
+dedup_index compaction analog.
 """
 
 from __future__ import annotations
@@ -36,14 +38,11 @@ from sunat_rree_demo_spark.operators.sketches import (
     merge_histograms,
 )
 from sunat_rree_demo_spark.sources.batch_store import (
-    BATCH_COL,
     _hadoop_fs,
-    all_batch_dirs,
     committed_batch_dirs,
-    delete_dirs,
     drain,
     marker_committed,
-    touch_marker,
+    swap_generation,
     write_batch,
 )
 
@@ -59,7 +58,8 @@ def _covers_of(spark: SparkSession, hist_dir: str) -> int | None:
     return None
 
 
-def _visible_hist_dirs(spark: SparkSession, store_path: str) -> list[str]:
+def _visible_hist_dirs(spark: SparkSession,
+                       store_path: str) -> dict[int, str]:
     """Committed batch dirs a READER should merge. Histogram merge is
     ADDITIVE (unlike the bloom store's set-idempotent probes), so
     write-first compaction needs explicit supersession to keep the
@@ -77,11 +77,9 @@ def _visible_hist_dirs(spark: SparkSession, store_path: str) -> list[str]:
     gens = sorted((bid, _covers_of(spark, d))
                   for bid, d in dirs.items() if bid < 0)
     live = [(bid, cov) for bid, cov in gens if cov is not None]
-    if not live:
-        return [d for bid, d in sorted(dirs.items()) if bid >= 0]
-    gen_bid, covers = live[0]  # most negative = newest generation
-    return [dirs[gen_bid]] + [d for bid, d in sorted(dirs.items())
-                              if bid > covers and bid >= 0]
+    gen_bid, covers = live[0] if live else (None, -1)  # most negative = newest
+    return {bid: d for bid, d in sorted(dirs.items())
+            if bid == gen_bid or (bid > covers and bid >= 0)}
 
 
 def process_sketch_batch(spark: SparkSession, batch_df: DataFrame,
@@ -101,7 +99,7 @@ def merged_sketch(spark: SparkSession, store_path: str) -> DataFrame:
     dirs = _visible_hist_dirs(spark, store_path)
     if not dirs:
         return local_df(spark, [], "bin bigint, c bigint")
-    return merge_histograms(spark.read.parquet(*dirs))
+    return merge_histograms(spark.read.parquet(*dirs.values()))
 
 
 def load_sketch_quantiles(spark: SparkSession, store_path: str,
@@ -117,55 +115,34 @@ def compact_sketch(spark: SparkSession, store_path: str) -> None:
     stream epochs; OFFLINE maintenance — not transactional against a
     concurrent absorb).
 
-    CRASH-SAFE in any window (review finding r6: the original
-    delete-before-write ordering lost the accumulated histogram on a
-    crash between the deletes and the write): the merged generation is
-    written FIRST, made visible by its ``_COVERS_<n>`` supersession
-    marker (see ``_visible_hist_dirs`` — additive merge means
-    coexistence must be resolved by supersession, not latest-wins),
-    and only then are the absorbed directories deleted. Crash before
-    the marker → readers still merge the originals, a re-run rebuilds
-    the torn target under a fresh id and reaps it; crash mid-delete →
-    readers already resolve through the marker, a re-run finishes the
-    cleanup."""
-    hist = f"{store_path}/hist"
-    every = all_batch_dirs(spark, hist)
+    CRASH-SAFE at every step: the merged generation is written FIRST
+    (``swap_generation``), made visible by its ``_COVERS_<n>``
+    supersession mark (see ``_visible_hist_dirs`` — additive merge
+    means coexistence must be resolved by supersession, not
+    latest-wins), and only then are the absorbed directories retired.
+    Crash before the mark → readers still merge the originals, a
+    re-run rebuilds the torn target under a fresh id and retires it;
+    crash mid-retire → readers already resolve through the mark, a
+    re-run (which keeps a single visible generation as it is)
+    finishes the cleanup.
+
+    n is the highest epoch the generation holds: its merged positives
+    and the covers of the generation it absorbed. Every committed
+    batch up to n is retired — the merged ones and leftovers a crashed
+    retire left under an older mark; positive TORN batches belong to
+    the stream writer and heal by replay."""
     dirs = _visible_hist_dirs(spark, store_path)
     if not dirs:
         return
-    bids = [int(d.rsplit("=", 1)[1]) for d in dirs]
-    if len(dirs) == 1 and bids[0] < 0:
-        # already a single compacted generation: keep it as the target
-        # (no rewrite) but still fall through to the reaping loop — a
-        # crash mid-delete can leave superseded/torn leftovers behind.
-        # `is None` guard, not `or`: stream epochs start at 0, so a
-        # legitimate _COVERS_0 is falsy (review finding r7 — the `or`
-        # form skipped reaping a crash-left batch_id=0 forever)
-        target = bids[0]
-        cov = _covers_of(spark, dirs[0])
-        covers = cov if cov is not None else -1
-    else:
-        # lower than ANY existing dir — including torn targets a
-        # crashed compaction left behind, so the rebuild never
-        # overwrites one mid-heal under a reused id
-        target = min(min(every), 0) - 1
-        merged = merge_histograms(spark.read.parquet(*dirs))
-        write_batch(spark, target, [(hist, merged.write)])
-        covers = max([b for b in bids if b >= 0], default=-1)
-        if min(bids) < 0:  # absorbed generation's covers carry over
-            cov = _covers_of(spark, dirs[0])
-            covers = max(covers, cov if cov is not None else -1)
-        touch_marker(spark, f"{hist}/{BATCH_COL}={target}",
-                     f"_COVERS_{covers}")
-    # the target is visible now; retire everything it absorbed or
-    # supersedes — other negative generations (incl. torn targets),
-    # the merged positives, and committed positive leftovers a crashed
-    # delete phase left under the covers mark. Positive TORN batches
-    # belong to the stream writer and heal by replay — leave them.
-    delete_dirs(spark, [
-        d for bid, d in every.items() if bid != target and (
-            bid < 0 or bid in bids
-            or (bid <= covers and marker_committed(spark, hist, bid)))])
+    covers = max(b if b >= 0 else _covers_of(spark, d)
+                 for b, d in dirs.items())
+    hist = f"{store_path}/hist"
+    swap_generation(
+        spark, [(hist, merge_histograms(
+            spark.read.parquet(*dirs.values())).write)],
+        dirs, [d for b, d in committed_batch_dirs(spark, hist, hist).items()
+               if b <= covers],
+        mark=f"_COVERS_{covers}")
 
 
 def run_sketch_stream(spark: SparkSession, stream: DataFrame,

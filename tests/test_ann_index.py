@@ -245,3 +245,37 @@ def test_ivf_compaction_write_first_coexistence(spark, tmp_path):
     # single-generation store: compaction is a no-op, not a rewrite
     compact_ivf_index(spark, path)
     assert committed_vector_dirs(spark, path) == dirs
+
+
+def test_rebuild_retires_every_older_batch(spark, tmp_path):
+    """A rebuild replaces the whole index: the batches absorbed since
+    the last build (cells assigned under the OLD centroids) are
+    retired with it, so only the new corpus is served, under the new
+    centroids."""
+    import numpy as np
+
+    from sunat_rree_demo_spark.operators.ann_index import (
+        absorb_ivf_batch,
+        committed_vector_dirs,
+        load_centroids,
+        write_ivf_index,
+    )
+    from sunat_rree_demo_spark.sources.catalog import load_table
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    new = emb.filter("vec_id >= 200")
+    path = str(tmp_path / "rebuilt")
+    write_ivf_index(emb.filter("vec_id < 100"), path, k=4, iters=1)
+    absorb_ivf_batch(spark, emb.filter("vec_id >= 100 AND vec_id < 150"),
+                     path, 0)
+    write_ivf_index(new, path, k=4, iters=1)
+
+    assert committed_vector_dirs(spark, path) \
+        == [f"{path}/vectors/batch_id=-2"]
+    served = {r.vec_id for r in spark.read.parquet(
+        *committed_vector_dirs(spark, path)).collect()}
+    assert served == {r.vec_id for r in new.collect()} and served
+    fresh = str(tmp_path / "fresh")
+    write_ivf_index(new, fresh, k=4, iters=1)
+    assert np.array_equal(load_centroids(spark, path),
+                          load_centroids(spark, fresh))

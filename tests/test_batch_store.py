@@ -496,23 +496,204 @@ def test_crash_at_every_store_write_step(spark, tmp_path, monkeypatch,
     assert read(spark, store) == clean
 
 
+def _lifecycle_cases():
+    """name -> (kind, setup, operation, tables, marker table) for every
+    build, compaction and forget pass. A "swap" (build or compaction)
+    must leave readers at the state before it until it commits; a
+    "forget" rewrites batch by batch, so each batch a reader sees is
+    either as before or as after it."""
+    from sunat_rree_demo_spark.operators import ann_index, dedup_index
+    from sunat_rree_demo_spark.streaming import bloom_stream, sketch_stream
+
+    def index(spark, store):
+        dedup_index.write_minhash_index(_docs(spark, 0, 40), store)
+        dedup_index.absorb_batch(_docs(spark, 40, 80, reship=(1, 2, 3)),
+                                 store, 0)
+
+    def ivf(spark, store):
+        ann_index.write_ivf_index(_emb(spark, 0, 100), store, k=4, iters=1)
+        ann_index.absorb_ivf_batch(
+            spark, _emb(spark, 100, 150).unionByName(_emb(spark, 0, 10)),
+            store, 0)
+
+    def bloom(spark, store):
+        bloom_stream.process_bloom_batch(spark, _docs(spark, 0, 40), 0, store)
+        bloom_stream.process_bloom_batch(
+            spark, _docs(spark, 40, 80, reship=(1, 2, 3)), 1, store)
+
+    def bloom_compacted(spark, store):
+        bloom(spark, store)
+        bloom_stream.compact_bloom_store(spark, store)
+        bloom_stream.process_bloom_batch(spark, _docs(spark, 80, 120), 2,
+                                         store)
+
+    def sketch(spark, store):
+        for bid, cents in enumerate(([100, 250, 999], [100, 50_000])):
+            sketch_stream.process_sketch_batch(
+                spark, spark.createDataFrame([(c,) for c in cents],
+                                             "price_cents long"),
+                bid, store, width=100)
+
+    index_tables = (("sigs", "bands"), "bands")
+    ivf_tables = (("centroids", "vectors"), "vectors")
+    bloom_tables = (("stats", "digests", "bloom", "kept"), "kept")
+    return {
+        "minhash-build": ("swap", index,
+                          lambda s, st: dedup_index.write_minhash_index(
+                              _docs(s, 80, 120), st), *index_tables),
+        "minhash-compact": ("swap", index,
+                            dedup_index.compact_minhash_index,
+                            *index_tables),
+        "ivf-build": ("swap", ivf,
+                      lambda s, st: ann_index.write_ivf_index(
+                          _emb(s, 200, 260), st, k=4, iters=1),
+                      *ivf_tables),
+        "ivf-compact": ("swap", ivf, ann_index.compact_ivf_index,
+                        *ivf_tables),
+        "bloom-compact": ("swap", bloom, bloom_stream.compact_bloom_store,
+                          *bloom_tables),
+        "sketch-compact": ("swap", sketch, sketch_stream.compact_sketch,
+                           ("hist",), "hist"),
+        "forget-ids": ("forget", index,
+                       lambda s, st: dedup_index.forget_ids(s, st, [5, 45]),
+                       *index_tables),
+        "forget-vectors": ("forget", ivf,
+                           lambda s, st: ann_index.forget_vectors(
+                               s, st, [20, 21, 120]), *ivf_tables),
+        "forget-docs": ("forget", bloom_compacted,
+                        lambda s, st: bloom_stream.forget_docs(
+                            s, st, [5, 85]), *bloom_tables),
+    }
+
+
+def _committed_view(spark, store, tables, marker):
+    """What committed readers see, batch by batch: sorted (batch, table,
+    rows), every negative id keyed "G" — a generation's id depends on
+    the torn leftovers a crash left, its rows do not."""
+    from sunat_rree_demo_spark.sources.batch_store import (
+        committed_batch_dirs,
+    )
+
+    return sorted(
+        ("G" if bid < 0 else str(bid), t,
+         tuple(_rows(spark.read.parquet(d))[0]))
+        for t in tables
+        for bid, d in committed_batch_dirs(
+            spark, f"{store}/{t}", f"{store}/{marker}").items())
+
+
+#: (case, k) for every write step k of every lifecycle pass
+_LIFECYCLE_POINTS = [(name, k) for name, n in (
+    ("minhash-build", 2), ("minhash-compact", 2), ("ivf-build", 2),
+    ("ivf-compact", 2), ("bloom-compact", 3), ("sketch-compact", 1),
+    ("forget-ids", 4), ("forget-vectors", 3), ("forget-docs", 5))
+    for k in range(n)]
+
+
+@pytest.fixture(scope="module")
+def lifecycle_stores(spark, tmp_path_factory):
+    """Per case, built once: the store before the pass, the committed
+    view before it and after an uninterrupted run of it (which makes
+    the case's count of write steps in ``_LIFECYCLE_POINTS``)."""
+    import shutil
+
+    from sunat_rree_demo_spark.sources import batch_store
+
+    built = {}
+
+    def get(name):
+        if name not in built:
+            _kind, setup, op, tables, marker = _lifecycle_cases()[name]
+            root = tmp_path_factory.mktemp(f"life_{name}")
+            store = str(root / "store")
+            setup(spark, store)
+            before = _committed_view(spark, store, tables, marker)
+            clean = str(root / "clean")
+            shutil.copytree(store, clean)
+            writes, real = [], batch_store.retry_transient_write
+
+            def counted(write_fn, cleanup=None):
+                writes.append(write_fn)
+                real(write_fn, cleanup)
+
+            batch_store.retry_transient_write = counted
+            try:
+                op(spark, clean)
+            finally:
+                batch_store.retry_transient_write = real
+            assert len(writes) == sum(
+                n == name for n, _k in _LIFECYCLE_POINTS), name
+            built[name] = (store, before,
+                           _committed_view(spark, clean, tables, marker))
+        return built[name]
+
+    return get
+
+
+@pytest.mark.parametrize("name, k", _LIFECYCLE_POINTS,
+                         ids=[f"{n}-before-write-{k + 1}"
+                              for n, k in _LIFECYCLE_POINTS])
+def test_crash_at_every_lifecycle_write_step(spark, tmp_path, monkeypatch,
+                                             lifecycle_stores, name, k):
+    """A build, compaction or forget pass crashes before its write k+1.
+    Committed readers then see the store as before a build or a
+    compaction, and never a torn batch of a forget pass (each batch
+    they see reads as before it or as after it). A re-run reaches the
+    uninterrupted result and leaves no torn batch behind."""
+    import shutil
+
+    from sunat_rree_demo_spark.sources import batch_store
+
+    kind, _setup, op, tables, marker = _lifecycle_cases()[name]
+    template, before, clean = lifecycle_stores(name)
+    store = str(tmp_path / "store")
+    shutil.copytree(template, store)
+
+    writes, real = [], batch_store.retry_transient_write
+
+    def crash_at_k(write_fn, cleanup=None):
+        if len(writes) == k:
+            raise OSError(f"injected crash before write {k + 1}")
+        writes.append(write_fn)
+        real(write_fn, cleanup)
+
+    with monkeypatch.context() as m:
+        m.setattr(batch_store, "retry_transient_write", crash_at_k)
+        with pytest.raises(OSError, match="injected crash"):
+            op(spark, store)
+    seen = _committed_view(spark, store, tables, marker)
+    if kind == "swap":
+        assert seen == before
+    else:
+        assert all(b in before or b in clean for b in seen), seen
+
+    op(spark, store)
+    assert _committed_view(spark, store, tables, marker) == clean
+    for t in tables:
+        assert batch_store.all_batch_dirs(spark, f"{store}/{t}") \
+            == batch_store.committed_batch_dirs(spark, f"{store}/{t}",
+                                                f"{store}/{marker}")
+
+
 def test_store_format_lives_in_batch_store():
     """The layout rule, checked over the package source: outside
     ``sources/batch_store.py`` no module resolves the Hadoop ``Path``
-    class, defines a transient-retry helper, or clears a commit marker
-    — except the two forget passes, whose in-place rewrites clear the
-    markers of the batches they touch."""
+    class, defines a transient-retry helper, or clears, lays or
+    deletes batch-store files itself (``clear_commit_marker``,
+    ``touch_marker``, ``delete_dirs``): builds, compactions and forget
+    passes go through ``swap_generation``, ``write_batch`` and
+    ``rewrite_parts``."""
     import ast
     import re
     from pathlib import Path
 
     pkg = Path(__file__).resolve().parents[1] / "sunat_rree_demo_spark"
-    forget = {"forget_docs", "forget_vectors"}
+    store_calls = {"clear_commit_marker", "touch_marker", "delete_dirs"}
     offenders = []
 
     class Scan(ast.NodeVisitor):
         def __init__(self, rel):
-            self.rel, self.funcs = rel, []
+            self.rel = rel
 
         def flag(self, node, what):
             offenders.append(f"{self.rel}:{node.lineno} {what}")
@@ -520,9 +701,7 @@ def test_store_format_lives_in_batch_store():
         def visit_FunctionDef(self, node):
             if re.search(r"retry|transient", node.name):
                 self.flag(node, f"defines {node.name}")
-            self.funcs.append(node.name)
             self.generic_visit(node)
-            self.funcs.pop()
 
         visit_AsyncFunctionDef = visit_FunctionDef
 
@@ -540,8 +719,8 @@ def test_store_format_lives_in_batch_store():
             f = node.func
             name = f.attr if isinstance(f, ast.Attribute) else \
                 getattr(f, "id", None)
-            if name == "clear_commit_marker" and not forget & set(self.funcs):
-                self.flag(node, "clears a commit marker")
+            if name in store_calls:
+                self.flag(node, f"calls {name}")
             self.generic_visit(node)
 
     for path in sorted(pkg.rglob("*.py")):

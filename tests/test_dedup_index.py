@@ -114,3 +114,60 @@ def test_compaction_keeps_latest_and_preserves_probes(spark, tmp_path,
                    for r in incremental_near_dup_pairs(spark, batch,
                                                        idx).collect()}
     assert probe_after == probe_before and probe_before
+
+
+@pytest.mark.parametrize("k", [0, 1], ids=["before-sigs", "before-bands"])
+def test_compaction_crash_keeps_probes(spark, tmp_path, monkeypatch,
+                                       split_docs, k):
+    """A compaction that crashes before its sigs or its bands write
+    leaves the index it started from: the two tables hold the same
+    committed batches and probes return the pre-compaction pairs. A
+    re-run leaves one generation with the same probes."""
+    from sunat_rree_demo_spark.operators.dedup_index import (
+        absorb_batch,
+        compact_minhash_index,
+        incremental_near_dup_pairs,
+        write_minhash_index,
+    )
+    from pyspark.sql import DataFrameWriter
+
+    from sunat_rree_demo_spark.sources import batch_store
+
+    corpus, batch, _full = split_docs
+    idx = str(tmp_path / "crash_idx")
+    write_minhash_index(corpus, idx)
+    absorb_batch(corpus.filter(F.col("doc_id") % 10 == 1)
+                 .withColumn("text", F.concat("text", F.lit(" edited"))),
+                 idx, batch_id=0)
+
+    def pairs():
+        return {(r.id1, r.id2): r.jaccard_est for r in
+                incremental_near_dup_pairs(spark, batch, idx).collect()}
+
+    def committed(table):
+        return set(batch_store.committed_batch_dirs(
+            spark, f"{idx}/{table}", f"{idx}/bands"))
+
+    want = pairs()
+    writes, real = [], DataFrameWriter.parquet
+
+    def crash_at_k(writer, *args, **kw):
+        if len(writes) == k:
+            raise OSError(f"injected crash before write {k + 1}")
+        writes.append(args)
+        return real(writer, *args, **kw)
+
+    # the parquet writer itself is patched, so the crash lands whichever
+    # module runs the write
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", crash_at_k)
+        with pytest.raises(OSError, match="injected crash"):
+            compact_minhash_index(spark, idx)
+    assert committed("sigs") == committed("bands") == {-1, 0}
+    assert pairs() == want and want
+
+    compact_minhash_index(spark, idx)
+    left = [list(batch_store.all_batch_dirs(spark, f"{idx}/{table}"))
+            for table in ("sigs", "bands")]
+    assert left[0] == left[1] and len(left[0]) == 1 and left[0][0] < 0
+    assert pairs() == want
