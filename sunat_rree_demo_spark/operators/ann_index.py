@@ -8,7 +8,9 @@ Layout under ``<path>/``:
 
 * ``centroids/batch_id=G/`` — (cluster int, centroid array<bigint>):
   the k micro-unit centroid rows (the Faiss-style coarse quantizer) of
-  generation G, written with that generation's vectors.
+  generation G, written with that generation's vectors (a path with
+  plain files under ``centroids/``, the older layout, must be deleted
+  before a build: Spark rejects them next to ``batch_id=`` dirs).
 * ``vectors/batch_id=N/cluster=K/`` — (vec_id, embedding, d2): each
   ingest batch partitioned by assigned cell, under its own batch
   directory. A search filters on the cell column, so Spark's file
@@ -56,9 +58,9 @@ from sunat_rree_demo_spark.operators.clustering import (
 )
 from sunat_rree_demo_spark.sources.batch_store import (
     BATCH_COL,
-    all_batch_dirs,
     committed_batch_dirs,
     marker_committed,
+    pending_rewrites,
     rewrite_parts,
     swap_generation,
     write_batch,
@@ -203,27 +205,28 @@ def forget_vectors(spark: SparkSession, path: str, ids: list,
                    id_col: str = "vec_id") -> list[tuple[int, int]]:
     """DELETION PROPAGATION for the vector index: drop the given ids,
     rewriting only the (batch, cell) partitions that hold them — one
-    scan over every batch directory locates them (torn ones too: a
-    crashed pass leaves its batch's marker cleared, and a re-run must
-    find it), untouched directories stay byte-identical (test-pinned).
-    Each touched batch is rewritten by ``batch_store.rewrite_parts``:
-    its commit marker is CLEARED before its cells rewrite and restored
-    after, so a concurrent committed-gated search never torn-reads a
-    cell mid-overwrite. Returns the touched (batch_id, cluster) pairs.
-    OFFLINE maintenance (not transactional against a concurrent
-    absorb); centroids are unchanged — deletion never moves surviving
-    vectors between cells, so searches stay consistent throughout."""
-    dirs = all_batch_dirs(spark, f"{path}/vectors")
+    scan over the committed batches and those a crashed pass left
+    (``batch_store.pending_rewrites``) locates them; torn batches stay
+    untouched for their replay, and so do untouched directories
+    (test-pinned). ``batch_store.rewrite_parts`` sets each touched
+    batch's marker aside while its cells rewrite, so a concurrent
+    committed-gated search never torn-reads a cell mid-overwrite.
+    Returns the touched (batch_id, cluster) pairs. OFFLINE maintenance
+    (not transactional against a concurrent absorb); centroids are
+    unchanged — deletion never moves surviving vectors between cells,
+    so searches stay consistent throughout."""
+    vectors = f"{path}/vectors"
+    pending = pending_rewrites(spark, vectors)
+    dirs = {**committed_batch_dirs(spark, vectors, vectors), **pending}
     if not dirs:
         return []
     id_df = local_df(spark, [(i,) for i in ids], f"{id_col} long")
-    vecs = spark.read.option("basePath", f"{path}/vectors") \
-        .parquet(*dirs.values())
+    vecs = spark.read.option("basePath", vectors).parquet(*dirs.values())
     touched = sorted(
         (r[BATCH_COL], r["cluster"])
         for r in vecs.join(F.broadcast(id_df), id_col, "left_semi")
         .select(BATCH_COL, "cluster").distinct().collect())
-    for bid in sorted({b for b, _c in touched}):
+    for bid in sorted({b for b, _c in touched} | set(pending)):
         parts = [f"{dirs[bid]}/cluster={c}" for b, c in touched if b == bid]
         rewrite_parts(spark, dirs[bid], [
             (p, spark.read.parquet(p)

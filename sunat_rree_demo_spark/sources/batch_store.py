@@ -14,7 +14,7 @@ last, and runs each write under the one storage-retry policy
 (``retry_transient_write``). Builds and compactions go through
 ``swap_generation`` (write one negative-id generation, then retire
 what it replaced), in-place rewrites of some parts of a batch through
-``rewrite_parts``.
+``rewrite_parts``, whose crashed batches ``pending_rewrites`` finds.
 
 Readers use ``read_committed`` (every committed batch as one frame,
 an empty store as an empty frame of the caller's schema) or, for the
@@ -85,16 +85,6 @@ def clear_commit_marker(spark: SparkSession, dir_path: str) -> None:
     fs, marker = _hadoop_fs(spark, f"{dir_path}/_SUCCESS")
     if fs.exists(marker):
         fs.delete(marker, False)
-
-
-def touch_marker(spark: SparkSession, dir_path: str,
-                 name: str = "_SUCCESS") -> None:
-    """(Re)create ``dir_path/<name>`` — the inverse of
-    ``clear_commit_marker``: restores a batch's commit marker after an
-    in-place rewrite, or lays a swap's own mark file (the sketch
-    store's ``_COVERS_<n>``) once its generation committed."""
-    fs, marker = _hadoop_fs(spark, f"{dir_path}/{name}")
-    fs.create(marker, True).close()
 
 
 #: error signatures of intermittent storage blips: a failed task
@@ -190,32 +180,48 @@ def swap_generation(spark: SparkSession, tables, sources=(),
     every = {d: b for t, _w in reversed(tables)
              for b, d in all_batch_dirs(spark, t).items()}
     replaced = set(every if replaced is None else replaced)
+    fs, _ = _hadoop_fs(spark, tables[-1][0])
     if len(sources) == 1 and min(sources) < 0:
         target = min(sources)
     else:
         target = min([*every.values(), 0]) - 1
         write_batch(spark, target, tables)
         if mark is not None:
-            touch_marker(spark, f"{tables[-1][0]}/{BATCH_COL}={target}",
-                         mark)
-    fs, _ = _hadoop_fs(spark, tables[-1][0])
+            fs.create(_hadoop_path(
+                spark, f"{tables[-1][0]}/{BATCH_COL}={target}/{mark}"),
+                True).close()
     for d, b in every.items():
         if b != target and (b < 0 or d in replaced):
             fs.delete(_hadoop_path(spark, d), True)
 
 
 def rewrite_parts(spark: SparkSession, batch_dir: str, parts) -> None:
-    """Overwrite some parts of one committed batch in place: ``parts``
-    is a list of ``(part_dir, DataFrame)`` under ``batch_dir`` (each
-    frame checkpointed, since it is read from the files it replaces).
-    The batch's marker is cleared first, so committed readers skip the
-    batch while its parts are rewritten; each overwrite runs under
-    ``retry_transient_write``; the marker comes back last."""
-    clear_commit_marker(spark, batch_dir)
+    """Overwrite some parts of one batch in place: ``parts`` lists
+    ``(part_dir, DataFrame)`` (each frame checkpointed: it is read
+    from the files it replaces). ``batch_dir/_SUCCESS`` is renamed
+    ``_REWRITING`` first, so readers skip the batch but a re-run of a
+    crashed pass finds it (``pending_rewrites``); each overwrite runs
+    under ``retry_transient_write``; the mark is renamed back last (an
+    overwrite of ``batch_dir`` itself lays a fresh ``_SUCCESS``). A
+    torn batch, with neither file, is never committed here."""
+    fs, done = _hadoop_fs(spark, f"{batch_dir}/_SUCCESS")
+    pending = _hadoop_path(spark, f"{batch_dir}/_REWRITING")
+    if fs.exists(done):
+        fs.rename(done, pending)
     for part, df in parts:
         retry_transient_write(
             lambda p=part, d=df: d.write.mode("overwrite").parquet(p))
-    touch_marker(spark, batch_dir)
+    if fs.exists(pending):
+        fs.rename(pending, done)
+
+
+def pending_rewrites(spark: SparkSession, marker_dir: str) -> dict[int, str]:
+    """{batch_id: dir} of the batches under ``marker_dir`` that a
+    crashed ``rewrite_parts`` left renamed ``_REWRITING``, for a re-run
+    to finish (a torn write has no such file)."""
+    fs, _ = _hadoop_fs(spark, marker_dir)
+    return {b: d for b, d in all_batch_dirs(spark, marker_dir).items()
+            if fs.exists(_hadoop_path(spark, f"{d}/_REWRITING"))}
 
 
 def marker_committed(spark: SparkSession, marker_dir: str,

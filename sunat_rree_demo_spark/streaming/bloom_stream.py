@@ -33,7 +33,7 @@ recomputes identical partitions (probes read committed state only) and
 overwrites them byte-identically — same protocol as the cms/novelty
 streams. Maintenance writes through ``sources/batch_store.py`` too:
 ``compact_bloom_store`` is a ``swap_generation`` and ``forget_docs``
-rewrites each touched batch with ``write_batch``.
+rewrites each touched batch with ``rewrite_parts``.
 
 STORE FORMAT: the commit marker has lived on the kept table since the
 format was finalized (pre-release within r6 — interim same-round
@@ -60,7 +60,9 @@ from sunat_rree_demo_spark.sources.batch_store import (
     committed_batch_dirs,
     drain,
     marker_committed,
+    pending_rewrites,
     read_committed,
+    rewrite_parts,
     swap_generation,
     write_batch,
 )
@@ -206,11 +208,12 @@ def forget_docs(spark: SparkSession, store_path: str, ids: list,
     """DELETION PROPAGATION (right-to-be-forgotten) for the dedup
     store: remove the given doc ids from the kept rows and their
     digests from the exact store, rewriting only the touched batch
-    partitions. Discovery scans ALL batch directories, torn ones too
-    (a crashed pass leaves its batch uncommitted for a re-run to
-    find), and digests are dropped from EVERY partition holding them,
-    including a compaction's negative-id generation (or re-shipped
-    forgotten content would stay suppressed).
+    partitions. Kept rows are found in the committed batches and in
+    those a crashed pass left mid-rewrite
+    (``batch_store.pending_rewrites``); torn batches are left to their
+    replay. Digests are dropped from EVERY partition holding them,
+    torn ones and a compaction's negative-id generation included (or
+    re-shipped forgotten content would stay suppressed).
 
     The BLOOM WORDS ARE LEFT ALONE — a bloom filter cannot unset bits,
     and it never needs to here: it is purely a routing layer, so a
@@ -218,54 +221,47 @@ def forget_docs(spark: SparkSession, store_path: str, ids: list,
     authoritative digest removal means a future re-ship of the
     forgotten content is treated as NEW and kept (the correct RTBF
     semantics). Returns the touched batch ids (kept and/or digest
-    side). Each touched batch is rewritten by ``write_batch`` (digests,
-    then kept, the marker), so a crash leaves at most that batch
-    uncommitted, for a re-run of this pass to finish. OFFLINE
-    maintenance like its index siblings."""
+    side). Each touched batch is rewritten by
+    ``batch_store.rewrite_parts`` (digests, then kept), so a crash
+    leaves at most that batch uncommitted, for a re-run of this pass
+    to finish. OFFLINE maintenance like its index siblings."""
     id_df = local_df(spark, [(i,) for i in ids], f"{id_col} long")
-    kept_dirs = all_batch_dirs(spark, f"{store_path}/kept")
+    kept_root = f"{store_path}/kept"
+    pending = pending_rewrites(spark, kept_root)
+    kept_dirs = {**committed_batch_dirs(spark, kept_root, kept_root),
+                 **pending}
     if not kept_dirs:
         return []
-    kept = spark.read.option("basePath", f"{store_path}/kept") \
+    kept = spark.read.option("basePath", kept_root) \
         .parquet(*kept_dirs.values())
     hit = (kept.join(F.broadcast(id_df), id_col, "left_semi")
            .select(BATCH_COL, "dg").localCheckpoint())
     touched_kept = {r[BATCH_COL] for r in hit.select(BATCH_COL).collect()}
-    if not touched_kept:
+    if not touched_kept and not pending:
         return []
     drop_dgs = hit.select("dg").distinct()
     dg_dirs = all_batch_dirs(spark, f"{store_path}/digests")
     dgs = spark.read.option("basePath", f"{store_path}/digests") \
         .parquet(*dg_dirs.values())
-    touched_dgs = sorted(
+    touched_dgs = {
         r[BATCH_COL]
         for r in dgs.join(F.broadcast(drop_dgs), "dg", "left_semi")
-        .select(BATCH_COL).distinct().collect())
-    # a generation's kept side is an empty marker partition, so a
-    # generation a crashed run left uncommitted shows nothing else to
-    # find: every uncommitted one is rewritten (recommitted) too
-    all_touched = sorted(touched_kept | set(touched_dgs) | {
-        b for b in kept_dirs
-        if b < 0 and not marker_committed(spark, f"{store_path}/kept", b)})
+        .select(BATCH_COL).distinct().collect()}
 
     def scrub(part, drop, key):
-        return (spark.read.parquet(part)
-                .join(F.broadcast(drop), key, "left_anti")
-                .localCheckpoint().write)
+        return part, (spark.read.parquet(part)
+                      .join(F.broadcast(drop), key, "left_anti")
+                      .localCheckpoint())
 
+    all_touched = sorted(touched_kept | touched_dgs | set(pending))
     for bid in all_touched:
-        tables = []
-        if bid in touched_dgs:
-            tables.append((f"{store_path}/digests",
-                           scrub(dg_dirs[bid], drop_dgs, "dg")))
         # a digests dir can exist WITHOUT a kept twin — the torn
         # leftover of a crash between process_bloom_batch's digests
-        # and kept writes — and such a batch was never committed: only
-        # its digest side is scrubbed, with no marker to restore
-        # (review finding r6: the unconditional kept_dirs[bid] raised
-        # KeyError and aborted the whole pass)
-        if bid in kept_dirs:
-            tables.append((f"{store_path}/kept",
-                           scrub(kept_dirs[bid], id_df, id_col)))
-        write_batch(spark, bid, tables)
+        # and kept writes: only its digest side is scrubbed, and it
+        # stays uncommitted
+        parts = [scrub(dg_dirs[bid], drop_dgs, "dg")] \
+            if bid in touched_dgs else []
+        if bid in touched_kept:
+            parts.append(scrub(kept_dirs[bid], id_df, id_col))
+        rewrite_parts(spark, f"{kept_root}/{BATCH_COL}={bid}", parts)
     return all_touched

@@ -59,8 +59,9 @@ def _covers_of(spark: SparkSession, hist_dir: str) -> int | None:
 
 
 def _visible_hist_dirs(spark: SparkSession,
-                       store_path: str) -> dict[int, str]:
-    """Committed batch dirs a READER should merge. Histogram merge is
+                       store_path: str) -> tuple[dict[int, str], int]:
+    """Committed batch dirs a READER should merge, and the covers n of
+    the visible generation (-1 without one). Histogram merge is
     ADDITIVE (unlike the bloom store's set-idempotent probes), so
     write-first compaction needs explicit supersession to keep the
     coexistence window benign: a negative-id compacted generation is
@@ -79,7 +80,7 @@ def _visible_hist_dirs(spark: SparkSession,
     live = [(bid, cov) for bid, cov in gens if cov is not None]
     gen_bid, covers = live[0] if live else (None, -1)  # most negative = newest
     return {bid: d for bid, d in sorted(dirs.items())
-            if bid == gen_bid or (bid > covers and bid >= 0)}
+            if bid == gen_bid or (bid > covers and bid >= 0)}, covers
 
 
 def process_sketch_batch(spark: SparkSession, batch_df: DataFrame,
@@ -96,7 +97,7 @@ def process_sketch_batch(spark: SparkSession, batch_df: DataFrame,
 
 def merged_sketch(spark: SparkSession, store_path: str) -> DataFrame:
     """The accumulated (bin, c) histogram over committed batches."""
-    dirs = _visible_hist_dirs(spark, store_path)
+    dirs, _covers = _visible_hist_dirs(spark, store_path)
     if not dirs:
         return local_df(spark, [], "bin bigint, c bigint")
     return merge_histograms(spark.read.parquet(*dirs.values()))
@@ -131,11 +132,10 @@ def compact_sketch(spark: SparkSession, store_path: str) -> None:
     batch up to n is retired — the merged ones and leftovers a crashed
     retire left under an older mark; positive TORN batches belong to
     the stream writer and heal by replay."""
-    dirs = _visible_hist_dirs(spark, store_path)
+    dirs, covers = _visible_hist_dirs(spark, store_path)
     if not dirs:
         return
-    covers = max(b if b >= 0 else _covers_of(spark, d)
-                 for b, d in dirs.items())
+    covers = max(covers, *dirs)
     hist = f"{store_path}/hist"
     swap_generation(
         spark, [(hist, merge_histograms(

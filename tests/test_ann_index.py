@@ -279,3 +279,45 @@ def test_rebuild_retires_every_older_batch(spark, tmp_path):
     write_ivf_index(new, fresh, k=4, iters=1)
     assert np.array_equal(load_centroids(spark, path),
                           load_centroids(spark, fresh))
+
+
+def test_forget_leaves_a_torn_batch_to_its_replay(spark, tmp_path):
+    """A torn absorb batch (its cell-partitioned write crashed partway:
+    some cells are there, the marker is not) that holds a forgotten id
+    stays uncommitted through ``forget_vectors``, and its replay writes
+    every cell."""
+    import os
+    import shutil
+
+    from sunat_rree_demo_spark.operators.ann_index import (
+        absorb_ivf_batch,
+        forget_vectors,
+        write_ivf_index,
+    )
+    from sunat_rree_demo_spark.sources.batch_store import marker_committed
+    from sunat_rree_demo_spark.sources.catalog import load_table
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    batch = emb.filter("vec_id >= 100 AND vec_id < 150")
+    path = str(tmp_path / "torn")
+    write_ivf_index(emb.filter("vec_id < 100"), path, k=4, iters=1)
+    absorb_ivf_batch(spark, batch, path, 0)
+    bdir = f"{path}/vectors/batch_id=0"
+
+    def cells():
+        return sorted(c for c in os.listdir(bdir) if c.startswith("cluster="))
+
+    def rows():
+        return sorted(tuple(r) for r in spark.read.parquet(bdir).collect())
+
+    whole_cells, whole_rows = cells(), rows()
+    assert len(whole_cells) > 1
+    os.remove(f"{bdir}/_SUCCESS")
+    shutil.rmtree(f"{bdir}/{whole_cells[-1]}")
+    victim = spark.read.parquet(f"{bdir}/{whole_cells[0]}").first().vec_id
+
+    assert forget_vectors(spark, path, [victim]) == []
+    assert not marker_committed(spark, f"{path}/vectors", 0)
+    absorb_ivf_batch(spark, batch, path, 0)
+    assert marker_committed(spark, f"{path}/vectors", 0)
+    assert cells() == whole_cells and rows() == whole_rows

@@ -279,6 +279,40 @@ def test_write_batch_retries_with_the_same_writer(spark, tmp_path):
     assert spark.read.parquet(b).count() == 6
 
 
+def test_rewrite_parts_recommits_only_a_batch_it_set_aside(spark,
+                                                           tmp_path):
+    """``rewrite_parts`` renames a committed batch's ``_SUCCESS`` to
+    ``_REWRITING`` for the rewrite and back after; ``pending_rewrites``
+    finds a batch a crash left renamed, and a rewrite with no parts
+    recommits it; a torn batch (neither file) has its parts rewritten
+    and stays uncommitted."""
+    from sunat_rree_demo_spark.sources.batch_store import (
+        committed_batch_dirs,
+        pending_rewrites,
+        rewrite_parts,
+        write_batch,
+    )
+
+    t = str(tmp_path / "t")
+    df = spark.range(6).selectExpr("id", "id % 2 AS cell")
+    for bid in (0, 1):
+        write_batch(spark, bid, [(t, df.write.partitionBy("cell"))])
+    b0, b1 = f"{t}/batch_id=0", f"{t}/batch_id=1"
+    os.remove(f"{b1}/_SUCCESS")
+
+    for bdir in (b0, b1):
+        rewrite_parts(spark, bdir, [(f"{bdir}/cell=0", spark.range(2))])
+        assert spark.read.parquet(f"{bdir}/cell=0").count() == 2
+    assert list(committed_batch_dirs(spark, t, t)) == [0]
+    assert pending_rewrites(spark, t) == {}
+
+    os.rename(f"{b0}/_SUCCESS", f"{b0}/_REWRITING")
+    assert pending_rewrites(spark, t) == {0: b0}
+    rewrite_parts(spark, b0, [])
+    assert list(committed_batch_dirs(spark, t, t)) == [0]
+    assert pending_rewrites(spark, t) == {}
+
+
 def _docs(spark, lo, hi, reship=()):
     """Documents ``lo <= doc_id < hi`` of the smoke warehouse, plus the
     texts of ``reship`` under new ids (cross-batch duplicates)."""
@@ -582,12 +616,17 @@ def _committed_view(spark, store, tables, marker):
             spark, f"{store}/{t}", f"{store}/{marker}").items())
 
 
-#: (case, k) for every write step k of every lifecycle pass
-_LIFECYCLE_POINTS = [(name, k) for name, n in (
-    ("minhash-build", 2), ("minhash-compact", 2), ("ivf-build", 2),
-    ("ivf-compact", 2), ("bloom-compact", 3), ("sketch-compact", 1),
-    ("forget-ids", 4), ("forget-vectors", 3), ("forget-docs", 5))
-    for k in range(n)]
+#: case -> its count of write steps in an uninterrupted run
+_LIFECYCLE_WRITES = {
+    "minhash-build": 2, "minhash-compact": 2, "ivf-build": 2,
+    "ivf-compact": 2, "bloom-compact": 3, "sketch-compact": 1,
+    "forget-ids": 4, "forget-vectors": 3, "forget-docs": 4}
+
+#: (case, k): a crash before write k+1 of every lifecycle pass and,
+#: for a forget pass, k = n: after its last write, before it returns
+_LIFECYCLE_POINTS = [
+    (name, k) for name, n in _LIFECYCLE_WRITES.items()
+    for k in range(n + name.startswith("forget"))]
 
 
 @pytest.fixture(scope="module")
@@ -621,8 +660,7 @@ def lifecycle_stores(spark, tmp_path_factory):
                 op(spark, clean)
             finally:
                 batch_store.retry_transient_write = real
-            assert len(writes) == sum(
-                n == name for n, _k in _LIFECYCLE_POINTS), name
+            assert len(writes) == _LIFECYCLE_WRITES[name], name
             built[name] = (store, before,
                            _committed_view(spark, clean, tables, marker))
         return built[name]
@@ -632,14 +670,18 @@ def lifecycle_stores(spark, tmp_path_factory):
 
 @pytest.mark.parametrize("name, k", _LIFECYCLE_POINTS,
                          ids=[f"{n}-before-write-{k + 1}"
+                              if k < _LIFECYCLE_WRITES[n]
+                              else f"{n}-after-the-last-write"
                               for n, k in _LIFECYCLE_POINTS])
 def test_crash_at_every_lifecycle_write_step(spark, tmp_path, monkeypatch,
                                              lifecycle_stores, name, k):
-    """A build, compaction or forget pass crashes before its write k+1.
-    Committed readers then see the store as before a build or a
-    compaction, and never a torn batch of a forget pass (each batch
-    they see reads as before it or as after it). A re-run reaches the
-    uninterrupted result and leaves no torn batch behind."""
+    """A build, compaction or forget pass crashes before its write k+1
+    (a forget pass also after its last write, before it recommits the
+    last batch). Committed readers then see the store as before a
+    build or a compaction, and never a torn batch of a forget pass
+    (each batch they see reads as before it or as after it). A re-run
+    reaches the uninterrupted result and leaves no torn batch
+    behind."""
     import shutil
 
     from sunat_rree_demo_spark.sources import batch_store
@@ -656,6 +698,8 @@ def test_crash_at_every_lifecycle_write_step(spark, tmp_path, monkeypatch,
             raise OSError(f"injected crash before write {k + 1}")
         writes.append(write_fn)
         real(write_fn, cleanup)
+        if len(writes) == k == _LIFECYCLE_WRITES[name]:
+            raise OSError("injected crash after the last write")
 
     with monkeypatch.context() as m:
         m.setattr(batch_store, "retry_transient_write", crash_at_k)

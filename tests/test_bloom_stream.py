@@ -262,6 +262,36 @@ def test_bloom_store_forget_after_compaction(spark, tmp_path):
             for r in load_kept(spark, store).collect()} == {2, 3, 9}
 
 
+def test_bloom_forget_leaves_a_torn_kept_batch_to_its_replay(spark,
+                                                             tmp_path):
+    """A batch whose kept write crashed (kept files there, no marker)
+    and that holds a forgotten doc stays uncommitted through
+    ``forget_docs``, which commits only the batches it set aside
+    itself; the batch's replay then commits it whole."""
+    import os
+
+    from sunat_rree_demo_spark.sources.batch_store import marker_committed
+    from sunat_rree_demo_spark.streaming.bloom_stream import (
+        forget_docs,
+        load_kept,
+        process_bloom_batch,
+    )
+
+    store = str(tmp_path / "torn_kept_store")
+    b1 = spark.createDataFrame([(2, "bb"), (3, "cc")],
+                               "doc_id long, text string")
+    process_bloom_batch(
+        spark, spark.createDataFrame([(1, "aa")],
+                                     "doc_id long, text string"), 0, store)
+    process_bloom_batch(spark, b1, 1, store)
+    os.remove(f"{store}/kept/batch_id=1/_SUCCESS")
+
+    assert forget_docs(spark, store, [2]) == []
+    assert not marker_committed(spark, f"{store}/kept", 1)
+    process_bloom_batch(spark, b1, 1, store)
+    assert {r.doc_id for r in load_kept(spark, store).collect()} == {1, 2, 3}
+
+
 def test_bloom_forget_heals_torn_digests_only_batch(spark, tmp_path):
     """A digests dir without its kept twin — the leftover of a crash
     between process_bloom_batch's digests and kept writes — must not
